@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** Physical file-target load dispositions (SURVEY.md §2.6 L1/L2/L5 on a
   * parquet/lake target). The logical merge semantics live in [[Loads]];
   * these writers map them onto partitioned parquet with the commit-protocol
@@ -63,7 +65,7 @@ object FileLoads {
 
   /** Read back a partitioned target with partition pruning on `p_date`. */
   def readWindow(spark: SparkSession, path: String, fromDate: String): DataFrame =
-    spark.read.parquet(path).filter(col("p_date") >= fromDate)
+    Parquet.read(spark, path).filter(col("p_date") >= fromDate)
 
   /** Compact a partitioned parquet target's small files: rewrite each
     * `p_date` partition into `ceil(bytes / targetFileBytes)` files, sorted
@@ -115,7 +117,7 @@ object FileLoads {
     }.toMap
     plan.foreach { case (part, (_, want)) =>
       val partPath = s"$path/$part"
-      val df = spark.read.parquet(partPath)
+      val df = Parquet.read(spark, partPath)
       val laid =
         if (sortCols.nonEmpty) df.repartition(want).sortWithinPartitions(sortCols.map(col): _*)
         else df.coalesce(want)
@@ -176,7 +178,7 @@ object FileLoads {
     require(keys.columns.length == 1,
       s"keys must be a single column, got ${keys.columns.toSeq}")
     val k = keys.toDF("__k").distinct().localCheckpoint()
-    val tgt = spark.read.parquet(path)
+    val tgt = Parquet.read(spark, path)
     // one column-pruned pass finds the affected partitions
     val affected = tgt.select(col(fkCol), col("p_date"))
       .join(k, col(fkCol) === col("__k"), "left_semi")
@@ -215,7 +217,7 @@ object FileLoads {
         s.isDirectory && s.getPath.getName.startsWith("p_date="))
     val after =
       if (anyPartitionLeft)
-        spark.read.parquet(path)
+        Parquet.read(spark, path)
           .filter(col("p_date").cast("string").isin(affected.toIndexedSeq: _*))
           .groupBy(col("p_date").cast("string").as("p_date"))
           .agg(count(lit(1)).as("n_after"))

@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** Scale utilities: skew salting and bucketed co-located joins — the
   * shuffle-management patterns a 100 TB deployment leans on (builder
   * mandate; none exist in the reference, whose "parallelism" is one cursor,
@@ -151,9 +153,6 @@ object Scale {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Read a bucketed table back. */
-  def readTable(spark: SparkSession, table: String): DataFrame = spark.table(table)
-
   /** Drop a managed table AND its warehouse location. The in-memory
     * catalog forgets tables across JVMs while the warehouse directory
     * survives, and `saveAsTable` then refuses the name
@@ -208,7 +207,7 @@ object Scale {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(p).getLength
     val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(path).repartition(n)
+    Parquet.read(spark, path).repartition(n)
       .write.mode(SaveMode.Overwrite).parquet(outPath)
     n.toLong
   }

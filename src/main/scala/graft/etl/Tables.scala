@@ -2,6 +2,8 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Parquet
+
 /** Fixture/table readers.
   *
   * In the harness every source system of the reference (BigQuery, SQL Server,
@@ -9,6 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * phases) is stood in by parquet tables (TESTDATA.md). Real deployments use
   * [[Jdbc]] for the four relational systems and [[JsonRecords]] for the OData
   * entity shape.
+  *
+  * Every table reads through [[graft.sources.Parquet.read]]: the schema
+  * comes from the one footer Spark's own inference would pick (for these
+  * single-file tables, the file itself), read in the calling JVM under the
+  * session's current conf, so building the DataFrame launches no Spark job.
   *
   * Scale note: parquet scans are split by Spark into
   * `spark.sql.files.maxPartitionBytes` chunks, so a 100 TB table parallelizes
@@ -18,7 +25,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** A persisted BM25 inverted index: the build-once/serve-many form of
   * [[TextAnalysis.bm25TopK]], the same deployment shape as
   * [[MinHashIndex]]/[[IvfPqIndex]] — compute the corpus-side state ONCE,
@@ -270,8 +272,8 @@ object Bm25Index {
     require(IndexSidecar.intField(json, "format", path) == 1,
       s"unsupported bm25 index format at $path")
     Bm25Index(
-      spark.read.parquet(sub("postings")).select("term", "id", "tf", "dl"),
-      spark.read.parquet(sub("terms")).select("term", "df"),
-      spark.read.parquet(sub("stats")).select("n", "avgdl"))
+      Parquet.read(spark, sub("postings")).select("term", "id", "tf", "dl"),
+      Parquet.read(spark, sub("terms")).select("term", "df"),
+      Parquet.read(spark, sub("stats")).select("n", "avgdl"))
   }
 }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** Byte-pair-encoding tokenizer TRAINING (Sennrich, Haddow & Birch, ACL
   * 2016 — the standard subword vocabulary algorithm of the GPT/Llama
   * tokenizer family; public method). Complements [[TextAnalysis.buildVocab]]
@@ -192,6 +194,6 @@ object Bpe {
     * [[graft.functions.BpeFunctions.bpe_encode]]. Bounded driver collect
     * (the merge list IS the model). */
   def readMerges(spark: org.apache.spark.sql.SparkSession, path: String): Seq[Merge] =
-    spark.read.parquet(path).orderBy("merge_rank").collect()
+    Parquet.read(spark, path).orderBy("merge_rank").collect()
       .map(r => Merge(r.getLong(0).toInt, r.getString(1), r.getString(2))).toSeq
 }

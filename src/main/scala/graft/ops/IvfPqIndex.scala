@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.{nearest_centroid, pq_adc, pq_encode, pq_lut, vec_dot, vec_norm}
+import graft.sources.Parquet
 
 /** A built IVF-PQ index: the state a 100 TB serving deployment persists
   * once and queries many times.
@@ -433,8 +434,7 @@ object IvfPqIndex {
           "present): a plain read would silently drop every streamed " +
           "vector — read it with Incremental.readIvfPqMaintained")
     }
-    val lists = spark.read
-      .parquet(new org.apache.hadoop.fs.Path(path, "lists").toString)
+    val lists = Parquet.read(spark, new org.apache.hadoop.fs.Path(path, "lists").toString)
       .select("cluster", "n_id", "codes", "n_norm")
     val json = IndexSidecar.readJson(spark.sparkContext.hadoopConfiguration, path)
     def field(name: String): String = IndexSidecar.field(json, name, path)

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** A built MinHash-LSH dedup index: the corpus-side state the
   * "dedup each incoming crawl batch against everything already ingested"
   * pipeline (SURVEY.md north-star; the reference has no dedup at all)
@@ -373,8 +375,8 @@ object MinHashIndex {
     val json = IndexSidecar.readJson(spark.sparkContext.hadoopConfiguration, path)
     def intField(name: String): Int = IndexSidecar.intField(json, name, path)
     MinHashIndex(
-      spark.read.parquet(sub("buckets")).select("id", "band", "bucket"),
-      spark.read.parquet(sub("sets")).select("id", "shingle_set"),
+      Parquet.read(spark, sub("buckets")).select("id", "band", "bucket"),
+      Parquet.read(spark, sub("sets")).select("id", "shingle_set"),
       intField("shingleK"), intField("bands"), intField("rowsPerBand"))
   }
 }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** A persisted PREFIX-FILTER similarity index: the build-once/serve-many
   * form of [[SimJoin.incrementalPairs]]' corpus-side state — the
   * daily-crawl batch↔corpus EXACT similarity join without ever
@@ -532,9 +534,9 @@ object SimJoinIndex {
     val (shingleK, threshold) =
       sidecarParams(spark.sparkContext.hadoopConfiguration, path)
     SimJoinIndex(
-      spark.read.parquet(sub("freq")).select("h", "freq"),
-      spark.read.parquet(sub("prefixes")).select("h", "id", "n"),
-      spark.read.parquet(sub("sets")).select("id", "set", "n"),
+      Parquet.read(spark, sub("freq")).select("h", "freq"),
+      Parquet.read(spark, sub("prefixes")).select("h", "id", "n"),
+      Parquet.read(spark, sub("sets")).select("id", "set", "n"),
       shingleK, threshold)
   }
 }

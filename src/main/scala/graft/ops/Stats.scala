@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Classical hypothesis tests as one-pass aggregations — the experiment
@@ -16,6 +16,19 @@ import org.apache.spark.sql.functions._
   * surface of SURVEY.md §7.5.
   */
 object Stats {
+
+  /** Mean of a cent-valued double column, rounded HALF_UP (away from zero)
+    * to 4 places, from an exact integer sum of cents. `round(avg(c), 4)`
+    * sums floats in partition order, and on a half-tie (1,758,321 cents
+    * over 72 rows = 244.21125) two summation orders round to opposite
+    * sides; this is the same at any partitioning. NULL for a group with no
+    * non-null value. The DuckDB twin is `OracleCtes.centsMean4Sql`.
+    */
+  def centsMean4(c: Column): Column = {
+    val cents = sum(round(c * 100).cast("long"))
+    val n = count(c)
+    signum(cents) * call_function("div", abs(cents) * 200 + n, n * 2) / 10000.0
+  }
 
   /** Welch's unequal-variance t-test between every pair of groups
     * (`group_a < group_b` lexically): per pair, the t statistic

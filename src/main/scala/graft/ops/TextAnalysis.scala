@@ -480,12 +480,6 @@ object TextAnalysis {
     round(lit(1.0) - size(array_distinct(grams)).cast("double") / size(grams).cast("double"), 4)
   }
 
-  /** Stopword-hit count for one language list (native codegen'd
-    * [[graft.functions.StopwordCount]] — one hash-set pass, no lambda HOF).
-    */
-  def stopwordHits(text: Column, words: Seq[String]): Column =
-    graft.functions.TextFunctions.stopword_count(split(text, " "), words)
-
   /** The four (code → list) pairs, sorted by code — the [[langId]] scoring
     * table and its tie-break order.
     */

@@ -62,6 +62,10 @@ object TimeSeries {
     * units-per-day number. Keys with a single distinct day have zero x
     * variance: slope/r² are NULL there (kept — the caller decides).
     *
+    * `mean_value` is [[Stats.centsMean4]]: the value column holds cents,
+    * and its exact 4-place mean rounds a half-tie the same at any
+    * partitioning.
+    *
     * Scale: one hash aggregation keyed by `keyCol` with map-side partial
     * combine — constant state per key (the five regression moments), no
     * window, no sort.
@@ -79,7 +83,7 @@ object TimeSeries {
         regr_slope(col(valueCol), col("__x")).as("slope"),
         regr_r2(col(valueCol), col("__x")).as("r2"),
         regr_count(col(valueCol), col("__x")).as("n"),
-        avg(col(valueCol)).as("mean_value"))
+        Stats.centsMean4(col(valueCol)).as("mean_value"))
   }
 
   /** Hour-of-day seasonal profile per key: for each (key, hour 0–23)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** Unigram-LM subword tokenizer (Kudo 2018, "Subword Regularization" —
   * the SentencePiece unigram model; public method). Completes the
   * subword trio: [[Bpe]] replays ranked merges, [[WordPiece]] greedily
@@ -184,6 +186,6 @@ object Unigram {
     * collect (the piece table IS the model). */
   def readModel(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[(String, Double)] =
-    spark.read.parquet(path).orderBy("piece_id").collect()
+    Parquet.read(spark, path).orderBy("piece_id").collect()
       .map(r => r.getString(0) -> r.getDouble(2)).toSeq
 }

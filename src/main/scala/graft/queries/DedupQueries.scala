@@ -11,6 +11,7 @@ import graft.ops.{Bpe, Dedup, Multimodal, Pca, Similarity, TextAnalysis}
 import graft.schema.Ddl
 import graft.queries.Fixtures._
 import graft.queries.OracleCtes._
+import graft.sources.Parquet
 
 /** exact / near / semantic dedup, similarity joins and record linkage.
   *
@@ -525,7 +526,7 @@ object DedupQueries {
           "doc_id", "text", shingleK = 3, threshold = 0.5)
         .select(col("corpus_id").as("id_a"), col("batch_id").as("id_b"))
       Dedup.connectedComponentsIncremental(
-          s.read.parquet(labelsDir + "/labels"), newPairs)
+          Parquet.read(s, labelsDir + "/labels"), newPairs)
         .select(col("id").as("doc_id"), col("comp"))
         .orderBy("doc_id")
     }),

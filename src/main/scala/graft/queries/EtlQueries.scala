@@ -11,6 +11,7 @@ import graft.ops.{Bpe, Dedup, Multimodal, Pca, Similarity, TextAnalysis}
 import graft.schema.Ddl
 import graft.queries.Fixtures._
 import graft.queries.OracleCtes._
+import graft.sources.Parquet
 
 /** reference-parity ETL surface: scans, transforms, load dispositions,
   * schema tooling, data quality, recon, snapshots and the e2e templates.
@@ -144,7 +145,7 @@ object EtlQueries {
       val part = IndexFixture.dir("l9part", dir) { tmp =>
         FileLoads.append(Tables.events(s, dir), "ts", tmp)
       }
-      s.read.parquet(part)
+      Parquet.read(s, part)
         .filter(col("p_date") >= "2024-01-10" && col("p_date") < "2024-01-17")
         .groupBy(col("p_date").cast("string").as("p_date"))
         .agg(count(lit(1)).as("n_events"), round(sum("value"), 4).as("sum_value"))
@@ -411,7 +412,7 @@ object EtlQueries {
       Tables.lineitem(s, dir).select("l_orderkey", "l_linenumber", "l_quantity")
         .repartition(16).write.mode("overwrite").parquet(tmp + "/frag")
       graft.etl.Scale.compact(s, tmp + "/frag", tmp + "/out", targetBytes = 8L << 20)
-      s.read.parquet(tmp + "/out")
+      Parquet.read(s, tmp + "/out")
         .groupBy().agg(count(lit(1)).as("n_rows"),
           countDistinct("l_orderkey").as("n_orders"),
           round(sum("l_quantity"), 4).as("sum_qty"))
@@ -508,7 +509,7 @@ object EtlQueries {
         retained(li, "l_orderkey", liKeys)
           .write.mode("overwrite").parquet(tmp + "/lineitem")
       }
-      graft.etl.Recon.controlTotals(li, s.read.parquet(tgtDir + "/lineitem"),
+      graft.etl.Recon.controlTotals(li, Parquet.read(s, tgtDir + "/lineitem"),
           to_date(date_trunc("month", col("l_shipdate"))),
           Seq("qty" -> col("l_quantity"),
             "cents" -> round(col("l_extendedprice") * 100)))

@@ -292,12 +292,13 @@ object EventsQueries {
 
     // Fixed-bin value histogram per event type (width_bucket semantics:
     // 10 bins over [0, 100), underflow 0 / overflow 11 buckets kept) —
-    // one partial-aggregating shuffle on (type, bucket).
+    // one partial-aggregating shuffle on (type, bucket); the mean is the
+    // exact-cents one, so a half-tie rounds the same at any partitioning.
     "events_value_histogram" -> ((s, dir) =>
       Tables.events(s, dir)
         .withColumn("bucket", width_bucket(col("value"), lit(0.0), lit(100.0), lit(10)))
         .groupBy("event_type", "bucket")
-        .agg(count(lit(1)).as("n"), round(avg("value"), 4).as("mean_value"))
+        .agg(count(lit(1)).as("n"), graft.ops.Stats.centsMean4(col("value")).as("mean_value"))
         .orderBy("event_type", "bucket")),
 
 
@@ -417,12 +418,12 @@ object EventsQueries {
 
 
     // per-key OLS trend: one hash aggregation (constant regression-moment
-    // state per key), integer-day regressor for cross-engine-exact inputs
+    // state per key), integer-day regressor for cross-engine-exact inputs,
+    // exact-cents mean (half-ties round the same at any partitioning)
     "events_trend" -> ((s, dir) =>
       graft.ops.TimeSeries.trend(Tables.events(s, dir), "user_id", "ts", "value")
         .select(col("user_id"), round(col("slope"), 4).as("slope"),
-          round(col("r2"), 4).as("r2"), col("n"),
-          round(col("mean_value"), 4).as("mean_value"))
+          round(col("r2"), 4).as("r2"), col("n"), col("mean_value"))
         .orderBy("user_id")),
 
 
@@ -636,7 +637,7 @@ object EventsQueries {
     // width_bucket semantics spelled out as arithmetic so the oracle
     // needs no engine-specific builtin: underflow 0, overflow n+1
     "events_value_histogram" ->
-      ("SELECT event_type, bucket, count(*) AS n, round(avg(value), 4) AS mean_value FROM (" +
+      (s"SELECT event_type, bucket, count(*) AS n, ${centsMean4Sql("value")} AS mean_value FROM (" +
         "SELECT event_type, value, CAST(CASE WHEN value < 0 THEN 0 " +
         "WHEN value >= 100 THEN 11 ELSE floor(value / 10) + 1 END AS BIGINT) AS bucket " +
         "FROM events) t GROUP BY 1, 2 ORDER BY event_type, bucket"),
@@ -770,7 +771,7 @@ object EventsQueries {
       ("WITH e AS (SELECT user_id, CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS DOUBLE) AS x, value FROM events) " +
         "SELECT user_id, round(regr_slope(value, x), 4) AS slope, " +
         "round(regr_r2(value, x), 4) AS r2, CAST(regr_count(value, x) AS BIGINT) AS n, " +
-        "round(avg(value), 4) AS mean_value FROM e GROUP BY user_id ORDER BY user_id"),
+        s"${centsMean4Sql("value")} AS mean_value FROM e GROUP BY user_id ORDER BY user_id"),
 
 
     "events_funnel" ->

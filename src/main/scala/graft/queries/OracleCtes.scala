@@ -4,6 +4,16 @@ package graft.queries
   * entry (moved verbatim out of SparkEntry in the r14 registry split).
   */
 object OracleCtes {
+  /** DuckDB twin of [[graft.ops.Stats.centsMean4]]: the HALF_UP 4-place
+    * mean of a cent-valued double from an exact HUGEINT sum of cents
+    * (DuckDB 1.0 returns DOUBLE for avg(DECIMAL) and DECIMAL division).
+    */
+  def centsMean4Sql(c: String): String = {
+    val cents = s"sum(CAST(round($c * 100) AS BIGINT))"
+    val n = s"count($c)"
+    s"CAST(sign($cents) * ((abs($cents) * 200 + $n) // (2 * $n)) AS DOUBLE) / 10000"
+  }
+
   /** Shared DuckDB replay of the `embedding_kmeans` fixpoint (seed from
     * the first 8 vec_ids, 4 assign+update rounds, final assignment in
     * `a5` as (vec_id, cl, d2)) — used by both the kmeans oracle and the

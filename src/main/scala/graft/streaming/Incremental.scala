@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.etl.{Sanitize, Windows}
+import graft.sources.Parquet
 
 /** Structured Streaming restatement of the reference's incremental Method-2
   * pipelines (SURVEY.md §2.9).
@@ -55,16 +56,22 @@ object Incremental {
     */
   /** Spark's file stream source requires a DIRECTORY basePath; fixture
     * tables are single files — stream the parent dir with a
-    * `pathGlobFilter` on the file name.
+    * `pathGlobFilter` on the file name. The probe goes through the Hadoop
+    * `FileSystem` of the path, so it runs on object stores too, and the
+    * schema comes from the named file's (or the directory's) footer.
     */
   private def streamSource(
       spark: SparkSession,
       srcPath: String,
       options: Map[String, String] = Map.empty) = {
-    val f = new java.io.File(srcPath)
+    val p = new org.apache.hadoop.fs.Path(srcPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val isFile =
+      try fs.getFileStatus(p).isFile
+      catch { case _: java.io.FileNotFoundException => false }
     val (dir, globFilter) =
-      if (f.isFile) (f.getParent, f.getName) else (srcPath, "*")
-    val schema = spark.read.option("pathGlobFilter", globFilter).parquet(dir).schema
+      if (isFile) (p.getParent.toString, p.getName) else (srcPath, "*")
+    val schema = Parquet.schemaOf(spark, srcPath)
     spark.readStream.schema(schema).option("pathGlobFilter", globFilter)
       .options(options).parquet(dir)
   }
@@ -468,7 +475,7 @@ object Incremental {
         // sentinel event times: beyond max + watermark + 2 windows (and one
         // more window after that) so the post-sentinel watermark clears
         // every real window end
-        val batch = spark.read.parquet(tmpData.toString)
+        val batch = Parquet.read(spark, tmpData.toString)
         val tsType = batch.schema(tsCol).dataType
         val maxTs = batch.agg(max(tsAsTimestamp(tsType, tsCol))).head().getTimestamp(0)
         val s1 = new java.sql.Timestamp(maxTs.getTime + (watermarkSec + 2 * windowSec) * 1000)
@@ -525,7 +532,7 @@ object Incremental {
       watermarkSec: Long,
       statePartitions: Int = 0): DataFrame = {
     val staged = StagedStream.dir(spark, srcPath, tsCol, keyCol, windowSec, watermarkSec)
-    val schema = spark.read.parquet(staged).schema
+    val schema = Parquet.schemaOf(spark, staged)
     // all files land in ONE micro-batch (data + watermark-driver
     // sentinels); the watermark advances past every real window at its
     // end, and the engine's final no-data micro-batch
@@ -557,7 +564,7 @@ object Incremental {
         .trigger(Trigger.AvailableNow())
         .start()
     }
-    spark.read.parquet(sink.toString)
+    Parquet.read(spark, sink.toString)
       // null-safe: a NULL key group is real data, only the sentinel goes
       .filter(!(col(keyCol) <=> StagedStream.SentinelKey))
       .select(col("window.start").cast("timestamp_ntz").as("window_start"),
@@ -677,7 +684,7 @@ object Incremental {
       watermarkSec: Long,
       statePartitions: Int = 0): DataFrame = {
     val staged = StagedStream.dir(spark, srcPath, tsCol, keyCol, windowSec, watermarkSec)
-    val schema = spark.read.parquet(staged).schema
+    val schema = Parquet.schemaOf(spark, staged)
     val tsTs = StagedStream.tsAsTimestamp(schema(tsCol).dataType, tsCol)
     val in = spark.readStream.schema(schema).parquet(staged)
       .select(col(keyCol), tsTs.as("__ts"))
@@ -698,7 +705,7 @@ object Incremental {
         .trigger(Trigger.AvailableNow())
         .start()
     }
-    spark.read.parquet(sink.toString)
+    Parquet.read(spark, sink.toString)
       .select(col("window.start").cast("timestamp_ntz").as("window_start"),
         col(dimValCol), col("n"))
   }
@@ -758,7 +765,7 @@ object Incremental {
         .trigger(Trigger.AvailableNow())
         .start()
     }
-    spark.read.parquet(sink.toString)
+    Parquet.read(spark, sink.toString)
   }
 
   /** Continuous Method-2: stream new files and MERGE-upsert each
@@ -891,7 +898,7 @@ object Incremental {
               "Restore a checkpoint no older than the retained snapshots, " +
               "or rebuild the rollup at a fresh path.")
           val existing = snaps.filter(_._1 < batchId).lastOption match {
-            case Some((_, dir)) => spark.read.parquet(dir.toString)
+            case Some((_, dir)) => Parquet.read(spark, dir.toString)
             case None =>
               // first batch: empty rollup with the contract schema
               batch.groupBy(keys.map(col): _*)
@@ -942,7 +949,7 @@ object Incremental {
     stampRunIdentity(conf, fs, root, ckptStr)
     val fin = committedSnaps()
     require(fin.nonEmpty, s"no committed rollup snapshot under $rollupPath")
-    spark.read.parquet(fin.last._2.toString)
+    Parquet.read(spark, fin.last._2.toString)
   }
 
   /** Read the rollup AS OF a batch id — time travel over the
@@ -967,7 +974,7 @@ object Incremental {
     require(eligible.nonEmpty,
       s"no committed rollup snapshot with batch id <= $asOfBatch under $rollupPath " +
         s"(retained: ${snaps.map(_._1).mkString(", ")})")
-    spark.read.parquet(eligible.last._2.toString)
+    Parquet.read(spark, eligible.last._2.toString)
   }
 
   /** [[streamRollupMaintain]] with every column summed (the original L8
@@ -1365,7 +1372,7 @@ object Incremental {
     assertNoPendingErase(spark, indexPath, "bm25 index")
     compactCore(spark, indexPath, "bm25 index", Seq(
       Bm25Postings -> { (ins: Seq[String], out: String) =>
-        spark.read.parquet(ins: _*)
+        Parquet.read(spark, ins: _*)
           .select("term", "id", "tf", "dl")
           .repartitionByRange(numFiles, col("term"))
           .sortWithinPartitions("term", "id")
@@ -1382,7 +1389,7 @@ object Incremental {
       numFiles: Int = 8): Long = {
     require(numFiles >= 1, s"numFiles must be >= 1: $numFiles")
     def concat(cols: Seq[String])(ins: Seq[String], out: String): Unit =
-      spark.read.parquet(ins: _*).select(cols.map(col): _*)
+      Parquet.read(spark, ins: _*).select(cols.map(col): _*)
         .repartition(numFiles)
         .write.mode("overwrite").parquet(out)
     compactCore(spark, indexPath, "minhash index", Seq(
@@ -1402,13 +1409,13 @@ object Incremental {
     require(numFiles >= 1, s"numFiles must be >= 1: $numFiles")
     compactCore(spark, indexPath, "simjoin index", Seq(
       SimJoinPrefixes -> { (ins: Seq[String], out: String) =>
-        spark.read.parquet(ins: _*).select("h", "id", "n")
+        Parquet.read(spark, ins: _*).select("h", "id", "n")
           .repartition(numFiles, col("h"))
           .sortWithinPartitions("h", "id")
           .write.mode("overwrite").parquet(out)
       },
       SimJoinSets -> { (ins: Seq[String], out: String) =>
-        spark.read.parquet(ins: _*).select("id", "set", "n")
+        Parquet.read(spark, ins: _*).select("id", "set", "n")
           .repartition(numFiles)
           .write.mode("overwrite").parquet(out)
       }))
@@ -1492,7 +1499,7 @@ object Incremental {
       !st.isDirectory && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
     if (hasClusters || hasFiles)
-      Some(spark.read.parquet(p.toString).select("cluster", "n_id", "codes", "n_norm"))
+      Some(Parquet.read(spark, p.toString).select("cluster", "n_id", "codes", "n_norm"))
     else None
   }
 
@@ -1583,9 +1590,9 @@ object Incremental {
         case Some(p) =>
           val suf = latestSnapSuffix(fs, root, p)
           (graft.ops.Bm25Index.mergeTerms(
-            spark.read.parquet(sub(s"terms_snap_$p$suf").toString), d.terms),
+            Parquet.read(spark, sub(s"terms_snap_$p$suf").toString), d.terms),
             graft.ops.Bm25Index.mergeStats(
-              spark.read.parquet(sub(s"stats_snap_$p$suf").toString), d.stats))
+              Parquet.read(spark, sub(s"stats_snap_$p$suf").toString), d.stats))
         case None => (d.terms, d.stats)
       }
       // the three artifacts are independent until the ONE _committed_
@@ -1633,11 +1640,10 @@ object Incremental {
     val legs = Bm25Postings.legs(fs, root, done)
     val suffix = latestSnapSuffix(fs, root, done.last)
     graft.ops.Bm25Index(
-      spark.read
-        .parquet(legs.map(_.toString): _*)
+      Parquet.read(spark, legs.map(_.toString): _*)
         .select("term", "id", "tf", "dl"),
-      spark.read.parquet(sub(s"terms_snap_${done.last}$suffix")).select("term", "df"),
-      spark.read.parquet(sub(s"stats_snap_${done.last}$suffix")).select("n", "avgdl"))
+      Parquet.read(spark, sub(s"terms_snap_${done.last}$suffix")).select("term", "df"),
+      Parquet.read(spark, sub(s"stats_snap_${done.last}$suffix")).select("n", "avgdl"))
   }
 
   /** Streaming MinHash-LSH index maintenance — [[streamBm25Maintain]]'s
@@ -1796,7 +1802,7 @@ object Incremental {
     // production batch counts (10⁴–10⁵ dirs).
     val legPaths = ledgerMember.legs(fs, root, done).filter(fs.exists)
     val affected = victimLegProbe(
-      spark.read.parquet(legPaths.map(_.toString): _*).select("id"),
+      Parquet.read(spark, legPaths.map(_.toString): _*).select("id"),
       k, "id", distinctPerDoc = false)
     // legs rewrite CONCURRENTLY (guide §2.6): they are disjoint dirs, and
     // crash-idempotence is per leg — each leg's probe member still
@@ -1807,7 +1813,7 @@ object Incremental {
       orderedMembers.foreach { m =>
         val p = new org.apache.hadoop.fs.Path(root, m.rel(leg))
         if (fs.exists(p)) {
-          val df = spark.read.parquet(p.toString)
+          val df = Parquet.read(spark, p.toString)
           // retained rows materialize BEFORE the overwrite of their source
           val retained = df.join(k, Seq("id"), "left_anti")
             .select(df.columns.map(col).toIndexedSeq: _*).localCheckpoint()
@@ -1981,11 +1987,11 @@ object Incremental {
     val k = ids.toDF("id").distinct().localCheckpoint()
     val legPaths = Bm25Postings.legs(fs, root, done).filter(fs.exists)
     def legRead() = withLegColumn(
-      spark.read.parquet(legPaths.map(_.toString): _*)
+      Parquet.read(spark, legPaths.map(_.toString): _*)
         .select("id", "term", "dl"))
     // pass 1: ledger counts (distinct docs; postings repeat a doc per term)
     val affected = victimLegProbe(
-      spark.read.parquet(legPaths.map(_.toString): _*).select("id"),
+      Parquet.read(spark, legPaths.map(_.toString): _*).select("id"),
       k, "id", distinctPerDoc = true)
     if (affected.isEmpty)
       Seq.empty[(Long, Long, Long, Long)]
@@ -2040,7 +2046,7 @@ object Incremental {
       done: Seq[Long],
       knownBearing: Option[Seq[String]] = None): Unit = {
     val journal = eraseJournalPath(root)
-    val j = spark.read.parquet(journal.toString).localCheckpoint()
+    val j = Parquet.read(spark, journal.toString).localCheckpoint()
     if (j.isEmpty) { fs.delete(journal, true); return } // zero-delta journal
     val jk = j.select("id").distinct().localCheckpoint()
     val legPaths = Bm25Postings.legs(fs, root, done).filter(fs.exists)
@@ -2049,14 +2055,14 @@ object Incremental {
     // pre-crash state and re-probes
     val bearing = knownBearing.map(_.map(l => (l, 0L, 0L))).getOrElse(
       victimLegProbe(
-        spark.read.parquet(legPaths.map(_.toString): _*).select("id"),
+        Parquet.read(spark, legPaths.map(_.toString): _*).select("id"),
         jk, "id", distinctPerDoc = false))
     // disjoint leg dirs, journal already committed — rewrite concurrently
     // (guide §2.6); a crash leaves the journal pending either way and the
     // re-run re-probes whatever legs still bear victims
     runConcurrently(bearing.map { case (leg, _, _) => () =>
       val p = new org.apache.hadoop.fs.Path(root, Bm25Postings.rel(leg))
-      val df = spark.read.parquet(p.toString)
+      val df = Parquet.read(spark, p.toString)
       val retained = df.join(jk, Seq("id"), "left_anti")
         .select(df.columns.map(col).toIndexedSeq: _*).localCheckpoint()
       retained.write.mode("overwrite").parquet(p.toString)
@@ -2068,8 +2074,8 @@ object Incremental {
     if (!committed) {
       val baseSuffix = snapSuffixOf(targetGen - 1)
       def sub(name: String) = new org.apache.hadoop.fs.Path(root, name).toString
-      val terms0 = spark.read.parquet(sub(s"terms_snap_$lastId$baseSuffix"))
-      val stats0 = spark.read.parquet(sub(s"stats_snap_$lastId$baseSuffix"))
+      val terms0 = Parquet.read(spark, sub(s"terms_snap_$lastId$baseSuffix"))
+      val stats0 = Parquet.read(spark, sub(s"stats_snap_$lastId$baseSuffix"))
       // the static Bm25Index.erase algebra, fed from the journal: df
       // subtracts the victims' per-term posting counts; (n, avgdl) roll
       // back in closed form from one dl per victim doc
@@ -2183,11 +2189,9 @@ object Incremental {
     def sub(name: String) = new org.apache.hadoop.fs.Path(root, name).toString
     val (k, b, r) = graft.ops.MinHashIndex.sidecarParams(conf, indexPath)
     graft.ops.MinHashIndex(
-      spark.read
-        .parquet(MinHashBuckets.legs(fs, root, done).map(_.toString): _*)
+      Parquet.read(spark, MinHashBuckets.legs(fs, root, done).map(_.toString): _*)
         .select("id", "band", "bucket"),
-      spark.read
-        .parquet(MinHashSets.legs(fs, root, done).map(_.toString): _*)
+      Parquet.read(spark, MinHashSets.legs(fs, root, done).map(_.toString): _*)
         .select("id", "shingle_set"),
       k, b, r)
   }
@@ -2507,7 +2511,7 @@ object Incremental {
       } else {
         // later batches fold in under the FROZEN order: one shingle pass
         // over the batch, df-0 newcomers sort first (append's argument)
-        val freq = spark.read.parquet(sub("freq").toString).select("h", "freq")
+        val freq = Parquet.read(spark, sub("freq").toString).select("h", "freq")
         val (p, sets) = graft.ops.SimJoinIndex.encodeDelta(
           freq, batch, idCol, textCol, shingleK, threshold)
         runConcurrently(Seq(
@@ -2534,12 +2538,10 @@ object Incremental {
     val (shingleK, threshold) =
       graft.ops.SimJoinIndex.sidecarParams(conf, indexPath)
     graft.ops.SimJoinIndex(
-      spark.read.parquet(sub("freq")).select("h", "freq"),
-      spark.read
-        .parquet(SimJoinPrefixes.legs(fs, root, done).map(_.toString): _*)
+      Parquet.read(spark, sub("freq")).select("h", "freq"),
+      Parquet.read(spark, SimJoinPrefixes.legs(fs, root, done).map(_.toString): _*)
         .select("h", "id", "n"),
-      spark.read
-        .parquet(SimJoinSets.legs(fs, root, done).map(_.toString): _*)
+      Parquet.read(spark, SimJoinSets.legs(fs, root, done).map(_.toString): _*)
         .select("id", "set", "n"),
       shingleK, threshold)
   }
@@ -2569,7 +2571,7 @@ object Incremental {
       watermarkSec: Long,
       statePartitions: Int = 0): DataFrame = {
     val staged = StagedStream.dir(spark, srcPath, tsCol, keyCol, gapSec, watermarkSec)
-    val schema = spark.read.parquet(staged).schema
+    val schema = Parquet.schemaOf(spark, staged)
     val in = spark.readStream.schema(schema)
       .parquet(staged)
       .withColumn("__graft_ts", StagedStream.tsAsTimestamp(schema(tsCol).dataType, tsCol))
@@ -2588,7 +2590,7 @@ object Incremental {
         .trigger(Trigger.AvailableNow())
         .start()
     }
-    spark.read.parquet(sink.toString)
+    Parquet.read(spark, sink.toString)
       .filter(!(col(keyCol) <=> StagedStream.sentinelFor(schema(keyCol).dataType)))
       .select(col("session_window.start").cast("timestamp_ntz").as("session_start"),
         col("session_window.end").cast("timestamp_ntz").as("session_end"),
@@ -2628,7 +2630,7 @@ object Incremental {
         .option("checkpointLocation", ckpt.toString)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }
-    spark.read.parquet(sink.toString)
+    Parquet.read(spark, sink.toString)
   }
 
   /** Streaming benchmark decontamination: documents arrive as a file
@@ -2681,7 +2683,7 @@ object Incremental {
       .option("checkpointLocation", ckpt.toString)
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    spark.read.parquet(sink.toString)
+    Parquet.read(spark, sink.toString)
   }
 
   /** Streaming NEAR-duplicate detection of an incoming document stream
@@ -2773,7 +2775,7 @@ object Incremental {
       .option("checkpointLocation", ckpt.toString)
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    spark.read.parquet(sink.toString)
+    Parquet.read(spark, sink.toString)
   }
 
   /** One event for stateful sessionization: `ts` is the watermarked
@@ -2821,7 +2823,7 @@ object Incremental {
     // A caller-supplied `delaySec` (the deployment's arrival-skew bound)
     // skips the declaration-time span probe — schema inspection below
     // reads only footers, never data.
-    val rawSchemaDf = spark.read.parquet(srcPath)
+    val rawSchemaDf = Parquet.read(spark, srcPath)
     val tsType = rawSchemaDf.schema(tsCol).dataType
     val watermarkSec =
       if (delaySec >= 0L) delaySec
@@ -2835,7 +2837,7 @@ object Incremental {
       }
     val staged = StagedStream.dir(spark, srcPath, tsCol, userCol,
       windowSec = gapSec, watermarkSec = watermarkSec)
-    val schema = spark.read.parquet(staged).schema
+    val schema = Parquet.schemaOf(spark, staged)
     val src = spark.readStream.schema(schema).parquet(staged)
     // events.ts streams as raw nanos (LongType, nanosAsLong) — µs = ns div 1000;
     // genuine timestamp columns go through unix_micros
@@ -2879,7 +2881,7 @@ object Incremental {
         .option("checkpointLocation", ckpt.toString)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }
-    spark.read.parquet(sink.toString)
+    Parquet.read(spark, sink.toString)
       .filter(col("user_id") =!= StagedStream.SentinelId)
   }
 
@@ -2940,7 +2942,7 @@ object Incremental {
     val watermarkSec =
       if (delaySec >= 0L) delaySec
       else {
-        val batchView = spark.read.parquet(srcPath)
+        val batchView = Parquet.read(spark, srcPath)
         val spanRow = batchView
           .agg(max(tsUsOf(batchView)) - min(tsUsOf(batchView)))
           .head()

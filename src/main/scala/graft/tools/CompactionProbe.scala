@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** Empirical before/after probe for maintained-root compaction
   * (`runMain graft.tools.CompactionProbe [srcSfDir] [nBatches]`): builds a
   * stream-maintained MinHash root over the documents table split into
@@ -25,7 +27,7 @@ object CompactionProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Parquet.read(spark, s"$sfDir/documents.parquet")
     val tmp = java.nio.file.Files.createTempDirectory("graft_cprobe").toString
     docs.repartition(nBatches, col("doc_id")).write.parquet(s"$tmp/src")
     println(s"[cprobe] ingesting $nBatches micro-batches from $sfDir ...")

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** Self-generated scale-up corpus for the empirical scaling probe
   * (`runMain graft.tools.ScaleUp [factor] [outDir] [srcDir]`): replicates
   * the sf0.1 fixture `factor`× with key remapping, so every 100 TB design
@@ -34,7 +36,7 @@ object ScaleUp {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def tbl(name: String) = spark.read.parquet(s"$srcDir/$name.parquet")
+    def tbl(name: String) = Parquet.read(spark, s"$srcDir/$name.parquet")
     def off(df: DataFrame, key: String): Long =
       df.agg(max(col(key))).head().getLong(0) + 1L
 

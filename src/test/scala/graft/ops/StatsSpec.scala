@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSpark
@@ -94,5 +95,26 @@ class StatsSpec extends AnyFunSuite {
     assert(!r.getAs[Double]("kl_pq").isInfinite && r.getAs[Double]("kl_pq") > 0)
     // JS is bounded by ln 2 even with the clamp
     assert(r.getAs[Double]("js") <= math.log(2) + 1e-9)
+  }
+
+  test("centsMean4: half-tie means round HALF_UP from the exact cents sum, " +
+      "the same at 1 and at 7 partitions") {
+    // exact means on a 4-place half-tie: 1,758,321 cents / 72 rows =
+    // 244.21125; 30,392,400 / 3,200 = 94.97625; -1 / 8 = -0.00125 (away
+    // from zero); a group with no non-null value has no mean
+    val r = new java.util.SplittableRandom(11)
+    def tie(g: String, n: Int, totalCents: Long): Seq[(String, Option[Double])] = {
+      val head = Seq.fill(n - 1)(r.nextLong(1, 49000))
+      (head :+ (totalCents - head.sum)).map(c => (g, Some(c / 100.0)))
+    }
+    val rows = tie("a", 72, 1758321L) ++ tie("b", 3200, 30392400L) ++
+      (-0.01 +: Seq.fill(7)(0.0)).map(v => ("c", Some(v))) ++ Seq(("d", None))
+    val want = Map("a" -> Some(244.2113), "b" -> Some(94.9763), "c" -> Some(-0.0013), "d" -> None)
+    for (parts <- Seq(1, 7)) {
+      val got = rows.toDF("g", "v").repartition(parts)
+        .groupBy("g").agg(Stats.centsMean4(col("v")).as("m"))
+        .collect().map(x => x.getString(0) -> Option(x.get(1)).map(_.asInstanceOf[Double])).toMap
+      assert(got == want, s"at $parts partitions")
+    }
   }
 }

@@ -73,7 +73,8 @@ class TimeSeriesSpec extends AnyFunSuite {
     val r2 = out(1)
     assert(math.abs(r2.getAs[Double]("slope") - s2) < 1e-9)
     assert(math.abs(r2.getAs[Double]("r2") - q2) < 1e-9)
-    assert(math.abs(r2.getAs[Double]("mean_value") - 10.0 / 3) < 1e-9)
+    // exact-cents mean, HALF_UP at 4 places: 10/3 -> 3.3333
+    assert(math.abs(r2.getAs[Double]("mean_value") - 3.3333) < 1e-9)
     val r3 = out(2)
     assert(r3.isNullAt(r3.fieldIndex("slope")) && r3.getAs[Long]("n") == 2L)
   }
