@@ -24,6 +24,7 @@ import graft.sources.Parquet
   * every day); state for windowed aggregation is bounded by the watermark.
   */
 object Incremental {
+  import MaintainedRoot._
 
   /** Starts a streaming query with `spark.sql.shuffle.partitions`
     * temporarily set to `statePartitions` (when > 0) and blocks until it
@@ -60,7 +61,7 @@ object Incremental {
     * `FileSystem` of the path, so it runs on object stores too, and the
     * schema comes from the named file's (or the directory's) footer.
     */
-  private def streamSource(
+  private[streaming] def streamSource(
       spark: SparkSession,
       srcPath: String,
       options: Map[String, String] = Map.empty) = {
@@ -74,20 +75,6 @@ object Incremental {
     val schema = Parquet.schemaOf(spark, srcPath)
     spark.readStream.schema(schema).option("pathGlobFilter", globFilter)
       .options(options).parquet(dir)
-  }
-
-  /** Read a small filesystem artifact fully — Hadoop FS resolved from the
-    * path itself (the checkpoint may live on a different scheme than the
-    * maintained state, and opening a foreign path through the wrong
-    * handle throws 'Wrong FS').
-    */
-  private def readUtf8(
-      conf: org.apache.hadoop.conf.Configuration,
-      p: org.apache.hadoop.fs.Path): String = {
-    val pfs = p.getFileSystem(conf)
-    val s = pfs.open(p)
-    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(s), "UTF-8")
-    finally s.close()
   }
 
   /** EXCLUSIVE MUTATOR LEASE on a maintained index root. Every mutator —
@@ -274,64 +261,6 @@ object Incremental {
     val lease = new org.apache.hadoop.fs.Path(indexPath, LeaseName)
     val fs = lease.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(lease, false)
-  }
-
-  /** The streaming query id in `<ckpt>/metadata` (`{"id":"<uuid>"}`) —
-    * present iff this checkpoint has run before. Stable across checkpoint
-    * COPIES/restores, fresh for a new checkpoint.
-    */
-  private def checkpointQueryId(
-      conf: org.apache.hadoop.conf.Configuration,
-      ckptStr: String): Option[String] = {
-    val meta = new org.apache.hadoop.fs.Path(ckptStr, "metadata")
-    val mfs = meta.getFileSystem(conf)
-    if (!mfs.exists(meta)) None
-    else "\"id\"\\s*:\\s*\"([^\"]+)\"".r
-      .findFirstMatchIn(readUtf8(conf, meta)).map(_.group(1))
-  }
-
-  /** RUN-IDENTITY GUARD shared by the batch-stamped maintainers
-    * ([[streamRollupMaintain]], [[streamBm25Maintain]]): batch ids are
-    * comparable only within ONE checkpoint lineage — a fresh checkpoint
-    * restarts them at 0, so its live batches would collide with
-    * historical batch-stamped artifacts and be silently skipped as
-    * "already committed" (data loss). The maintained state carries a
-    * `_graft_query_id` stamp; a run whose checkpoint identity does not
-    * match fails loudly instead of merging.
-    */
-  private def assertRunIdentity(
-      conf: org.apache.hadoop.conf.Configuration,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      ckptStr: String,
-      what: String): Unit = {
-    val stampPath = new org.apache.hadoop.fs.Path(root, "_graft_query_id")
-    if (fs.exists(stampPath)) {
-      val stamped = readUtf8(conf, stampPath).trim
-      val current = checkpointQueryId(conf, ckptStr)
-      require(current.contains(stamped),
-        s"$what at $root was maintained by streaming query '$stamped' " +
-          s"but checkpoint '$ckptStr' carries ${current.fold("no run yet (fresh checkpoint)")(id => s"query '$id'")}: " +
-          "its batch ids would restart and live batches would be silently " +
-          "skipped as stale snapshots. Reuse the original checkpoint " +
-          "(or a restored copy of it), or start a fresh target path.")
-    }
-  }
-
-  /** Stamp (once) the checkpoint identity whose batch ids the maintained
-    * state carries; the checkpoint's `metadata` exists once the query has
-    * started.
-    */
-  private def stampRunIdentity(
-      conf: org.apache.hadoop.conf.Configuration,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      ckptStr: String): Unit = {
-    val stampPath = new org.apache.hadoop.fs.Path(root, "_graft_query_id")
-    if (!fs.exists(stampPath)) checkpointQueryId(conf, ckptStr).foreach { id =>
-      val out = fs.create(stampPath, true)
-      try out.write(id.getBytes("UTF-8")) finally out.close()
-    }
   }
 
   def incrementalRefresh(
@@ -1029,151 +958,6 @@ object Incremental {
     * [[graft.ops.Bm25Index.append]]. Returns the maintained index
     * ([[readBm25Maintained]]) for serving.
     */
-  /** Shared machinery of the batch-stamped streaming index maintainers
-    * ([[streamBm25Maintain]], [[streamMinHashMaintain]]): an AvailableNow
-    * foreachBatch stream over `srcPath` where each micro-batch's
-    * artifacts are written under `indexPath` by `writeBatch(batch,
-    * batchId, committedBefore)` and then committed by ONE
-    * `_committed_<batchId>` marker — a replayed committed batch skips
-    * entirely; a crash before the marker leaves the batch uncommitted so
-    * the replay rewrites the same deterministic artifacts (writers use
-    * mode overwrite). `afterCommit` runs with the post-marker committed
-    * id list (snapshot retirement). The [[streamRollupMaintain]]
-    * RUN-IDENTITY GUARD applies: `indexPath` carries the maintaining
-    * query's id and a fresh checkpoint (batch ids restarting at 0) fails
-    * loudly instead of silently skipping live batches as replays.
-    * Returns the committed batch ids after the run.
-    */
-  private def runBatchCommitted(
-      spark: SparkSession,
-      srcPath: String,
-      indexPath: String,
-      checkpointPath: String,
-      what: String,
-      maxFilesPerTrigger: Int)(
-      writeBatch: (DataFrame, Long, Seq[Long]) => Unit)(
-      afterCommit: Seq[Long] => Unit): Seq[Long] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    fs.mkdirs(root)
-    val ckptStr =
-      if (checkpointPath != null) checkpointPath
-      else new org.apache.hadoop.fs.Path(indexPath, "_checkpoint").toString
-    withRootLease(conf, fs, root, what, "maintainer") {
-    assertRunIdentity(conf, fs, root, ckptStr, what)
-    val srcOpts =
-      if (maxFilesPerTrigger > 0)
-        Map("maxFilesPerTrigger" -> maxFilesPerTrigger.toString)
-      else Map.empty[String, String]
-    val in = streamSource(spark, srcPath, srcOpts)
-    val q = in.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val done = committedBatchIds(fs, root)
-        if (done.contains(batchId)) {
-          // at-least-once replay of an already-committed batch: skip —
-          // but only if it replays the SAME file set it committed with (a
-          // restored-older checkpoint re-plans this id over MORE files;
-          // see batchFilesSig)
-          assertReplayedBatchUnchanged(conf,
-            new org.apache.hadoop.fs.Path(root, s"_committed_$batchId"),
-            batchFilesSig(conf, ckptStr, batchId), what, batchId)
-        } else {
-          // stamp BEFORE the first marker ever lands (no-op once
-          // stamped): a first-run crash after markers but before a
-          // post-run stamp would let a fresh-checkpoint restart pass the
-          // identity guard and silently skip live batches as replays —
-          // the checkpoint's metadata file exists once the query started,
-          // i.e. here
-          stampRunIdentity(conf, fs, root, ckptStr)
-          writeBatch(batch, batchId, done)
-          // ONE commit point covers every artifact the batch wrote — a
-          // crash between any artifact write and this create leaves the
-          // batch uncommitted, so the replay rewrites it wholesale. The
-          // marker body records the batch's source-file fingerprint for
-          // the replay check above.
-          writeUtf8(fs,
-            new org.apache.hadoop.fs.Path(root, s"_committed_$batchId"),
-            batchFilesSig(conf, ckptStr, batchId))
-          afterCommit(committedBatchIds(fs, root))
-        }
-      }
-      .option("checkpointLocation", ckptStr)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // zero-batch runs (empty source) still stamp, closing the lineage
-    stampRunIdentity(conf, fs, root, ckptStr)
-    val fin = committedBatchIds(fs, root)
-    require(fin.nonEmpty, s"no committed $what batch under $indexPath")
-    fin
-    }
-  }
-
-  /** The sorted committed batch ids under a [[runBatchCommitted]] index
-    * root — ONE definition of the load-bearing `_committed_<id>` marker
-    * scheme, shared by the writer and both maintained-index readers.
-    */
-  private def committedBatchIds(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Long] =
-    fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_committed_"))
-      .map(_.stripPrefix("_committed_").toLong).sorted
-
-  /** Deterministic fingerprint of a micro-batch's SOURCE-FILE set.
-    * Recorded inside each `_committed_<id>` marker and re-checked on
-    * replay: a batch id only maps to the same files within one checkpoint
-    * HISTORY — a checkpoint restored to an OLDER state re-plans an
-    * already-committed id over whatever is now available (with
-    * AvailableNow and no maxFilesPerTrigger, EVERYTHING unseen packs into
-    * that one batch), and skipping it by marker alone would silently drop
-    * the newer files.
-    *
-    * The file set comes from the checkpoint's FileStreamSource metadata
-    * log (`<ckpt>/sources/0/<batchId>`, written when the batch is
-    * planned) — the foreachBatch DataFrame itself is a LogicalRDD whose
-    * file lineage is already erased. An unreadable/missing log entry
-    * yields an empty (unverifiable) signature, which both sides treat as
-    * "skip the check" — never a false trigger.
-    */
-  private def batchFilesSig(
-      conf: org.apache.hadoop.conf.Configuration,
-      ckptStr: String,
-      batchId: Long): String = {
-    val dir = new org.apache.hadoop.fs.Path(ckptStr, "sources/0")
-    val fs = dir.getFileSystem(conf)
-    // the log compacts every N batches into "<id>.compact" (all entries
-    // up to id); either shape carries this batch's entries
-    val logFile = Seq(
-      new org.apache.hadoop.fs.Path(dir, s"$batchId.compact"),
-      new org.apache.hadoop.fs.Path(dir, batchId.toString)).find(fs.exists)
-    logFile.fold("") { p =>
-      val entryRe = """\{[^{}]*\}""".r
-      val bidRe = """"batchId"\s*:\s*(-?\d+)""".r
-      val pathRe = """"path"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-      val files = entryRe.findAllIn(readUtf8(conf, p)).toSeq.flatMap { e =>
-        if (bidRe.findFirstMatchIn(e).exists(_.group(1).toLong == batchId))
-          pathRe.findFirstMatchIn(e).map(_.group(1))
-        else None
-      }.sorted
-      if (files.isEmpty) "" // unparseable or foreign layout: unverifiable
-      else {
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        files.foreach(f => md.update((f + "\n").getBytes("UTF-8")))
-        s"files=${files.length} sha256=${md.digest().map("%02x".format(_)).mkString}"
-      }
-    }
-  }
-
-  private def writeUtf8(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path,
-      content: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
   /** Run independent artifact actions CONCURRENTLY (guide §2.6 — Spark's
     * scheduler happily runs several jobs at once; serial driver calls were
     * the only reason these tiny per-batch/per-leg writes queued behind one
@@ -1185,174 +969,9 @@ object Incremental {
     * leave the other actions' jobs running detached, racing whatever the
     * caller does next (the knn_recall_audit error-containment convention).
     */
-  private def runConcurrently(actions: Seq[() => Unit]): Unit = {
+  private[streaming] def runConcurrently(actions: Seq[() => Unit]): Unit = {
     graft.ops.Concurrent.awaitAll(actions)
     ()
-  }
-
-  /** One data member of a maintained index root under the COMPACTION
-    * scheme: batch dirs (`<parent>/batch_<id>` — or root-level
-    * `lists_batch_<id>` for the IVF-PQ layout) plus at most one committed
-    * compacted generation (`compact_<gen>`, gen = the highest batch id
-    * folded in). The generation is committed by a single root-level
-    * `_compacted_<gen>` marker written LAST (shared across members), so
-    * the serve/erase surface is compact dir + tail batch dirs — bounded
-    * by compaction cadence instead of growing one leg per batch forever.
-    */
-  private final case class MemberLayout(
-      parentRel: String,
-      batchPrefix: String = "batch_",
-      compactPrefix: String = "compact_") {
-    def rel(n: String): String =
-      if (parentRel.isEmpty) n else s"$parentRel/$n"
-    def batchPath(root: org.apache.hadoop.fs.Path, id: Long) =
-      new org.apache.hadoop.fs.Path(root, rel(s"$batchPrefix$id"))
-    def compactPath(root: org.apache.hadoop.fs.Path, gen: Long) =
-      new org.apache.hadoop.fs.Path(root, rel(s"$compactPrefix$gen"))
-    /** The live data dirs: the committed compacted generation (when
-      * present — an all-empty member may have written none) plus batch
-      * dirs NEWER than it. Batch dirs at or below the generation are
-      * superseded (they exist only inside the post-marker pre-sweep
-      * crash window) and are never read.
-      */
-    def legs(
-        fs: org.apache.hadoop.fs.FileSystem,
-        root: org.apache.hadoop.fs.Path,
-        done: Seq[Long]): Seq[org.apache.hadoop.fs.Path] = {
-      val gen = compactedGenId(fs, root)
-      gen.map(g => compactPath(root, g)).filter(fs.exists).toSeq ++
-        done.filter(id => gen.forall(id > _)).map(id => batchPath(root, id))
-    }
-    /** Remove dirs superseded by the COMMITTED compaction generation:
-      * batch dirs at or below it and older compact dirs. Idempotent.
-      * Called by [[compactCore]]'s sweep AND at erase entry — a
-      * compaction that crashed between its `_compacted_` marker and its
-      * sweep leaves superseded dirs whose rows (victim rows included)
-      * no reader resolves but which still physically persist; an erase
-      * must remove them BEFORE attesting, not leave the bytes for a
-      * future compaction to clean.
-      */
-    def sweepSuperseded(
-        fs: org.apache.hadoop.fs.FileSystem,
-        root: org.apache.hadoop.fs.Path): Unit =
-      compactedGenId(fs, root).foreach { gen =>
-        val parent =
-          if (parentRel.isEmpty) root else new org.apache.hadoop.fs.Path(root, parentRel)
-        if (fs.exists(parent)) fs.listStatus(parent).toSeq.foreach { st =>
-          val n = st.getPath.getName
-          def num(prefix: String): Option[Long] = {
-            val s = n.stripPrefix(prefix)
-            if (n.startsWith(prefix) && s.nonEmpty && s.forall(_.isDigit))
-              Some(s.toLong)
-            else None
-          }
-          val superseded =
-            num(batchPrefix).exists(_ <= gen) || num(compactPrefix).exists(_ < gen)
-          if (superseded) fs.delete(st.getPath, true)
-        }
-      }
-
-    /** Compact dirs physically on disk (committed or half-written). */
-    def compactGensOnDisk(
-        fs: org.apache.hadoop.fs.FileSystem,
-        root: org.apache.hadoop.fs.Path): Seq[Long] = {
-      val parent =
-        if (parentRel.isEmpty) root else new org.apache.hadoop.fs.Path(root, parentRel)
-      if (!fs.exists(parent)) Nil
-      else fs.listStatus(parent).toSeq.map(_.getPath.getName)
-        .filter(n => n.startsWith(compactPrefix) &&
-          n.stripPrefix(compactPrefix).nonEmpty &&
-          n.stripPrefix(compactPrefix).forall(_.isDigit))
-        .map(_.stripPrefix(compactPrefix).toLong)
-    }
-  }
-
-  private val Bm25Postings = MemberLayout("postings")
-  private val MinHashBuckets = MemberLayout("buckets")
-  private val MinHashSets = MemberLayout("sets")
-  private val SimJoinPrefixes = MemberLayout("prefixes")
-  private val SimJoinSets = MemberLayout("sets")
-  private val IvfLists = MemberLayout("", "lists_batch_", "lists_compact_")
-
-  /** The committed compaction generation under a maintained root (highest
-    * `_compacted_<gen>` marker), shared by every member of the root.
-    */
-  private def compactedGenId(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[Long] =
-    fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_compacted_"))
-      .map(_.stripPrefix("_compacted_").toLong).sorted.lastOption
-
-  /** Shared compaction protocol for the four stream-maintained indexes:
-    * merge the previous compacted generation (if any) and every committed
-    * batch dir into ONE `compact_<newGen>` dir per member
-    * (newGen = the highest committed batch id), committed by a single
-    * `_compacted_<newGen>` marker written LAST, then sweep the superseded
-    * dirs. Closes the r15 scale gap: without compaction, serve-plan union
-    * width and erase-probe cost grow one leg per committed batch forever
-    * (10⁴–10⁵ dirs at production micro-batch cadence).
-    *
-    * Crash-safe at every point: a crash before the marker leaves
-    * half-written compact dirs no reader resolves (and a re-run
-    * overwrites or sweeps them); a crash after the marker but before the
-    * sweep leaves superseded batch dirs that readers already ignore
-    * (legs() excludes ids ≤ the generation) and the next compaction
-    * removes. The `_committed_<id>` markers are NEVER removed: a replay
-    * of a pre-compaction batch id must stay a no-op (and its recorded
-    * file signature stays checkable). Caller contract: the maintainer is
-    * not running against this root during compaction (the offline
-    * maintenance window, like erasure).
-    *
-    * `merge(inputDirs, outDir)` writes one member's merged generation in
-    * that member's serving layout; it may decline to write when every
-    * input is empty (readers tolerate a missing compact dir). Returns the
-    * committed generation id.
-    */
-  private def compactCore(
-      spark: SparkSession,
-      indexPath: String,
-      what: String,
-      members: Seq[(MemberLayout, (Seq[String], String) => Unit)]): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    withRootLease(conf, fs, root, what, "compactor") {
-    val done = committedBatchIds(fs, root)
-    require(done.nonEmpty, s"no committed $what batch under $indexPath")
-    def sweep(gen: Long): Unit = {
-      members.foreach { case (m, _) =>
-        done.filter(_ <= gen).foreach(id => fs.delete(m.batchPath(root, id), true))
-        // superseded or half-written older generations
-        m.compactGensOnDisk(fs, root).filter(_ < gen)
-          .foreach(g => fs.delete(m.compactPath(root, g), true))
-      }
-      fs.listStatus(root).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("_compacted_"))
-        .map(_.stripPrefix("_compacted_").toLong).filter(_ < gen)
-        .foreach(g =>
-          fs.delete(new org.apache.hadoop.fs.Path(root, s"_compacted_$g"), false))
-    }
-    val prev = compactedGenId(fs, root)
-    // finish any interrupted sweep for the current generation first
-    prev.foreach(sweep)
-    val newGen = done.last
-    if (prev.contains(newGen)) newGen // everything is already compacted
-    else {
-      // members merge into disjoint compact dirs under ONE marker —
-      // concurrent (guide §2.6)
-      runConcurrently(members.map { case (m, merge) => () =>
-        val inputs = m.legs(fs, root, done).filter(fs.exists)
-        if (inputs.nonEmpty)
-          merge(inputs.map(_.toString), m.compactPath(root, newGen).toString)
-      })
-      // ONE commit point covers every member's merged generation
-      writeUtf8(fs, new org.apache.hadoop.fs.Path(root, s"_compacted_$newGen"),
-        s"merged=${done.mkString(",")}")
-      sweep(newGen)
-      newGen
-    }
-    }
   }
 
   /** Compact a [[streamBm25Maintain]]ed root: merge every committed
@@ -1501,60 +1120,6 @@ object Incremental {
     if (hasClusters || hasFiles)
       Some(Parquet.read(spark, p.toString).select("cluster", "n_id", "codes", "n_norm"))
     else None
-  }
-
-  /** Reject a maintained root that holds (any part of) a STATICALLY
-    * written index: a static layout keeps part files directly under the
-    * member dirs, which the maintained readers (batch_* / compact_* dirs
-    * only) silently ignore — cohabiting would hide every statically
-    * written document. Checked on EVERY member dir, even without a
-    * sidecar: a static write interrupted between members leaves exactly
-    * one member in the static shape.
-    */
-  private def assertMaintainerOwnsLayout(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      members: Seq[String],
-      what: String,
-      serveHint: String): Unit =
-    members.foreach { m =>
-      val p = new org.apache.hadoop.fs.Path(root, m)
-      val static = fs.exists(p) && fs.listStatus(p).exists { st =>
-        val n = st.getPath.getName
-        !n.startsWith("batch_") && !n.startsWith("compact_") && !n.startsWith("_")
-      }
-      require(!static,
-        s"$root holds a statically-written $what (non-batch entries under " +
-          s"$m/); stream maintainers own their roots ($serveHint)")
-    }
-
-  /** Fail loudly when a replayed committed batch id arrives with a
-    * DIFFERENT source-file set than the one its marker recorded (see
-    * [[batchFilesSig]]). An empty recorded sig (pre-sig roots), an empty
-    * current sig (unreadable source log), or a recorded value that does
-    * not parse as a signature (a TORN marker write — the content is
-    * advisory hardening, so a truncated flush must degrade to
-    * unverifiable, never wedge the stream with a false mismatch) all
-    * skip the check, as the markers without content always did.
-    */
-  private val FilesSigShape = "files=\\d+ sha256=[0-9a-f]{64}".r
-
-  private def assertReplayedBatchUnchanged(
-      conf: org.apache.hadoop.conf.Configuration,
-      marker: org.apache.hadoop.fs.Path,
-      sig: String,
-      what: String,
-      batchId: Long): Unit = {
-    val recorded = readUtf8(conf, marker).trim
-    val verifiable =
-      FilesSigShape.matches(recorded) && FilesSigShape.matches(sig)
-    require(!verifiable || recorded == sig,
-      s"$what batch $batchId replayed with a DIFFERENT source-file set " +
-        s"(committed: $recorded; replayed: $sig). The checkpoint was " +
-        "restored to a state older than files that have since arrived, so " +
-        "skipping this batch as already-committed would silently drop " +
-        "them. Restore a checkpoint no older than the newest committed " +
-        "batch, or start a fresh maintained root.")
   }
 
   def streamBm25Maintain(
@@ -1830,42 +1395,6 @@ object Incremental {
       .toDF("batch_id", "n_before", "n_after", "n_erased")
     }
   }
-
-  /** ONE-JOB victim probe over a union of leg reads: tag each row with
-    * the leg dir it came from ([[withLegColumn]]), left-join the
-    * (broadcast, GDPR-request-sized) victim keys, aggregate per leg →
-    * victim-bearing legs with (rows, victim rows) — or distinct-doc
-    * counts for members that repeat a doc across rows (BM25 postings).
-    * Probe cost is one job regardless of committed-batch count.
-    */
-  private def victimLegProbe(
-      rows: DataFrame,
-      k: DataFrame,
-      idColName: String,
-      distinctPerDoc: Boolean): Seq[(String, Long, Long)] = {
-    val flagged = withLegColumn(rows)
-      .join(broadcast(k.withColumn("__v", lit(1))), Seq(idColName), "left")
-    val agg =
-      if (distinctPerDoc)
-        flagged.groupBy("__leg").agg(
-          countDistinct(col(idColName)).as("nb"),
-          countDistinct(when(col("__v").isNotNull, col(idColName))).as("nv"))
-      else
-        flagged.groupBy("__leg").agg(
-          count(lit(1)).as("nb"), count(col("__v")).as("nv"))
-    agg.filter(col("nv") > 0).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1).toSeq
-  }
-
-  /** Tag file-sourced rows with the maintained-root leg dir they came
-    * from: the dir immediately containing the file, or one above a
-    * `cluster=` partition dir (the IVF-PQ layout) — anchored to the path
-    * TAIL so upstream dirs that happen to contain `batch_` never match.
-    */
-  private def withLegColumn(df: DataFrame): DataFrame =
-    df.withColumn("__leg", regexp_extract(input_file_name(),
-      "/((?:lists_)?(?:batch|compact)_[0-9]+|lists)(?:/cluster=[^/]+)?/[^/]+$", 1))
 
   // --- batch-stamped snapshot ERASE GENERATIONS (BM25 df/stats) --------
 
