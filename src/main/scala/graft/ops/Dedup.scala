@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -40,6 +40,25 @@ object Dedup {
     flatten(transform(ids, (x, i) =>
       transform(slice(ids, i + 2, greatest(size(ids) - i - 1, lit(0))),
         y => struct(least(x, y).as("id_a"), greatest(x, y).as("id_b")))))
+
+  /** The loss audit of a budgeted or capped pair serve against the
+    * complete one: one row (n_pairs_full, n_pairs_capped, n_lost,
+    * loss_ratio) over the (batch_id, corpus_id) pairs each serve returns.
+    * The two serves are independent legs — built and counted
+    * concurrently (guide §2.6); only the two counts survive.
+    */
+  private[ops] def pairLossAudit(spark: SparkSession)(
+      full: => DataFrame, capped: => DataFrame): DataFrame = {
+    val Seq(nFull, nCapped) = Concurrent.awaitAll(Seq(
+      () => full.select("batch_id", "corpus_id").count(),
+      () => capped.select("batch_id", "corpus_id").count()))
+    spark.range(1).select(
+      lit(nFull).as("n_pairs_full"),
+      lit(nCapped).as("n_pairs_capped"),
+      lit(nFull - nCapped).as("n_lost"),
+      round(lit((nFull - nCapped).toDouble / math.max(nFull, 1L)), 4)
+        .as("loss_ratio"))
+  }
 
   /** Exact dedup: keep the row with the smallest `keepBy` per distinct value
     * of `keys`. One shuffle; deterministic winner (vs `dropDuplicates`,

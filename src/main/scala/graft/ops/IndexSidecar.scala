@@ -6,7 +6,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
 /** Shared `_graft_index.json` sidecar persistence for the persistable
-  * indexes ([[IvfPqIndex]], [[MinHashIndex]]): one writer and one
+  * indexes ([[IvfPqIndex]], [[MinHashIndex]], [[SimJoinIndex]], and the
+  * stream maintainers of the last two): one writer and one
   * field-extraction parser instead of two hand-rolled copies drifting
   * apart. The parser accepts exactly what [[write]]rs emit (flat
   * builder-controlled JSON) — not general JSON.
@@ -17,9 +18,14 @@ import org.apache.hadoop.fs.Path
   * The sidecar is driver-side model state, tiny (KBs), so one
   * create/open per index is the whole cost.
   */
-private[ops] object IndexSidecar {
+private[graft] object IndexSidecar {
 
   val FileName = "_graft_index.json"
+
+  def exists(conf: Configuration, path: String): Boolean = {
+    val p = new Path(path, FileName)
+    p.getFileSystem(conf).exists(p)
+  }
 
   def write(conf: Configuration, path: String, json: String): Unit = {
     val p = new Path(path, FileName)
@@ -33,13 +39,9 @@ private[ops] object IndexSidecar {
     val p = new Path(path, FileName)
     val fs = p.getFileSystem(conf)
     val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
+    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
+      StandardCharsets.UTF_8)
+    finally in.close()
   }
 
   /** The raw substring after `"name":` — callers slice their typed value

@@ -393,8 +393,7 @@ object IvfPqIndex {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(
       index.lists.sparkSession.sparkContext.hadoopConfiguration)
-    require(!(fs.exists(root) && fs.listStatus(root).exists(
-        _.getPath.getName.startsWith("_committed_"))),
+    require(!graft.streaming.MaintainedRoot.isMaintained(fs, root),
       s"$path is a stream-maintained ivfpq root (batch-commit markers " +
         "present): writing the static layout over it would leave stale " +
         "batch dirs double-serving — write to a fresh root")
@@ -427,9 +426,7 @@ object IvfPqIndex {
     if (!allowMaintained) {
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val maintained = fs.exists(root) && fs.listStatus(root).exists(
-        _.getPath.getName.startsWith("_committed_"))
-      require(!maintained,
+      require(!graft.streaming.MaintainedRoot.isMaintained(fs, root),
         s"$path is a stream-maintained ivfpq root (batch-commit markers " +
           "present): a plain read would silently drop every streamed " +
           "vector — read it with Incremental.readIvfPqMaintained")

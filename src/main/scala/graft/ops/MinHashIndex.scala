@@ -265,22 +265,11 @@ object MinHashIndex {
       maxPostingsPerBucket: Int,
       maxCandidatesPerDoc: Int,
       threshold: Double = 0.8,
-      maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
-    // the full and budgeted serves are independent legs — count them
-    // concurrently (guide §2.6); only the two counts survive
-    val Seq(nFull, nCapped) = Concurrent.awaitAll(Seq(
-      () => query(index, batch, idCol, textCol, threshold, maxBucket)
-        .select("batch_id", "corpus_id").count(),
-      () => queryBudgeted(index, batch, idCol, textCol,
-        maxPostingsPerBucket, maxCandidatesPerDoc, threshold, maxBucket)
-        .select("batch_id", "corpus_id").count()))
-    index.buckets.sparkSession.range(1).select(
-      lit(nFull).as("n_pairs_full"),
-      lit(nCapped).as("n_pairs_capped"),
-      lit(nFull - nCapped).as("n_lost"),
-      round(lit((nFull - nCapped).toDouble / math.max(nFull, 1L)), 4)
-        .as("loss_ratio"))
-  }
+      maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame =
+    Dedup.pairLossAudit(index.buckets.sparkSession)(
+      query(index, batch, idCol, textCol, threshold, maxBucket),
+      queryBudgeted(index, batch, idCol, textCol,
+        maxPostingsPerBucket, maxCandidatesPerDoc, threshold, maxBucket))
 
   /** CANDIDATE-CAP LOSS AUDIT: the verified pairs [[queryCapped]] drops
     * at `maxCandidatesPerDoc` vs the complete [[query]] serve — one row
@@ -294,22 +283,11 @@ object MinHashIndex {
       textCol: String,
       maxCandidatesPerDoc: Int,
       threshold: Double = 0.8,
-      maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
-    // the full and capped serves are independent legs — count them
-    // concurrently (guide §2.6); only the two counts survive
-    val Seq(nFull, nCapped) = Concurrent.awaitAll(Seq(
-      () => query(index, batch, idCol, textCol, threshold, maxBucket)
-        .select("batch_id", "corpus_id").count(),
-      () => queryCapped(index, batch, idCol, textCol,
-        maxCandidatesPerDoc, threshold, maxBucket)
-        .select("batch_id", "corpus_id").count()))
-    index.buckets.sparkSession.range(1).select(
-      lit(nFull).as("n_pairs_full"),
-      lit(nCapped).as("n_pairs_capped"),
-      lit(nFull - nCapped).as("n_lost"),
-      round(lit((nFull - nCapped).toDouble / math.max(nFull, 1L)), 4)
-        .as("loss_ratio"))
-  }
+      maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame =
+    Dedup.pairLossAudit(index.buckets.sparkSession)(
+      query(index, batch, idCol, textCol, threshold, maxBucket),
+      queryCapped(index, batch, idCol, textCol,
+        maxCandidatesPerDoc, threshold, maxBucket))
 
   /** The exact intersect verify of [[query]]/[[queryCapped]]: candidate
     * ids back to both sides' stored shingle sets, exact Jaccard,
@@ -345,16 +323,10 @@ object MinHashIndex {
       index.shingleK, index.bands, index.rowsPerBand)
   }
 
-  /** Sidecar bridge for the streaming maintainer
-    * ([[graft.streaming.Incremental.streamMinHashMaintain]] — outside the
-    * `ops` package [[IndexSidecar]] is scoped to).
+  /** (shingleK, bands, rowsPerBand) from the sidecar — shared with the
+    * streaming maintainer
+    * ([[graft.streaming.Incremental.streamMinHashMaintain]]).
     */
-  private[graft] def sidecarExists(
-      conf: org.apache.hadoop.conf.Configuration, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path, IndexSidecar.FileName)
-    p.getFileSystem(conf).exists(p)
-  }
-
   private[graft] def sidecarParams(
       conf: org.apache.hadoop.conf.Configuration,
       path: String): (Int, Int, Int) = {

@@ -301,22 +301,11 @@ object SimJoinIndex {
       textCol: String,
       maxPostingsPerShingle: Int,
       maxCandidatesPerDoc: Int,
-      threshold: Double = Double.NaN): DataFrame = {
-    // the full and budgeted serves are independent legs — count them
-    // concurrently (guide §2.6); only the two counts survive
-    val Seq(nFull, nCapped) = Concurrent.awaitAll(Seq(
-      () => pairs(index, batch, idCol, textCol, threshold)
-        .select("batch_id", "corpus_id").count(),
-      () => pairsBudgeted(index, batch, idCol, textCol,
-        maxPostingsPerShingle, maxCandidatesPerDoc, threshold)
-        .select("batch_id", "corpus_id").count()))
-    index.freq.sparkSession.range(1).select(
-      lit(nFull).as("n_pairs_full"),
-      lit(nCapped).as("n_pairs_capped"),
-      lit(nFull - nCapped).as("n_lost"),
-      round(lit((nFull - nCapped).toDouble / math.max(nFull, 1L)), 4)
-        .as("loss_ratio"))
-  }
+      threshold: Double = Double.NaN): DataFrame =
+    Dedup.pairLossAudit(index.freq.sparkSession)(
+      pairs(index, batch, idCol, textCol, threshold),
+      pairsBudgeted(index, batch, idCol, textCol,
+        maxPostingsPerShingle, maxCandidatesPerDoc, threshold))
 
   /** CANDIDATE-CAP LOSS AUDIT: the exact pairs [[pairsCapped]] drops at
     * `maxCandidatesPerDoc` vs the complete [[pairs]] serve — one row
@@ -331,21 +320,10 @@ object SimJoinIndex {
       idCol: String,
       textCol: String,
       maxCandidatesPerDoc: Int,
-      threshold: Double = Double.NaN): DataFrame = {
-    // the full and capped serves are independent legs — count them
-    // concurrently (guide §2.6); only the two counts survive
-    val Seq(nFull, nCapped) = Concurrent.awaitAll(Seq(
-      () => pairs(index, batch, idCol, textCol, threshold)
-        .select("batch_id", "corpus_id").count(),
-      () => pairsCapped(index, batch, idCol, textCol,
-        maxCandidatesPerDoc, threshold).select("batch_id", "corpus_id").count()))
-    index.freq.sparkSession.range(1).select(
-      lit(nFull).as("n_pairs_full"),
-      lit(nCapped).as("n_pairs_capped"),
-      lit(nFull - nCapped).as("n_lost"),
-      round(lit((nFull - nCapped).toDouble / math.max(nFull, 1L)), 4)
-        .as("loss_ratio"))
-  }
+      threshold: Double = Double.NaN): DataFrame =
+    Dedup.pairLossAudit(index.freq.sparkSession)(
+      pairs(index, batch, idCol, textCol, threshold),
+      pairsCapped(index, batch, idCol, textCol, maxCandidatesPerDoc, threshold))
 
   /** The exact intersect verify of [[pairs]]/[[pairsCapped]]: join the
     * candidate ids back to both sides' stored sorted sets, exact Jaccard,
@@ -493,17 +471,9 @@ object SimJoinIndex {
       path, index.shingleK, index.threshold)
   }
 
-  /** Sidecar bridge shared with the streaming maintainer
-    * ([[graft.streaming.Incremental.streamSimJoinMaintain]] — outside the
-    * `ops` package [[IndexSidecar]] is scoped to).
+  /** (shingleK, threshold) from the sidecar — shared with the streaming
+    * maintainer ([[graft.streaming.Incremental.streamSimJoinMaintain]]).
     */
-  private[graft] def sidecarExists(
-      conf: org.apache.hadoop.conf.Configuration, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path, IndexSidecar.FileName)
-    p.getFileSystem(conf).exists(p)
-  }
-
-  /** (shingleK, threshold) from the sidecar. */
   private[graft] def sidecarParams(
       conf: org.apache.hadoop.conf.Configuration,
       path: String): (Int, Double) = {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.etl.{Sanitize, Windows}
+import graft.ops.Concurrent
 import graft.sources.Parquet
 
 /** Structured Streaming restatement of the reference's incremental Method-2
@@ -50,11 +51,28 @@ object Incremental {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Streaming incremental refresh: new files → window filter → sanitize →
-    * append to a parquet target. One `AvailableNow` micro-batch per
-    * invocation, exactly-once via checkpoint — the reference's L5
-    * idempotent refresh without the delete+re-append churn.
+  /** Runs `stream` as one AvailableNow append into a fresh temp parquet
+    * sink with its own temp checkpoint, state stores sized by
+    * [[runWithStatePartitions]] (0 keeps the session default), and returns
+    * the sink path once the run has terminated. The sink is distributed
+    * files, so nothing accumulates on the driver.
     */
+  private def appendToTempSink(
+      spark: SparkSession,
+      stream: org.apache.spark.sql.Dataset[_],
+      name: String,
+      statePartitions: Int): String = {
+    val sink = java.nio.file.Files.createTempDirectory(s"graft_${name}sink")
+    val ckpt = java.nio.file.Files.createTempDirectory(s"graft_${name}ckpt")
+    runWithStatePartitions(spark, statePartitions) {
+      stream.writeStream.format("parquet")
+        .option("path", sink.toString)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    }
+    sink.toString
+  }
+
   /** Spark's file stream source requires a DIRECTORY basePath; fixture
     * tables are single files — stream the parent dir with a
     * `pathGlobFilter` on the file name. The probe goes through the Hadoop
@@ -78,9 +96,9 @@ object Incremental {
   }
 
   /** EXCLUSIVE MUTATOR LEASE on a maintained index root. Every mutator —
-    * a [[runBatchCommitted]] maintainer run, a compaction, an erase, a
-    * model rebuild's multi-pass read — runs under this fence: the
-    * `_graft_lease` marker is created atomically (NIO `O_EXCL` create on
+    * a [[MaintainedRoot.runBatchCommitted]] maintainer run, a compaction,
+    * an erase, a model rebuild's multi-pass read — runs under this fence:
+    * the `_graft_lease` marker is created atomically (NIO `O_EXCL` create on
     * local paths — Hadoop's local create-without-overwrite is a
     * non-atomic exists-then-create — and the atomic namespace create on
     * HDFS-class stores; object stores without atomic create need an
@@ -263,6 +281,11 @@ object Incremental {
     fs.delete(lease, false)
   }
 
+  /** Streaming incremental refresh: new files → window filter → sanitize →
+    * append to a parquet target. One `AvailableNow` micro-batch per
+    * invocation, exactly-once via checkpoint — the reference's L5
+    * idempotent refresh without the delete+re-append churn.
+    */
   def incrementalRefresh(
       spark: SparkSession,
       srcPath: String,
@@ -475,8 +498,6 @@ object Incremental {
       .withWatermark(tsCol, s"$watermarkSec seconds")
       .groupBy(window(col(tsCol), s"$windowSec seconds"), col(keyCol))
       .agg(count(lit(1)).as("n"), round(sum(valCol), 4).as("sum_val"))
-    val sink = java.nio.file.Files.createTempDirectory("graft_winsink")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_winckpt")
     // state partitions = state-store instances, fixed at first start from
     // spark.sql.shuffle.partitions. Size to STATE KEY cardinality (here:
     // windows × keys), not to the session's data-scale shuffle default —
@@ -484,16 +505,8 @@ object Incremental {
     // holds keys, so over-provisioning tiny-state streams multiplies fixed
     // overhead (measured 2× on the fixture). High-cardinality 100 TB
     // streams pass a correspondingly high value.
-    runWithStatePartitions(spark, statePartitions) {
-      agg.writeStream
-        .format("parquet")
-        .option("path", sink.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    Parquet.read(spark, sink.toString)
+    val sink = appendToTempSink(spark, agg, "win", statePartitions)
+    Parquet.read(spark, sink)
       // null-safe: a NULL key group is real data, only the sentinel goes
       .filter(!(col(keyCol) <=> StagedStream.SentinelKey))
       .select(col("window.start").cast("timestamp_ntz").as("window_start"),
@@ -623,18 +636,8 @@ object Incremental {
     val agg = enriched
       .groupBy(window(col("__ts"), s"$windowSec seconds"), col(dimValCol))
       .agg(count(lit(1)).as("n"))
-    val sink = java.nio.file.Files.createTempDirectory("graft_sessink")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sesckpt")
-    runWithStatePartitions(spark, statePartitions) {
-      agg.writeStream
-        .format("parquet")
-        .option("path", sink.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    Parquet.read(spark, sink.toString)
+    val sink = appendToTempSink(spark, agg, "ses", statePartitions)
+    Parquet.read(spark, sink)
       .select(col("window.start").cast("timestamp_ntz").as("window_start"),
         col(dimValCol), col("n"))
   }
@@ -678,23 +681,13 @@ object Incremental {
         col("r_ts") >= col("l_ts") &&
         col("r_ts") <= col("l_ts") + expr(s"INTERVAL $maxDelaySec SECONDS"))
       .select(col(keyCol), col("l_ts"), col("r_ts"))
-    val sink = java.nio.file.Files.createTempDirectory("graft_ssjsink")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ssjckpt")
     // a stream-stream join keeps FOUR state-store instances per partition
     // (keyed + key-with-index, per side), so over-provisioned partitions
     // multiply per-micro-batch store load/commit overhead 4× faster than a
     // windowed agg does — size to join-key cardinality (see the
     // windowedCountsAppend note), not to the session's shuffle default
-    runWithStatePartitions(spark, statePartitions) {
-      joined.writeStream
-        .format("parquet")
-        .option("path", sink.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    Parquet.read(spark, sink.toString)
+    val sink = appendToTempSink(spark, joined, "ssj", statePartitions)
+    Parquet.read(spark, sink)
   }
 
   /** Continuous Method-2: stream new files and MERGE-upsert each
@@ -780,9 +773,7 @@ object Incremental {
     // the checkpoint is the incremental contract: re-running with the
     // SAME checkpoint merges only files that arrived since the last run
     // (a fresh checkpoint would re-merge history and double-count)
-    val ckptStr =
-      if (checkpointPath != null) checkpointPath
-      else new org.apache.hadoop.fs.Path(rollupPath, "_checkpoint").toString
+    val ckptStr = checkpointOf(rollupPath, checkpointPath)
     // Hadoop FS, not java.nio: the rollup lives wherever the table lives
     // (HDFS/S3/local) — snapshot listing and retirement must go through
     // the same filesystem the parquet writer commits to
@@ -791,17 +782,9 @@ object Incremental {
     val fs = root.getFileSystem(conf)
     fs.mkdirs(root)
     assertRunIdentity(conf, fs, root, ckptStr, "rollup")
-    // committed = has the parquet committer's _SUCCESS marker; a dir a
-    // crash left half-written is invisible here and gets rewritten
-    def committedSnaps(): Seq[(Long, org.apache.hadoop.fs.Path)] =
-      fs.listStatus(root).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("snap_") &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-        .map(st => (st.getPath.getName.stripPrefix("snap_").toLong, st.getPath))
-        .sortBy(_._1)
     val q = in.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val snaps = committedSnaps()
+        val snaps = committedSnaps(fs, root)
         snaps.find(_._1 == batchId) match {
           case Some((_, dir)) =>
             // at-least-once replay of an already-committed batch: skip —
@@ -866,7 +849,7 @@ object Incremental {
             batchFilesSig(conf, ckptStr, batchId))
           // retire superseded snapshots; keep two so the reader of the
           // previous snapshot (a concurrent replay) is never yanked
-          committedSnaps().dropRight(2).foreach { case (_, dir) =>
+          committedSnaps(fs, root).dropRight(2).foreach { case (_, dir) =>
             fs.delete(dir, true)
           }
         }
@@ -876,7 +859,7 @@ object Incremental {
       .start()
     q.awaitTermination()
     stampRunIdentity(conf, fs, root, ckptStr)
-    val fin = committedSnaps()
+    val fin = committedSnaps(fs, root)
     require(fin.nonEmpty, s"no committed rollup snapshot under $rollupPath")
     Parquet.read(spark, fin.last._2.toString)
   }
@@ -894,17 +877,26 @@ object Incremental {
       asOfBatch: Long = Long.MaxValue): org.apache.spark.sql.DataFrame = {
     val root = new org.apache.hadoop.fs.Path(rollupPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snaps = fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("snap_") &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(st => (st.getPath.getName.stripPrefix("snap_").toLong, st.getPath))
-      .sortBy(_._1)
+    val snaps = committedSnaps(fs, root)
     val eligible = snaps.filter(_._1 <= asOfBatch)
     require(eligible.nonEmpty,
       s"no committed rollup snapshot with batch id <= $asOfBatch under $rollupPath " +
         s"(retained: ${snaps.map(_._1).mkString(", ")})")
     Parquet.read(spark, eligible.last._2.toString)
   }
+
+  /** The rollup's committed snapshots, oldest first: a `snap_<batchId>`
+    * dir counts once the parquet committer's `_SUCCESS` marker is in it —
+    * a dir a crash left half-written is invisible here and gets rewritten.
+    */
+  private def committedSnaps(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Seq[(Long, org.apache.hadoop.fs.Path)] =
+    fs.listStatus(root).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("snap_") &&
+        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
+      .map(st => (st.getPath.getName.stripPrefix("snap_").toLong, st.getPath))
+      .sortBy(_._1)
 
   /** [[streamRollupMaintain]] with every column summed (the original L8
     * surface).
@@ -921,6 +913,160 @@ object Incremental {
     streamRollupMaintain(spark, srcPath, rollupPath, keys,
       graft.etl.Loads.AggSpec.sums(sumCols), countCol, checkpointPath,
       snapshotPartitions = 1)
+
+  /** Compact a [[streamBm25Maintain]]ed root: merge every committed
+    * postings batch dir into one term-range-partitioned generation (the
+    * static [[graft.ops.Bm25Index.write]] layout, so serve-time term
+    * pushdown skips files by footer stats across the WHOLE compacted
+    * corpus, not per tiny batch dir). The df/stats snapshots already roll
+    * forward wholesale and are untouched. Serves byte-identically before
+    * and after (the declared `stream_bm25_compact` query shares the
+    * maintained serve's oracle).
+    */
+  def compactBm25Maintained(
+      spark: SparkSession,
+      indexPath: String,
+      numFiles: Int = 8): Long = {
+    require(numFiles >= 1, s"numFiles must be >= 1: $numFiles")
+    assertNoPendingErase(spark, indexPath, "bm25 index")
+    compactCore(spark, indexPath, "bm25 index", Seq(
+      Bm25Postings -> { (ins: Seq[String], out: String) =>
+        Parquet.read(spark, ins: _*)
+          .select("term", "id", "tf", "dl")
+          .repartitionByRange(numFiles, col("term"))
+          .sortWithinPartitions("term", "id")
+          .write.mode("overwrite").parquet(out)
+      }))
+  }
+
+  /** Compact a [[streamMinHashMaintain]]ed root (buckets + sets concat —
+    * both members are per-document rows with no global state).
+    */
+  def compactMinHashMaintained(
+      spark: SparkSession,
+      indexPath: String,
+      numFiles: Int = 8): Long = {
+    require(numFiles >= 1, s"numFiles must be >= 1: $numFiles")
+    compactCore(spark, indexPath, "minhash index", Seq(
+      MinHashBuckets -> concatMerge(spark, numFiles, "id", "band", "bucket"),
+      MinHashSets -> concatMerge(spark, numFiles, "id", "shingle_set")))
+  }
+
+  /** The compaction merge of a per-document member (rows with no global
+    * state): the inputs' `cols`, rewritten as `numFiles` files.
+    */
+  private def concatMerge(
+      spark: SparkSession,
+      numFiles: Int,
+      cols: String*): (Seq[String], String) => Unit =
+    (ins, out) => Parquet.read(spark, ins: _*).select(cols.map(col): _*)
+      .repartition(numFiles)
+      .write.mode("overwrite").parquet(out)
+
+  /** Compact a [[streamSimJoinMaintain]]ed root: prefixes re-cluster by
+    * shingle hash (the static [[graft.ops.SimJoinIndex.write]] layout —
+    * serve probes read co-located posting lists), sets concat; the frozen
+    * `freq` model stays as built.
+    */
+  def compactSimJoinMaintained(
+      spark: SparkSession,
+      indexPath: String,
+      numFiles: Int = 8): Long = {
+    require(numFiles >= 1, s"numFiles must be >= 1: $numFiles")
+    compactCore(spark, indexPath, "simjoin index", Seq(
+      SimJoinPrefixes -> { (ins: Seq[String], out: String) =>
+        Parquet.read(spark, ins: _*).select("h", "id", "n")
+          .repartition(numFiles, col("h"))
+          .sortWithinPartitions("h", "id")
+          .write.mode("overwrite").parquet(out)
+      },
+      SimJoinSets -> concatMerge(spark, numFiles, "id", "set", "n")))
+  }
+
+  /** Compact a [[streamIvfPqMaintain]]ed root: merge every committed
+    * `lists_batch_<id>` dir into one cluster-partitioned
+    * `lists_compact_<gen>` dir (one read PER input dir — the
+    * CONFLICTING_DIRECTORY_STRUCTURES constraint from
+    * [[readIvfPqMaintained]] — then one partitioned write), shrinking the
+    * serve union from one leg per batch to base + ONE compacted leg +
+    * tail. The frozen model and base `lists/` are untouched; the
+    * model-generation stamp is asserted first.
+    */
+  def compactIvfPqMaintained(
+      spark: SparkSession,
+      indexPath: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(indexPath).getFileSystem(conf)
+    assertModelGeneration(conf, indexPath, stampIfAbsent = false)
+    compactCore(spark, indexPath, "ivfpq index", Seq(
+      IvfLists -> { (ins: Seq[String], out: String) =>
+        val frames = ins.flatMap(p =>
+          readListsDir(spark, fs, new org.apache.hadoop.fs.Path(p)))
+        if (frames.nonEmpty) writeListsDir(frames.reduce(_ unionByName _), out)
+      }))
+  }
+
+  /** The number of committed batch dirs NEWER than the compacted
+    * generation — i.e. the per-member serve-plan fan-out (and erase-probe
+    * leg count) the next compaction would fold away. The cadence signal
+    * for [[compactIfStale]].
+    */
+  def maintainedTailBatches(spark: SparkSession, indexPath: String): Int = {
+    val root = new org.apache.hadoop.fs.Path(indexPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val gen = compactedGenId(fs, root)
+    committedBatchIds(fs, root).count(id => gen.forall(id > _))
+  }
+
+  /** Compaction POLICY gate: run `compact` iff the uncompacted tail
+    * exceeds `maxTailBatches` — the one knob a production maintainer
+    * calls right after its [[MaintainedRoot.runBatchCommitted]] run so
+    * serve-plan width stays bounded without a separate scheduler:
+    * {{{
+    * Incremental.streamMinHashMaintain(spark, src, root, ...)
+    * Incremental.compactIfStale(spark, root, maxTailBatches = 16)(
+    *   Incremental.compactMinHashMaintained(spark, root))
+    * }}}
+    * Returns the new generation when it compacted, None when the tail is
+    * within budget (the common, free case — one marker listing).
+    */
+  def compactIfStale(
+      spark: SparkSession,
+      indexPath: String,
+      maxTailBatches: Int)(compact: => Long): Option[Long] = {
+    require(maxTailBatches >= 1, s"maxTailBatches must be >= 1: $maxTailBatches")
+    if (maintainedTailBatches(spark, indexPath) > maxTailBatches) Some(compact)
+    else None
+  }
+
+  /** Write an inverted-lists dir in the cluster-partitioned serving
+    * layout, one file per cluster.
+    */
+  private def writeListsDir(lists: DataFrame, dir: String): Unit =
+    lists.repartition(col("cluster"))
+      .write.mode("overwrite").partitionBy("cluster").parquet(dir)
+
+  /** Read one inverted-lists dir in either physical shape: the
+    * cluster-partitioned serving layout, or the plain (possibly empty)
+    * shape an erase rewrite leaves when a dir lost all its rows. A dir
+    * with neither cluster subdirs nor data files reads as absent (an
+    * empty micro-batch's dynamic-partition write leaves exactly that).
+    */
+  private def readListsDir(
+      spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Option[DataFrame] = {
+    if (!fs.exists(p)) return None
+    val entries = fs.listStatus(p).toSeq
+    val hasClusters = entries.exists(st =>
+      st.isDirectory && st.getPath.getName.startsWith("cluster="))
+    val hasFiles = entries.exists(st =>
+      !st.isDirectory && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+    if (hasClusters || hasFiles)
+      Some(Parquet.read(spark, p.toString).select("cluster", "n_id", "codes", "n_norm"))
+    else None
+  }
 
   /** Streaming BM25 index maintenance:
     * [[graft.ops.Bm25Index.append]]-semantics applied PER MICRO-BATCH via
@@ -958,170 +1104,6 @@ object Incremental {
     * [[graft.ops.Bm25Index.append]]. Returns the maintained index
     * ([[readBm25Maintained]]) for serving.
     */
-  /** Run independent artifact actions CONCURRENTLY (guide §2.6 — Spark's
-    * scheduler happily runs several jobs at once; serial driver calls were
-    * the only reason these tiny per-batch/per-leg writes queued behind one
-    * another). Only for actions with no mutual ordering requirement whose
-    * joint commit point comes AFTER all of them (the `_committed_<id>`
-    * marker / the probe-member-last convention is preserved by the caller
-    * choosing what goes in one call). Awaits EVERY action (success or
-    * failure) before rethrowing the first error — rethrowing early would
-    * leave the other actions' jobs running detached, racing whatever the
-    * caller does next (the knn_recall_audit error-containment convention).
-    */
-  private[streaming] def runConcurrently(actions: Seq[() => Unit]): Unit = {
-    graft.ops.Concurrent.awaitAll(actions)
-    ()
-  }
-
-  /** Compact a [[streamBm25Maintain]]ed root: merge every committed
-    * postings batch dir into one term-range-partitioned generation (the
-    * static [[graft.ops.Bm25Index.write]] layout, so serve-time term
-    * pushdown skips files by footer stats across the WHOLE compacted
-    * corpus, not per tiny batch dir). The df/stats snapshots already roll
-    * forward wholesale and are untouched. Serves byte-identically before
-    * and after (the declared `stream_bm25_compact` query shares the
-    * maintained serve's oracle).
-    */
-  def compactBm25Maintained(
-      spark: SparkSession,
-      indexPath: String,
-      numFiles: Int = 8): Long = {
-    require(numFiles >= 1, s"numFiles must be >= 1: $numFiles")
-    assertNoPendingErase(spark, indexPath, "bm25 index")
-    compactCore(spark, indexPath, "bm25 index", Seq(
-      Bm25Postings -> { (ins: Seq[String], out: String) =>
-        Parquet.read(spark, ins: _*)
-          .select("term", "id", "tf", "dl")
-          .repartitionByRange(numFiles, col("term"))
-          .sortWithinPartitions("term", "id")
-          .write.mode("overwrite").parquet(out)
-      }))
-  }
-
-  /** Compact a [[streamMinHashMaintain]]ed root (buckets + sets concat —
-    * both members are per-document rows with no global state).
-    */
-  def compactMinHashMaintained(
-      spark: SparkSession,
-      indexPath: String,
-      numFiles: Int = 8): Long = {
-    require(numFiles >= 1, s"numFiles must be >= 1: $numFiles")
-    def concat(cols: Seq[String])(ins: Seq[String], out: String): Unit =
-      Parquet.read(spark, ins: _*).select(cols.map(col): _*)
-        .repartition(numFiles)
-        .write.mode("overwrite").parquet(out)
-    compactCore(spark, indexPath, "minhash index", Seq(
-      MinHashBuckets -> concat(Seq("id", "band", "bucket")) _,
-      MinHashSets -> concat(Seq("id", "shingle_set")) _))
-  }
-
-  /** Compact a [[streamSimJoinMaintain]]ed root: prefixes re-cluster by
-    * shingle hash (the static [[graft.ops.SimJoinIndex.write]] layout —
-    * serve probes read co-located posting lists), sets concat; the frozen
-    * `freq` model stays as built.
-    */
-  def compactSimJoinMaintained(
-      spark: SparkSession,
-      indexPath: String,
-      numFiles: Int = 8): Long = {
-    require(numFiles >= 1, s"numFiles must be >= 1: $numFiles")
-    compactCore(spark, indexPath, "simjoin index", Seq(
-      SimJoinPrefixes -> { (ins: Seq[String], out: String) =>
-        Parquet.read(spark, ins: _*).select("h", "id", "n")
-          .repartition(numFiles, col("h"))
-          .sortWithinPartitions("h", "id")
-          .write.mode("overwrite").parquet(out)
-      },
-      SimJoinSets -> { (ins: Seq[String], out: String) =>
-        Parquet.read(spark, ins: _*).select("id", "set", "n")
-          .repartition(numFiles)
-          .write.mode("overwrite").parquet(out)
-      }))
-  }
-
-  /** Compact a [[streamIvfPqMaintain]]ed root: merge every committed
-    * `lists_batch_<id>` dir into one cluster-partitioned
-    * `lists_compact_<gen>` dir (one read PER input dir — the
-    * CONFLICTING_DIRECTORY_STRUCTURES constraint from
-    * [[readIvfPqMaintained]] — then one partitioned write), shrinking the
-    * serve union from one leg per batch to base + ONE compacted leg +
-    * tail. The frozen model and base `lists/` are untouched; the
-    * model-generation stamp is asserted first.
-    */
-  def compactIvfPqMaintained(
-      spark: SparkSession,
-      indexPath: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    assertModelGeneration(conf, fs, root, indexPath, stampIfAbsent = false)
-    compactCore(spark, indexPath, "ivfpq index", Seq(
-      IvfLists -> { (ins: Seq[String], out: String) =>
-        val frames = ins.flatMap(p =>
-          readListsDir(spark, fs, new org.apache.hadoop.fs.Path(p)))
-        if (frames.nonEmpty)
-          frames.reduce(_ unionByName _)
-            .repartition(col("cluster"))
-            .write.mode("overwrite").partitionBy("cluster").parquet(out)
-      }))
-  }
-
-  /** The number of committed batch dirs NEWER than the compacted
-    * generation — i.e. the per-member serve-plan fan-out (and erase-probe
-    * leg count) the next compaction would fold away. The cadence signal
-    * for [[compactIfStale]].
-    */
-  def maintainedTailBatches(spark: SparkSession, indexPath: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gen = compactedGenId(fs, root)
-    committedBatchIds(fs, root).count(id => gen.forall(id > _))
-  }
-
-  /** Compaction POLICY gate: run `compact` iff the uncompacted tail
-    * exceeds `maxTailBatches` — the one knob a production maintainer
-    * calls right after its [[runBatchCommitted]] run so serve-plan width
-    * stays bounded without a separate scheduler:
-    * {{{
-    * Incremental.streamMinHashMaintain(spark, src, root, ...)
-    * Incremental.compactIfStale(spark, root, maxTailBatches = 16)(
-    *   Incremental.compactMinHashMaintained(spark, root))
-    * }}}
-    * Returns the new generation when it compacted, None when the tail is
-    * within budget (the common, free case — one marker listing).
-    */
-  def compactIfStale(
-      spark: SparkSession,
-      indexPath: String,
-      maxTailBatches: Int)(compact: => Long): Option[Long] = {
-    require(maxTailBatches >= 1, s"maxTailBatches must be >= 1: $maxTailBatches")
-    if (maintainedTailBatches(spark, indexPath) > maxTailBatches) Some(compact)
-    else None
-  }
-
-  /** Read one inverted-lists dir in either physical shape: the
-    * cluster-partitioned serving layout, or the plain (possibly empty)
-    * shape an erase rewrite leaves when a dir lost all its rows. A dir
-    * with neither cluster subdirs nor data files reads as absent (an
-    * empty micro-batch's dynamic-partition write leaves exactly that).
-    */
-  private def readListsDir(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[DataFrame] = {
-    if (!fs.exists(p)) return None
-    val entries = fs.listStatus(p).toSeq
-    val hasClusters = entries.exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("cluster="))
-    val hasFiles = entries.exists(st =>
-      !st.isDirectory && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-    if (hasClusters || hasFiles)
-      Some(Parquet.read(spark, p.toString).select("cluster", "n_id", "codes", "n_norm"))
-    else None
-  }
-
   def streamBm25Maintain(
       spark: SparkSession,
       srcPath: String,
@@ -1135,11 +1117,10 @@ object Incremental {
       s"postingsFilesPerBatch must be >= 1: $postingsFilesPerBatch")
     val root = new org.apache.hadoop.fs.Path(indexPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def sub(name: String) = new org.apache.hadoop.fs.Path(root, name)
     // a STATIC Bm25Index.write layout keeps part files directly under
     // postings/ — the maintained reader (batch_*/compact_* dirs only)
     // would silently hide every statically-written posting
-    assertMaintainerOwnsLayout(fs, root, Seq("postings"), "bm25 index",
+    assertMaintainerOwnsLayout(fs, root, Seq(Bm25Postings), "bm25 index",
       "serve static indexes via Bm25Index.read + append instead")
     assertNoPendingErase(spark, indexPath, "bm25 index")
     runBatchCommitted(spark, srcPath, indexPath, checkpointPath,
@@ -1153,11 +1134,11 @@ object Incremental {
       // rolled-back df/stats forward
       val (terms, stats) = done.filter(_ < batchId).lastOption match {
         case Some(p) =>
-          val suf = latestSnapSuffix(fs, root, p)
+          val g = latestSnapGen(fs, root, p)
           (graft.ops.Bm25Index.mergeTerms(
-            Parquet.read(spark, sub(s"terms_snap_$p$suf").toString), d.terms),
+            Parquet.read(spark, snapDir(root, "terms", p, g).toString), d.terms),
             graft.ops.Bm25Index.mergeStats(
-              Parquet.read(spark, sub(s"stats_snap_$p$suf").toString), d.stats))
+              Parquet.read(spark, snapDir(root, "stats", p, g).toString), d.stats))
         case None => (d.terms, d.stats)
       }
       // the three artifacts are independent until the ONE _committed_
@@ -1165,17 +1146,17 @@ object Incremental {
       // of queueing three sub-second jobs; a crash with any subset
       // written leaves the batch uncommitted exactly as before, and the
       // replay rewrites all three (mode overwrite)
-      runConcurrently(Seq(
+      Concurrent.awaitAll(Seq(
         () => d.postings
           .repartitionByRange(postingsFilesPerBatch, col("term"))
           .sortWithinPartitions("term", "id")
           .write.mode("overwrite")
-          .parquet(sub(s"postings/batch_$batchId").toString),
+          .parquet(Bm25Postings.batchPath(root, batchId).toString),
         // vocabulary-sized and 1-row — one file each is the right shape
         () => terms.coalesce(1).write.mode("overwrite")
-          .parquet(sub(s"terms_snap_$batchId").toString),
+          .parquet(snapDir(root, "terms", batchId, 0).toString),
         () => stats.coalesce(1).write.mode("overwrite")
-          .parquet(sub(s"stats_snap_$batchId").toString)))
+          .parquet(snapDir(root, "stats", batchId, 0).toString)))
     } { committed =>
       // retire superseded snapshots (every erase generation with them);
       // keep two ids so the reader of the previous snapshot (a
@@ -1195,30 +1176,28 @@ object Incremental {
       spark: SparkSession, indexPath: String): graft.ops.Bm25Index = {
     val root = new org.apache.hadoop.fs.Path(indexPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = committedBatchIds(fs, root)
-    require(done.nonEmpty, s"no committed bm25 index batch under $indexPath")
+    val done = requireCommitted(fs, root, "bm25 index")
     assertNoPendingErase(spark, indexPath, "bm25 index")
-    def sub(name: String) = new org.apache.hadoop.fs.Path(root, name).toString
     // the compacted generation (if any) + tail batch dirs; the df/stats
     // snapshots resolve to the latest ERASE generation of the newest
     // batch-stamped snapshot (see eraseBm25Maintained)
-    val legs = Bm25Postings.legs(fs, root, done)
-    val suffix = latestSnapSuffix(fs, root, done.last)
+    val g = latestSnapGen(fs, root, done.last)
     graft.ops.Bm25Index(
-      Parquet.read(spark, legs.map(_.toString): _*)
-        .select("term", "id", "tf", "dl"),
-      Parquet.read(spark, sub(s"terms_snap_${done.last}$suffix")).select("term", "df"),
-      Parquet.read(spark, sub(s"stats_snap_${done.last}$suffix")).select("n", "avgdl"))
+      Bm25Postings.read(spark, fs, root, done, "term", "id", "tf", "dl"),
+      Parquet.read(spark, snapDir(root, "terms", done.last, g).toString)
+        .select("term", "df"),
+      Parquet.read(spark, snapDir(root, "stats", done.last, g).toString)
+        .select("n", "avgdl"))
   }
 
   /** Streaming MinHash-LSH index maintenance — [[streamBm25Maintain]]'s
-    * machinery ([[runBatchCommitted]]) applied to the dedup index, whose
-    * state is EVEN simpler: both members (buckets, sets) are per-document
-    * rows with no corpus-level statistics, so each micro-batch is a pure
-    * map-side encode into append-only `buckets/batch_<id>` +
-    * `sets/batch_<id>` dirs — no snapshots to roll forward, nothing to
-    * retire. Signatures are content-deterministic hashes, so the
-    * maintained index QUERIES identically to a rebuild on everything
+    * machinery ([[MaintainedRoot.runBatchCommitted]]) applied to the dedup
+    * index, whose state is EVEN simpler: both members (buckets, sets) are
+    * per-document rows with no corpus-level statistics, so each
+    * micro-batch is a pure map-side encode into append-only
+    * `buckets/batch_<id>` + `sets/batch_<id>` dirs — no snapshots to roll
+    * forward, nothing to retire. Signatures are content-deterministic
+    * hashes, so the maintained index QUERIES identically to a rebuild on everything
     * ingested (the declared `stream_minhash_maintain` query shares the
     * static-index serve's oracle). Shape parameters live in the standard
     * sidecar, written on the first run and REQUIRED equal on every later
@@ -1240,16 +1219,15 @@ object Incremental {
     val root = new org.apache.hadoop.fs.Path(indexPath)
     val fs = root.getFileSystem(conf)
     fs.mkdirs(root)
-    def sub(name: String) = new org.apache.hadoop.fs.Path(root, name)
     // a STATIC MinHashIndex.write layout keeps part files directly under
     // sets/ AND buckets/ — and MinHashIndex.write writes buckets first,
     // so an interrupted static write can leave EITHER member in the
     // static shape; both are guarded (the streamSimJoinMaintain
     // cross-guard, applied here too; checked even without a sidecar)
-    assertMaintainerOwnsLayout(fs, root, Seq("sets", "buckets"),
+    assertMaintainerOwnsLayout(fs, root, Seq(MinHashSets, MinHashBuckets),
       "minhash index",
       "serve static indexes via MinHashIndex.read + append instead")
-    if (graft.ops.MinHashIndex.sidecarExists(conf, indexPath)) {
+    if (graft.ops.IndexSidecar.exists(conf, indexPath)) {
       val (k0, b0, r0) = graft.ops.MinHashIndex.sidecarParams(conf, indexPath)
       require(k0 == shingleK && b0 == bands && r0 == rowsPerBand,
         s"minhash index at $indexPath was built with (shingleK=$k0, bands=$b0, " +
@@ -1264,11 +1242,8 @@ object Incremental {
       val d = graft.ops.MinHashIndex.build(batch, idCol, textCol,
         shingleK, bands, rowsPerBand)
       // both members commit under the one marker — concurrent (guide §2.6)
-      runConcurrently(Seq(
-        () => d.buckets.write.mode("overwrite")
-          .parquet(sub(s"buckets/batch_$batchId").toString),
-        () => d.sets.write.mode("overwrite")
-          .parquet(sub(s"sets/batch_$batchId").toString)))
+      Concurrent.awaitAll(batchWrites(root, batchId,
+        Seq(MinHashBuckets -> d.buckets, MinHashSets -> d.sets)))
     } { _ => () }
     readMinHashMaintained(spark, indexPath)
   }
@@ -1300,7 +1275,7 @@ object Incremental {
       indexPath: String,
       ids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     eraseMaintainedDirs(spark, indexPath, ids, "minhash index",
-      ledgerMember = MinHashSets, members = Seq(MinHashSets, MinHashBuckets))
+      ledgerMember = MinHashSets, otherMember = MinHashBuckets)
 
   /** [[eraseMinHashMaintained]] for a [[streamSimJoinMaintain]]ed root —
     * identical shape: both members are per-document rows with no global
@@ -1314,17 +1289,17 @@ object Incremental {
       indexPath: String,
       ids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     eraseMaintainedDirs(spark, indexPath, ids, "simjoin index",
-      ledgerMember = SimJoinSets, members = Seq(SimJoinSets, SimJoinPrefixes))
+      ledgerMember = SimJoinSets, otherMember = SimJoinPrefixes)
 
-  /** The shared per-batch-dir rewrite of the maintained-root erases: for
+  /** The erase of the stat-free maintained roots (MinHash, SimJoin): for
     * every committed batch whose `ledgerMember` dir contains a victim,
-    * anti-join-rewrite ALL member dirs (retained rows localCheckpoint'ed
-    * BEFORE each overwrite); untouched batches never open. Ledger counts
-    * come from `ledgerMember` (one row per document there). The
-    * `ledgerMember` — which doubles as the re-run VICTIM PROBE — is
-    * rewritten LAST: a crash mid-batch then leaves the probe still
-    * victim-bearing, so the idempotent re-run re-detects and finishes
-    * the other members instead of attesting a half-erased batch.
+    * anti-join-rewrite ALL member dirs ([[MaintainedRoot.rewriteLegs]]);
+    * untouched batches never open. Ledger counts come from
+    * `ledgerMember` (one row per document there). The `ledgerMember` —
+    * which doubles as the re-run VICTIM PROBE — is rewritten LAST: a crash
+    * mid-batch then leaves the probe still victim-bearing, so the
+    * idempotent re-run re-detects and finishes the other members instead
+    * of attesting a half-erased batch.
     *
     * Scope: erasure covers COMMITTED batches of this root. The SOURCE
     * stream is a separate artifact — if it still contains the victims, a
@@ -1340,61 +1315,21 @@ object Incremental {
       ids: org.apache.spark.sql.DataFrame,
       what: String,
       ledgerMember: MemberLayout,
-      members: Seq[MemberLayout]): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    require(ids.columns.length == 1,
-      s"ids must be a single key column, got ${ids.columns.toSeq}")
-    require(members.contains(ledgerMember),
-      s"ledgerMember must be one of the members")
-    // probe member LAST (see above)
-    val orderedMembers = members.filterNot(_ == ledgerMember) :+ ledgerMember
-    val k = ids.toDF("id").distinct().localCheckpoint()
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    withRootLease(conf, fs, root, what, "eraser") {
-    val done = committedBatchIds(fs, root)
-    require(done.nonEmpty, s"no committed $what batch under $indexPath")
-    // finish a crashed compaction's sweep first: superseded dirs are
-    // invisible to readers but still hold victim BYTES — an erase that
-    // left them would attest an erasure that physically did not happen
-    members.foreach(_.sweepSuperseded(fs, root))
-    // SINGLE-PASS victim probe: one union read over every probe-member
-    // leg (compacted generation + tail batch dirs) with the leg identity
-    // derived from input_file_name, ONE aggregate job → victim-bearing
-    // legs and their ledger counts. Replaces the r15 per-batch semi-join
-    // loop, whose one-count-job-per-dir driver scheduling dominates at
-    // production batch counts (10⁴–10⁵ dirs).
-    val legPaths = ledgerMember.legs(fs, root, done).filter(fs.exists)
-    val affected = victimLegProbe(
-      Parquet.read(spark, legPaths.map(_.toString): _*).select("id"),
-      k, "id", distinctPerDoc = false)
-    // legs rewrite CONCURRENTLY (guide §2.6): they are disjoint dirs, and
-    // crash-idempotence is per leg — each leg's probe member still
-    // rewrites last WITHIN its chain, so however many legs a crash leaves
-    // half-done, every unfinished leg is still victim-bearing to the
-    // re-run's probe
-    runConcurrently(affected.map { case (leg, _, _) => () =>
-      orderedMembers.foreach { m =>
-        val p = new org.apache.hadoop.fs.Path(root, m.rel(leg))
-        if (fs.exists(p)) {
-          val df = Parquet.read(spark, p.toString)
-          // retained rows materialize BEFORE the overwrite of their source
-          val retained = df.join(k, Seq("id"), "left_anti")
-            .select(df.columns.map(col).toIndexedSeq: _*).localCheckpoint()
-          retained.write.mode("overwrite").parquet(p.toString)
-        }
-      }
-    })
-    // ledger ids: a batch leg reports its batch id, the compacted
-    // generation its gen id (the highest batch id folded into it)
-    affected
-      .map { case (leg, before, erased) =>
-        (leg.filter(_.isDigit).toLong, before, before - erased, erased)
-      }
-      .toDF("batch_id", "n_before", "n_after", "n_erased")
+      otherMember: MemberLayout): org.apache.spark.sql.DataFrame =
+    erasing(spark, indexPath, ids, what, "id", Seq(ledgerMember, otherMember)) {
+        (fs, root, done, k) =>
+      // SINGLE-PASS victim probe: one union read over every probe-member
+      // leg (compacted generation + tail batch dirs), ONE aggregate job →
+      // victim-bearing legs and their ledger counts. Replaces the r15
+      // per-batch semi-join loop, whose one-count-job-per-dir driver
+      // scheduling dominates at production batch counts (10⁴–10⁵ dirs).
+      val affected = probeMember(spark, fs, root, done, ledgerMember, k,
+        distinctPerDoc = false)
+      // probe member LAST (see above)
+      rewriteLegs(root, affected.map(_._1), Seq(otherMember, ledgerMember),
+        k, "id")(readIfExists(spark, fs))(overwrite)
+      batchLedger(spark, affected)
     }
-  }
 
   // --- batch-stamped snapshot ERASE GENERATIONS (BM25 df/stats) --------
 
@@ -1404,7 +1339,9 @@ object Incremental {
     * dir's _SUCCESS is the generation's commit point). The latest
     * committed generation is the serving truth for that snapshot id.
     */
-  private def snapSuffixOf(gen: Int): String = if (gen == 0) "" else s"_e$gen"
+  private def snapDir(root: org.apache.hadoop.fs.Path, kind: String, id: Long, gen: Int) =
+    new org.apache.hadoop.fs.Path(root,
+      s"${kind}_snap_$id${if (gen == 0) "" else s"_e$gen"}")
 
   private def latestSnapGen(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -1419,15 +1356,10 @@ object Incremental {
             n.stripPrefix(base + "_e").forall(_.isDigit) =>
           n.stripPrefix(base + "_e").toInt
       }
-      .filter(g => fs.exists(new org.apache.hadoop.fs.Path(root,
-        s"terms_snap_$id${snapSuffixOf(g)}/_SUCCESS")))
+      .filter(g => fs.exists(
+        new org.apache.hadoop.fs.Path(snapDir(root, "terms", id, g), "_SUCCESS")))
       .sorted.lastOption.getOrElse(0)
   }
-
-  private def latestSnapSuffix(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      id: Long): String = snapSuffixOf(latestSnapGen(fs, root, id))
 
   /** Every generation of a retired snapshot id (the maintainer's keep-2
     * retirement must drop erase generations along with gen 0).
@@ -1499,52 +1431,35 @@ object Incremental {
   def eraseBm25Maintained(
       spark: SparkSession,
       indexPath: String,
-      ids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    require(ids.columns.length == 1,
-      s"ids must be a single key column, got ${ids.columns.toSeq}")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    withRootLease(conf, fs, root, "bm25 index", "eraser") {
-    val done = committedBatchIds(fs, root)
-    require(done.nonEmpty, s"no committed bm25 index batch under $indexPath")
-    // finish a crashed compaction's sweep (superseded dirs still hold
-    // victim bytes) and a crashed erase before starting on the new ids
-    Bm25Postings.sweepSuperseded(fs, root)
-    finishPendingBm25Erase(spark, fs, root, done)
-    val k = ids.toDF("id").distinct().localCheckpoint()
-    val legPaths = Bm25Postings.legs(fs, root, done).filter(fs.exists)
-    def legRead() = withLegColumn(
-      Parquet.read(spark, legPaths.map(_.toString): _*)
-        .select("id", "term", "dl"))
-    // pass 1: ledger counts (distinct docs; postings repeat a doc per term)
-    val affected = victimLegProbe(
-      Parquet.read(spark, legPaths.map(_.toString): _*).select("id"),
-      k, "id", distinctPerDoc = true)
-    if (affected.isEmpty)
-      Seq.empty[(Long, Long, Long, Long)]
-        .toDF("batch_id", "n_before", "n_after", "n_erased")
-    else {
-      // pass 2: the victims' posting rows — the df/stats deltas derive from
-      // them, journaled BEFORE any rewrite so a crash can always finish
-      val targetGen = latestSnapGen(fs, root, done.last) + 1
-      legRead().join(k, Seq("id"), "left_semi")
-        .select(lit(targetGen).as("gen"), col("id"), col("term"), col("dl"))
-        .write.mode("overwrite").parquet(eraseJournalPath(root).toString)
-      // rewrites + snapshot roll-back run off the committed journal — the
-      // SAME code path a crash-recovery re-run takes (which must re-probe;
-      // the fresh path already knows its victim-bearing legs from pass 1
-      // and skips that third postings scan)
-      applyBm25EraseJournal(spark, fs, root, done,
-        knownBearing = Some(affected.map(_._1)))
-      affected.map { case (leg, before, erased) =>
-        (leg.filter(_.isDigit).toLong, before, before - erased, erased)
-      }.toDF("batch_id", "n_before", "n_after", "n_erased")
-        .localCheckpoint()
+      ids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    erasing(spark, indexPath, ids, "bm25 index", "id", Seq(Bm25Postings)) {
+        (fs, root, done, k) =>
+      // finish a crashed erase before starting on the new ids
+      finishPendingBm25Erase(spark, fs, root, done)
+      // pass 1: ledger counts (distinct docs; postings repeat a doc per term)
+      val affected = probeMember(spark, fs, root, done, Bm25Postings, k,
+        distinctPerDoc = true)
+      if (affected.isEmpty) batchLedger(spark, affected)
+      else {
+        // pass 2: the victims' posting rows — the df/stats deltas derive
+        // from them, journaled BEFORE any rewrite so a crash can always
+        // finish
+        val targetGen = latestSnapGen(fs, root, done.last) + 1
+        Parquet.read(spark,
+            Bm25Postings.legs(fs, root, done).filter(fs.exists).map(_.toString): _*)
+          .select("id", "term", "dl")
+          .join(k, Seq("id"), "left_semi")
+          .select(lit(targetGen).as("gen"), col("id"), col("term"), col("dl"))
+          .write.mode("overwrite").parquet(eraseJournalPath(root).toString)
+        // rewrites + snapshot roll-back run off the committed journal —
+        // the SAME code path a crash-recovery re-run takes (which must
+        // re-probe; the fresh path already knows its victim-bearing legs
+        // from pass 1 and skips that third postings scan)
+        applyBm25EraseJournal(spark, fs, root, done,
+          knownBearing = Some(affected.map(_._1)))
+        batchLedger(spark, affected).localCheckpoint()
+      }
     }
-    }
-  }
 
   /** Finish-or-noop for a pending BM25 erase journal (see
     * [[eraseBm25Maintained]]): rewrites any postings legs still bearing
@@ -1578,33 +1493,23 @@ object Incremental {
     val j = Parquet.read(spark, journal.toString).localCheckpoint()
     if (j.isEmpty) { fs.delete(journal, true); return } // zero-delta journal
     val jk = j.select("id").distinct().localCheckpoint()
-    val legPaths = Bm25Postings.legs(fs, root, done).filter(fs.exists)
     // legs still bearing journal victims: the fresh-erase caller already
     // knows them from its ledger pass; crash recovery cannot trust
     // pre-crash state and re-probes
-    val bearing = knownBearing.map(_.map(l => (l, 0L, 0L))).getOrElse(
-      victimLegProbe(
-        Parquet.read(spark, legPaths.map(_.toString): _*).select("id"),
-        jk, "id", distinctPerDoc = false))
-    // disjoint leg dirs, journal already committed — rewrite concurrently
-    // (guide §2.6); a crash leaves the journal pending either way and the
-    // re-run re-probes whatever legs still bear victims
-    runConcurrently(bearing.map { case (leg, _, _) => () =>
-      val p = new org.apache.hadoop.fs.Path(root, Bm25Postings.rel(leg))
-      val df = Parquet.read(spark, p.toString)
-      val retained = df.join(jk, Seq("id"), "left_anti")
-        .select(df.columns.map(col).toIndexedSeq: _*).localCheckpoint()
-      retained.write.mode("overwrite").parquet(p.toString)
-    })
+    val bearing = knownBearing.getOrElse(
+      probeMember(spark, fs, root, done, Bm25Postings, jk,
+        distinctPerDoc = false).map(_._1))
+    // the journal is already committed: a crash leaves it pending either
+    // way and the re-run re-probes whatever legs still bear victims
+    rewriteLegs(root, bearing, Seq(Bm25Postings), jk, "id")(
+      readIfExists(spark, fs))(overwrite)
     val lastId = done.last
     val targetGen = j.select("gen").head().getInt(0)
-    val committed = fs.exists(new org.apache.hadoop.fs.Path(root,
-      s"terms_snap_$lastId${snapSuffixOf(targetGen)}/_SUCCESS"))
+    val committed = fs.exists(new org.apache.hadoop.fs.Path(
+      snapDir(root, "terms", lastId, targetGen), "_SUCCESS"))
     if (!committed) {
-      val baseSuffix = snapSuffixOf(targetGen - 1)
-      def sub(name: String) = new org.apache.hadoop.fs.Path(root, name).toString
-      val terms0 = Parquet.read(spark, sub(s"terms_snap_$lastId$baseSuffix"))
-      val stats0 = Parquet.read(spark, sub(s"stats_snap_$lastId$baseSuffix"))
+      val terms0 = Parquet.read(spark, snapDir(root, "terms", lastId, targetGen - 1).toString)
+      val stats0 = Parquet.read(spark, snapDir(root, "stats", lastId, targetGen - 1).toString)
       // the static Bm25Index.erase algebra, fed from the journal: df
       // subtracts the victims' per-term posting counts; (n, avgdl) roll
       // back in closed form from one dl per victim doc
@@ -1626,19 +1531,15 @@ object Incremental {
       // generation (both deterministic from journal + the PRIOR
       // generation, which is never overwritten)
       stats1.coalesce(1).write.mode("overwrite")
-        .parquet(sub(s"stats_snap_$lastId${snapSuffixOf(targetGen)}"))
+        .parquet(snapDir(root, "stats", lastId, targetGen).toString)
       terms1.coalesce(1).write.mode("overwrite")
-        .parquet(sub(s"terms_snap_$lastId${snapSuffixOf(targetGen)}"))
+        .parquet(snapDir(root, "terms", lastId, targetGen).toString)
     }
     fs.delete(journal, true)
     // retire erase generations older than the previous one (keep-2, the
     // snapshot retirement convention)
-    (0 until targetGen - 1).foreach { g =>
-      fs.delete(new org.apache.hadoop.fs.Path(root,
-        s"terms_snap_$lastId${snapSuffixOf(g)}"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(root,
-        s"stats_snap_$lastId${snapSuffixOf(g)}"), true)
-    }
+    for (g <- 0 until targetGen - 1; kind <- Seq("terms", "stats"))
+      fs.delete(snapDir(root, kind, lastId, g), true)
   }
 
   /** Subject ERASURE on a [[streamIvfPqMaintain]]ed root: the frozen-model
@@ -1659,51 +1560,33 @@ object Incremental {
   def eraseIvfPqMaintained(
       spark: SparkSession,
       indexPath: String,
-      ids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    require(ids.columns.length == 1,
-      s"ids must be a single key column, got ${ids.columns.toSeq}")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    withRootLease(conf, fs, root, "ivfpq index", "eraser") {
-    val done = committedBatchIds(fs, root)
-    require(done.nonEmpty, s"no committed ivfpq index batch under $indexPath")
-    // reject a root whose model was rebuilt in place (the batch dirs'
-    // codes belong to the stamped generation's codebooks)
-    assertModelGeneration(conf, fs, root, indexPath, stampIfAbsent = false)
-    // finish a crashed compaction's sweep: superseded dirs still hold
-    // victim bytes an attested erasure must not leave behind
-    IvfLists.sweepSuperseded(fs, root)
-    val k = ids.toDF("n_id").distinct().localCheckpoint()
-    val legPaths = new org.apache.hadoop.fs.Path(root, "lists") +:
-      IvfLists.legs(fs, root, done)
-    val frames = legPaths.flatMap(p => readListsDir(spark, fs, p))
-    require(frames.nonEmpty, s"no readable lists dirs under $indexPath")
-    val affected = victimLegProbe(
-      frames.reduce(_ unionByName _), k, "n_id", distinctPerDoc = false)
-    // disjoint leg dirs, idempotent by re-detection — rewrite concurrently
-    // (guide §2.6)
-    runConcurrently(affected.map { case (leg, _, _) => () =>
-      val p = new org.apache.hadoop.fs.Path(root, leg)
-      readListsDir(spark, fs, p).foreach { df =>
-        val retained = df.join(k, Seq("n_id"), "left_anti")
-          .select("cluster", "n_id", "codes", "n_norm").localCheckpoint()
+      ids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    erasing(spark, indexPath, ids, "ivfpq index", "n_id", Seq(IvfLists)) {
+        (fs, root, done, k) =>
+      import spark.implicits._
+      // reject a root whose model was rebuilt in place (the batch dirs'
+      // codes belong to the stamped generation's codebooks)
+      assertModelGeneration(spark.sparkContext.hadoopConfiguration, indexPath,
+        stampIfAbsent = false)
+      val legPaths = new org.apache.hadoop.fs.Path(root, IvfBaseLists) +:
+        IvfLists.legs(fs, root, done)
+      val frames = legPaths.flatMap(p => readListsDir(spark, fs, p))
+      require(frames.nonEmpty, s"no readable lists dirs under $indexPath")
+      val affected = victimLegProbe(
+        frames.reduce(_ unionByName _), k, "n_id", distinctPerDoc = false)
+      rewriteLegs(root, affected.map(_._1), Seq(IvfLists), k, "n_id")(
+          readListsDir(spark, fs, _)) { (retained, p) =>
         if (retained.isEmpty)
           // a partitioned write of zero rows leaves an unreadable dir —
           // keep a plain schema-bearing empty file instead
-          retained.write.mode("overwrite").parquet(p.toString)
-        else
-          retained.repartition(col("cluster"))
-            .write.mode("overwrite").partitionBy("cluster").parquet(p.toString)
+          overwrite(retained, p)
+        else writeListsDir(retained, p.toString)
       }
-    })
-    affected.map { case (leg, before, erased) =>
-      (leg, before, before - erased, erased)
-    }.toDF("leg", "n_before", "n_after", "n_erased")
-      .localCheckpoint()
+      affected.map { case (leg, before, erased) =>
+        (leg, before, before - erased, erased)
+      }.toDF("leg", "n_before", "n_after", "n_erased")
+        .localCheckpoint()
     }
-  }
 
   /** Read the [[streamMinHashMaintain]]ed index: every committed batch
     * dir pair, shape parameters from the sidecar.
@@ -1713,20 +1596,17 @@ object Incremental {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(indexPath)
     val fs = root.getFileSystem(conf)
-    val done = committedBatchIds(fs, root)
-    require(done.nonEmpty, s"no committed minhash index batch under $indexPath")
-    def sub(name: String) = new org.apache.hadoop.fs.Path(root, name).toString
+    val done = requireCommitted(fs, root, "minhash index")
     val (k, b, r) = graft.ops.MinHashIndex.sidecarParams(conf, indexPath)
     graft.ops.MinHashIndex(
-      Parquet.read(spark, MinHashBuckets.legs(fs, root, done).map(_.toString): _*)
-        .select("id", "band", "bucket"),
-      Parquet.read(spark, MinHashSets.legs(fs, root, done).map(_.toString): _*)
-        .select("id", "shingle_set"),
+      MinHashBuckets.read(spark, fs, root, done, "id", "band", "bucket"),
+      MinHashSets.read(spark, fs, root, done, "id", "shingle_set"),
       k, b, r)
   }
 
-  /** Streaming IVF-PQ index maintenance — [[runBatchCommitted]] applied
-    * to the vector index. The FROZEN model is the contract
+  /** Streaming IVF-PQ index maintenance —
+    * [[MaintainedRoot.runBatchCommitted]] applied to the vector index. The
+    * FROZEN model is the contract
     * ([[graft.ops.IvfPqIndex.append]]: no retraining; production rebuilds
     * on a slow cadence while appending fast): `indexPath` must already
     * hold a [[graft.ops.IvfPqIndex.write]]-persisted index (model sidecar
@@ -1753,14 +1633,13 @@ object Incremental {
     val base = graft.ops.IvfPqIndex.read(spark, indexPath, allowMaintained = true)
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(conf)
     // MODEL-GENERATION stamp: batch dirs hold codes encoded under ONE
     // model; an in-place rebuild (IvfPqIndex.write over the same root)
     // would silently decode them through foreign codebooks — stamp the
     // sidecar fingerprint and require it unchanged on every run (and at
     // read — see readIvfPqMaintained). The documented rebuild cadence
     // retires the batch dirs by starting a fresh maintained root.
-    assertModelGeneration(conf, fs, root, indexPath, stampIfAbsent = true)
+    assertModelGeneration(conf, indexPath, stampIfAbsent = true)
     runBatchCommitted(spark, srcPath, indexPath, checkpointPath,
       "ivfpq index", maxFilesPerTrigger) { (batch, batchId, _) =>
       // size the batch files AT WRITE TIME: without the cluster
@@ -1768,21 +1647,18 @@ object Incremental {
       // (W × nlist tiny files per batch at production batch widths); one
       // exchange of slim code rows bounds it at ONE file per cluster per
       // batch, and the serve-side reader (cluster-pruned, DPP) is untouched
-      graft.ops.IvfPqIndex.encodeLists(base, batch, idCol, vecCol)
-        .repartition(col("cluster"))
-        .write.mode("overwrite").partitionBy("cluster")
-        .parquet(new org.apache.hadoop.fs.Path(root, s"lists_batch_$batchId").toString)
+      writeListsDir(graft.ops.IvfPqIndex.encodeLists(base, batch, idCol, vecCol),
+        IvfLists.batchPath(root, batchId).toString)
     } { _ => () }
     readIvfPqMaintained(spark, indexPath)
   }
 
   private def assertModelGeneration(
       conf: org.apache.hadoop.conf.Configuration,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
       indexPath: String,
       stampIfAbsent: Boolean): Unit = {
-    val stampPath = new org.apache.hadoop.fs.Path(root, "_graft_model_gen")
+    val stampPath = new org.apache.hadoop.fs.Path(indexPath, "_graft_model_gen")
+    val fs = stampPath.getFileSystem(conf)
     val current = graft.ops.IvfPqIndex.sidecarHash(conf, indexPath)
     if (fs.exists(stampPath)) {
       val stamped = readUtf8(conf, stampPath).trim
@@ -1792,10 +1668,7 @@ object Incremental {
           "lists_batch_* dirs hold codes encoded under the old codebooks " +
           "and would decode to garbage — start a fresh maintained root " +
           "for the new model (the rebuild-cadence contract)")
-    } else if (stampIfAbsent) {
-      val out = fs.create(stampPath, true)
-      try out.write(current.getBytes("UTF-8")) finally out.close()
-    }
+    } else if (stampIfAbsent) writeUtf8(fs, stampPath, current)
   }
 
   /** Read the [[streamIvfPqMaintain]]ed index: the persisted model + base
@@ -1811,7 +1684,7 @@ object Incremental {
     // reject a maintained root whose model was rebuilt in place — the
     // batch dirs' codes belong to the stamped generation's codebooks
     if (done.nonEmpty)
-      assertModelGeneration(conf, fs, root, indexPath, stampIfAbsent = false)
+      assertModelGeneration(conf, indexPath, stampIfAbsent = false)
     // one read PER leg dir (a multi-path read of several
     // cluster-partitioned roots trips partition discovery —
     // CONFLICTING_DIRECTORY_STRUCTURES), then union: every leg keeps its
@@ -1974,8 +1847,8 @@ object Incremental {
   }
 
   /** Streaming prefix-filter similarity-index maintenance —
-    * [[runBatchCommitted]] applied to [[graft.ops.SimJoinIndex]]. The
-    * FIRST batch freezes the model: its shingle document frequencies
+    * [[MaintainedRoot.runBatchCommitted]] applied to
+    * [[graft.ops.SimJoinIndex]]. The FIRST batch freezes the model: its shingle document frequencies
     * become the rarity total order (written once to `freq/`), exactly as
     * the batch [[graft.ops.SimJoinIndex.append]] freezes the build-time
     * order — later batches' unseen shingles take df 0 and sort first.
@@ -2010,10 +1883,10 @@ object Incremental {
     // leaves either member in the static shape, so both are guarded
     // (checked even WITHOUT a sidecar: the final sidecar step may never
     // have run); stream-maintain only into roots this maintainer owns
-    assertMaintainerOwnsLayout(fs, root, Seq("prefixes", "sets"),
+    assertMaintainerOwnsLayout(fs, root, Seq(SimJoinPrefixes, SimJoinSets),
       "simjoin index",
       "serve static indexes via SimJoinIndex.read + append instead")
-    if (graft.ops.SimJoinIndex.sidecarExists(conf, indexPath)) {
+    if (graft.ops.IndexSidecar.exists(conf, indexPath)) {
       val (k0, t0) = graft.ops.SimJoinIndex.sidecarParams(conf, indexPath)
       require(k0 == shingleK && math.abs(t0 - threshold) < 1e-12,
         s"simjoin index at $indexPath was frozen with (shingleK=$k0, " +
@@ -2022,33 +1895,31 @@ object Incremental {
     }
     runBatchCommitted(spark, srcPath, indexPath, checkpointPath,
       "simjoin index", maxFilesPerTrigger) { (batch, batchId, done) =>
-      if (done.isEmpty && !graft.ops.SimJoinIndex.sidecarExists(conf, indexPath)) {
-        // FIRST batch: freeze the rarity order on its own frequencies
-        // (write is deterministic, so a pre-marker crash replays cleanly).
-        // The three parquet members are independent until the marker —
-        // concurrent (guide §2.6); the sidecar still lands only after the
-        // freq dir it describes is fully written
-        val built = graft.ops.SimJoinIndex.build(batch, idCol, textCol,
-          shingleK, threshold)
-        runConcurrently(Seq(
-          () => built.freq.write.mode("overwrite").parquet(sub("freq").toString),
-          () => built.prefixes.write.mode("overwrite")
-            .parquet(sub(s"prefixes/batch_$batchId").toString),
-          () => built.sets.write.mode("overwrite")
-            .parquet(sub(s"sets/batch_$batchId").toString)))
+      val first =
+        done.isEmpty && !graft.ops.IndexSidecar.exists(conf, indexPath)
+      val (freqWrite, prefixes, sets) =
+        if (first) {
+          // FIRST batch: freeze the rarity order on its own frequencies
+          // (write is deterministic, so a pre-marker crash replays cleanly)
+          val built = graft.ops.SimJoinIndex.build(batch, idCol, textCol,
+            shingleK, threshold)
+          (Seq(() => built.freq.write.mode("overwrite").parquet(sub("freq").toString)),
+            built.prefixes, built.sets)
+        } else {
+          // later batches fold in under the FROZEN order: one shingle pass
+          // over the batch, df-0 newcomers sort first (append's argument)
+          val freq = Parquet.read(spark, sub("freq").toString).select("h", "freq")
+          val (p, s) = graft.ops.SimJoinIndex.encodeDelta(
+            freq, batch, idCol, textCol, shingleK, threshold)
+          (Nil, p, s)
+        }
+      // the parquet members are independent until the marker — concurrent
+      // (guide §2.6); the sidecar still lands only after the freq dir it
+      // describes is fully written
+      Concurrent.awaitAll(freqWrite ++ batchWrites(root, batchId,
+        Seq(SimJoinPrefixes -> prefixes, SimJoinSets -> sets)))
+      if (first)
         graft.ops.SimJoinIndex.writeSidecar(conf, indexPath, shingleK, threshold)
-      } else {
-        // later batches fold in under the FROZEN order: one shingle pass
-        // over the batch, df-0 newcomers sort first (append's argument)
-        val freq = Parquet.read(spark, sub("freq").toString).select("h", "freq")
-        val (p, sets) = graft.ops.SimJoinIndex.encodeDelta(
-          freq, batch, idCol, textCol, shingleK, threshold)
-        runConcurrently(Seq(
-          () => p.write.mode("overwrite")
-            .parquet(sub(s"prefixes/batch_$batchId").toString),
-          () => sets.write.mode("overwrite")
-            .parquet(sub(s"sets/batch_$batchId").toString)))
-      }
     } { _ => () }
     readSimJoinMaintained(spark, indexPath)
   }
@@ -2061,17 +1932,14 @@ object Incremental {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(indexPath)
     val fs = root.getFileSystem(conf)
-    val done = committedBatchIds(fs, root)
-    require(done.nonEmpty, s"no committed simjoin index batch under $indexPath")
-    def sub(name: String) = new org.apache.hadoop.fs.Path(root, name).toString
+    val done = requireCommitted(fs, root, "simjoin index")
     val (shingleK, threshold) =
       graft.ops.SimJoinIndex.sidecarParams(conf, indexPath)
     graft.ops.SimJoinIndex(
-      Parquet.read(spark, sub("freq")).select("h", "freq"),
-      Parquet.read(spark, SimJoinPrefixes.legs(fs, root, done).map(_.toString): _*)
-        .select("h", "id", "n"),
-      Parquet.read(spark, SimJoinSets.legs(fs, root, done).map(_.toString): _*)
-        .select("id", "set", "n"),
+      Parquet.read(spark, new org.apache.hadoop.fs.Path(root, "freq").toString)
+        .select("h", "freq"),
+      SimJoinPrefixes.read(spark, fs, root, done, "h", "id", "n"),
+      SimJoinSets.read(spark, fs, root, done, "id", "set", "n"),
       shingleK, threshold)
   }
 
@@ -2108,18 +1976,8 @@ object Incremental {
       .withWatermark("__graft_ts", s"$watermarkSec seconds")
       .groupBy(session_window(col("__graft_ts"), s"$gapSec seconds"), col(keyCol))
       .agg(count(lit(1)).as("n_events"), round(sum(valCol), 4).as("sum_val"))
-    val sink = java.nio.file.Files.createTempDirectory("graft_sessionsink")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sessionckpt")
-    runWithStatePartitions(spark, statePartitions) {
-      agg.writeStream
-        .format("parquet")
-        .option("path", sink.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    Parquet.read(spark, sink.toString)
+    val sink = appendToTempSink(spark, agg, "session", statePartitions)
+    Parquet.read(spark, sink)
       .filter(!(col(keyCol) <=> StagedStream.sentinelFor(schema(keyCol).dataType)))
       .select(col("session_window.start").cast("timestamp_ntz").as("session_start"),
         col("session_window.end").cast("timestamp_ntz").as("session_end"),
@@ -2148,18 +2006,11 @@ object Incremental {
       .withWatermark("__graft_ts", watermark)
       .dropDuplicatesWithinWatermark(keys)
       .drop("__graft_ts")
-    val sink = java.nio.file.Files.createTempDirectory("graft_dedupsink")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_dedupckpt")
     // dedup state = one entry per distinct key in the horizon — size the
     // store count to that, not the session's data-scale shuffle default
     // (see the windowedCountsAppend note)
-    runWithStatePartitions(spark, statePartitions) {
-      in.writeStream.format("parquet")
-        .option("path", sink.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    Parquet.read(spark, sink.toString)
+    val sink = appendToTempSink(spark, in, "dedup", statePartitions)
+    Parquet.read(spark, sink)
   }
 
   /** Streaming benchmark decontamination: documents arrive as a file
@@ -2205,14 +2056,8 @@ object Incremental {
     val kept = in.filter(hits === 0)
     // stateless per-row filter -> append-mode FILE sink: nothing accumulates
     // on the driver, any micro-batch cadence composes
-    val sink = java.nio.file.Files.createTempDirectory("graft_decontamsink")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_decontamckpt")
-    val q = kept.writeStream.format("parquet")
-      .option("path", sink.toString)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    Parquet.read(spark, sink.toString)
+    val sink = appendToTempSink(spark, kept, "decontam", 0)
+    Parquet.read(spark, sink)
   }
 
   /** Streaming NEAR-duplicate detection of an incoming document stream
@@ -2297,14 +2142,8 @@ object Incremental {
       .filter(col("jaccard") >= threshold)
       .select(col("batch_id"), col("corpus_id"), round(col("jaccard"), 4).as("jaccard"))
 
-    val sink = java.nio.file.Files.createTempDirectory("graft_neardedupsink")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_neardedupckpt")
-    val q = pairs.writeStream.format("parquet")
-      .option("path", sink.toString)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    Parquet.read(spark, sink.toString)
+    val sink = appendToTempSink(spark, pairs, "neardedup", 0)
+    Parquet.read(spark, sink)
   }
 
   /** One event for stateful sessionization: `ts` is the watermarked
@@ -2402,15 +2241,8 @@ object Incremental {
     val out = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
 
-    val sink = java.nio.file.Files.createTempDirectory("graft_sesssink")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sessckpt")
-    runWithStatePartitions(spark, statePartitions) {
-      out.writeStream.format("parquet")
-        .option("path", sink.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    Parquet.read(spark, sink.toString)
+    val sink = appendToTempSink(spark, out, "sess", statePartitions)
+    Parquet.read(spark, sink)
       .filter(col("user_id") =!= StagedStream.SentinelId)
   }
 
@@ -2535,18 +2367,11 @@ object Incremental {
     val out = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
 
-    val sink = java.nio.file.Files.createTempDirectory("graft_attribsink")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_attribckpt")
-    runWithStatePartitions(spark, statePartitions) {
-      out.writeStream.format("parquet")
-        .option("path", sink.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
+    val sink = appendToTempSink(spark, out, "attrib", statePartitions)
     // explicit schema: an empty source emits no files, and a bare read of
     // the empty sink would fail schema inference instead of returning
     // zero credits
     spark.read.schema(implicitly[org.apache.spark.sql.Encoder[TouchCredit]].schema)
-      .parquet(sink.toString)
+      .parquet(sink)
   }
 }

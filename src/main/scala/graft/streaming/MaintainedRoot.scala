@@ -1,14 +1,36 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.ops.Concurrent
 import graft.sources.Parquet
 
-/** The protocol every stream-maintained index root shares. */
-private[streaming] object MaintainedRoot {
-  import Incremental._
+/** The exactly-once protocol every stream-maintained index root (bm25,
+  * minhash, simjoin, ivfpq — see [[Incremental]]) shares:
+  *  - the BATCH COMMIT: each micro-batch's artifacts commit under ONE
+  *    `_committed_<id>` marker written last, which records the batch's
+  *    source-file fingerprint for the replay check;
+  *  - the RUN IDENTITY: the root carries the maintaining query's id
+  *    (`_graft_query_id`), so a fresh checkpoint cannot silently skip
+  *    live batches as replays;
+  *  - the MEMBER LAYOUT: per-member batch dirs plus at most one committed
+  *    compacted generation (`_compacted_<gen>`, written last);
+  *  - the ERASE: one prologue, one single-pass victim probe and one
+  *    per-leg anti-join rewrite.
+  * Each index keeps its codec in [[Incremental]]: its members, how a batch
+  * encodes, how a serve reads, and its erase probe. The mutator lease
+  * ([[Incremental.withRootLease]]) stays there too. This object owns every
+  * root-layout name; the source-scan spec keeps it that way.
+  */
+private[graft] object MaintainedRoot {
+  import Incremental.{streamSource, withRootLease}
+
+  private val CommittedPrefix = "_committed_"
+  private val CompactedPrefix = "_compacted_"
 
   /** Read a small filesystem artifact fully — Hadoop FS resolved from the
     * path itself (the checkpoint may live on a different scheme than the
@@ -16,22 +38,38 @@ private[streaming] object MaintainedRoot {
     * handle throws 'Wrong FS').
     */
   private[streaming] def readUtf8(
-      conf: org.apache.hadoop.conf.Configuration,
-      p: org.apache.hadoop.fs.Path): String = {
+      conf: Configuration,
+      p: Path): String = {
     val pfs = p.getFileSystem(conf)
     val s = pfs.open(p)
     try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(s), "UTF-8")
     finally s.close()
   }
 
+  private[streaming] def writeUtf8(
+      fs: FileSystem,
+      p: Path,
+      content: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** The checkpoint a maintainer runs under: the caller's, or the stable
+    * `<root>/_checkpoint` when none is given, so the shorthand call is
+    * incremental across runs.
+    */
+  private[streaming] def checkpointOf(rootPath: String, checkpointPath: String): String =
+    if (checkpointPath != null) checkpointPath
+    else new Path(rootPath, "_checkpoint").toString
+
   /** The streaming query id in `<ckpt>/metadata` (`{"id":"<uuid>"}`) —
     * present iff this checkpoint has run before. Stable across checkpoint
     * COPIES/restores, fresh for a new checkpoint.
     */
-  private[streaming] def checkpointQueryId(
-      conf: org.apache.hadoop.conf.Configuration,
+  private def checkpointQueryId(
+      conf: Configuration,
       ckptStr: String): Option[String] = {
-    val meta = new org.apache.hadoop.fs.Path(ckptStr, "metadata")
+    val meta = new Path(ckptStr, "metadata")
     val mfs = meta.getFileSystem(conf)
     if (!mfs.exists(meta)) None
     else "\"id\"\\s*:\\s*\"([^\"]+)\"".r
@@ -39,21 +77,21 @@ private[streaming] object MaintainedRoot {
   }
 
   /** RUN-IDENTITY GUARD shared by the batch-stamped maintainers
-    * ([[streamRollupMaintain]], [[streamBm25Maintain]]): batch ids are
-    * comparable only within ONE checkpoint lineage — a fresh checkpoint
-    * restarts them at 0, so its live batches would collide with
-    * historical batch-stamped artifacts and be silently skipped as
-    * "already committed" (data loss). The maintained state carries a
-    * `_graft_query_id` stamp; a run whose checkpoint identity does not
-    * match fails loudly instead of merging.
+    * ([[Incremental.streamRollupMaintain]] and [[runBatchCommitted]]):
+    * batch ids are comparable only within ONE checkpoint lineage — a
+    * fresh checkpoint restarts them at 0, so its live batches would
+    * collide with historical batch-stamped artifacts and be silently
+    * skipped as "already committed" (data loss). The maintained state
+    * carries a `_graft_query_id` stamp; a run whose checkpoint identity
+    * does not match fails loudly instead of merging.
     */
   private[streaming] def assertRunIdentity(
-      conf: org.apache.hadoop.conf.Configuration,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
+      conf: Configuration,
+      fs: FileSystem,
+      root: Path,
       ckptStr: String,
       what: String): Unit = {
-    val stampPath = new org.apache.hadoop.fs.Path(root, "_graft_query_id")
+    val stampPath = new Path(root, "_graft_query_id")
     if (fs.exists(stampPath)) {
       val stamped = readUtf8(conf, stampPath).trim
       val current = checkpointQueryId(conf, ckptStr)
@@ -71,31 +109,32 @@ private[streaming] object MaintainedRoot {
     * started.
     */
   private[streaming] def stampRunIdentity(
-      conf: org.apache.hadoop.conf.Configuration,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
+      conf: Configuration,
+      fs: FileSystem,
+      root: Path,
       ckptStr: String): Unit = {
-    val stampPath = new org.apache.hadoop.fs.Path(root, "_graft_query_id")
-    if (!fs.exists(stampPath)) checkpointQueryId(conf, ckptStr).foreach { id =>
-      val out = fs.create(stampPath, true)
-      try out.write(id.getBytes("UTF-8")) finally out.close()
-    }
+    val stampPath = new Path(root, "_graft_query_id")
+    if (!fs.exists(stampPath))
+      checkpointQueryId(conf, ckptStr).foreach(writeUtf8(fs, stampPath, _))
   }
 
-  /** Shared machinery of the batch-stamped streaming index maintainers
-    * ([[streamBm25Maintain]], [[streamMinHashMaintain]]): an AvailableNow
-    * foreachBatch stream over `srcPath` where each micro-batch's
-    * artifacts are written under `indexPath` by `writeBatch(batch,
-    * batchId, committedBefore)` and then committed by ONE
-    * `_committed_<batchId>` marker — a replayed committed batch skips
-    * entirely; a crash before the marker leaves the batch uncommitted so
-    * the replay rewrites the same deterministic artifacts (writers use
-    * mode overwrite). `afterCommit` runs with the post-marker committed
-    * id list (snapshot retirement). The [[streamRollupMaintain]]
-    * RUN-IDENTITY GUARD applies: `indexPath` carries the maintaining
-    * query's id and a fresh checkpoint (batch ids restarting at 0) fails
-    * loudly instead of silently skipping live batches as replays.
-    * Returns the committed batch ids after the run.
+  /** Shared machinery of the four batch-stamped streaming index
+    * maintainers ([[Incremental.streamBm25Maintain]],
+    * [[Incremental.streamMinHashMaintain]],
+    * [[Incremental.streamSimJoinMaintain]],
+    * [[Incremental.streamIvfPqMaintain]]): an AvailableNow foreachBatch
+    * stream over `srcPath` where each micro-batch's artifacts are written
+    * under `indexPath` by `writeBatch(batch, batchId, committedBefore)`
+    * and then committed by ONE `_committed_<batchId>` marker — a replayed
+    * committed batch skips entirely; a crash before the marker leaves the
+    * batch uncommitted so the replay rewrites the same deterministic
+    * artifacts (writers use mode overwrite). `afterCommit` runs with the
+    * post-marker committed id list (snapshot retirement). The whole run
+    * holds the root's mutator lease, and the RUN-IDENTITY GUARD applies:
+    * `indexPath` carries the maintaining query's id and a fresh checkpoint
+    * (batch ids restarting at 0) fails loudly instead of silently skipping
+    * live batches as replays. Returns the committed batch ids after the
+    * run.
     */
   private[streaming] def runBatchCommitted(
       spark: SparkSession,
@@ -107,12 +146,10 @@ private[streaming] object MaintainedRoot {
       writeBatch: (DataFrame, Long, Seq[Long]) => Unit)(
       afterCommit: Seq[Long] => Unit): Seq[Long] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexPath)
+    val root = new Path(indexPath)
     val fs = root.getFileSystem(conf)
     fs.mkdirs(root)
-    val ckptStr =
-      if (checkpointPath != null) checkpointPath
-      else new org.apache.hadoop.fs.Path(indexPath, "_checkpoint").toString
+    val ckptStr = checkpointOf(indexPath, checkpointPath)
     withRootLease(conf, fs, root, what, "maintainer") {
     assertRunIdentity(conf, fs, root, ckptStr, what)
     val srcOpts =
@@ -123,13 +160,13 @@ private[streaming] object MaintainedRoot {
     val q = in.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val done = committedBatchIds(fs, root)
+        val marker = new Path(root, s"$CommittedPrefix$batchId")
         if (done.contains(batchId)) {
           // at-least-once replay of an already-committed batch: skip —
           // but only if it replays the SAME file set it committed with (a
           // restored-older checkpoint re-plans this id over MORE files;
           // see batchFilesSig)
-          assertReplayedBatchUnchanged(conf,
-            new org.apache.hadoop.fs.Path(root, s"_committed_$batchId"),
+          assertReplayedBatchUnchanged(conf, marker,
             batchFilesSig(conf, ckptStr, batchId), what, batchId)
         } else {
           // stamp BEFORE the first marker ever lands (no-op once
@@ -145,9 +182,7 @@ private[streaming] object MaintainedRoot {
           // batch uncommitted, so the replay rewrites it wholesale. The
           // marker body records the batch's source-file fingerprint for
           // the replay check above.
-          writeUtf8(fs,
-            new org.apache.hadoop.fs.Path(root, s"_committed_$batchId"),
-            batchFilesSig(conf, ckptStr, batchId))
+          writeUtf8(fs, marker, batchFilesSig(conf, ckptStr, batchId))
           afterCommit(committedBatchIds(fs, root))
         }
       }
@@ -157,22 +192,38 @@ private[streaming] object MaintainedRoot {
     q.awaitTermination()
     // zero-batch runs (empty source) still stamp, closing the lineage
     stampRunIdentity(conf, fs, root, ckptStr)
-    val fin = committedBatchIds(fs, root)
-    require(fin.nonEmpty, s"no committed $what batch under $indexPath")
-    fin
+    requireCommitted(fs, root, what)
     }
   }
 
+  /** The sorted ids of the root-level `<prefix><id>` markers. */
+  private def markerIds(fs: FileSystem, root: Path, prefix: String): Seq[Long] =
+    fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(prefix))
+      .map(_.stripPrefix(prefix).toLong).sorted
+
   /** The sorted committed batch ids under a [[runBatchCommitted]] index
     * root — ONE definition of the load-bearing `_committed_<id>` marker
-    * scheme, shared by the writer and both maintained-index readers.
+    * scheme, shared by the writer, the compactor, the erases and the
+    * maintained-index readers.
     */
   private[streaming] def committedBatchIds(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Long] =
-    fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_committed_"))
-      .map(_.stripPrefix("_committed_").toLong).sorted
+      fs: FileSystem,
+      root: Path): Seq[Long] =
+    markerIds(fs, root, CommittedPrefix)
+
+  /** [[committedBatchIds]], failing loudly on a root that has none. */
+  private[streaming] def requireCommitted(fs: FileSystem, root: Path, what: String): Seq[Long] = {
+    val done = committedBatchIds(fs, root)
+    require(done.nonEmpty, s"no committed $what batch under $root")
+    done
+  }
+
+  /** Whether `root` is a stream-maintained root (batch-commit markers
+    * present) — the static index writers and readers refuse such roots.
+    */
+  private[graft] def isMaintained(fs: FileSystem, root: Path): Boolean =
+    fs.exists(root) && committedBatchIds(fs, root).nonEmpty
 
   /** Deterministic fingerprint of a micro-batch's SOURCE-FILE set.
     * Recorded inside each `_committed_<id>` marker and re-checked on
@@ -191,16 +242,16 @@ private[streaming] object MaintainedRoot {
     * "skip the check" — never a false trigger.
     */
   private[streaming] def batchFilesSig(
-      conf: org.apache.hadoop.conf.Configuration,
+      conf: Configuration,
       ckptStr: String,
       batchId: Long): String = {
-    val dir = new org.apache.hadoop.fs.Path(ckptStr, "sources/0")
+    val dir = new Path(ckptStr, "sources/0")
     val fs = dir.getFileSystem(conf)
     // the log compacts every N batches into "<id>.compact" (all entries
     // up to id); either shape carries this batch's entries
     val logFile = Seq(
-      new org.apache.hadoop.fs.Path(dir, s"$batchId.compact"),
-      new org.apache.hadoop.fs.Path(dir, batchId.toString)).find(fs.exists)
+      new Path(dir, s"$batchId.compact"),
+      new Path(dir, batchId.toString)).find(fs.exists)
     logFile.fold("") { p =>
       val entryRe = """\{[^{}]*\}""".r
       val bidRe = """"batchId"\s*:\s*(-?\d+)""".r
@@ -219,12 +270,33 @@ private[streaming] object MaintainedRoot {
     }
   }
 
-  private[streaming] def writeUtf8(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path,
-      content: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
+  private val FilesSigShape = "files=\\d+ sha256=[0-9a-f]{64}".r
+
+  /** Fail loudly when a replayed committed batch id arrives with a
+    * DIFFERENT source-file set than the one its marker recorded (see
+    * [[batchFilesSig]]). An empty recorded sig (pre-sig roots), an empty
+    * current sig (unreadable source log), or a recorded value that does
+    * not parse as a signature (a TORN marker write — the content is
+    * advisory hardening, so a truncated flush must degrade to
+    * unverifiable, never wedge the stream with a false mismatch) all
+    * skip the check, as the markers without content always did.
+    */
+  private[streaming] def assertReplayedBatchUnchanged(
+      conf: Configuration,
+      marker: Path,
+      sig: String,
+      what: String,
+      batchId: Long): Unit = {
+    val recorded = readUtf8(conf, marker).trim
+    val verifiable =
+      FilesSigShape.matches(recorded) && FilesSigShape.matches(sig)
+    require(!verifiable || recorded == sig,
+      s"$what batch $batchId replayed with a DIFFERENT source-file set " +
+        s"(committed: $recorded; replayed: $sig). The checkpoint was " +
+        "restored to a state older than files that have since arrived, so " +
+        "skipping this batch as already-committed would silently drop " +
+        "them. Restore a checkpoint no older than the newest committed " +
+        "batch, or start a fresh maintained root.")
   }
 
   /** One data member of a maintained index root under the COMPACTION
@@ -242,10 +314,10 @@ private[streaming] object MaintainedRoot {
       compactPrefix: String = "compact_") {
     def rel(n: String): String =
       if (parentRel.isEmpty) n else s"$parentRel/$n"
-    def batchPath(root: org.apache.hadoop.fs.Path, id: Long) =
-      new org.apache.hadoop.fs.Path(root, rel(s"$batchPrefix$id"))
-    def compactPath(root: org.apache.hadoop.fs.Path, gen: Long) =
-      new org.apache.hadoop.fs.Path(root, rel(s"$compactPrefix$gen"))
+    def batchPath(root: Path, id: Long) =
+      new Path(root, rel(s"$batchPrefix$id"))
+    def compactPath(root: Path, gen: Long) =
+      new Path(root, rel(s"$compactPrefix$gen"))
     /** The live data dirs: the committed compacted generation (when
       * present — an all-empty member may have written none) plus batch
       * dirs NEWER than it. Batch dirs at or below the generation are
@@ -253,13 +325,22 @@ private[streaming] object MaintainedRoot {
       * crash window) and are never read.
       */
     def legs(
-        fs: org.apache.hadoop.fs.FileSystem,
-        root: org.apache.hadoop.fs.Path,
-        done: Seq[Long]): Seq[org.apache.hadoop.fs.Path] = {
+        fs: FileSystem,
+        root: Path,
+        done: Seq[Long]): Seq[Path] = {
       val gen = compactedGenId(fs, root)
       gen.map(g => compactPath(root, g)).filter(fs.exists).toSeq ++
         done.filter(id => gen.forall(id > _)).map(id => batchPath(root, id))
     }
+    /** The member as served: every live leg, projected to `cols`. */
+    def read(
+        spark: SparkSession,
+        fs: FileSystem,
+        root: Path,
+        done: Seq[Long],
+        cols: String*): DataFrame =
+      Parquet.read(spark, legs(fs, root, done).map(_.toString): _*)
+        .select(cols.map(col): _*)
     /** Remove dirs superseded by the COMMITTED compaction generation:
       * batch dirs at or below it and older compact dirs. Idempotent.
       * Called by [[compactCore]]'s sweep AND at erase entry — a
@@ -270,11 +351,11 @@ private[streaming] object MaintainedRoot {
       * future compaction to clean.
       */
     def sweepSuperseded(
-        fs: org.apache.hadoop.fs.FileSystem,
-        root: org.apache.hadoop.fs.Path): Unit =
+        fs: FileSystem,
+        root: Path): Unit =
       compactedGenId(fs, root).foreach { gen =>
         val parent =
-          if (parentRel.isEmpty) root else new org.apache.hadoop.fs.Path(root, parentRel)
+          if (parentRel.isEmpty) root else new Path(root, parentRel)
         if (fs.exists(parent)) fs.listStatus(parent).toSeq.foreach { st =>
           val n = st.getPath.getName
           def num(prefix: String): Option[Long] = {
@@ -288,20 +369,6 @@ private[streaming] object MaintainedRoot {
           if (superseded) fs.delete(st.getPath, true)
         }
       }
-
-    /** Compact dirs physically on disk (committed or half-written). */
-    def compactGensOnDisk(
-        fs: org.apache.hadoop.fs.FileSystem,
-        root: org.apache.hadoop.fs.Path): Seq[Long] = {
-      val parent =
-        if (parentRel.isEmpty) root else new org.apache.hadoop.fs.Path(root, parentRel)
-      if (!fs.exists(parent)) Nil
-      else fs.listStatus(parent).toSeq.map(_.getPath.getName)
-        .filter(n => n.startsWith(compactPrefix) &&
-          n.stripPrefix(compactPrefix).nonEmpty &&
-          n.stripPrefix(compactPrefix).forall(_.isDigit))
-        .map(_.stripPrefix(compactPrefix).toLong)
-    }
   }
 
   private[streaming] val Bm25Postings = MemberLayout("postings")
@@ -310,16 +377,29 @@ private[streaming] object MaintainedRoot {
   private[streaming] val SimJoinPrefixes = MemberLayout("prefixes")
   private[streaming] val SimJoinSets = MemberLayout("sets")
   private[streaming] val IvfLists = MemberLayout("", "lists_batch_", "lists_compact_")
+  /** The static base lists an IVF-PQ root is maintained on top of. */
+  private[streaming] val IvfBaseLists = "lists"
+
+  /** One write per member frame, each into that member's batch dir (mode
+    * overwrite, so a pre-marker crash replays cleanly). The writes are
+    * independent until the batch's one `_committed_` marker, so callers
+    * run them concurrently.
+    */
+  private[streaming] def batchWrites(
+      root: Path,
+      batchId: Long,
+      frames: Seq[(MemberLayout, DataFrame)]): Seq[() => Unit] =
+    frames.map { case (m, df) => () =>
+      df.write.mode("overwrite").parquet(m.batchPath(root, batchId).toString)
+    }
 
   /** The committed compaction generation under a maintained root (highest
     * `_compacted_<gen>` marker), shared by every member of the root.
     */
   private[streaming] def compactedGenId(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[Long] =
-    fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_compacted_"))
-      .map(_.stripPrefix("_compacted_").toLong).sorted.lastOption
+      fs: FileSystem,
+      root: Path): Option[Long] =
+    markerIds(fs, root, CompactedPrefix).lastOption
 
   /** Shared compaction protocol for the four stream-maintained indexes:
     * merge the previous compacted generation (if any) and every committed
@@ -337,9 +417,9 @@ private[streaming] object MaintainedRoot {
     * (legs() excludes ids ≤ the generation) and the next compaction
     * removes. The `_committed_<id>` markers are NEVER removed: a replay
     * of a pre-compaction batch id must stay a no-op (and its recorded
-    * file signature stays checkable). Caller contract: the maintainer is
-    * not running against this root during compaction (the offline
-    * maintenance window, like erasure).
+    * file signature stays checkable). The compactor holds the root's
+    * mutator lease, so no maintainer or erase runs against the root
+    * meanwhile.
     *
     * `merge(inputDirs, outDir)` writes one member's merged generation in
     * that member's serving layout; it may decline to write when every
@@ -352,23 +432,15 @@ private[streaming] object MaintainedRoot {
       what: String,
       members: Seq[(MemberLayout, (Seq[String], String) => Unit)]): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexPath)
+    val root = new Path(indexPath)
     val fs = root.getFileSystem(conf)
     withRootLease(conf, fs, root, what, "compactor") {
-    val done = committedBatchIds(fs, root)
-    require(done.nonEmpty, s"no committed $what batch under $indexPath")
+    val done = requireCommitted(fs, root, what)
+    // superseded or half-written older generations, then older markers
     def sweep(gen: Long): Unit = {
-      members.foreach { case (m, _) =>
-        done.filter(_ <= gen).foreach(id => fs.delete(m.batchPath(root, id), true))
-        // superseded or half-written older generations
-        m.compactGensOnDisk(fs, root).filter(_ < gen)
-          .foreach(g => fs.delete(m.compactPath(root, g), true))
-      }
-      fs.listStatus(root).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("_compacted_"))
-        .map(_.stripPrefix("_compacted_").toLong).filter(_ < gen)
-        .foreach(g =>
-          fs.delete(new org.apache.hadoop.fs.Path(root, s"_compacted_$g"), false))
+      members.foreach(_._1.sweepSuperseded(fs, root))
+      markerIds(fs, root, CompactedPrefix).filter(_ < gen)
+        .foreach(g => fs.delete(new Path(root, s"$CompactedPrefix$g"), false))
     }
     val prev = compactedGenId(fs, root)
     // finish any interrupted sweep for the current generation first
@@ -378,13 +450,13 @@ private[streaming] object MaintainedRoot {
     else {
       // members merge into disjoint compact dirs under ONE marker —
       // concurrent (guide §2.6)
-      runConcurrently(members.map { case (m, merge) => () =>
+      Concurrent.awaitAll(members.map { case (m, merge) => () =>
         val inputs = m.legs(fs, root, done).filter(fs.exists)
         if (inputs.nonEmpty)
           merge(inputs.map(_.toString), m.compactPath(root, newGen).toString)
       })
       // ONE commit point covers every member's merged generation
-      writeUtf8(fs, new org.apache.hadoop.fs.Path(root, s"_compacted_$newGen"),
+      writeUtf8(fs, new Path(root, s"$CompactedPrefix$newGen"),
         s"merged=${done.mkString(",")}")
       sweep(newGen)
       newGen
@@ -394,56 +466,56 @@ private[streaming] object MaintainedRoot {
 
   /** Reject a maintained root that holds (any part of) a STATICALLY
     * written index: a static layout keeps part files directly under the
-    * member dirs, which the maintained readers (batch_* / compact_* dirs
+    * member dirs, which the maintained readers (batch / compact dirs
     * only) silently ignore — cohabiting would hide every statically
     * written document. Checked on EVERY member dir, even without a
     * sidecar: a static write interrupted between members leaves exactly
     * one member in the static shape.
     */
   private[streaming] def assertMaintainerOwnsLayout(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      members: Seq[String],
+      fs: FileSystem,
+      root: Path,
+      members: Seq[MemberLayout],
       what: String,
       serveHint: String): Unit =
     members.foreach { m =>
-      val p = new org.apache.hadoop.fs.Path(root, m)
+      val p = new Path(root, m.parentRel)
       val static = fs.exists(p) && fs.listStatus(p).exists { st =>
         val n = st.getPath.getName
-        !n.startsWith("batch_") && !n.startsWith("compact_") && !n.startsWith("_")
+        !n.startsWith(m.batchPrefix) && !n.startsWith(m.compactPrefix) &&
+          !n.startsWith("_")
       }
       require(!static,
         s"$root holds a statically-written $what (non-batch entries under " +
-          s"$m/); stream maintainers own their roots ($serveHint)")
+          s"${m.parentRel}/); stream maintainers own their roots ($serveHint)")
     }
 
-  /** Fail loudly when a replayed committed batch id arrives with a
-    * DIFFERENT source-file set than the one its marker recorded (see
-    * [[batchFilesSig]]). An empty recorded sig (pre-sig roots), an empty
-    * current sig (unreadable source log), or a recorded value that does
-    * not parse as a signature (a TORN marker write — the content is
-    * advisory hardening, so a truncated flush must degrade to
-    * unverifiable, never wedge the stream with a false mismatch) all
-    * skip the check, as the markers without content always did.
+  /** The erase prologue every maintained root shares: a single key
+    * column, the root's mutator lease, at least one committed batch, and
+    * a crashed compaction's sweep finished first — superseded dirs are
+    * invisible to readers but still hold victim BYTES, and an erase that
+    * left them would attest an erasure that physically did not happen.
+    * `body(fs, root, done, keys)` then runs under the lease with the
+    * distinct victim keys materialized once as column `idCol`.
     */
-  private[streaming] val FilesSigShape = "files=\\d+ sha256=[0-9a-f]{64}".r
-
-  private[streaming] def assertReplayedBatchUnchanged(
-      conf: org.apache.hadoop.conf.Configuration,
-      marker: org.apache.hadoop.fs.Path,
-      sig: String,
+  private[streaming] def erasing[T](
+      spark: SparkSession,
+      indexPath: String,
+      ids: DataFrame,
       what: String,
-      batchId: Long): Unit = {
-    val recorded = readUtf8(conf, marker).trim
-    val verifiable =
-      FilesSigShape.matches(recorded) && FilesSigShape.matches(sig)
-    require(!verifiable || recorded == sig,
-      s"$what batch $batchId replayed with a DIFFERENT source-file set " +
-        s"(committed: $recorded; replayed: $sig). The checkpoint was " +
-        "restored to a state older than files that have since arrived, so " +
-        "skipping this batch as already-committed would silently drop " +
-        "them. Restore a checkpoint no older than the newest committed " +
-        "batch, or start a fresh maintained root.")
+      idCol: String,
+      members: Seq[MemberLayout])(
+      body: (FileSystem, Path, Seq[Long], DataFrame) => T): T = {
+    require(ids.columns.length == 1,
+      s"ids must be a single key column, got ${ids.columns.toSeq}")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(indexPath)
+    val fs = root.getFileSystem(conf)
+    withRootLease(conf, fs, root, what, "eraser") {
+      val done = requireCommitted(fs, root, what)
+      members.foreach(_.sweepSuperseded(fs, root))
+      body(fs, root, done, ids.toDF(idCol).distinct().localCheckpoint())
+    }
   }
 
   /** ONE-JOB victim probe over a union of leg reads: tag each row with
@@ -473,12 +545,85 @@ private[streaming] object MaintainedRoot {
       .sortBy(_._1).toSeq
   }
 
+  /** [[victimLegProbe]] over every live leg of member `m`, keyed by its
+    * `id` column.
+    */
+  private[streaming] def probeMember(
+      spark: SparkSession, fs: FileSystem, root: Path, done: Seq[Long],
+      m: MemberLayout, keys: DataFrame, distinctPerDoc: Boolean): Seq[(String, Long, Long)] =
+    victimLegProbe(
+      Parquet.read(spark, m.legs(fs, root, done).filter(fs.exists).map(_.toString): _*)
+        .select("id"),
+      keys, "id", distinctPerDoc)
+
+  /** The leg-dir names a maintained member can have, for the probe's
+    * leg tag: every layout's batch and compact prefixes, plus the IVF-PQ
+    * base lists.
+    */
+  private val LegDir = {
+    val prefixes = Seq(Bm25Postings, MinHashBuckets, MinHashSets,
+      SimJoinPrefixes, SimJoinSets, IvfLists)
+      .flatMap(m => Seq(m.batchPrefix, m.compactPrefix)).distinct
+    s"/((?:${prefixes.mkString("|")})[0-9]+|$IvfBaseLists)(?:/cluster=[^/]+)?/[^/]+$$"
+  }
+
   /** Tag file-sourced rows with the maintained-root leg dir they came
     * from: the dir immediately containing the file, or one above a
     * `cluster=` partition dir (the IVF-PQ layout) — anchored to the path
-    * TAIL so upstream dirs that happen to contain `batch_` never match.
+    * TAIL so upstream dirs that happen to contain a batch prefix never
+    * match.
     */
-  private[streaming] def withLegColumn(df: DataFrame): DataFrame =
-    df.withColumn("__leg", regexp_extract(input_file_name(),
-      "/((?:lists_)?(?:batch|compact)_[0-9]+|lists)(?:/cluster=[^/]+)?/[^/]+$", 1))
+  private def withLegColumn(df: DataFrame): DataFrame =
+    df.withColumn("__leg", regexp_extract(input_file_name(), LegDir, 1))
+
+  /** The shared per-leg erase rewrite: for every victim-bearing `legs`
+    * dir, each member's copy of it (in `members` order — the caller puts
+    * its probe member LAST) is read with `read`, anti-joined against the
+    * victim `keys` on `idCol`, materialized (localCheckpoint) BEFORE the
+    * overwrite of its source, and written back with `write`. Legs are
+    * disjoint dirs and crash-idempotence is per leg, so they rewrite
+    * CONCURRENTLY (guide §2.6): however many legs a crash leaves
+    * half-done, every unfinished leg still bears victims for the re-run's
+    * probe.
+    */
+  private[streaming] def rewriteLegs(
+      root: Path,
+      legs: Seq[String],
+      members: Seq[MemberLayout],
+      keys: DataFrame,
+      idCol: String)(
+      read: Path => Option[DataFrame])(
+      write: (DataFrame, Path) => Unit): Unit =
+    Concurrent.awaitAll(legs.map { leg => () =>
+      members.foreach { m =>
+        val p = new Path(root, m.rel(leg))
+        read(p).foreach { df =>
+          val retained = df.join(keys, Seq(idCol), "left_anti")
+            .select(df.columns.map(col).toIndexedSeq: _*).localCheckpoint()
+          write(retained, p)
+        }
+      }
+    })
+
+  /** [[rewriteLegs]]' plain leg read: the dir's parquet, when it exists. */
+  private[streaming] def readIfExists(spark: SparkSession, fs: FileSystem)(
+      p: Path): Option[DataFrame] =
+    if (fs.exists(p)) Some(Parquet.read(spark, p.toString)) else None
+
+  /** [[rewriteLegs]]' plain leg write. */
+  private[streaming] def overwrite(df: DataFrame, p: Path): Unit =
+    df.write.mode("overwrite").parquet(p.toString)
+
+  /** The per-leg erase ledger (batch_id, n_before, n_after, n_erased): a
+    * batch leg reports its batch id, the compacted generation its gen id
+    * (the highest batch id folded into it).
+    */
+  private[streaming] def batchLedger(
+      spark: SparkSession,
+      affected: Seq[(String, Long, Long)]): DataFrame = {
+    import spark.implicits._
+    affected.map { case (leg, before, erased) =>
+      (leg.filter(_.isDigit).toLong, before, before - erased, erased)
+    }.toDF("batch_id", "n_before", "n_after", "n_erased")
+  }
 }

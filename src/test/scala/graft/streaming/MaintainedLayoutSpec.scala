@@ -174,7 +174,7 @@ class MaintainedLayoutSpec extends AnyFunSuite {
       "erase" -> erase(12L, 20L) _)
   }
 
-  // golden listings, captured before the maintained-root refactor
+  // the golden listings: the layout every change must keep
   private val Bm25Golden: Seq[(String, String)] = Seq(
     "maintain p0" -> """
       |_committed_0
