@@ -727,13 +727,23 @@ object StreamingQueries {
   /** The maintained simjoin root fixture (first-batch-frozen order, 3
     * micro-batches over the 4/5 corpus) — built once per (machine, sf)
     * and shared by the maintained serve, the pruning audit and the
-    * re-freeze serve.
+    * re-freeze serve. The stream reads one part per micro-batch in
+    * modification-time order, and the FIRST batch freezes the rarity
+    * order, so the parts get distinct modification times in part-name
+    * order: every build freezes the same order (a parallel write leaves
+    * the parts' times to chance).
     */
   private def simjoinStreamFixture(s: SparkSession, dir: String): String =
-    IndexFixture.dir("simjoin_stream", dir) { tmp =>
+    IndexFixture.dir("simjoin_stream_v2", dir) { tmp =>
       Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0)
         .repartition(3, col("doc_id"))
         .write.parquet(s"$tmp/src")
+      val src = new org.apache.hadoop.fs.Path(s"$tmp/src")
+      val fs = src.getFileSystem(s.sparkContext.hadoopConfiguration)
+      fs.listStatus(src).map(_.getPath).filter(_.getName.startsWith("part-"))
+        .sortBy(_.getName).zipWithIndex.foreach { case (part, i) =>
+          fs.setTimes(part, 1000000000000L + i, -1L)
+        }
       graft.streaming.Incremental.streamSimJoinMaintain(
         s, s"$tmp/src", s"$tmp/index", "doc_id", "text",
         shingleK = 3, threshold = 0.5, maxFilesPerTrigger = 1)
