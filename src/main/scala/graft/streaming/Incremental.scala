@@ -1197,9 +1197,9 @@ object Incremental {
     * micro-batch is a pure map-side encode into append-only
     * `buckets/batch_<id>` + `sets/batch_<id>` dirs — no snapshots to roll
     * forward, nothing to retire. Signatures are content-deterministic
-    * hashes, so the maintained index QUERIES identically to a rebuild on everything
-    * ingested (the declared `stream_minhash_maintain` query shares the
-    * static-index serve's oracle). Shape parameters live in the standard
+    * hashes, so the maintained index QUERIES identically to a rebuild on
+    * everything ingested (the declared `stream_minhash_maintain` query
+    * shares the static-index serve's oracle). Shape parameters live in the standard
     * sidecar, written on the first run and REQUIRED equal on every later
     * run — appending under different (k, bands, rows) would silently mix
     * incomparable signatures.
@@ -1848,8 +1848,9 @@ object Incremental {
 
   /** Streaming prefix-filter similarity-index maintenance —
     * [[MaintainedRoot.runBatchCommitted]] applied to
-    * [[graft.ops.SimJoinIndex]]. The FIRST batch freezes the model: its shingle document frequencies
-    * become the rarity total order (written once to `freq/`), exactly as
+    * [[graft.ops.SimJoinIndex]]. The FIRST batch freezes the model: its
+    * shingle document frequencies become the rarity total order (written
+    * once to `freq/`), exactly as
     * the batch [[graft.ops.SimJoinIndex.append]] freezes the build-time
     * order — later batches' unseen shingles take df 0 and sort first.
     * Each micro-batch then pays one shingle pass over ITSELF into

@@ -21,10 +21,11 @@ import graft.sources.Parquet
   *    compacted generation (`_compacted_<gen>`, written last);
   *  - the ERASE: one prologue, one single-pass victim probe and one
   *    per-leg anti-join rewrite.
-  * Each index keeps its codec in [[Incremental]]: its members, how a batch
-  * encodes, how a serve reads, and its erase probe. The mutator lease
-  * ([[Incremental.withRootLease]]) stays there too. This object owns every
-  * root-layout name; the source-scan spec keeps it that way.
+  * Each index's own steps stay in [[Incremental]]: how a batch encodes,
+  * how a serve reads, its compaction merges and its erase. The mutator lease
+  * ([[Incremental.withRootLease]]) stays there too. The marker names and
+  * the batch / compact dir names are spelled only here, which a
+  * source-scan spec enforces.
   */
 private[graft] object MaintainedRoot {
   import Incremental.{streamSource, withRootLease}
