@@ -190,19 +190,26 @@ object Bm25Index {
     (newTerms, newStats)
   }
 
-  /** Term sets up to this size push into the postings scan as a literal
-    * `In` predicate (real parquet `PushedFilters` → footer-stat file
-    * skipping against the term-range layout [[write]] produced); larger
-    * batches fall back to a broadcast semi-join, which still never scans
-    * corpus text but reads all postings files.
+  /** Query batches with up to this many distinct terms push them into the
+    * postings scan and the term dictionary as one literal `In` predicate
+    * (real parquet `PushedFilters` → footer-stat file skipping against the
+    * term-range layout [[write]] produced). The terms come from a collect
+    * of at most this many + 1 query rows, deduplicated on the driver; only
+    * a batch with more rows than this pays a distinct over its terms.
+    * Batches with more distinct terms fall back to broadcast semi-joins,
+    * which still never scan corpus text but read all postings files.
     */
   val MaxPushdownTerms = 1000
 
   /** BM25 top-k per query from the index alone: (q_id, rank, id, score).
     * The query's distinct terms — bounded by the query batch, not the
-    * corpus — prune the postings read (see [[MaxPushdownTerms]]);
-    * df/stats broadcast into the candidate rows, one (q_id, id)
-    * aggregate, one per-query top-k window over candidates only.
+    * corpus — prune the postings read and the term dictionary (see
+    * [[MaxPushdownTerms]]); a null term matches nothing. df/stats
+    * broadcast into the candidate rows, one (q_id, id) aggregate, one
+    * per-query top-k window over candidates only. A local query batch
+    * (the serving shape) is collected with no Spark job and never
+    * aggregated or shuffled: constructing the serve runs only the stats
+    * collect.
     */
   def topK(
       index: Bm25Index,
@@ -218,12 +225,18 @@ object Bm25Index {
     val qTerms = q.select("term").distinct()
     // query-batch-sized collect (the one bounded-by-construction collect
     // family this repo allows): a literal In is what reaches the parquet
-    // footer as a pushed filter; a semi-join would not
-    val littleTerms = qTerms.limit(MaxPushdownTerms + 1).collect().map(_.getString(0))
-    val pruned =
-      if (littleTerms.length <= MaxPushdownTerms)
-        index.postings.filter(col("term").isin(littleTerms.sorted.toIndexedSeq: _*))
-      else index.postings.join(broadcast(qTerms), Seq("term"), "left_semi")
+    // footer as a pushed filter; a semi-join would not. Limit and Project
+    // fold into a local batch, so collecting its rows runs no job
+    val rows = q.select("term").limit(MaxPushdownTerms + 1).collect()
+    val distinctTerms = (if (rows.length <= MaxPushdownTerms) rows
+      else qTerms.limit(MaxPushdownTerms + 1).collect()).map(_.getString(0)).distinct
+    val (pruned, queriedTerms) =
+      if (distinctTerms.length <= MaxPushdownTerms) {
+        val inTerms = col("term").isin(distinctTerms.filter(_ != null).sorted.toIndexedSeq: _*)
+        (index.postings.filter(inTerms), index.terms.filter(inTerms))
+      } else
+        (index.postings.join(broadcast(qTerms), Seq("term"), "left_semi"),
+          index.terms.join(qTerms, Seq("term"), "left_semi"))
     // the 1-row stats frame folds in as LITERALS via a provably-bounded
     // collect (the index-format contract: stats IS one row — same
     // bounded-collect family as the query-term pushdown above), so a
@@ -232,7 +245,7 @@ object Bm25Index {
     val st = index.stats.select(col("n"), col("avgdl")).head()
     val (n, avgdl) = (st.getDouble(0), st.getDouble(1))
     val scored = pruned
-      .join(broadcast(index.terms.join(qTerms, Seq("term"), "left_semi")), Seq("term"))
+      .join(broadcast(queriedTerms), Seq("term"))
       .join(broadcast(q), Seq("term"))
       .withColumn("__idf",
         log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5)))

@@ -2,6 +2,7 @@ package graft.schema
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Data-quality expectation runner (the Great-Expectations/dbt-test shape,
   * public pattern): a suite of named boolean expectations evaluates over a
@@ -24,7 +25,9 @@ object Validate {
 
   /** Evaluate the suite: returns one row per check —
     * (check, n_rows, n_violations, passed) — from a single scan.
-    * Deterministic output order by check name.
+    * Deterministic output order by check name, in Spark's string order
+    * (UTF-8 bytes), sorted on the driver: the result is a local relation,
+    * so collecting it runs no Spark job.
     */
   def run(df: DataFrame, checks: Seq[Check]): DataFrame = {
     require(checks.nonEmpty, "empty expectation suite")
@@ -37,10 +40,9 @@ object Validate {
     val n = row.getAs[Long]("__n")
     val spark = df.sparkSession
     import spark.implicits._
-    checks.map { c =>
+    checks.sortBy(c => UTF8String.fromString(c.name)).map { c =>
       val v = row.getAs[Long](s"__v_${c.name}")
       (c.name, n, v, v == 0L)
     }.toDF("check", "n_rows", "n_violations", "passed")
-      .orderBy("check")
   }
 }

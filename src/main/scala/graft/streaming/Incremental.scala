@@ -55,7 +55,8 @@ object Incremental {
     * sink with its own temp checkpoint, state stores sized by
     * [[runWithStatePartitions]] (0 keeps the session default), and returns
     * the sink path once the run has terminated. The sink is distributed
-    * files, so nothing accumulates on the driver.
+    * files, so nothing accumulates on the driver. The checkpoint is of no
+    * use once the run has terminated and is deleted then.
     */
   private def appendToTempSink(
       spark: SparkSession,
@@ -64,13 +65,21 @@ object Incremental {
       statePartitions: Int): String = {
     val sink = java.nio.file.Files.createTempDirectory(s"graft_${name}sink")
     val ckpt = java.nio.file.Files.createTempDirectory(s"graft_${name}ckpt")
-    runWithStatePartitions(spark, statePartitions) {
+    try runWithStatePartitions(spark, statePartitions) {
       stream.writeStream.format("parquet")
         .option("path", sink.toString)
         .option("checkpointLocation", ckpt.toString)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
+    } finally deleteDir(spark, ckpt.toString)
     sink.toString
+  }
+
+  /** Recursively deletes a scratch directory through the Hadoop
+    * `FileSystem` of its path.
+    */
+  private def deleteDir(spark: SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
   /** Spark's file stream source requires a DIRECTORY basePath; fixture
@@ -442,6 +451,7 @@ object Incremental {
             val part = out.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
             val dst = tmpData.resolve(name)
             Files.move(part.toPath, dst)
+            deleteDir(spark, out.toString)
             Files.setLastModifiedTime(dst,
               FileTime.fromMillis(1000000000000L + mtimeOffsetSec * 1000))
         }
@@ -1457,7 +1467,7 @@ object Incremental {
         // from pass 1 and skips that third postings scan)
         applyBm25EraseJournal(spark, fs, root, done,
           knownBearing = Some(affected.map(_._1)))
-        batchLedger(spark, affected).localCheckpoint()
+        batchLedger(spark, affected)
       }
     }
 
@@ -1585,7 +1595,6 @@ object Incremental {
       affected.map { case (leg, before, erased) =>
         (leg, before, before - erased, erased)
       }.toDF("leg", "n_before", "n_after", "n_erased")
-        .localCheckpoint()
     }
 
   /** Read the [[streamMinHashMaintain]]ed index: every committed batch

@@ -2,10 +2,17 @@ package graft.ops
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+import org.apache.spark.sql.execution.{FilterExec, LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSpark
+import graft.{GraftSpark, JobCount}
 import graft.etl.Tables
 
 class Bm25IndexSpec extends AnyFunSuite {
@@ -17,6 +24,28 @@ class Bm25IndexSpec extends AnyFunSuite {
     import spark.implicits._
     Seq((1L, "hash"), (1L, "join"), (1L, "dup"),
       (2L, "window"), (2L, "sort"), (2L, "merge")).toDF("q_id", "term")
+  }
+
+  /** The physical plan a serve will run, before AQE re-plans any stage. */
+  private def physical(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
+  }
+
+  private def hasLiteralIn(plan: SparkPlan): Boolean = plan.exists {
+    case f: FilterExec => f.condition.exists(e => e.isInstanceOf[In] || e.isInstanceOf[InSet])
+    case _ => false
+  }
+
+  private def hasSemiJoin(plan: SparkPlan): Boolean = plan.exists {
+    case j: BroadcastHashJoinExec => j.joinType.toString == "LeftSemi"
+    case _ => false
+  }
+
+  private lazy val writtenIndex = {
+    val dir = Files.createTempDirectory("graft_bm25_budget").toString
+    Bm25Index.write(Bm25Index.build(docs, "doc_id", "text"), dir)
+    dir
   }
 
   test("index-served topK equals the from-scratch bm25TopK exactly") {
@@ -60,6 +89,64 @@ class Bm25IndexSpec extends AnyFunSuite {
     // unseen terms contribute no postings rows, so scores match the small set
     val viaSmall = Bm25Index.topK(idx, queries, "q_id", "term", k = 10)
     assert(viaBig.exceptAll(viaSmall).isEmpty && viaSmall.exceptAll(viaBig).isEmpty)
+    val plan = physical(viaBig)
+    assert(hasSemiJoin(plan) && !hasLiteralIn(plan),
+      s"an oversized term batch must take the semi-join path:\n$plan")
+  }
+
+  test("a null query term matches nothing; duplicated query rows score as in bm25TopK") {
+    import spark.implicits._
+    val withNull = Seq((1L, "hash"), (1L, null.asInstanceOf[String]), (2L, "sort"),
+      (2L, "sort")).toDF("q_id", "term")
+    val fromScratch = TextAnalysis.bm25TopK(
+      docs, "doc_id", "text", withNull, "q_id", "term", k = 10)
+    val served = Bm25Index.topK(
+        Bm25Index.build(docs, "doc_id", "text"), withNull, "q_id", "term", k = 10)
+      .withColumnRenamed("id", "doc_id")
+    assert(!fromScratch.isEmpty)
+    assert(served.exceptAll(fromScratch).isEmpty &&
+      fromScratch.exceptAll(served).isEmpty)
+  }
+
+  test("a local query batch serves with one construction job and no query-batch shuffle") {
+    import spark.implicits._
+    val batch = Seq((1L, "hash"), (1L, "join"), (2L, "window"), (2L, "sort"), (2L, "merge"),
+      (3L, "dup"), (3L, "group"), (3L, "scan"), (4L, "column"), (4L, "table"),
+      (4L, "query"), (4L, "filter")).toDF("q_id", "term")
+    val idx = Bm25Index.read(spark, writtenIndex)
+    var served: DataFrame = null
+    // the stats head is the one job; the query terms collect locally
+    assert(JobCount.of("bm25-serve-construct") {
+      served = Bm25Index.topK(idx, batch, "q_id", "term", k = 10)
+    } == 1)
+    val plan = physical(served)
+    val batchSides = plan.collect { case b: BroadcastExchangeExec => b }
+      .filter(_.exists(_.isInstanceOf[LocalTableScanExec]))
+    assert(batchSides.nonEmpty && batchSides.forall(b => !b.child.exists {
+      case _: HashAggregateExec | _: ShuffleExchangeExec => true
+      case _ => false
+    }), s"the query batch must reach its broadcast unaggregated:\n$plan")
+    assert(plan.collect { case l: LocalTableScanExec => l }.size ==
+      batchSides.map(_.collect { case l: LocalTableScanExec => l }.size).sum,
+      s"every query-batch scan must sit under a broadcast:\n$plan")
+    // the (q_id, id) aggregate and the per-query window, nothing else
+    assert(plan.collect { case e: ShuffleExchangeExec => e }.size == 2, plan.toString)
+    assert(!hasSemiJoin(plan), plan.toString)
+    assert(plan.toString.contains("PushedFilters") && plan.toString.contains("In(term"),
+      s"expected a pushed In(term, …) filter on the postings scan:\n$plan")
+  }
+
+  test("a batch of more rows than MaxPushdownTerms but few distinct terms still pushes In") {
+    import spark.implicits._
+    val rows = (0 until 1200).map(i => (i % 2 + 1L, s"zz_unseen_${i % 900}")).toDF("q_id", "term")
+      .unionByName(queries)
+    val idx = Bm25Index.read(spark, writtenIndex)
+    val viaRows = Bm25Index.topK(idx, rows, "q_id", "term", k = 10)
+    val plan = viaRows.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters") && plan.contains("In(term"),
+      s"expected a pushed In(term, …) filter on the postings scan:\n$plan")
+    val viaSmall = Bm25Index.topK(idx, queries, "q_id", "term", k = 10)
+    assert(viaRows.exceptAll(viaSmall).isEmpty && viaSmall.exceptAll(viaRows).isEmpty)
   }
 
   test("append equals a full rebuild: postings, df, stats, and served results") {

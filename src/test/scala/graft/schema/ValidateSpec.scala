@@ -3,7 +3,7 @@ package graft.schema
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSpark
+import graft.{GraftSpark, JobCount}
 import graft.schema.Validate.Check
 
 class ValidateSpec extends AnyFunSuite {
@@ -51,5 +51,18 @@ class ValidateSpec extends AnyFunSuite {
     // with the suite size (AQE may stage the one aggregate into >1 job,
     // but 20 checks must cost the same passes as 1)
     assert(jobs(20) == jobs(1), "suite size must not add passes")
+  }
+
+  test("result rows come back in Spark's string order, and collecting them runs no job") {
+    // case differences, and a supplementary character whose UTF-16 order
+    // (surrogate 0xD83D < 0xFF21) differs from its UTF-8 order
+    val names = Seq("b", "\uD83D\uDE00", "B", "a", "\uFF21", "A", "z")
+    val out = Validate.run(df, names.map(Check(_, col("id") >= 0)))
+    var got = Seq.empty[String]
+    assert(JobCount.of("validate-collect") {
+      got = out.collect().map(_.getString(0)).toSeq
+    } == 0)
+    assert(got == Seq("A", "B", "a", "b", "z", "\uFF21", "\uD83D\uDE00"))
+    assert(got == out.orderBy("check").collect().map(_.getString(0)).toSeq)
   }
 }

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -10,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSpark
+import graft.{GraftSpark, JobCount}
 import graft.etl.{FileLoads, Tables}
 import graft.streaming.Incremental
 
@@ -32,36 +31,6 @@ class ParquetReadSpec extends AnyFunSuite {
     assert(outcome(Parquet.read(spark, paths: _*)) == inferred, s"read of ${paths.mkString(", ")}")
   }
 
-  // count only this suite's jobs: each measured body runs in its own job
-  // group (the shared session may carry other suites' stragglers)
-  private val jobs = new AtomicInteger
-  @volatile private var group = ""
-  private lazy val listener = {
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null && group == js.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
-
-  private def jobsOf(tag: String)(body: => Unit): Int = {
-    listener
-    jobs.set(0)
-    group = tag
-    spark.sparkContext.setJobGroup(tag, tag)
-    try body finally spark.sparkContext.clearJobGroup()
-    // the listener bus posts asynchronously: poll until stable
-    val deadline = System.nanoTime + 10L * 1000000000L
-    var last = -1
-    while (System.nanoTime < deadline && jobs.get != last) {
-      last = jobs.get
-      Thread.sleep(400)
-    }
-    jobs.get
-  }
-
   private def withConf[T](key: String, value: String)(body: => T): T = {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, value)
@@ -75,7 +44,7 @@ class ParquetReadSpec extends AnyFunSuite {
     val paths = Fixtures.map(t => s"${GraftSpark.Sf0001}/$t.parquet")
     withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
       paths.foreach(assertSame(_))
-      assert(jobsOf("parquet-fixtures")(paths.foreach(Parquet.read(spark, _))) == 0)
+      assert(JobCount.of("parquet-fixtures")(paths.foreach(Parquet.read(spark, _))) == 0)
     }
     // without the legacy flag the nanos column either reads natively or
     // fails the same way under both paths
@@ -89,7 +58,7 @@ class ParquetReadSpec extends AnyFunSuite {
     FileLoads.append(Tables.events(spark, GraftSpark.Sf0001), "ts", path)
     assertSame(path)
     assert(Parquet.read(spark, path).schema("p_date").dataType == DateType)
-    assert(jobsOf("parquet-lake")(Parquet.read(spark, path)) == 0)
+    assert(JobCount.of("parquet-lake")(Parquet.read(spark, path)) == 0)
     val df = FileLoads.readWindow(spark, path, "2024-01-02")
     val scans = df.queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
     assert(scans.nonEmpty && scans.forall(_.partitionFilters.nonEmpty),
@@ -219,7 +188,7 @@ class ParquetReadSpec extends AnyFunSuite {
       assert(legs.nonEmpty, s"no multi-leg member under $root: ${dirs.mkString(", ")}")
       legs.foreach(l => assertSame(l: _*))
       val readable = dirs.filter(d => outcome(spark.read.parquet(d)).isRight)
-      assert(jobsOf(s"parquet-root-${new File(root).getName}")(
+      assert(JobCount.of(s"parquet-root-${new File(root).getName}")(
         readable.foreach(Parquet.read(spark, _))) == 0)
     }
     // and the maintained serves still read what they did
