@@ -195,7 +195,11 @@ object Bm25Index {
     * (real parquet `PushedFilters` → footer-stat file skipping against the
     * term-range layout [[write]] produced). The terms come from a collect
     * of at most this many + 1 query rows, deduplicated on the driver; only
-    * a batch with more rows than this pays a distinct over its terms.
+    * a batch with more rows than this pays a distinct over its terms. A
+    * distributed batch with more rows than this thus runs two collects:
+    * the row-limited one (a `CollectLimit`, which may launch several
+    * incremental scan jobs) and then the distinct one; no benchmark
+    * workload sends such a batch, so that path's cost is unmeasured.
     * Batches with more distinct terms fall back to broadcast semi-joins,
     * which still never scan corpus text but read all postings files.
     */

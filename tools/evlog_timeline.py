@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Print a per-SQL-execution job timeline from a Spark event log.
 
-    python3 tools/evlog_timeline.py <event log file | eventlog_v2_* dir> [--min-jobs N]
+    python3 tools/evlog_timeline.py <event log file | eventlog_v2_* dir>
 
 The log must be uncompressed (spark.eventLog.compress=false). A rolling log
 (an eventlog_v2_* directory) is read part by part in index order.
@@ -125,8 +125,6 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__,
                                  formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("log", help="an event log file or an eventlog_v2_* directory")
-    ap.add_argument("--min-jobs", type=int, default=0,
-                    help="list only executions with at least this many jobs")
     args = ap.parse_args()
     execs, jobs, stages_ran, tasks = read(log_files(args.log))
 
@@ -142,8 +140,6 @@ def main():
 
     for eid in sorted(execs, key=lambda e: (execs[e]["start"], e)):
         js = by_exec.get(eid, [])
-        if len(js) < args.min_jobs:
-            continue
         x = execs[eid]
         desc = f"  [{x['desc']}]" if x["desc"] else ""
         print(f"exec {eid:5d} {secs(x['start'], x['end'])} s {len(js):3d} jobs  {x['site']}{desc}")
