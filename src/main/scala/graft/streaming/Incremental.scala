@@ -1,10 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.ops.Concurrent
-import graft.sources.Parquet
 
 /** The public surface of the stream-maintained index roots and the
   * stream analytics ([[StreamAnalytics]], mixed in): the exclusive mutator
@@ -209,65 +205,22 @@ object Incremental extends StreamAnalytics {
     * and after (the declared `stream_bm25_compact` query shares the
     * maintained serve's oracle).
     */
-  def compactBm25Maintained(
-      spark: SparkSession,
-      indexPath: String,
-      numFiles: Int = 8): Long = {
-    require(numFiles >= 1, s"numFiles must be >= 1: $numFiles")
-    assertNoPendingErase(spark, indexPath, "bm25 index")
-    compactCore(spark, indexPath, "bm25 index", Seq(
-      Bm25Postings -> { (ins: Seq[String], out: String) =>
-        Parquet.read(spark, ins: _*)
-          .select("term", "id", "tf", "dl")
-          .repartitionByRange(numFiles, col("term"))
-          .sortWithinPartitions("term", "id")
-          .write.mode("overwrite").parquet(out)
-      }))
-  }
+  def compactBm25Maintained(spark: SparkSession, indexPath: String, numFiles: Int = 8): Long =
+    compact(IndexCodecs.Bm25, spark, indexPath, numFiles)
 
   /** Compact a [[streamMinHashMaintain]]ed root (buckets + sets concat —
     * both members are per-document rows with no global state).
     */
-  def compactMinHashMaintained(
-      spark: SparkSession,
-      indexPath: String,
-      numFiles: Int = 8): Long = {
-    require(numFiles >= 1, s"numFiles must be >= 1: $numFiles")
-    compactCore(spark, indexPath, "minhash index", Seq(
-      MinHashBuckets -> concatMerge(spark, numFiles, "id", "band", "bucket"),
-      MinHashSets -> concatMerge(spark, numFiles, "id", "shingle_set")))
-  }
-
-  /** The compaction merge of a per-document member (rows with no global
-    * state): the inputs' `cols`, rewritten as `numFiles` files.
-    */
-  private def concatMerge(
-      spark: SparkSession,
-      numFiles: Int,
-      cols: String*): (Seq[String], String) => Unit =
-    (ins, out) => Parquet.read(spark, ins: _*).select(cols.map(col): _*)
-      .repartition(numFiles)
-      .write.mode("overwrite").parquet(out)
+  def compactMinHashMaintained(spark: SparkSession, indexPath: String, numFiles: Int = 8): Long =
+    compact(IndexCodecs.MinHash, spark, indexPath, numFiles)
 
   /** Compact a [[streamSimJoinMaintain]]ed root: prefixes re-cluster by
     * shingle hash (the static [[graft.ops.SimJoinIndex.write]] layout —
     * serve probes read co-located posting lists), sets concat; the frozen
     * `freq` model stays as built.
     */
-  def compactSimJoinMaintained(
-      spark: SparkSession,
-      indexPath: String,
-      numFiles: Int = 8): Long = {
-    require(numFiles >= 1, s"numFiles must be >= 1: $numFiles")
-    compactCore(spark, indexPath, "simjoin index", Seq(
-      SimJoinPrefixes -> { (ins: Seq[String], out: String) =>
-        Parquet.read(spark, ins: _*).select("h", "id", "n")
-          .repartition(numFiles, col("h"))
-          .sortWithinPartitions("h", "id")
-          .write.mode("overwrite").parquet(out)
-      },
-      SimJoinSets -> concatMerge(spark, numFiles, "id", "set", "n")))
-  }
+  def compactSimJoinMaintained(spark: SparkSession, indexPath: String, numFiles: Int = 8): Long =
+    compact(IndexCodecs.SimJoin, spark, indexPath, numFiles)
 
   /** Compact a [[streamIvfPqMaintain]]ed root: merge every committed
     * `lists_batch_<id>` dir into one cluster-partitioned
@@ -278,35 +231,20 @@ object Incremental extends StreamAnalytics {
     * tail. The frozen model and base `lists/` are untouched; the
     * model-generation stamp is asserted first.
     */
-  def compactIvfPqMaintained(
-      spark: SparkSession,
-      indexPath: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(indexPath).getFileSystem(conf)
-    assertModelGeneration(conf, indexPath, stampIfAbsent = false)
-    compactCore(spark, indexPath, "ivfpq index", Seq(
-      IvfLists -> { (ins: Seq[String], out: String) =>
-        val frames = ins.flatMap(p =>
-          readListsDir(spark, fs, new org.apache.hadoop.fs.Path(p)))
-        if (frames.nonEmpty) writeListsDir(frames.reduce(_ unionByName _), out)
-      }))
-  }
+  def compactIvfPqMaintained(spark: SparkSession, indexPath: String): Long =
+    compact(IndexCodecs.IvfPq, spark, indexPath, numFiles = 1)
 
   /** The number of committed batch dirs NEWER than the compacted
     * generation — i.e. the per-member serve-plan fan-out (and erase-probe
     * leg count) the next compaction would fold away. The cadence signal
     * for [[compactIfStale]].
     */
-  def maintainedTailBatches(spark: SparkSession, indexPath: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gen = compactedGenId(fs, root)
-    committedBatchIds(fs, root).count(id => gen.forall(id > _))
-  }
+  def maintainedTailBatches(spark: SparkSession, indexPath: String): Int =
+    tailBatches(spark, indexPath)
 
   /** Compaction POLICY gate: run `compact` iff the uncompacted tail
     * exceeds `maxTailBatches` — the one knob a production maintainer
-    * calls right after its [[MaintainedRoot.runBatchCommitted]] run so
+    * calls right after its maintainer run so
     * serve-plan width stays bounded without a separate scheduler:
     * {{{
     * Incremental.streamMinHashMaintain(spark, src, root, ...)
@@ -322,35 +260,6 @@ object Incremental extends StreamAnalytics {
       maxTailBatches: Int)(compact: => Long): Option[Long] = {
     require(maxTailBatches >= 1, s"maxTailBatches must be >= 1: $maxTailBatches")
     if (maintainedTailBatches(spark, indexPath) > maxTailBatches) Some(compact)
-    else None
-  }
-
-  /** Write an inverted-lists dir in the cluster-partitioned serving
-    * layout, one file per cluster.
-    */
-  private def writeListsDir(lists: DataFrame, dir: String): Unit =
-    lists.repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(dir)
-
-  /** Read one inverted-lists dir in either physical shape: the
-    * cluster-partitioned serving layout, or the plain (possibly empty)
-    * shape an erase rewrite leaves when a dir lost all its rows. A dir
-    * with neither cluster subdirs nor data files reads as absent (an
-    * empty micro-batch's dynamic-partition write leaves exactly that).
-    */
-  private def readListsDir(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[DataFrame] = {
-    if (!fs.exists(p)) return None
-    val entries = fs.listStatus(p).toSeq
-    val hasClusters = entries.exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("cluster="))
-    val hasFiles = entries.exists(st =>
-      !st.isDirectory && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-    if (hasClusters || hasFiles)
-      Some(Parquet.read(spark, p.toString).select("cluster", "n_id", "codes", "n_norm"))
     else None
   }
 
@@ -390,67 +299,11 @@ object Incremental extends StreamAnalytics {
     * [[graft.ops.Bm25Index.append]]. Returns the maintained index
     * ([[readBm25Maintained]]) for serving.
     */
-  def streamBm25Maintain(
-      spark: SparkSession,
-      srcPath: String,
-      indexPath: String,
-      idCol: String,
-      textCol: String,
-      checkpointPath: String = null,
-      maxFilesPerTrigger: Int = 0,
-      postingsFilesPerBatch: Int = 2): graft.ops.Bm25Index = {
-    require(postingsFilesPerBatch >= 1,
-      s"postingsFilesPerBatch must be >= 1: $postingsFilesPerBatch")
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a STATIC Bm25Index.write layout keeps part files directly under
-    // postings/ — the maintained reader (batch_*/compact_* dirs only)
-    // would silently hide every statically-written posting
-    assertMaintainerOwnsLayout(fs, root, Seq(Bm25Postings), "bm25 index",
-      "serve static indexes via Bm25Index.read + append instead")
-    assertNoPendingErase(spark, indexPath, "bm25 index")
-    runBatchCommitted(spark, srcPath, indexPath, checkpointPath,
-      "bm25 index", maxFilesPerTrigger) { (batch, batchId, done) =>
-      // the delta pays one build pass over ITSELF only
-      val d = graft.ops.Bm25Index.build(batch, idCol, textCol)
-      // roll the bounded state forward from the latest committed
-      // snapshot BEFORE this batch (a replay must not read its own
-      // superseded output) — at that snapshot's latest ERASE generation,
-      // so maintenance after a maintained-root erase carries the
-      // rolled-back df/stats forward
-      val (terms, stats) = done.filter(_ < batchId).lastOption match {
-        case Some(p) =>
-          val g = latestSnapGen(fs, root, p)
-          (graft.ops.Bm25Index.mergeTerms(
-            Parquet.read(spark, snapDir(root, "terms", p, g).toString), d.terms),
-            graft.ops.Bm25Index.mergeStats(
-              Parquet.read(spark, snapDir(root, "stats", p, g).toString), d.stats))
-        case None => (d.terms, d.stats)
-      }
-      // the three artifacts are independent until the ONE _committed_
-      // marker after them — write them concurrently (guide §2.6) instead
-      // of queueing three sub-second jobs; a crash with any subset
-      // written leaves the batch uncommitted exactly as before, and the
-      // replay rewrites all three (mode overwrite)
-      Concurrent.awaitAll(Seq(
-        () => d.postings
-          .repartitionByRange(postingsFilesPerBatch, col("term"))
-          .sortWithinPartitions("term", "id")
-          .write.mode("overwrite")
-          .parquet(Bm25Postings.batchPath(root, batchId).toString),
-        // vocabulary-sized and 1-row — one file each is the right shape
-        () => terms.coalesce(1).write.mode("overwrite")
-          .parquet(snapDir(root, "terms", batchId, 0).toString),
-        () => stats.coalesce(1).write.mode("overwrite")
-          .parquet(snapDir(root, "stats", batchId, 0).toString)))
-    } { committed =>
-      // retire superseded snapshots (every erase generation with them);
-      // keep two ids so the reader of the previous snapshot (a
-      // concurrent replay) is never yanked
-      committed.dropRight(2).foreach(id => deleteSnapGens(fs, root, id))
-    }
-    readBm25Maintained(spark, indexPath)
-  }
+  def streamBm25Maintain(spark: SparkSession, srcPath: String, indexPath: String,
+      idCol: String, textCol: String, checkpointPath: String = null,
+      maxFilesPerTrigger: Int = 0, postingsFilesPerBatch: Int = 2): graft.ops.Bm25Index =
+    maintain(IndexCodecs.Bm25, spark, indexPath, srcPath, checkpointPath, maxFilesPerTrigger)(
+      IndexCodecs.Bm25.encoder(_, idCol, textCol, postingsFilesPerBatch))
 
   /** Read the [[streamBm25Maintain]]ed index: every committed postings
     * batch dir plus the LATEST committed df/stats snapshots. The same
@@ -458,229 +311,8 @@ object Incremental extends StreamAnalytics {
     * prunes across all batch dirs' files alike (footer stats are
     * per-file, not per-layout).
     */
-  def readBm25Maintained(
-      spark: SparkSession, indexPath: String): graft.ops.Bm25Index = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = requireCommitted(fs, root, "bm25 index")
-    assertNoPendingErase(spark, indexPath, "bm25 index")
-    // the compacted generation (if any) + tail batch dirs; the df/stats
-    // snapshots resolve to the latest ERASE generation of the newest
-    // batch-stamped snapshot (see eraseBm25Maintained)
-    val g = latestSnapGen(fs, root, done.last)
-    graft.ops.Bm25Index(
-      Bm25Postings.read(spark, fs, root, done, "term", "id", "tf", "dl"),
-      Parquet.read(spark, snapDir(root, "terms", done.last, g).toString)
-        .select("term", "df"),
-      Parquet.read(spark, snapDir(root, "stats", done.last, g).toString)
-        .select("n", "avgdl"))
-  }
-
-  /** Streaming MinHash-LSH index maintenance — [[streamBm25Maintain]]'s
-    * machinery ([[MaintainedRoot.runBatchCommitted]]) applied to the dedup
-    * index, whose state is EVEN simpler: both members (buckets, sets) are
-    * per-document rows with no corpus-level statistics, so each
-    * micro-batch is a pure map-side encode into append-only
-    * `buckets/batch_<id>` + `sets/batch_<id>` dirs — no snapshots to roll
-    * forward, nothing to retire. Signatures are content-deterministic
-    * hashes, so the maintained index QUERIES identically to a rebuild on
-    * everything ingested (the declared `stream_minhash_maintain` query
-    * shares the static-index serve's oracle). Shape parameters live in the standard
-    * sidecar, written on the first run and REQUIRED equal on every later
-    * run — appending under different (k, bands, rows) would silently mix
-    * incomparable signatures.
-    */
-  def streamMinHashMaintain(
-      spark: SparkSession,
-      srcPath: String,
-      indexPath: String,
-      idCol: String,
-      textCol: String,
-      shingleK: Int = 3,
-      bands: Int = 16,
-      rowsPerBand: Int = 4,
-      checkpointPath: String = null,
-      maxFilesPerTrigger: Int = 0): graft.ops.MinHashIndex = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    fs.mkdirs(root)
-    // a STATIC MinHashIndex.write layout keeps part files directly under
-    // sets/ AND buckets/ — and MinHashIndex.write writes buckets first,
-    // so an interrupted static write can leave EITHER member in the
-    // static shape; both are guarded (the streamSimJoinMaintain
-    // cross-guard, applied here too; checked even without a sidecar)
-    assertMaintainerOwnsLayout(fs, root, Seq(MinHashSets, MinHashBuckets),
-      "minhash index",
-      "serve static indexes via MinHashIndex.read + append instead")
-    if (graft.ops.IndexSidecar.exists(conf, indexPath)) {
-      val (k0, b0, r0) = graft.ops.MinHashIndex.sidecarParams(conf, indexPath)
-      require(k0 == shingleK && b0 == bands && r0 == rowsPerBand,
-        s"minhash index at $indexPath was built with (shingleK=$k0, bands=$b0, " +
-          s"rowsPerBand=$r0); appending with ($shingleK, $bands, $rowsPerBand) " +
-          "would mix incomparable signatures")
-    } else {
-      graft.ops.MinHashIndex.writeSidecarParams(
-        conf, indexPath, shingleK, bands, rowsPerBand)
-    }
-    runBatchCommitted(spark, srcPath, indexPath, checkpointPath,
-      "minhash index", maxFilesPerTrigger) { (batch, batchId, _) =>
-      val d = graft.ops.MinHashIndex.build(batch, idCol, textCol,
-        shingleK, bands, rowsPerBand)
-      // both members commit under the one marker — concurrent (guide §2.6)
-      Concurrent.awaitAll(batchWrites(root, batchId,
-        Seq(MinHashBuckets -> d.buckets, MinHashSets -> d.sets)))
-    } { _ => () }
-    readMinHashMaintained(spark, indexPath)
-  }
-
-  /** Subject ERASURE on a [[streamMinHashMaintain]]ed root — the GDPR
-    * leg for the MAINTAINED artifact (the static-index
-    * [[graft.ops.MinHashIndex.erase]] returns new frames; a maintained
-    * root's state lives in committed batch dirs, so forgetting a subject
-    * means REWRITING exactly the dirs that contain it). Per committed
-    * batch: one keys-only membership probe; affected dirs rewrite
-    * buckets+sets through an anti-join (retained rows localCheckpoint'ed
-    * BEFORE the overwrite — the rewrite never reads its own output),
-    * untouched dirs are never opened. Work is O(affected dirs ×
-    * anti-join), no corpus scan, no rebuild, and committed-replay safety
-    * is preserved: the dirs stay committed, so no replay of a COMMITTED
-    * batch can resurrect the erased rows (see [[eraseMaintainedDirs]]
-    * for the source/pending-batch scope caveat).
-    *
-    * Partial-failure window (the [[graft.etl.FileLoads.erasePartitioned]]
-    * contract): a crash between two dir rewrites leaves the erase
-    * incomplete with no ledger — the operation is IDEMPOTENT (remaining
-    * victims are re-detected), so a failed run must be re-run to
-    * completion before the erasure is attested. Returns the per-batch
-    * ledger (batch_id, n_before, n_after, n_erased) over the SETS member
-    * (one row per doc).
-    */
-  def eraseMinHashMaintained(
-      spark: SparkSession,
-      indexPath: String,
-      ids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    eraseMaintainedDirs(spark, indexPath, ids, "minhash index",
-      ledgerMember = MinHashSets, otherMember = MinHashBuckets)
-
-  /** [[eraseMinHashMaintained]] for a [[streamSimJoinMaintain]]ed root —
-    * identical shape: both members are per-document rows with no global
-    * state to adjust (the frozen rarity order is MODEL state and stays,
-    * exactly like [[graft.ops.SimJoinIndex.erase]] on the static index —
-    * the served pair set still equals a rebuild on the retained corpus).
-    * Declared as `stream_simjoin_erase`.
-    */
-  def eraseSimJoinMaintained(
-      spark: SparkSession,
-      indexPath: String,
-      ids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    eraseMaintainedDirs(spark, indexPath, ids, "simjoin index",
-      ledgerMember = SimJoinSets, otherMember = SimJoinPrefixes)
-
-  /** The erase of the stat-free maintained roots (MinHash, SimJoin): for
-    * every committed batch whose `ledgerMember` dir contains a victim,
-    * anti-join-rewrite ALL member dirs ([[MaintainedRoot.rewriteLegs]]);
-    * untouched batches never open. Ledger counts come from
-    * `ledgerMember` (one row per document there). The `ledgerMember` —
-    * which doubles as the re-run VICTIM PROBE — is rewritten LAST: a crash
-    * mid-batch then leaves the probe still victim-bearing, so the
-    * idempotent re-run re-detects and finishes the other members instead
-    * of attesting a half-erased batch.
-    *
-    * Scope: erasure covers COMMITTED batches of this root. The SOURCE
-    * stream is a separate artifact — if it still contains the victims, a
-    * pending (uncommitted) batch replay or any future ingest re-adds
-    * them, exactly as appending a victim-bearing delta to a static index
-    * would. A compliance pipeline quiesces the maintainer and erases the
-    * source alongside (the `e2e_forget_me` composition), then erases the
-    * index.
-    */
-  private def eraseMaintainedDirs(
-      spark: SparkSession,
-      indexPath: String,
-      ids: org.apache.spark.sql.DataFrame,
-      what: String,
-      ledgerMember: MemberLayout,
-      otherMember: MemberLayout): org.apache.spark.sql.DataFrame =
-    erasing(spark, indexPath, ids, what, "id", Seq(ledgerMember, otherMember)) {
-        (fs, root, done, k) =>
-      // SINGLE-PASS victim probe: one union read over every probe-member
-      // leg (compacted generation + tail batch dirs), ONE aggregate job →
-      // victim-bearing legs and their ledger counts. Replaces the r15
-      // per-batch semi-join loop, whose one-count-job-per-dir driver
-      // scheduling dominates at production batch counts (10⁴–10⁵ dirs).
-      val affected = probeMember(spark, fs, root, done, ledgerMember, k,
-        distinctPerDoc = false)
-      // probe member LAST (see above)
-      rewriteLegs(root, affected.map(_._1), Seq(otherMember, ledgerMember),
-        k, "id")(readIfExists(spark, fs))(overwrite)
-      batchLedger(spark, affected)
-    }
-
-  // --- batch-stamped snapshot ERASE GENERATIONS (BM25 df/stats) --------
-
-  /** gen 0 = the maintainer-written `terms_snap_<id>`/`stats_snap_<id>`;
-    * each maintained-root erase rolls the pair back into a NEW generation
-    * `…_snap_<id>_e<g>` (stats written first, terms LAST — the terms
-    * dir's _SUCCESS is the generation's commit point). The latest
-    * committed generation is the serving truth for that snapshot id.
-    */
-  private def snapDir(root: org.apache.hadoop.fs.Path, kind: String, id: Long, gen: Int) =
-    new org.apache.hadoop.fs.Path(root,
-      s"${kind}_snap_$id${if (gen == 0) "" else s"_e$gen"}")
-
-  private def latestSnapGen(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      id: Long): Int = {
-    val base = s"terms_snap_$id"
-    fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .collect {
-        case n if n == base => 0
-        case n if n.startsWith(base + "_e") &&
-            n.stripPrefix(base + "_e").nonEmpty &&
-            n.stripPrefix(base + "_e").forall(_.isDigit) =>
-          n.stripPrefix(base + "_e").toInt
-      }
-      .filter(g => fs.exists(
-        new org.apache.hadoop.fs.Path(snapDir(root, "terms", id, g), "_SUCCESS")))
-      .sorted.lastOption.getOrElse(0)
-  }
-
-  /** Every generation of a retired snapshot id (the maintainer's keep-2
-    * retirement must drop erase generations along with gen 0).
-    */
-  private def deleteSnapGens(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      id: Long): Unit =
-    fs.listStatus(root).toSeq.map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n == s"terms_snap_$id" || n == s"stats_snap_$id" ||
-          n.startsWith(s"terms_snap_${id}_e") || n.startsWith(s"stats_snap_${id}_e")
-      }
-      .foreach(p => fs.delete(p, true))
-
-  private def eraseJournalPath(root: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(root, "_erase_pending")
-
-  /** The maintained BM25 root refuses to serve, maintain or compact while
-    * a subject-erase journal is pending: postings rewrites and the
-    * df/stats roll-back commit separately, so mid-erase state is
-    * inconsistent until the re-run finishes (the attestation contract
-    * every erase in this repo carries).
-    */
-  private def assertNoPendingErase(
-      spark: SparkSession, indexPath: String, what: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(
-        eraseJournalPath(root), "_SUCCESS")),
-      s"$what at $indexPath has an interrupted subject erasure " +
-        "(_erase_pending journal committed): re-run eraseBm25Maintained " +
-        "to completion before serving, maintaining or compacting this root")
-  }
+  def readBm25Maintained(spark: SparkSession, indexPath: String): graft.ops.Bm25Index =
+    read(IndexCodecs.Bm25, spark, indexPath)
 
   /** Subject ERASURE on a [[streamBm25Maintain]]ed root — with
     * [[eraseIvfPqMaintained]] this completes the 4×2 maintain×erase
@@ -704,7 +336,7 @@ object Incremental extends StreamAnalytics {
     * is a visible commit, never an in-place overwrite of the state the
     * subtraction reads) — then deletes the journal and starts on the new
     * ids. Readers, the maintainer and compaction refuse a root with a
-    * pending journal ([[assertNoPendingErase]]).
+    * pending journal .
     *
     * Work: two postings-member passes (ledger counts + victim-row
     * capture; the roll-back inherently needs the victims' rows) plus one
@@ -714,119 +346,135 @@ object Incremental extends StreamAnalytics {
     * Returns the per-leg ledger (batch_id, n_before, n_after, n_erased)
     * in DISTINCT DOCS over the postings member.
     */
-  def eraseBm25Maintained(
-      spark: SparkSession,
-      indexPath: String,
-      ids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    erasing(spark, indexPath, ids, "bm25 index", "id", Seq(Bm25Postings)) {
-        (fs, root, done, k) =>
-      // finish a crashed erase before starting on the new ids
-      finishPendingBm25Erase(spark, fs, root, done)
-      // pass 1: ledger counts (distinct docs; postings repeat a doc per term)
-      val affected = probeMember(spark, fs, root, done, Bm25Postings, k,
-        distinctPerDoc = true)
-      if (affected.isEmpty) batchLedger(spark, affected)
-      else {
-        // pass 2: the victims' posting rows — the df/stats deltas derive
-        // from them, journaled BEFORE any rewrite so a crash can always
-        // finish
-        val targetGen = latestSnapGen(fs, root, done.last) + 1
-        Parquet.read(spark,
-            Bm25Postings.legs(fs, root, done).filter(fs.exists).map(_.toString): _*)
-          .select("id", "term", "dl")
-          .join(k, Seq("id"), "left_semi")
-          .select(lit(targetGen).as("gen"), col("id"), col("term"), col("dl"))
-          .write.mode("overwrite").parquet(eraseJournalPath(root).toString)
-        // rewrites + snapshot roll-back run off the committed journal —
-        // the SAME code path a crash-recovery re-run takes (which must
-        // re-probe; the fresh path already knows its victim-bearing legs
-        // from pass 1 and skips that third postings scan)
-        applyBm25EraseJournal(spark, fs, root, done,
-          knownBearing = Some(affected.map(_._1)))
-        batchLedger(spark, affected)
-      }
-    }
+  def eraseBm25Maintained(spark: SparkSession, indexPath: String, ids: DataFrame): DataFrame =
+    erase(IndexCodecs.Bm25, spark, indexPath, ids)
 
-  /** Finish-or-noop for a pending BM25 erase journal (see
-    * [[eraseBm25Maintained]]): rewrites any postings legs still bearing
-    * the journal's victims, applies the snapshot roll-back if its
-    * generation has not committed, deletes the journal.
+  /** Streaming MinHash-LSH index maintenance — [[streamBm25Maintain]]'s
+    * machinery applied to the dedup
+    * index, whose state is EVEN simpler: both members (buckets, sets) are
+    * per-document rows with no corpus-level statistics, so each
+    * micro-batch is a pure map-side encode into append-only
+    * `buckets/batch_<id>` + `sets/batch_<id>` dirs — no snapshots to roll
+    * forward, nothing to retire. Signatures are content-deterministic
+    * hashes, so the maintained index QUERIES identically to a rebuild on
+    * everything ingested (the declared `stream_minhash_maintain` query
+    * shares the static-index serve's oracle). Shape parameters live in the standard
+    * sidecar, written on the first run and REQUIRED equal on every later
+    * run — appending under different (k, bands, rows) would silently mix
+    * incomparable signatures.
     */
-  private def finishPendingBm25Erase(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      done: Seq[Long]): Unit = {
-    val journal = eraseJournalPath(root)
-    if (fs.exists(new org.apache.hadoop.fs.Path(journal, "_SUCCESS")))
-      applyBm25EraseJournal(spark, fs, root, done)
-    else if (fs.exists(journal))
-      fs.delete(journal, true) // uncommitted journal: the erase never started
-  }
+  def streamMinHashMaintain(spark: SparkSession, srcPath: String, indexPath: String,
+      idCol: String, textCol: String, shingleK: Int = 3, bands: Int = 16,
+      rowsPerBand: Int = 4, checkpointPath: String = null,
+      maxFilesPerTrigger: Int = 0): graft.ops.MinHashIndex =
+    maintain(IndexCodecs.MinHash, spark, indexPath, srcPath, checkpointPath, maxFilesPerTrigger)(
+      IndexCodecs.MinHash.encoder(_, idCol, textCol, shingleK, bands, rowsPerBand))
 
-  /** The journal-driven half of the BM25 maintained erase: idempotent
-    * postings rewrites for every leg still bearing journal victims, then
-    * the exactly-once snapshot roll-back (skip if the journal's target
-    * generation already committed), then the journal delete.
+  /** Read the [[streamMinHashMaintain]]ed index: every committed batch
+    * dir pair, shape parameters from the sidecar.
     */
-  private def applyBm25EraseJournal(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      done: Seq[Long],
-      knownBearing: Option[Seq[String]] = None): Unit = {
-    val journal = eraseJournalPath(root)
-    val j = Parquet.read(spark, journal.toString).localCheckpoint()
-    if (j.isEmpty) { fs.delete(journal, true); return } // zero-delta journal
-    val jk = j.select("id").distinct().localCheckpoint()
-    // legs still bearing journal victims: the fresh-erase caller already
-    // knows them from its ledger pass; crash recovery cannot trust
-    // pre-crash state and re-probes
-    val bearing = knownBearing.getOrElse(
-      probeMember(spark, fs, root, done, Bm25Postings, jk,
-        distinctPerDoc = false).map(_._1))
-    // the journal is already committed: a crash leaves it pending either
-    // way and the re-run re-probes whatever legs still bear victims
-    rewriteLegs(root, bearing, Seq(Bm25Postings), jk, "id")(
-      readIfExists(spark, fs))(overwrite)
-    val lastId = done.last
-    val targetGen = j.select("gen").head().getInt(0)
-    val committed = fs.exists(new org.apache.hadoop.fs.Path(
-      snapDir(root, "terms", lastId, targetGen), "_SUCCESS"))
-    if (!committed) {
-      val terms0 = Parquet.read(spark, snapDir(root, "terms", lastId, targetGen - 1).toString)
-      val stats0 = Parquet.read(spark, snapDir(root, "stats", lastId, targetGen - 1).toString)
-      // the static Bm25Index.erase algebra, fed from the journal: df
-      // subtracts the victims' per-term posting counts; (n, avgdl) roll
-      // back in closed form from one dl per victim doc
-      val terms1 = terms0
-        .join(j.groupBy("term").agg(count(lit(1)).cast("double").as("__ddf")),
-          Seq("term"), "left")
-        .select(col("term"),
-          (col("df") - coalesce(col("__ddf"), lit(0.0))).as("df"))
-        .filter(col("df") > 0)
-      val victimStats = j.select("id", "dl").distinct()
-        .agg(count(lit(1)).cast("double").as("__dn"),
-          coalesce(sum("dl"), lit(0.0)).as("__dsum"))
-      val stats1 = stats0.crossJoin(victimStats) // 1-row × 1-row scalar
-        .select(
-          (col("n") - col("__dn")).as("n"),
-          ((col("n") * col("avgdl") - col("__dsum")) /
-            greatest(col("n") - col("__dn"), lit(1.0))).as("avgdl"))
-      // stats first, terms LAST: the terms dir's _SUCCESS commits the
-      // generation (both deterministic from journal + the PRIOR
-      // generation, which is never overwritten)
-      stats1.coalesce(1).write.mode("overwrite")
-        .parquet(snapDir(root, "stats", lastId, targetGen).toString)
-      terms1.coalesce(1).write.mode("overwrite")
-        .parquet(snapDir(root, "terms", lastId, targetGen).toString)
-    }
-    fs.delete(journal, true)
-    // retire erase generations older than the previous one (keep-2, the
-    // snapshot retirement convention)
-    for (g <- 0 until targetGen - 1; kind <- Seq("terms", "stats"))
-      fs.delete(snapDir(root, kind, lastId, g), true)
-  }
+  def readMinHashMaintained(spark: SparkSession, indexPath: String): graft.ops.MinHashIndex =
+    read(IndexCodecs.MinHash, spark, indexPath)
+
+  /** Subject ERASURE on a [[streamMinHashMaintain]]ed root — the GDPR
+    * leg for the MAINTAINED artifact (the static-index
+    * [[graft.ops.MinHashIndex.erase]] returns new frames; a maintained
+    * root's state lives in committed batch dirs, so forgetting a subject
+    * means REWRITING exactly the dirs that contain it). Per committed
+    * batch: one keys-only membership probe; affected dirs rewrite
+    * buckets+sets through an anti-join (retained rows localCheckpoint'ed
+    * BEFORE the overwrite — the rewrite never reads its own output),
+    * untouched dirs are never opened. Work is O(affected dirs ×
+    * anti-join), no corpus scan, no rebuild, and committed-replay safety
+    * is preserved: the dirs stay committed, so no replay of a COMMITTED
+    * batch can resurrect the erased rows.
+    *
+    * Scope: erasure covers COMMITTED batches of this root. The SOURCE
+    * stream is a separate artifact — if it still contains the victims, a
+    * pending (uncommitted) batch replay or any future ingest re-adds
+    * them, exactly as appending a victim-bearing delta to a static index
+    * would. A compliance pipeline quiesces the maintainer and erases the
+    * source alongside (the `e2e_forget_me` composition), then erases the
+    * index.
+    *
+    * Partial-failure window (the [[graft.etl.FileLoads.erasePartitioned]]
+    * contract): a crash between two dir rewrites leaves the erase
+    * incomplete with no ledger — the operation is IDEMPOTENT (remaining
+    * victims are re-detected), so a failed run must be re-run to
+    * completion before the erasure is attested. Returns the per-batch
+    * ledger (batch_id, n_before, n_after, n_erased) over the SETS member
+    * (one row per doc).
+    */
+  def eraseMinHashMaintained(spark: SparkSession, indexPath: String, ids: DataFrame): DataFrame =
+    erase(IndexCodecs.MinHash, spark, indexPath, ids)
+
+  /** Streaming prefix-filter similarity-index maintenance —
+    * The batch-commit protocol applied to
+    * [[graft.ops.SimJoinIndex]]. The FIRST batch freezes the model: its
+    * shingle document frequencies become the rarity total order (written
+    * once to `freq/`), exactly as
+    * the batch [[graft.ops.SimJoinIndex.append]] freezes the build-time
+    * order — later batches' unseen shingles take df 0 and sort first.
+    * Each micro-batch then pays one shingle pass over ITSELF into
+    * append-only `prefixes/batch_<id>` + `sets/batch_<id>` dirs. The
+    * frozen order affects only PRUNING quality (posting-list lengths),
+    * never the pair set — prefix completeness needs only a common total
+    * order and the verify is exact — so the maintained index serves the
+    * EXACT bipartite pair set (the declared `stream_simjoin_maintain`
+    * query shares `simjoin_incremental`'s full-corpus oracle); a
+    * production deployment refreezes (rebuilds) on a slow cadence like
+    * the IVF-PQ model. Shape parameters live in the standard sidecar,
+    * written with the frozen order and REQUIRED equal on later runs.
+    */
+  def streamSimJoinMaintain(spark: SparkSession, srcPath: String, indexPath: String,
+      idCol: String, textCol: String, shingleK: Int = 3, threshold: Double = 0.5,
+      checkpointPath: String = null, maxFilesPerTrigger: Int = 0): graft.ops.SimJoinIndex =
+    maintain(IndexCodecs.SimJoin, spark, indexPath, srcPath, checkpointPath, maxFilesPerTrigger)(
+      IndexCodecs.SimJoin.encoder(_, idCol, textCol, shingleK, threshold))
+
+  /** Read the [[streamSimJoinMaintain]]ed index: the frozen df table plus
+    * every committed batch dir pair.
+    */
+  def readSimJoinMaintained(spark: SparkSession, indexPath: String): graft.ops.SimJoinIndex =
+    read(IndexCodecs.SimJoin, spark, indexPath)
+
+  /** [[eraseMinHashMaintained]] for a [[streamSimJoinMaintain]]ed root —
+    * identical shape: both members are per-document rows with no global
+    * state to adjust (the frozen rarity order is MODEL state and stays,
+    * exactly like [[graft.ops.SimJoinIndex.erase]] on the static index —
+    * the served pair set still equals a rebuild on the retained corpus).
+    * Declared as `stream_simjoin_erase`.
+    */
+  def eraseSimJoinMaintained(spark: SparkSession, indexPath: String, ids: DataFrame): DataFrame =
+    erase(IndexCodecs.SimJoin, spark, indexPath, ids)
+
+  /** Streaming IVF-PQ index maintenance —
+    * The batch-commit protocol applied to the vector index. The
+    * FROZEN model is the contract
+    * ([[graft.ops.IvfPqIndex.append]]: no retraining; production rebuilds
+    * on a slow cadence while appending fast): `indexPath` must already
+    * hold a [[graft.ops.IvfPqIndex.write]]-persisted index (model sidecar
+    * + base `lists/`), and each micro-batch encodes through that model —
+    * ONE map-side pass over the batch — into an append-only
+    * `lists_batch_<id>` dir (cluster-partitioned like the base layout, so
+    * serve-time cluster probes prune files in every batch dir alike).
+    * Exactly-once and run-identity exactly as [[streamBm25Maintain]].
+    * Encoding is deterministic, so the maintained index serves
+    * IDENTICALLY to the batch [[graft.ops.IvfPqIndex.append]] on the same
+    * delta — the declared `stream_knn_maintain` query shares
+    * `knn_index_append`'s pinned oracle.
+    */
+  def streamIvfPqMaintain(spark: SparkSession, srcPath: String, indexPath: String,
+      idCol: String, vecCol: String, checkpointPath: String = null,
+      maxFilesPerTrigger: Int = 0): graft.ops.IvfPqIndex =
+    maintain(IndexCodecs.IvfPq, spark, indexPath, srcPath, checkpointPath, maxFilesPerTrigger)(
+      IndexCodecs.IvfPq.encoder(_, idCol, vecCol))
+
+  /** Read the [[streamIvfPqMaintain]]ed index: the persisted model + base
+    * lists plus every committed batch-list dir.
+    */
+  def readIvfPqMaintained(spark: SparkSession, indexPath: String): graft.ops.IvfPqIndex =
+    read(IndexCodecs.IvfPq, spark, indexPath)
 
   /** Subject ERASURE on a [[streamIvfPqMaintain]]ed root: the frozen-model
     * [[graft.ops.IvfPqIndex.erase]] applied dir-wise — one keys-only
@@ -843,147 +491,8 @@ object Incremental extends StreamAnalytics {
     * (leg, n_before, n_after, n_erased) — `leg` names the dir ("lists",
     * "lists_batch_<id>", "lists_compact_<gen>").
     */
-  def eraseIvfPqMaintained(
-      spark: SparkSession,
-      indexPath: String,
-      ids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    erasing(spark, indexPath, ids, "ivfpq index", "n_id", Seq(IvfLists)) {
-        (fs, root, done, k) =>
-      import spark.implicits._
-      // reject a root whose model was rebuilt in place (the batch dirs'
-      // codes belong to the stamped generation's codebooks)
-      assertModelGeneration(spark.sparkContext.hadoopConfiguration, indexPath,
-        stampIfAbsent = false)
-      val legPaths = new org.apache.hadoop.fs.Path(root, IvfBaseLists) +:
-        IvfLists.legs(fs, root, done)
-      val frames = legPaths.flatMap(p => readListsDir(spark, fs, p))
-      require(frames.nonEmpty, s"no readable lists dirs under $indexPath")
-      val affected = victimLegProbe(
-        frames.reduce(_ unionByName _), k, "n_id", distinctPerDoc = false)
-      rewriteLegs(root, affected.map(_._1), Seq(IvfLists), k, "n_id")(
-          readListsDir(spark, fs, _)) { (retained, p) =>
-        if (retained.isEmpty)
-          // a partitioned write of zero rows leaves an unreadable dir —
-          // keep a plain schema-bearing empty file instead
-          overwrite(retained, p)
-        else writeListsDir(retained, p.toString)
-      }
-      affected.map { case (leg, before, erased) =>
-        (leg, before, before - erased, erased)
-      }.toDF("leg", "n_before", "n_after", "n_erased")
-    }
-
-  /** Read the [[streamMinHashMaintain]]ed index: every committed batch
-    * dir pair, shape parameters from the sidecar.
-    */
-  def readMinHashMaintained(
-      spark: SparkSession, indexPath: String): graft.ops.MinHashIndex = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    val done = requireCommitted(fs, root, "minhash index")
-    val (k, b, r) = graft.ops.MinHashIndex.sidecarParams(conf, indexPath)
-    graft.ops.MinHashIndex(
-      MinHashBuckets.read(spark, fs, root, done, "id", "band", "bucket"),
-      MinHashSets.read(spark, fs, root, done, "id", "shingle_set"),
-      k, b, r)
-  }
-
-  /** Streaming IVF-PQ index maintenance —
-    * [[MaintainedRoot.runBatchCommitted]] applied to the vector index. The
-    * FROZEN model is the contract
-    * ([[graft.ops.IvfPqIndex.append]]: no retraining; production rebuilds
-    * on a slow cadence while appending fast): `indexPath` must already
-    * hold a [[graft.ops.IvfPqIndex.write]]-persisted index (model sidecar
-    * + base `lists/`), and each micro-batch encodes through that model —
-    * ONE map-side pass over the batch — into an append-only
-    * `lists_batch_<id>` dir (cluster-partitioned like the base layout, so
-    * serve-time cluster probes prune files in every batch dir alike).
-    * Exactly-once and run-identity exactly as [[streamBm25Maintain]].
-    * Encoding is deterministic, so the maintained index serves
-    * IDENTICALLY to the batch [[graft.ops.IvfPqIndex.append]] on the same
-    * delta — the declared `stream_knn_maintain` query shares
-    * `knn_index_append`'s pinned oracle.
-    */
-  def streamIvfPqMaintain(
-      spark: SparkSession,
-      srcPath: String,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      checkpointPath: String = null,
-      maxFilesPerTrigger: Int = 0): graft.ops.IvfPqIndex = {
-    // reads the frozen model once (and fails loudly if indexPath is not
-    // a written index — the model MUST predate the stream)
-    val base = graft.ops.IvfPqIndex.read(spark, indexPath, allowMaintained = true)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    // MODEL-GENERATION stamp: batch dirs hold codes encoded under ONE
-    // model; an in-place rebuild (IvfPqIndex.write over the same root)
-    // would silently decode them through foreign codebooks — stamp the
-    // sidecar fingerprint and require it unchanged on every run (and at
-    // read — see readIvfPqMaintained). The documented rebuild cadence
-    // retires the batch dirs by starting a fresh maintained root.
-    assertModelGeneration(conf, indexPath, stampIfAbsent = true)
-    runBatchCommitted(spark, srcPath, indexPath, checkpointPath,
-      "ivfpq index", maxFilesPerTrigger) { (batch, batchId, _) =>
-      // size the batch files AT WRITE TIME: without the cluster
-      // repartition a W-task batch leaves up to W files per cluster dir
-      // (W × nlist tiny files per batch at production batch widths); one
-      // exchange of slim code rows bounds it at ONE file per cluster per
-      // batch, and the serve-side reader (cluster-pruned, DPP) is untouched
-      writeListsDir(graft.ops.IvfPqIndex.encodeLists(base, batch, idCol, vecCol),
-        IvfLists.batchPath(root, batchId).toString)
-    } { _ => () }
-    readIvfPqMaintained(spark, indexPath)
-  }
-
-  private def assertModelGeneration(
-      conf: org.apache.hadoop.conf.Configuration,
-      indexPath: String,
-      stampIfAbsent: Boolean): Unit = {
-    val stampPath = new org.apache.hadoop.fs.Path(indexPath, "_graft_model_gen")
-    val fs = stampPath.getFileSystem(conf)
-    val current = graft.ops.IvfPqIndex.sidecarHash(conf, indexPath)
-    if (fs.exists(stampPath)) {
-      val stamped = readUtf8(conf, stampPath).trim
-      require(stamped == current,
-        s"ivfpq model at $indexPath was REBUILT in place (sidecar " +
-          s"fingerprint $current != maintained generation $stamped): the " +
-          "lists_batch_* dirs hold codes encoded under the old codebooks " +
-          "and would decode to garbage — start a fresh maintained root " +
-          "for the new model (the rebuild-cadence contract)")
-    } else if (stampIfAbsent) writeUtf8(fs, stampPath, current)
-  }
-
-  /** Read the [[streamIvfPqMaintain]]ed index: the persisted model + base
-    * lists plus every committed batch-list dir.
-    */
-  def readIvfPqMaintained(
-      spark: SparkSession, indexPath: String): graft.ops.IvfPqIndex = {
-    val base = graft.ops.IvfPqIndex.read(spark, indexPath, allowMaintained = true)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    val done = committedBatchIds(fs, root)
-    // reject a maintained root whose model was rebuilt in place — the
-    // batch dirs' codes belong to the stamped generation's codebooks
-    if (done.nonEmpty)
-      assertModelGeneration(conf, indexPath, stampIfAbsent = false)
-    // one read PER leg dir (a multi-path read of several
-    // cluster-partitioned roots trips partition discovery —
-    // CONFLICTING_DIRECTORY_STRUCTURES), then union: every leg keeps its
-    // own cluster-pruned layout. Legs = the compacted generation (if
-    // any) + tail batch dirs, so the union width is bounded by
-    // compaction cadence, not total batch count. An EMPTY micro-batch's
-    // dynamic-partition write leaves a dir with no data files (and no
-    // schema) — readListsDir skips it instead of failing every later
-    // serve on schema inference.
-    val batchLists = IvfLists.legs(fs, root, done)
-      .flatMap(p => readListsDir(spark, fs, p))
-    if (batchLists.isEmpty) base
-    else base.copy(lists = (base.lists +: batchLists).reduce(_ unionByName _))
-  }
+  def eraseIvfPqMaintained(spark: SparkSession, indexPath: String, ids: DataFrame): DataFrame =
+    erase(IndexCodecs.IvfPq, spark, indexPath, ids)
 
   /** MODEL REBUILD for a [[streamIvfPqMaintain]]ed root — the remedy
     * operator the frozen-model contract defers to ("production rebuilds
@@ -1004,45 +513,12 @@ object Incremental extends StreamAnalytics {
     * frozen/rebuilt pair is the declared `knn_maintained_recall_audit`
     * evidence.
     */
-  def rebuildIvfPqMaintained(
-      spark: SparkSession,
-      indexPath: String,
-      destPath: String,
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nlist: Int = 16,
-      numSubspaces: Int = 8,
-      numCodes: Int = 16,
-      lloydIters: Int = 2,
-      residual: Boolean = true,
-      trainSampleMod: Int = 1): graft.ops.IvfPqIndex = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(indexPath)
-    val dst = new org.apache.hadoop.fs.Path(destPath)
-    require(src.getFileSystem(conf).makeQualified(src) !=
-        dst.getFileSystem(conf).makeQualified(dst),
-      s"rebuild writes a FRESH serving generation: destPath == indexPath " +
-        s"($indexPath) would overwrite the lists the rebuild is still " +
-        "reading and strand batch dirs encoded under the old model")
-    // the retrain's multi-pass read of the old root runs under its
-    // mutator lease: a concurrent compaction sweeping legs mid-pass (or
-    // an erase rewriting them between passes) would train on a corpus no
-    // generation ever served
-    val rebuilt = withRootLease(conf,
-        src.getFileSystem(conf), src, "ivfpq index", "rebuilder") {
-      graft.ops.IvfPqIndex.rebuildModel(readIvfPqMaintained(spark, indexPath),
-        corpus, idCol, vecCol, nlist, numSubspaces, numCodes, lloydIters,
-        residual, trainSampleMod)
-    }
-    graft.ops.IvfPqIndex.write(rebuilt, destPath)
-    // the retrain corpus's localCheckpoint blocks are superseded by the
-    // persisted layout — free them (rebuildModel pinned one snapshot for
-    // its multi-pass training)
-    graft.ops.Checkpoints.free(rebuilt.lists)
-    // serve from the persisted layout (cluster-pruned), not the build plan
-    graft.ops.IvfPqIndex.read(spark, destPath)
-  }
+  def rebuildIvfPqMaintained(spark: SparkSession, indexPath: String, destPath: String,
+      corpus: DataFrame, idCol: String, vecCol: String, nlist: Int = 16,
+      numSubspaces: Int = 8, numCodes: Int = 16, lloydIters: Int = 2,
+      residual: Boolean = true, trainSampleMod: Int = 1): graft.ops.IvfPqIndex =
+    IndexCodecs.IvfPq.rebuild(spark, indexPath, destPath, corpus, idCol, vecCol,
+      nlist, numSubspaces, numCodes, lloydIters, residual, trainSampleMod)
 
   /** Rebuild-cadence POLICY gate — the [[compactIfStale]] counterpart for
     * MODEL quality: measure the maintained root's frozen-model recall
@@ -1072,160 +548,13 @@ object Incremental extends StreamAnalytics {
     * OFF the maintenance windows (they gate a rebuild; they have no
     * freshness requirement of their own).
     */
-  def rebuildIfDrifted(
-      spark: SparkSession,
-      indexPath: String,
-      destPath: String,
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      queries: DataFrame,
-      minRecall: Double,
-      k: Int,
-      nprobe: Int = 8,
-      nlist: Int = 16,
-      numSubspaces: Int = 8,
-      numCodes: Int = 16,
-      lloydIters: Int = 2,
+  def rebuildIfDrifted(spark: SparkSession, indexPath: String, destPath: String,
+      corpus: DataFrame, idCol: String, vecCol: String, queries: DataFrame,
+      minRecall: Double, k: Int, nprobe: Int = 8, nlist: Int = 16,
+      numSubspaces: Int = 8, numCodes: Int = 16, lloydIters: Int = 2,
       residual: Boolean = true,
-      trainSampleMod: Int = 1): (Double, Option[graft.ops.IvfPqIndex]) = {
-    require(minRecall > 0.0 && minRecall <= 1.0,
-      s"minRecall must be in (0, 1]: $minRecall")
-    // an empty query sample can only produce a vacuous audit (n_truth 0,
-    // recall null/NaN — which a bare `>= minRecall` compare would read as
-    // DRIFTED, silently rebuilding on every cadence). Fail loudly before
-    // paying the corpus-sized audit.
-    require(!queries.isEmpty,
-      s"rebuildIfDrifted at $indexPath was given an EMPTY query sample: " +
-        "the recall audit would be vacuous (n_truth=0) and could not " +
-        "gate a rebuild — fix the audit inputs")
-    // the audit's multi-pass read (served-id snapshot, brute-force pass,
-    // topK serve) runs under the root lease, like the rebuild's retrain
-    // read: an interleaved compaction sweep or erase between passes
-    // would measure a state no generation served — skewing the recall
-    // that GATES the rebuild. The lease is released before the rebuild
-    // re-acquires it (withRootLease is non-reentrant); a mutation landing
-    // in that gap only makes the measurement one cadence stale, never
-    // torn.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(indexPath)
-    val audit = withRootLease(conf,
-        src.getFileSystem(conf), src, "ivfpq index", "drift-auditor") {
-      graft.ops.IvfPqIndex
-        .recallAudit(readIvfPqMaintained(spark, indexPath),
-          queries, corpus, idCol, vecCol, k, nprobe)
-        .head()
-    }
-    // the post-audit guard: an empty served∩corpus truth ALSO yields
-    // n_truth 0 (same vacuous-audit failure as an empty query sample,
-    // but only detectable after the audit has run over the corpus)
-    require(audit.getAs[Long]("n_truth") > 0L,
-      s"rebuildIfDrifted audit at $indexPath measured an EMPTY ground " +
-        "truth (n_truth=0): the query sample produced no brute-force " +
-        "neighbors over the served ids — fix the audit inputs; refusing " +
-        "to gate a rebuild on a vacuous recall")
-    val recall = audit.getAs[Double]("recall_at_k")
-    if (recall >= minRecall) (recall, None)
-    else (recall, Some(rebuildIvfPqMaintained(spark, indexPath, destPath,
-      corpus, idCol, vecCol, nlist, numSubspaces, numCodes, lloydIters,
-      residual, trainSampleMod)))
-  }
-
-  /** Streaming prefix-filter similarity-index maintenance —
-    * [[MaintainedRoot.runBatchCommitted]] applied to
-    * [[graft.ops.SimJoinIndex]]. The FIRST batch freezes the model: its
-    * shingle document frequencies become the rarity total order (written
-    * once to `freq/`), exactly as
-    * the batch [[graft.ops.SimJoinIndex.append]] freezes the build-time
-    * order — later batches' unseen shingles take df 0 and sort first.
-    * Each micro-batch then pays one shingle pass over ITSELF into
-    * append-only `prefixes/batch_<id>` + `sets/batch_<id>` dirs. The
-    * frozen order affects only PRUNING quality (posting-list lengths),
-    * never the pair set — prefix completeness needs only a common total
-    * order and the verify is exact — so the maintained index serves the
-    * EXACT bipartite pair set (the declared `stream_simjoin_maintain`
-    * query shares `simjoin_incremental`'s full-corpus oracle); a
-    * production deployment refreezes (rebuilds) on a slow cadence like
-    * the IVF-PQ model. Shape parameters live in the standard sidecar,
-    * written with the frozen order and REQUIRED equal on later runs.
-    */
-  def streamSimJoinMaintain(
-      spark: SparkSession,
-      srcPath: String,
-      indexPath: String,
-      idCol: String,
-      textCol: String,
-      shingleK: Int = 3,
-      threshold: Double = 0.5,
-      checkpointPath: String = null,
-      maxFilesPerTrigger: Int = 0): graft.ops.SimJoinIndex = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    fs.mkdirs(root)
-    def sub(name: String) = new org.apache.hadoop.fs.Path(root, name)
-    // a STATIC SimJoinIndex.write layout keeps part files directly under
-    // prefixes/ AND sets/ — a static write interrupted between the two
-    // leaves either member in the static shape, so both are guarded
-    // (checked even WITHOUT a sidecar: the final sidecar step may never
-    // have run); stream-maintain only into roots this maintainer owns
-    assertMaintainerOwnsLayout(fs, root, Seq(SimJoinPrefixes, SimJoinSets),
-      "simjoin index",
-      "serve static indexes via SimJoinIndex.read + append instead")
-    if (graft.ops.IndexSidecar.exists(conf, indexPath)) {
-      val (k0, t0) = graft.ops.SimJoinIndex.sidecarParams(conf, indexPath)
-      require(k0 == shingleK && math.abs(t0 - threshold) < 1e-12,
-        s"simjoin index at $indexPath was frozen with (shingleK=$k0, " +
-          s"threshold=$t0); appending with ($shingleK, $threshold) would " +
-          "mix incomparable prefixes")
-    }
-    runBatchCommitted(spark, srcPath, indexPath, checkpointPath,
-      "simjoin index", maxFilesPerTrigger) { (batch, batchId, done) =>
-      val first =
-        done.isEmpty && !graft.ops.IndexSidecar.exists(conf, indexPath)
-      val (freqWrite, prefixes, sets) =
-        if (first) {
-          // FIRST batch: freeze the rarity order on its own frequencies
-          // (write is deterministic, so a pre-marker crash replays cleanly)
-          val built = graft.ops.SimJoinIndex.build(batch, idCol, textCol,
-            shingleK, threshold)
-          (Seq(() => built.freq.write.mode("overwrite").parquet(sub("freq").toString)),
-            built.prefixes, built.sets)
-        } else {
-          // later batches fold in under the FROZEN order: one shingle pass
-          // over the batch, df-0 newcomers sort first (append's argument)
-          val freq = Parquet.read(spark, sub("freq").toString).select("h", "freq")
-          val (p, s) = graft.ops.SimJoinIndex.encodeDelta(
-            freq, batch, idCol, textCol, shingleK, threshold)
-          (Nil, p, s)
-        }
-      // the parquet members are independent until the marker — concurrent
-      // (guide §2.6); the sidecar still lands only after the freq dir it
-      // describes is fully written
-      Concurrent.awaitAll(freqWrite ++ batchWrites(root, batchId,
-        Seq(SimJoinPrefixes -> prefixes, SimJoinSets -> sets)))
-      if (first)
-        graft.ops.SimJoinIndex.writeSidecar(conf, indexPath, shingleK, threshold)
-    } { _ => () }
-    readSimJoinMaintained(spark, indexPath)
-  }
-
-  /** Read the [[streamSimJoinMaintain]]ed index: the frozen df table plus
-    * every committed batch dir pair.
-    */
-  def readSimJoinMaintained(
-      spark: SparkSession, indexPath: String): graft.ops.SimJoinIndex = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    val done = requireCommitted(fs, root, "simjoin index")
-    val (shingleK, threshold) =
-      graft.ops.SimJoinIndex.sidecarParams(conf, indexPath)
-    graft.ops.SimJoinIndex(
-      Parquet.read(spark, new org.apache.hadoop.fs.Path(root, "freq").toString)
-        .select("h", "freq"),
-      SimJoinPrefixes.read(spark, fs, root, done, "h", "id", "n"),
-      SimJoinSets.read(spark, fs, root, done, "id", "set", "n"),
-      shingleK, threshold)
-  }
+      trainSampleMod: Int = 1): (Double, Option[graft.ops.IvfPqIndex]) =
+    IndexCodecs.IvfPq.rebuildIfDrifted(spark, indexPath, destPath, corpus, idCol, vecCol,
+      queries, minRecall, k, nprobe, nlist, numSubspaces, numCodes, lloydIters,
+      residual, trainSampleMod)
 }

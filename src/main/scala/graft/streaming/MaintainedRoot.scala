@@ -21,11 +21,13 @@ import graft.sources.Parquet
   *    compacted generation (`_compacted_<gen>`, written last);
   *  - the ERASE: one prologue, one single-pass victim probe and one
   *    per-leg anti-join rewrite.
-  * Each index's own steps stay in [[Incremental]]: how a batch encodes,
-  * how a serve reads, its compaction merges and its erase. The mutator lease
-  * ([[Incremental.withRootLease]]) stays there too. The marker names and
-  * the batch / compact dir names are spelled only here, which a
-  * source-scan spec enforces.
+  * Four generic operations run these steps over an [[IndexCodec]], one
+  * value per index type ([[IndexCodecs]]): [[maintain]], [[read]],
+  * [[erase]] and [[compact]]. The public entry points stay in
+  * [[Incremental]] as delegations, and so does the mutator lease
+  * ([[Incremental.withRootLease]]). The marker names and the batch /
+  * compact dir names are spelled only here, which a source-scan spec
+  * enforces.
   */
 private[graft] object MaintainedRoot {
   import Incremental.{streamSource, withRootLease}
@@ -308,9 +310,11 @@ private[graft] object MaintainedRoot {
     * `_compacted_<gen>` marker written LAST (shared across members), so
     * the serve/erase surface is compact dir + tail batch dirs — bounded
     * by compaction cadence instead of growing one leg per batch forever.
+    * `cols` are the member's columns as served and compacted.
     */
   private[streaming] final case class MemberLayout(
       parentRel: String,
+      cols: Seq[String],
       batchPrefix: String = "batch_",
       compactPrefix: String = "compact_") {
     def rel(n: String): String =
@@ -325,145 +329,55 @@ private[graft] object MaintainedRoot {
       * superseded (they exist only inside the post-marker pre-sweep
       * crash window) and are never read.
       */
-    def legs(
-        fs: FileSystem,
-        root: Path,
-        done: Seq[Long]): Seq[Path] = {
+    def legs(fs: FileSystem, root: Path, done: Seq[Long]): Seq[Path] = {
       val gen = compactedGenId(fs, root)
       gen.map(g => compactPath(root, g)).filter(fs.exists).toSeq ++
         done.filter(id => gen.forall(id > _)).map(id => batchPath(root, id))
     }
     /** The member as served: every live leg, projected to `cols`. */
-    def read(
-        spark: SparkSession,
-        fs: FileSystem,
-        root: Path,
-        done: Seq[Long],
-        cols: String*): DataFrame =
-      Parquet.read(spark, legs(fs, root, done).map(_.toString): _*)
+    def read(r: Root, done: Seq[Long]): DataFrame =
+      Parquet.read(r.spark, legs(r.fs, r.dir, done).map(_.toString): _*)
         .select(cols.map(col): _*)
     /** Remove dirs superseded by the COMMITTED compaction generation:
       * batch dirs at or below it and older compact dirs. Idempotent.
-      * Called by [[compactCore]]'s sweep AND at erase entry — a
-      * compaction that crashed between its `_compacted_` marker and its
-      * sweep leaves superseded dirs whose rows (victim rows included)
-      * no reader resolves but which still physically persist; an erase
-      * must remove them BEFORE attesting, not leave the bytes for a
-      * future compaction to clean.
+      * Called by [[compact]]'s sweep AND at erase entry — a compaction
+      * that crashed between its `_compacted_` marker and its sweep leaves
+      * superseded dirs whose rows (victim rows included) no reader
+      * resolves but which still physically persist; an erase must remove
+      * them BEFORE attesting, not leave the bytes for a future compaction
+      * to clean.
       */
-    def sweepSuperseded(
-        fs: FileSystem,
-        root: Path): Unit =
+    def sweepSuperseded(fs: FileSystem, root: Path): Unit =
       compactedGenId(fs, root).foreach { gen =>
-        val parent =
-          if (parentRel.isEmpty) root else new Path(root, parentRel)
+        val parent = if (parentRel.isEmpty) root else new Path(root, parentRel)
+        val Batch = s"$batchPrefix(\\d+)".r
+        val Compact = s"$compactPrefix(\\d+)".r
         if (fs.exists(parent)) fs.listStatus(parent).toSeq.foreach { st =>
-          val n = st.getPath.getName
-          def num(prefix: String): Option[Long] = {
-            val s = n.stripPrefix(prefix)
-            if (n.startsWith(prefix) && s.nonEmpty && s.forall(_.isDigit))
-              Some(s.toLong)
-            else None
+          val superseded = st.getPath.getName match {
+            case Batch(id) => id.toLong <= gen
+            case Compact(g) => g.toLong < gen
+            case _ => false
           }
-          val superseded =
-            num(batchPrefix).exists(_ <= gen) || num(compactPrefix).exists(_ < gen)
           if (superseded) fs.delete(st.getPath, true)
         }
       }
   }
 
-  private[streaming] val Bm25Postings = MemberLayout("postings")
-  private[streaming] val MinHashBuckets = MemberLayout("buckets")
-  private[streaming] val MinHashSets = MemberLayout("sets")
-  private[streaming] val SimJoinPrefixes = MemberLayout("prefixes")
-  private[streaming] val SimJoinSets = MemberLayout("sets")
-  private[streaming] val IvfLists = MemberLayout("", "lists_batch_", "lists_compact_")
+  private[streaming] val Bm25Postings = MemberLayout("postings", Seq("term", "id", "tf", "dl"))
+  private[streaming] val MinHashBuckets = MemberLayout("buckets", Seq("id", "band", "bucket"))
+  private[streaming] val MinHashSets = MemberLayout("sets", Seq("id", "shingle_set"))
+  private[streaming] val SimJoinPrefixes = MemberLayout("prefixes", Seq("h", "id", "n"))
+  private[streaming] val SimJoinSets = MemberLayout("sets", Seq("id", "set", "n"))
+  private[streaming] val IvfLists = MemberLayout("", Seq("cluster", "n_id", "codes", "n_norm"),
+    "lists_batch_", "lists_compact_")
   /** The static base lists an IVF-PQ root is maintained on top of. */
   private[streaming] val IvfBaseLists = "lists"
-
-  /** One write per member frame, each into that member's batch dir (mode
-    * overwrite, so a pre-marker crash replays cleanly). The writes are
-    * independent until the batch's one `_committed_` marker, so callers
-    * run them concurrently.
-    */
-  private[streaming] def batchWrites(
-      root: Path,
-      batchId: Long,
-      frames: Seq[(MemberLayout, DataFrame)]): Seq[() => Unit] =
-    frames.map { case (m, df) => () =>
-      df.write.mode("overwrite").parquet(m.batchPath(root, batchId).toString)
-    }
 
   /** The committed compaction generation under a maintained root (highest
     * `_compacted_<gen>` marker), shared by every member of the root.
     */
-  private[streaming] def compactedGenId(
-      fs: FileSystem,
-      root: Path): Option[Long] =
+  private[streaming] def compactedGenId(fs: FileSystem, root: Path): Option[Long] =
     markerIds(fs, root, CompactedPrefix).lastOption
-
-  /** Shared compaction protocol for the four stream-maintained indexes:
-    * merge the previous compacted generation (if any) and every committed
-    * batch dir into ONE `compact_<newGen>` dir per member
-    * (newGen = the highest committed batch id), committed by a single
-    * `_compacted_<newGen>` marker written LAST, then sweep the superseded
-    * dirs. Closes the r15 scale gap: without compaction, serve-plan union
-    * width and erase-probe cost grow one leg per committed batch forever
-    * (10⁴–10⁵ dirs at production micro-batch cadence).
-    *
-    * Crash-safe at every point: a crash before the marker leaves
-    * half-written compact dirs no reader resolves (and a re-run
-    * overwrites or sweeps them); a crash after the marker but before the
-    * sweep leaves superseded batch dirs that readers already ignore
-    * (legs() excludes ids ≤ the generation) and the next compaction
-    * removes. The `_committed_<id>` markers are NEVER removed: a replay
-    * of a pre-compaction batch id must stay a no-op (and its recorded
-    * file signature stays checkable). The compactor holds the root's
-    * mutator lease, so no maintainer or erase runs against the root
-    * meanwhile.
-    *
-    * `merge(inputDirs, outDir)` writes one member's merged generation in
-    * that member's serving layout; it may decline to write when every
-    * input is empty (readers tolerate a missing compact dir). Returns the
-    * committed generation id.
-    */
-  private[streaming] def compactCore(
-      spark: SparkSession,
-      indexPath: String,
-      what: String,
-      members: Seq[(MemberLayout, (Seq[String], String) => Unit)]): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    withRootLease(conf, fs, root, what, "compactor") {
-    val done = requireCommitted(fs, root, what)
-    // superseded or half-written older generations, then older markers
-    def sweep(gen: Long): Unit = {
-      members.foreach(_._1.sweepSuperseded(fs, root))
-      markerIds(fs, root, CompactedPrefix).filter(_ < gen)
-        .foreach(g => fs.delete(new Path(root, s"$CompactedPrefix$g"), false))
-    }
-    val prev = compactedGenId(fs, root)
-    // finish any interrupted sweep for the current generation first
-    prev.foreach(sweep)
-    val newGen = done.last
-    if (prev.contains(newGen)) newGen // everything is already compacted
-    else {
-      // members merge into disjoint compact dirs under ONE marker —
-      // concurrent (guide §2.6)
-      Concurrent.awaitAll(members.map { case (m, merge) => () =>
-        val inputs = m.legs(fs, root, done).filter(fs.exists)
-        if (inputs.nonEmpty)
-          merge(inputs.map(_.toString), m.compactPath(root, newGen).toString)
-      })
-      // ONE commit point covers every member's merged generation
-      writeUtf8(fs, new Path(root, s"$CompactedPrefix$newGen"),
-        s"merged=${done.mkString(",")}")
-      sweep(newGen)
-      newGen
-    }
-    }
-  }
 
   /** Reject a maintained root that holds (any part of) a STATICALLY
     * written index: a static layout keeps part files directly under the
@@ -490,34 +404,6 @@ private[graft] object MaintainedRoot {
         s"$root holds a statically-written $what (non-batch entries under " +
           s"${m.parentRel}/); stream maintainers own their roots ($serveHint)")
     }
-
-  /** The erase prologue every maintained root shares: a single key
-    * column, the root's mutator lease, at least one committed batch, and
-    * a crashed compaction's sweep finished first — superseded dirs are
-    * invisible to readers but still hold victim BYTES, and an erase that
-    * left them would attest an erasure that physically did not happen.
-    * `body(fs, root, done, keys)` then runs under the lease with the
-    * distinct victim keys materialized once as column `idCol`.
-    */
-  private[streaming] def erasing[T](
-      spark: SparkSession,
-      indexPath: String,
-      ids: DataFrame,
-      what: String,
-      idCol: String,
-      members: Seq[MemberLayout])(
-      body: (FileSystem, Path, Seq[Long], DataFrame) => T): T = {
-    require(ids.columns.length == 1,
-      s"ids must be a single key column, got ${ids.columns.toSeq}")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    withRootLease(conf, fs, root, what, "eraser") {
-      val done = requireCommitted(fs, root, what)
-      members.foreach(_.sweepSuperseded(fs, root))
-      body(fs, root, done, ids.toDF(idCol).distinct().localCheckpoint())
-    }
-  }
 
   /** ONE-JOB victim probe over a union of leg reads: tag each row with
     * the leg dir it came from ([[withLegColumn]]), left-join the
@@ -546,17 +432,6 @@ private[graft] object MaintainedRoot {
       .sortBy(_._1).toSeq
   }
 
-  /** [[victimLegProbe]] over every live leg of member `m`, keyed by its
-    * `id` column.
-    */
-  private[streaming] def probeMember(
-      spark: SparkSession, fs: FileSystem, root: Path, done: Seq[Long],
-      m: MemberLayout, keys: DataFrame, distinctPerDoc: Boolean): Seq[(String, Long, Long)] =
-    victimLegProbe(
-      Parquet.read(spark, m.legs(fs, root, done).filter(fs.exists).map(_.toString): _*)
-        .select("id"),
-      keys, "id", distinctPerDoc)
-
   /** The leg-dir names a maintained member can have, for the probe's
     * leg tag: every layout's batch and compact prefixes, plus the IVF-PQ
     * base lists.
@@ -578,14 +453,13 @@ private[graft] object MaintainedRoot {
     df.withColumn("__leg", regexp_extract(input_file_name(), LegDir, 1))
 
   /** The shared per-leg erase rewrite: for every victim-bearing `legs`
-    * dir, each member's copy of it (in `members` order — the caller puts
-    * its probe member LAST) is read with `read`, anti-joined against the
-    * victim `keys` on `idCol`, materialized (localCheckpoint) BEFORE the
-    * overwrite of its source, and written back with `write`. Legs are
-    * disjoint dirs and crash-idempotence is per leg, so they rewrite
-    * CONCURRENTLY (guide §2.6): however many legs a crash leaves
-    * half-done, every unfinished leg still bears victims for the re-run's
-    * probe.
+    * dir, each member's copy of it (in `members` order — the probe member
+    * LAST) is read with `read`, anti-joined against the victim `keys` on
+    * `idCol`, materialized (localCheckpoint) BEFORE the overwrite of its
+    * source, and written back with `write`. Legs are disjoint dirs and
+    * crash-idempotence is per leg, so they rewrite CONCURRENTLY (guide
+    * §2.6): however many legs a crash leaves half-done, every unfinished
+    * leg still bears victims for the re-run's probe.
     */
   private[streaming] def rewriteLegs(
       root: Path,
@@ -606,25 +480,241 @@ private[graft] object MaintainedRoot {
       }
     })
 
-  /** [[rewriteLegs]]' plain leg read: the dir's parquet, when it exists. */
-  private[streaming] def readIfExists(spark: SparkSession, fs: FileSystem)(
-      p: Path): Option[DataFrame] =
-    if (fs.exists(p)) Some(Parquet.read(spark, p.toString)) else None
-
-  /** [[rewriteLegs]]' plain leg write. */
-  private[streaming] def overwrite(df: DataFrame, p: Path): Unit =
-    df.write.mode("overwrite").parquet(p.toString)
-
-  /** The per-leg erase ledger (batch_id, n_before, n_after, n_erased): a
-    * batch leg reports its batch id, the compacted generation its gen id
-    * (the highest batch id folded into it).
+  /** A maintained root as the generic operations see it: the session, the
+    * root path as the caller gave it, and its Hadoop filesystem.
     */
-  private[streaming] def batchLedger(
+  private[streaming] final class Root(val spark: SparkSession, val path: String) {
+    val conf: Configuration = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(path)
+    val fs: FileSystem = dir.getFileSystem(conf)
+  }
+
+  /** One encoded micro-batch: a frame per data member, each written to
+    * that member's batch dir, and the index's `side` artifacts (BM25's
+    * df/stats snapshots, SimJoin's frozen rarity order). All of them are
+    * written concurrently before the batch's one marker.
+    */
+  private[streaming] final case class Encoded(
+      frames: Seq[(MemberLayout, DataFrame)],
+      side: Seq[() => Unit] = Nil)
+
+  /** A maintainer run's per-batch encode: (batch, batchId, committed ids
+    * before it) to the encoded batch.
+    */
+  private[streaming] type Encode = (DataFrame, Long, Seq[Long]) => Encoded
+
+  /** One stream-maintained index type, as the generic [[maintain]],
+    * [[read]], [[erase]] and [[compact]] run it:
+    *  - `members`: its data members, the erase PROBE member LAST. The
+    *    erase rewrites a leg's members in this order, so a crash mid-leg
+    *    leaves the probe member victim-bearing and the idempotent re-run
+    *    finishes the leg instead of attesting it;
+    *  - `idCol`: the document key every member carries;
+    *  - `staticHint`: where a maintainer must refuse a root holding a
+    *    statically written index of this type, how to serve that one
+    *    ([[assertMaintainerOwnsLayout]]); IVF-PQ has none, because its
+    *    root is maintained on top of a static base by design;
+    *  - `distinctPerDoc`: the probe member repeats a document across rows
+    *    (BM25 postings), so ledger counts are distinct documents.
+    * Its methods are the index's own steps: the serve, the per-member
+    * compaction merge, the member write and read, and the erase's probe
+    * rows, rewrite and ledger. The defaults fit plain per-document
+    * parquet members (MinHash, SimJoin); BM25 (snapshot roll-forward and
+    * the erase journal) and IVF-PQ (the static base, the model
+    * generation, cluster-partitioned legs) override what differs. The
+    * per-batch encode depends on the maintainer run's own parameters, so
+    * each codec builds it in an `encoder(...)` that [[maintain]] takes.
+    */
+  private[streaming] abstract class IndexCodec[I](
+      val what: String,
+      val members: Seq[MemberLayout],
+      val idCol: String = "id",
+      val staticHint: Option[String] = None,
+      val distinctPerDoc: Boolean = false) {
+
+    /** The index value served from the committed legs `done`. */
+    def serve(r: Root, done: Seq[Long]): I
+
+    /** The committed batch ids a serve needs: at least one. */
+    def committed(r: Root): Seq[Long] = requireCommitted(r.fs, r.dir, what)
+
+    /** Runs once a batch has committed, with every committed id. */
+    def afterCommit(r: Root, committed: Seq[Long]): Unit = ()
+
+    /** Writes one member frame into a leg dir (mode overwrite, so a
+      * pre-marker crash replays cleanly).
+      */
+    def write(df: DataFrame, p: Path): Unit = df.write.mode("overwrite").parquet(p.toString)
+
+    /** Reads one member leg dir, when it exists. */
+    def readLeg(r: Root)(p: Path): Option[DataFrame] =
+      if (r.fs.exists(p)) Some(Parquet.read(r.spark, p.toString)) else None
+
+    /** Member `m`'s compaction merge into `numFiles` files: by default a
+      * plain concat of per-document rows with no global state.
+      */
+    def merge(r: Root, m: MemberLayout, numFiles: Int): (Seq[String], String) => Unit =
+      (ins, out) => Parquet.read(r.spark, ins: _*).select(m.cols.map(col): _*)
+        .repartition(numFiles)
+        .write.mode("overwrite").parquet(out)
+
+    /** The index's own check before a compaction. */
+    def beforeCompact(r: Root): Unit = ()
+
+    /** The index's own step before an erase probes, under the lease. */
+    def beforeErase(r: Root, done: Seq[Long]): Unit = ()
+
+    /** The rows the erase probes: the probe member's live legs, key only. */
+    def probeRows(r: Root, done: Seq[Long]): DataFrame =
+      Parquet.read(r.spark,
+          members.last.legs(r.fs, r.dir, done).filter(r.fs.exists).map(_.toString): _*)
+        .select(idCol)
+
+    /** Removes the victim keys `k` from every victim-bearing leg. */
+    def rewrite(r: Root, done: Seq[Long], legs: Seq[String], k: DataFrame): Unit =
+      rewriteLegs(r.dir, legs, members, k, idCol)(readLeg(r))(write)
+
+    /** The per-leg erase ledger (batch_id, n_before, n_after, n_erased): a
+      * batch leg reports its batch id, the compacted generation its gen
+      * id (the highest batch id folded into it).
+      */
+    def ledger(spark: SparkSession, affected: Seq[(String, Long, Long)]): DataFrame = {
+      import spark.implicits._
+      affected.map { case (leg, before, erased) =>
+        (leg.filter(_.isDigit).toLong, before, before - erased, erased)
+      }.toDF("batch_id", "n_before", "n_after", "n_erased")
+    }
+  }
+
+  /** MAINTAIN: refuse a root holding a static index of this type, build
+    * the run's encode (`encoder` runs the index's own preconditions), then
+    * one [[runBatchCommitted]] run in which every micro-batch is encoded
+    * and its member frames (each into its member's batch dir) and side
+    * artifacts are written concurrently before the marker. Returns the
+    * maintained index ([[read]]).
+    */
+  private[streaming] def maintain[I](
+      c: IndexCodec[I],
       spark: SparkSession,
-      affected: Seq[(String, Long, Long)]): DataFrame = {
-    import spark.implicits._
-    affected.map { case (leg, before, erased) =>
-      (leg.filter(_.isDigit).toLong, before, before - erased, erased)
-    }.toDF("batch_id", "n_before", "n_after", "n_erased")
+      indexPath: String,
+      srcPath: String,
+      checkpointPath: String,
+      maxFilesPerTrigger: Int)(
+      encoder: Root => Encode): I = {
+    val r = new Root(spark, indexPath)
+    c.staticHint.foreach(assertMaintainerOwnsLayout(r.fs, r.dir, c.members, c.what, _))
+    val encode = encoder(r)
+    runBatchCommitted(spark, srcPath, indexPath, checkpointPath, c.what,
+      maxFilesPerTrigger) { (batch, batchId, done) =>
+      val e = encode(batch, batchId, done)
+      Concurrent.awaitAll(e.frames.map { case (m, df) =>
+        () => c.write(df, m.batchPath(r.dir, batchId)) } ++ e.side)
+    }(c.afterCommit(r, _))
+    read(c, spark, indexPath)
+  }
+
+  /** READ: the index served from its committed legs. */
+  private[streaming] def read[I](c: IndexCodec[I], spark: SparkSession, indexPath: String): I = {
+    val r = new Root(spark, indexPath)
+    c.serve(r, c.committed(r))
+  }
+
+  /** ERASE, under the root's mutator lease: a single key column, at least
+    * one committed batch, and a crashed compaction's sweep finished first
+    * — superseded dirs are invisible to readers but still hold victim
+    * BYTES, and an erase that left them would attest an erasure that
+    * physically did not happen. Then the index's own step, ONE
+    * single-pass probe over the probe rows with the distinct victim keys
+    * materialized once, the rewrite of the victim-bearing legs only, and
+    * the per-leg ledger. Untouched legs are never opened; work is
+    * O(probe scan + affected legs), no rebuild.
+    */
+  private[streaming] def erase[I](
+      c: IndexCodec[I],
+      spark: SparkSession,
+      indexPath: String,
+      ids: DataFrame): DataFrame = {
+    require(ids.columns.length == 1,
+      s"ids must be a single key column, got ${ids.columns.toSeq}")
+    val r = new Root(spark, indexPath)
+    withRootLease(r.conf, r.fs, r.dir, c.what, "eraser") {
+      val done = requireCommitted(r.fs, r.dir, c.what)
+      c.members.foreach(_.sweepSuperseded(r.fs, r.dir))
+      val k = ids.toDF(c.idCol).distinct().localCheckpoint()
+      c.beforeErase(r, done)
+      val affected = victimLegProbe(c.probeRows(r, done), k, c.idCol, c.distinctPerDoc)
+      if (affected.nonEmpty) c.rewrite(r, done, affected.map(_._1), k)
+      c.ledger(spark, affected)
+    }
+  }
+
+  /** COMPACT, under the root's mutator lease, after the index's own
+    * check: merge the previous compacted generation (if any) and every
+    * committed batch dir into ONE `compact_<newGen>` dir per member
+    * (newGen = the highest committed batch id, `merge(inputDirs, outDir)`
+    * in that member's serving layout; it may decline to write when every
+    * input is empty, which readers tolerate), committed by a single
+    * `_compacted_<newGen>` marker written LAST, then sweep the superseded
+    * dirs. Without compaction, serve-plan union width and erase-probe
+    * cost grow one leg per committed batch forever (10⁴–10⁵ dirs at
+    * production micro-batch cadence).
+    *
+    * Crash-safe at every point: a crash before the marker leaves
+    * half-written compact dirs no reader resolves (and a re-run
+    * overwrites or sweeps them); a crash after the marker but before the
+    * sweep leaves superseded batch dirs that readers already ignore
+    * (legs() excludes ids ≤ the generation) and the next compaction
+    * removes. The `_committed_<id>` markers are NEVER removed: a replay
+    * of a pre-compaction batch id must stay a no-op (and its recorded
+    * file signature stays checkable). Returns the committed generation
+    * id.
+    */
+  private[streaming] def compact[I](
+      c: IndexCodec[I],
+      spark: SparkSession,
+      indexPath: String,
+      numFiles: Int): Long = {
+    require(numFiles >= 1, s"numFiles must be >= 1: $numFiles")
+    val r = new Root(spark, indexPath)
+    c.beforeCompact(r)
+    val (fs, root) = (r.fs, r.dir)
+    withRootLease(r.conf, fs, root, c.what, "compactor") {
+      val done = requireCommitted(fs, root, c.what)
+      // superseded or half-written older generations, then older markers
+      def sweep(gen: Long): Unit = {
+        c.members.foreach(_.sweepSuperseded(fs, root))
+        markerIds(fs, root, CompactedPrefix).filter(_ < gen)
+          .foreach(g => fs.delete(new Path(root, s"$CompactedPrefix$g"), false))
+      }
+      val prev = compactedGenId(fs, root)
+      // finish any interrupted sweep for the current generation first
+      prev.foreach(sweep)
+      val newGen = done.last
+      if (prev.contains(newGen)) newGen // everything is already compacted
+      else {
+        // members merge into disjoint compact dirs under ONE marker —
+        // concurrent (guide §2.6)
+        Concurrent.awaitAll(c.members.map { m => () =>
+          val inputs = m.legs(fs, root, done).filter(fs.exists)
+          if (inputs.nonEmpty)
+            c.merge(r, m, numFiles)(inputs.map(_.toString), m.compactPath(root, newGen).toString)
+        })
+        // ONE commit point covers every member's merged generation
+        writeUtf8(fs, new Path(root, s"$CompactedPrefix$newGen"),
+          s"merged=${done.mkString(",")}")
+        sweep(newGen)
+        newGen
+      }
+    }
+  }
+
+  /** The number of committed batch dirs NEWER than the compacted
+    * generation — the per-member serve-plan fan-out (and erase-probe leg
+    * count) the next compaction would fold away.
+    */
+  private[streaming] def tailBatches(spark: SparkSession, indexPath: String): Int = {
+    val r = new Root(spark, indexPath)
+    val gen = compactedGenId(r.fs, r.dir)
+    committedBatchIds(r.fs, r.dir).count(id => gen.forall(id > _))
   }
 }
