@@ -14,6 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * paths through `MaintainedRoot` (its `MemberLayout`s and predicates), so
   * a new hand-written copy of a root-layout name fails here. BM25's
   * `*_snap_*` snapshot names belong to the BM25 codec and are not scanned.
+  *
+  * A second scan keeps `Incremental`'s maintained-index entry points
+  * delegations: `graft/streaming/Incremental.scala` (comments stripped)
+  * names no protocol step and no member layout, so every index's steps
+  * run through the generic operations over its codec.
   */
 class MaintainedLayoutHygieneSpec extends AnyFunSuite {
   private val Root = Paths.get("src/main/scala")
@@ -42,5 +47,27 @@ class MaintainedLayoutHygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"build root-layout paths through MaintainedRoot instead:\n${offenders.mkString("\n")}")
+  }
+
+  private val Delegator = "graft/streaming/Incremental.scala"
+  // the protocol steps and the member layouts (and their members) that
+  // only MaintainedRoot's generic operations and the codecs may call
+  private val ProtocolStep = ("\\b(?:runBatchCommitted|batchWrites|erasing|probeMember|" +
+    "rewriteLegs|compactCore|victimLegProbe|sweepSuperseded|MemberLayout|Bm25Postings|" +
+    "MinHashBuckets|MinHashSets|SimJoinPrefixes|SimJoinSets|IvfLists|IvfBaseLists)\\b|" +
+    "\\.(?:members|legs|batchPath|compactPath)\\b").r
+
+  test("Incremental's maintained-index entry points call no protocol step directly") {
+    val src = new String(Files.readAllBytes(Root.resolve(Delegator)), "UTF-8")
+    assert(src.contains("def streamBm25Maintain(") && src.contains("def withRootLease["),
+      s"$Delegator no longer holds the entry points and the lease; update this scan")
+    // comments go, their line breaks stay, so line numbers are the file's
+    val code = "(?s)/\\*.*?\\*/".r
+      .replaceAllIn(src, m => "\n" * m.matched.count(_ == '\n')).replaceAll("//[^\n]*", "")
+    val offenders = code.split("\n").zipWithIndex.flatMap { case (line, i) =>
+      ProtocolStep.findAllIn(line).map(m => s"$Delegator:${i + 1}: $m")
+    }
+    assert(offenders.isEmpty,
+      s"$Delegator must delegate to MaintainedRoot's generic operations:\n${offenders.mkString("\n")}")
   }
 }
