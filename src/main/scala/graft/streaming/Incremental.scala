@@ -5,9 +5,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The public surface of the stream-maintained index roots and the
   * stream analytics ([[StreamAnalytics]], mixed in): the exclusive mutator
   * lease every maintained-root mutator runs under, and the entry points of
-  * the four maintained indexes (bm25, minhash, simjoin, ivfpq).
+  * the four maintained indexes (bm25, minhash, simjoin, ivfpq), each a
+  * delegation to a generic operation of [[MaintainedRoot]] over the
+  * index's codec ([[IndexCodecs]]). IVF-PQ's model rebuild and drift
+  * check are that index's own code ([[IvfPqRebuild]], mixed in).
   */
-object Incremental extends StreamAnalytics {
+object Incremental extends StreamAnalytics with IvfPqRebuild {
   import MaintainedRoot._
 
   /** EXCLUSIVE MUTATOR LEASE on a maintained index root. Every mutator —
@@ -336,7 +339,7 @@ object Incremental extends StreamAnalytics {
     * is a visible commit, never an in-place overwrite of the state the
     * subtraction reads) — then deletes the journal and starts on the new
     * ids. Readers, the maintainer and compaction refuse a root with a
-    * pending journal .
+    * pending journal.
     *
     * Work: two postings-member passes (ledger counts + victim-row
     * capture; the roll-back inherently needs the victims' rows) plus one
@@ -493,68 +496,4 @@ object Incremental extends StreamAnalytics {
     */
   def eraseIvfPqMaintained(spark: SparkSession, indexPath: String, ids: DataFrame): DataFrame =
     erase(IndexCodecs.IvfPq, spark, indexPath, ids)
-
-  /** MODEL REBUILD for a [[streamIvfPqMaintain]]ed root — the remedy
-    * operator the frozen-model contract defers to ("production rebuilds
-    * on a slow cadence while appending fast"): retrain coarse centroids +
-    * PQ codebooks from the raw vectors of exactly the ids the maintained
-    * root serves (base + every committed batch, minus erased victims),
-    * re-encode, and write the result as a FRESH static root at
-    * `destPath` — the next serving generation, ready to be
-    * stream-maintained in turn. Blue/green by construction: the old root
-    * is never touched, so a crash mid-rebuild leaves the old generation
-    * serving and the half-written destination is simply overwritten by
-    * the re-run; cutover is the caller flipping the serve path (then
-    * retiring the old root). An in-place rebuild is exactly what the
-    * model-generation stamp exists to refuse: the old root's batch dirs
-    * hold codes of the OLD codebooks ([[streamIvfPqMaintain]]'s guard).
-    * Measure the drift that sets the cadence with
-    * [[graft.ops.IvfPqIndex.recallAudit]] on the maintained read — the
-    * frozen/rebuilt pair is the declared `knn_maintained_recall_audit`
-    * evidence.
-    */
-  def rebuildIvfPqMaintained(spark: SparkSession, indexPath: String, destPath: String,
-      corpus: DataFrame, idCol: String, vecCol: String, nlist: Int = 16,
-      numSubspaces: Int = 8, numCodes: Int = 16, lloydIters: Int = 2,
-      residual: Boolean = true, trainSampleMod: Int = 1): graft.ops.IvfPqIndex =
-    IndexCodecs.IvfPq.rebuild(spark, indexPath, destPath, corpus, idCol, vecCol,
-      nlist, numSubspaces, numCodes, lloydIters, residual, trainSampleMod)
-
-  /** Rebuild-cadence POLICY gate — the [[compactIfStale]] counterpart for
-    * MODEL quality: measure the maintained root's frozen-model recall
-    * with [[graft.ops.IvfPqIndex.recallAudit]] and run
-    * [[rebuildIvfPqMaintained]] into `destPath` iff it has drifted below
-    * `minRecall`. The one knob a production maintainer calls on its audit
-    * cadence so model staleness is bounded by policy, not hope:
-    * {{{
-    * Incremental.streamIvfPqMaintain(spark, src, root, "id", "vec")
-    * Incremental.rebuildIfDrifted(spark, root, s"$root-gen2", corpus,
-    *   "id", "vec", queries, minRecall = 0.8, k = 5)
-    * }}}
-    * Returns (measuredRecall, Some(rebuiltIndex)) when it rebuilt,
-    * (measuredRecall, None) with the root untouched when recall is
-    * within budget (the common case — one audit job, no rebuild; the
-    * measurement is returned EITHER way so a caller logging the cadence
-    * never pays a second corpus-sized audit). The audit's brute-force
-    * side is query-set × corpus sized BY PURPOSE (audit cadence, not
-    * serve path); keep `queries` a representative sample. On rebuild the
-    * caller cuts the serve path over to `destPath` (blue/green — see
-    * [[rebuildIvfPqMaintained]]).
-    *
-    * CADENCE NOTE: the audit holds the root mutator lease for its whole
-    * corpus-sized brute-force pass, and [[withRootLease]] fails loudly
-    * rather than waits — any maintain/compact/erase attempted on this
-    * root during the audit throws, and vice versa. Schedule drift audits
-    * OFF the maintenance windows (they gate a rebuild; they have no
-    * freshness requirement of their own).
-    */
-  def rebuildIfDrifted(spark: SparkSession, indexPath: String, destPath: String,
-      corpus: DataFrame, idCol: String, vecCol: String, queries: DataFrame,
-      minRecall: Double, k: Int, nprobe: Int = 8, nlist: Int = 16,
-      numSubspaces: Int = 8, numCodes: Int = 16, lloydIters: Int = 2,
-      residual: Boolean = true,
-      trainSampleMod: Int = 1): (Double, Option[graft.ops.IvfPqIndex]) =
-    IndexCodecs.IvfPq.rebuildIfDrifted(spark, indexPath, destPath, corpus, idCol, vecCol,
-      queries, minRecall, k, nprobe, nlist, numSubspaces, numCodes, lloydIters,
-      residual, trainSampleMod)
 }

@@ -103,7 +103,7 @@ private[streaming] object IndexCodecs {
         if (j.isEmpty) r.fs.delete(journal, true) // zero-delta journal
         else {
           val jk = j.select("id").distinct().localCheckpoint()
-          val bearing = victimLegProbe(probeRows(r, done), jk, "id", distinctPerDoc = false)
+          val bearing = victimLegProbe(probeRows(r, done), jk, idCol, distinctPerDoc = false)
           applyJournal(r, done, j, bearing.map(_._1), jk, j.select("gen").head().getInt(0))
         }
       } else if (r.fs.exists(journal))
@@ -149,7 +149,7 @@ private[streaming] object IndexCodecs {
         bearing: Seq[String],
         keys: DataFrame,
         gen: => Int): Unit = {
-      rewriteLegs(r.dir, bearing, members, keys, "id")(readLeg(r))(write)
+      rewriteLegs(r.dir, bearing, members, keys, idCol)(readLeg(r))(write)
       val lastId = done.last
       val targetGen = gen
       if (!r.fs.exists(new Path(snapDir(r, "terms", lastId, targetGen), "_SUCCESS"))) {
@@ -377,78 +377,6 @@ private[streaming] object IndexCodecs {
         .toDF("leg", "n_before", "n_after", "n_erased")
     }
 
-    /** [[Incremental.rebuildIvfPqMaintained]]. */
-    def rebuild(spark: SparkSession, indexPath: String, destPath: String, corpus: DataFrame,
-        idCol: String, vecCol: String, nlist: Int, numSubspaces: Int, numCodes: Int,
-        lloydIters: Int, residual: Boolean, trainSampleMod: Int): IvfPqIndex = {
-      val r = new Root(spark, indexPath)
-      val dst = new Path(destPath)
-      require(r.fs.makeQualified(r.dir) != dst.getFileSystem(r.conf).makeQualified(dst),
-        s"rebuild writes a FRESH serving generation: destPath == indexPath " +
-          s"($indexPath) would overwrite the lists the rebuild is still " +
-          "reading and strand batch dirs encoded under the old model")
-      // the retrain's multi-pass read of the old root runs under its
-      // mutator lease: a concurrent compaction sweeping legs mid-pass (or
-      // an erase rewriting them between passes) would train on a corpus no
-      // generation ever served
-      val rebuilt = Incremental.withRootLease(r.conf, r.fs, r.dir, what, "rebuilder") {
-        IvfPqIndex.rebuildModel(read(this, spark, indexPath),
-          corpus, idCol, vecCol, nlist, numSubspaces, numCodes, lloydIters,
-          residual, trainSampleMod)
-      }
-      IvfPqIndex.write(rebuilt, destPath)
-      // the retrain corpus's localCheckpoint blocks are superseded by the
-      // persisted layout — free them (rebuildModel pinned one snapshot for
-      // its multi-pass training)
-      graft.ops.Checkpoints.free(rebuilt.lists)
-      // serve from the persisted layout (cluster-pruned), not the build plan
-      IvfPqIndex.read(spark, destPath)
-    }
-
-    /** [[Incremental.rebuildIfDrifted]]. */
-    def rebuildIfDrifted(spark: SparkSession, indexPath: String, destPath: String,
-        corpus: DataFrame, idCol: String, vecCol: String, queries: DataFrame,
-        minRecall: Double, k: Int, nprobe: Int, nlist: Int, numSubspaces: Int,
-        numCodes: Int, lloydIters: Int, residual: Boolean,
-        trainSampleMod: Int): (Double, Option[IvfPqIndex]) = {
-      require(minRecall > 0.0 && minRecall <= 1.0,
-        s"minRecall must be in (0, 1]: $minRecall")
-      // an empty query sample can only produce a vacuous audit (n_truth 0,
-      // recall null/NaN — which a bare `>= minRecall` compare would read as
-      // DRIFTED, silently rebuilding on every cadence). Fail loudly before
-      // paying the corpus-sized audit.
-      require(!queries.isEmpty,
-        s"rebuildIfDrifted at $indexPath was given an EMPTY query sample: " +
-          "the recall audit would be vacuous (n_truth=0) and could not " +
-          "gate a rebuild — fix the audit inputs")
-      // the audit's multi-pass read (served-id snapshot, brute-force pass,
-      // topK serve) runs under the root lease, like the rebuild's retrain
-      // read: an interleaved compaction sweep or erase between passes
-      // would measure a state no generation served — skewing the recall
-      // that GATES the rebuild. The lease is released before the rebuild
-      // re-acquires it (withRootLease is non-reentrant); a mutation landing
-      // in that gap only makes the measurement one cadence stale, never
-      // torn.
-      val r = new Root(spark, indexPath)
-      val audit = Incremental.withRootLease(r.conf, r.fs, r.dir, what, "drift-auditor") {
-        IvfPqIndex.recallAudit(read(this, spark, indexPath),
-          queries, corpus, idCol, vecCol, k, nprobe).head()
-      }
-      // the post-audit guard: an empty served∩corpus truth ALSO yields
-      // n_truth 0 (same vacuous-audit failure as an empty query sample,
-      // but only detectable after the audit has run over the corpus)
-      require(audit.getAs[Long]("n_truth") > 0L,
-        s"rebuildIfDrifted audit at $indexPath measured an EMPTY ground " +
-          "truth (n_truth=0): the query sample produced no brute-force " +
-          "neighbors over the served ids — fix the audit inputs; refusing " +
-          "to gate a rebuild on a vacuous recall")
-      val recall = audit.getAs[Double]("recall_at_k")
-      if (recall >= minRecall) (recall, None)
-      else (recall, Some(rebuild(spark, indexPath, destPath,
-        corpus, idCol, vecCol, nlist, numSubspaces, numCodes, lloydIters,
-        residual, trainSampleMod)))
-    }
-
     private def assertModelGeneration(r: Root, stampIfAbsent: Boolean): Unit = {
       val stampPath = new Path(r.dir, "_graft_model_gen")
       val current = IvfPqIndex.sidecarHash(r.conf, r.path)
@@ -462,5 +390,153 @@ private[streaming] object IndexCodecs {
             "for the new model (the rebuild-cadence contract)")
       } else if (stampIfAbsent) writeUtf8(r.fs, stampPath, current)
     }
+  }
+}
+
+/** IVF-PQ's model rebuild and its rebuild-cadence gate: that index's own
+  * code around its maintained root, reachable as
+  * `Incremental.rebuildIvfPqMaintained` and `Incremental.rebuildIfDrifted`
+  * ([[Incremental]] mixes this trait in).
+  */
+trait IvfPqRebuild {
+  import IndexCodecs.IvfPq
+
+  /** MODEL REBUILD for a [[Incremental.streamIvfPqMaintain]]ed root — the remedy
+    * operator the frozen-model contract defers to ("production rebuilds
+    * on a slow cadence while appending fast"): retrain coarse centroids +
+    * PQ codebooks from the raw vectors of exactly the ids the maintained
+    * root serves (base + every committed batch, minus erased victims),
+    * re-encode, and write the result as a FRESH static root at
+    * `destPath` — the next serving generation, ready to be
+    * stream-maintained in turn. Blue/green by construction: the old root
+    * is never touched, so a crash mid-rebuild leaves the old generation
+    * serving and the half-written destination is simply overwritten by
+    * the re-run; cutover is the caller flipping the serve path (then
+    * retiring the old root). An in-place rebuild is exactly what the
+    * model-generation stamp exists to refuse: the old root's batch dirs
+    * hold codes of the OLD codebooks ([[Incremental.streamIvfPqMaintain]]'s guard).
+    * Measure the drift that sets the cadence with
+    * [[graft.ops.IvfPqIndex.recallAudit]] on the maintained read — the
+    * frozen/rebuilt pair is the declared `knn_maintained_recall_audit`
+    * evidence.
+    */
+  def rebuildIvfPqMaintained(
+      spark: SparkSession,
+      indexPath: String,
+      destPath: String,
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      nlist: Int = 16,
+      numSubspaces: Int = 8,
+      numCodes: Int = 16,
+      lloydIters: Int = 2,
+      residual: Boolean = true,
+      trainSampleMod: Int = 1): IvfPqIndex = {
+    val r = new Root(spark, indexPath)
+    val dst = new Path(destPath)
+    require(r.fs.makeQualified(r.dir) != dst.getFileSystem(r.conf).makeQualified(dst),
+      s"rebuild writes a FRESH serving generation: destPath == indexPath " +
+        s"($indexPath) would overwrite the lists the rebuild is still " +
+        "reading and strand batch dirs encoded under the old model")
+    // the retrain's multi-pass read of the old root runs under its
+    // mutator lease: a concurrent compaction sweeping legs mid-pass (or
+    // an erase rewriting them between passes) would train on a corpus no
+    // generation ever served
+    val rebuilt = Incremental.withRootLease(r.conf, r.fs, r.dir, IvfPq.what, "rebuilder") {
+      IvfPqIndex.rebuildModel(read(IvfPq, spark, indexPath),
+        corpus, idCol, vecCol, nlist, numSubspaces, numCodes, lloydIters,
+        residual, trainSampleMod)
+    }
+    IvfPqIndex.write(rebuilt, destPath)
+    // the retrain corpus's localCheckpoint blocks are superseded by the
+    // persisted layout — free them (rebuildModel pinned one snapshot for
+    // its multi-pass training)
+    graft.ops.Checkpoints.free(rebuilt.lists)
+    // serve from the persisted layout (cluster-pruned), not the build plan
+    IvfPqIndex.read(spark, destPath)
+  }
+
+  /** Rebuild-cadence POLICY gate — the [[Incremental.compactIfStale]] counterpart for
+    * MODEL quality: measure the maintained root's frozen-model recall
+    * with [[graft.ops.IvfPqIndex.recallAudit]] and run
+    * [[Incremental.rebuildIvfPqMaintained]] into `destPath` iff it has drifted below
+    * `minRecall`. The one knob a production maintainer calls on its audit
+    * cadence so model staleness is bounded by policy, not hope:
+    * {{{
+    * Incremental.streamIvfPqMaintain(spark, src, root, "id", "vec")
+    * Incremental.rebuildIfDrifted(spark, root, s"$root-gen2", corpus,
+    *   "id", "vec", queries, minRecall = 0.8, k = 5)
+    * }}}
+    * Returns (measuredRecall, Some(rebuiltIndex)) when it rebuilt,
+    * (measuredRecall, None) with the root untouched when recall is
+    * within budget (the common case — one audit job, no rebuild; the
+    * measurement is returned EITHER way so a caller logging the cadence
+    * never pays a second corpus-sized audit). The audit's brute-force
+    * side is query-set × corpus sized BY PURPOSE (audit cadence, not
+    * serve path); keep `queries` a representative sample. On rebuild the
+    * caller cuts the serve path over to `destPath` (blue/green — see
+    * [[Incremental.rebuildIvfPqMaintained]]).
+    *
+    * CADENCE NOTE: the audit holds the root mutator lease for its whole
+    * corpus-sized brute-force pass, and [[Incremental.withRootLease]] fails loudly
+    * rather than waits — any maintain/compact/erase attempted on this
+    * root during the audit throws, and vice versa. Schedule drift audits
+    * OFF the maintenance windows (they gate a rebuild; they have no
+    * freshness requirement of their own).
+    */
+  def rebuildIfDrifted(
+      spark: SparkSession,
+      indexPath: String,
+      destPath: String,
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      queries: DataFrame,
+      minRecall: Double,
+      k: Int,
+      nprobe: Int = 8,
+      nlist: Int = 16,
+      numSubspaces: Int = 8,
+      numCodes: Int = 16,
+      lloydIters: Int = 2,
+      residual: Boolean = true,
+      trainSampleMod: Int = 1): (Double, Option[IvfPqIndex]) = {
+    require(minRecall > 0.0 && minRecall <= 1.0,
+      s"minRecall must be in (0, 1]: $minRecall")
+    // an empty query sample can only produce a vacuous audit (n_truth 0,
+    // recall null/NaN — which a bare `>= minRecall` compare would read as
+    // DRIFTED, silently rebuilding on every cadence). Fail loudly before
+    // paying the corpus-sized audit.
+    require(!queries.isEmpty,
+      s"rebuildIfDrifted at $indexPath was given an EMPTY query sample: " +
+        "the recall audit would be vacuous (n_truth=0) and could not " +
+        "gate a rebuild — fix the audit inputs")
+    // the audit's multi-pass read (served-id snapshot, brute-force pass,
+    // topK serve) runs under the root lease, like the rebuild's retrain
+    // read: an interleaved compaction sweep or erase between passes
+    // would measure a state no generation served — skewing the recall
+    // that GATES the rebuild. The lease is released before the rebuild
+    // re-acquires it (withRootLease is non-reentrant); a mutation landing
+    // in that gap only makes the measurement one cadence stale, never
+    // torn.
+    val r = new Root(spark, indexPath)
+    val audit = Incremental.withRootLease(r.conf, r.fs, r.dir, IvfPq.what, "drift-auditor") {
+      IvfPqIndex.recallAudit(read(IvfPq, spark, indexPath),
+        queries, corpus, idCol, vecCol, k, nprobe).head()
+    }
+    // the post-audit guard: an empty served∩corpus truth ALSO yields
+    // n_truth 0 (same vacuous-audit failure as an empty query sample,
+    // but only detectable after the audit has run over the corpus)
+    require(audit.getAs[Long]("n_truth") > 0L,
+      s"rebuildIfDrifted audit at $indexPath measured an EMPTY ground " +
+        "truth (n_truth=0): the query sample produced no brute-force " +
+        "neighbors over the served ids — fix the audit inputs; refusing " +
+        "to gate a rebuild on a vacuous recall")
+    val recall = audit.getAs[Double]("recall_at_k")
+    if (recall >= minRecall) (recall, None)
+    else (recall, Some(rebuildIvfPqMaintained(spark, indexPath, destPath,
+      corpus, idCol, vecCol, nlist, numSubspaces, numCodes, lloydIters,
+      residual, trainSampleMod)))
   }
 }
