@@ -41,24 +41,27 @@ private[graft] object Concurrent {
     * created it, so each thunk runs under the CALLER's local properties
     * (job group, description, call site, root SQL execution) and active
     * session, captured at the call ([[SQLExecution.withThreadLocalCaptured]],
-    * which restores the pool thread's own afterwards); without an active
-    * session there is nothing to capture.
+    * which restores the pool thread's own afterwards); with no session at
+    * all there is nothing to capture.
     */
   def awaitAll[T](
       tasks: Seq[() => T],
       onAbort: T => Unit = (_: T) => ()): Seq[T] =
     if (tasks.lengthCompare(1) <= 0) tasks.map(_.apply())
     else {
-      val session = SparkSession.getActiveSession
+      val session = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
         .map(_.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
       val futures = tasks.map { t =>
-        session.fold(java.util.concurrent.CompletableFuture.supplyAsync(() => t(), Pool))(
-          s => SQLExecution.withThreadLocalCaptured(s, Pool)(t()))
+        // a thunk's failure is returned, not thrown, so the pool thread's
+        // own properties are restored after it too
+        val run = () => scala.util.Try(t())
+        session.fold(java.util.concurrent.CompletableFuture.supplyAsync(() => run(), Pool))(
+          s => SQLExecution.withThreadLocalCaptured(s, Pool)(run()))
       }
       // the wait is managed blocking too: a nested call on a pool thread
       // lets the pool compensate rather than starve its own tasks
       val settled = futures.map(f => scala.util.Try(blocking(
-        try f.get() catch { case e: ExecutionException => throw e.getCause })))
+        try f.get() catch { case e: ExecutionException => throw e.getCause })).flatten)
       val failures = settled.collect { case scala.util.Failure(e) => e }
       failures.headOption.foreach { first =>
         failures.drop(1).foreach(first.addSuppressed)
