@@ -47,7 +47,7 @@ class MaintainedJobBudgetSpec extends AnyFunSuite {
       read: () => Unit): Unit = {
     val bodies: Seq[() => Unit] = Seq(() => maintain(0), () => maintain(1),
       () => erase(0), compact, () => maintain(2), () => erase(1), read)
-    val counts = Steps.zip(bodies).zipWithIndex.map { case ((name, body), i) =>
+    val counts = bodies.zipWithIndex.map { case (body, i) =>
       JobCount.of(s"budget-$root-$i")(body())
     }
     val expected = budget.zip(saved).map { case (b, s) => b - s }
