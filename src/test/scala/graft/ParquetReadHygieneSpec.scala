@@ -1,8 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,25 +15,36 @@ import org.scalatest.funsuite.AnyFunSuite
   * keeps its read.
   */
 class ParquetReadHygieneSpec extends AnyFunSuite {
-  private val Root = Paths.get("src/main/scala")
-  private val Allowed = Set("graft/sources/Parquet.scala", "graft/Bench.scala")
   private val BareRead = """read\.parquet\(|\.read[ \t]*\r?\n\s*\.parquet\(""".r
 
   test("no program source reads parquet without a schema outside the helper") {
-    val files = Files.walk(Root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala")).toSeq
-    assert(files.size > 50, s"scanned only ${files.size} sources under $Root")
-    val offenders = files.flatMap { p =>
-      val rel = Root.relativize(p).toString.replace('\\', '/')
-      if (Allowed(rel)) Nil
-      else {
-        val src = new String(Files.readAllBytes(p), "UTF-8")
-        BareRead.findAllMatchIn(src).map { m =>
-          s"$rel:${src.substring(0, m.start).count(_ == '\n') + 1}"
-        }.toSeq
-      }
-    }
+    val offenders = ParquetReadHygieneSpec.offenders(Seq(Paths.get("src/main/scala")),
+      Set("graft/sources/Parquet.scala", "graft/Bench.scala"), BareRead)
     assert(offenders.isEmpty,
       s"read through graft.sources.Parquet.read instead:\n${offenders.mkString("\n")}")
   }
+}
+
+object ParquetReadHygieneSpec {
+  import org.scalatest.Assertions._
+
+  /** `file:line` of every match of `pattern` in the Scala sources under
+    * `roots`, outside the `allowed` paths (relative to their root).
+    */
+  def offenders(roots: Seq[Path], allowed: Set[String], pattern: Regex): Seq[String] =
+    roots.flatMap { root =>
+      val files = Files.walk(root).iterator().asScala
+        .filter(p => p.toString.endsWith(".scala")).toSeq
+      assert(files.size > 50, s"scanned only ${files.size} sources under $root")
+      files.flatMap { p =>
+        val rel = root.relativize(p).toString.replace('\\', '/')
+        if (allowed(rel)) Nil
+        else {
+          val src = new String(Files.readAllBytes(p), "UTF-8")
+          pattern.findAllMatchIn(src).map { m =>
+            s"$root/$rel:${src.substring(0, m.start).count(_ == '\n') + 1}"
+          }.toSeq
+        }
+      }
+    }
 }
