@@ -123,7 +123,7 @@ private[streaming] object IndexCodecs {
       * the keys removes exactly the rows one with the journal ids removes,
       * since victim ids with no postings match no row.
       */
-    override def rewrite(r: Root, done: Seq[Long], legs: Seq[String], k: DataFrame): Unit = {
+    override def rewrite(r: Root, done: Seq[Long], affected: Seq[(String, Long, Long)], k: DataFrame): Unit = {
       val targetGen = latestSnapGen(r, done.last) + 1
       Parquet.read(r.spark,
           Bm25Postings.legs(r.fs, r.dir, done).filter(r.fs.exists).map(_.toString): _*)
@@ -131,7 +131,7 @@ private[streaming] object IndexCodecs {
         .join(k, Seq("id"), "left_semi")
         .select(lit(targetGen).as("gen"), col("id"), col("term"), col("dl"))
         .write.mode("overwrite").parquet(journalPath(r).toString)
-      applyJournal(r, done, Parquet.read(r.spark, journalPath(r).toString), legs, k, targetGen)
+      applyJournal(r, done, Parquet.read(r.spark, journalPath(r).toString), affected.map(_._1), k, targetGen)
     }
 
     /** The journal-driven half of the erase: idempotent postings rewrites
@@ -364,11 +364,16 @@ private[streaming] object IndexCodecs {
 
     /** A leg that lost ALL rows rewrites to a plain schema-bearing empty
       * file: a partitioned write of zero rows leaves an unreadable dir.
+      * Under the lease the probe's counts are exact, so a leg empties
+      * exactly when all its rows are victims.
       */
-    override def rewrite(r: Root, done: Seq[Long], legs: Seq[String], k: DataFrame): Unit =
-      rewriteLegs(r.dir, legs, members, k, idCol)(readLeg(r)) { (retained, p) =>
-        if (retained.isEmpty) super.write(retained, p) else write(retained, p)
+    override def rewrite(r: Root, done: Seq[Long], affected: Seq[(String, Long, Long)], k: DataFrame): Unit = {
+      val emptied = affected.collect { case (leg, before, erased) if before == erased =>
+        new Path(r.dir, IvfLists.rel(leg)) }.toSet
+      rewriteLegs(r.dir, affected.map(_._1), members, k, idCol)(readLeg(r)) { (retained, p) =>
+        if (emptied(p)) super.write(retained, p) else write(retained, p)
       }
+    }
 
     /** `leg` names the dir ("lists", "lists_batch_<id>", "lists_compact_<gen>"). */
     override def ledger(spark: SparkSession, affected: Seq[(String, Long, Long)]): DataFrame = {

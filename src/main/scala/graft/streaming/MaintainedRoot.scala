@@ -570,9 +570,11 @@ private[graft] object MaintainedRoot {
           members.last.legs(r.fs, r.dir, done).filter(r.fs.exists).map(_.toString): _*)
         .select(idCol)
 
-    /** Removes the victim keys `k` from every victim-bearing leg. */
-    def rewrite(r: Root, done: Seq[Long], legs: Seq[String], k: DataFrame): Unit =
-      rewriteLegs(r.dir, legs, members, k, idCol)(readLeg(r))(write)
+    /** Removes the victim keys `k` from every victim-bearing leg, given
+      * as the probe's (leg, n_before, n_erased).
+      */
+    def rewrite(r: Root, done: Seq[Long], affected: Seq[(String, Long, Long)], k: DataFrame): Unit =
+      rewriteLegs(r.dir, affected.map(_._1), members, k, idCol)(readLeg(r))(write)
 
     /** The per-leg erase ledger (batch_id, n_before, n_after, n_erased): a
       * batch leg reports its batch id, the compacted generation its gen
@@ -643,7 +645,7 @@ private[graft] object MaintainedRoot {
       val k = ids.toDF(c.idCol).distinct().localCheckpoint()
       c.beforeErase(r, done)
       val affected = victimLegProbe(c.probeRows(r, done), k, c.idCol, c.distinctPerDoc)
-      if (affected.nonEmpty) c.rewrite(r, done, affected.map(_._1), k)
+      if (affected.nonEmpty) c.rewrite(r, done, affected, k)
       c.ledger(spark, affected)
     }
   }

@@ -538,6 +538,37 @@ class CompactionSpec extends AnyFunSuite {
       "erased vectors must never resurface in the serve")
   }
 
+  test("eraseIvfPqMaintained: a streamed leg that loses every row rewrites to " +
+      "a plain empty leg; the other rows still serve and a repeat erase is a no-op") {
+    val emb = Tables.embeddings(spark, GraftSpark.Sf0001)
+    val tmp = Files.createTempDirectory("graft_eivf_empty").toString
+    graft.ops.IvfPqIndex.write(
+      graft.ops.IvfPqIndex.build(emb.filter(col("vec_id") % 10 =!= 0), "vec_id", "embedding",
+        nlist = 4, numSubspaces = 8, numCodes = 16), s"$tmp/index")
+    new java.io.File(s"$tmp/src").mkdirs()
+    val delta = emb.filter(col("vec_id") % 10 === 0)
+    // one source file per maintain: batch 0 holds exactly the victims
+    Seq(col("vec_id") % 20 === 0, col("vec_id") % 20 =!= 0).zipWithIndex.foreach { case (c, i) =>
+      stage(s"$tmp/src", delta.filter(c), s"p$i")
+      Incremental.streamIvfPqMaintain(spark, s"$tmp/src", s"$tmp/index", "vec_id", "embedding",
+        checkpointPath = s"$tmp/ckpt", maxFilesPerTrigger = 1)
+    }
+    def listIds() = Incremental.readIvfPqMaintained(spark, s"$tmp/index")
+      .lists.select("n_id").collect().map(_.getLong(0)).toSet
+    val before = listIds()
+    val victims = delta.filter(col("vec_id") % 20 === 0).select("vec_id")
+    val n = victims.count()
+    assert(n > 0)
+    val ledger = Incremental.eraseIvfPqMaintained(spark, s"$tmp/index", victims).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(ledger == Seq(("lists_batch_0", n, 0L, n)),
+      s"only the all-victim leg rewrites, to n_after = 0: $ledger")
+    val victimIds = victims.collect().map(_.getLong(0)).toSet
+    assert(listIds() == before -- victimIds && listIds().size == before.size - n,
+      "the emptied leg must read as empty and every other row still serve")
+    assert(Incremental.eraseIvfPqMaintained(spark, s"$tmp/index", victims).isEmpty)
+  }
+
   test("single-pass victim probe: erase job count does not grow with the " +
       "number of committed batch dirs") {
     val docs = Tables.documents(spark, GraftSpark.Sf0001)
