@@ -308,8 +308,8 @@ object Sampling {
     * sum and the offsets roll-up are two consumers of `bucketed`); at
     * runtime AQE's exchange reuse collapses them — the final adaptive
     * plan carries a `ReusedExchange` for the offsets leg (verified via
-    * `Plans --executed`), so the input is scanned and range-shuffled
-    * ONCE.
+    * `graft.tools.Run final-plan`), so the input is scanned and
+    * range-shuffled ONCE.
     */
   private def bucketedPrefixSum(
       df: DataFrame,
