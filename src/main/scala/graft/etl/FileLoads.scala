@@ -1,6 +1,8 @@
 package graft.etl
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 import graft.sources.Parquet
@@ -67,74 +69,82 @@ object FileLoads {
   def readWindow(spark: SparkSession, path: String, fromDate: String): DataFrame =
     Parquet.read(spark, path).filter(col("p_date") >= fromDate)
 
-  /** Compact a partitioned parquet target's small files: rewrite each
-    * `p_date` partition into `ceil(bytes / targetFileBytes)` files, sorted
-    * within files by `sortCols` so parquet row-group min/max statistics
-    * support data skipping on those columns.
+  /** Compact a partitioned parquet target's small files in place: every
+    * `p_date` partition holding more `.parquet` files than
+    * `want = ceil(bytes / targetFileBytes)` is rewritten into at most
+    * `want` files; healthy partitions are never read or touched.
     *
     * Incremental appends (daily micro-batches, streaming sinks) accrete
     * one-file-per-task little files; at 100 TB the resulting
-    * open/footer-read overhead dominates scans. Compaction here is
-    * per-partition dynamic overwrite — ONLY partitions whose file count
-    * exceeds their target are rewritten, history stays untouched, and the
-    * job is a read+write of those partitions with no shuffle beyond the
-    * `repartition` that sets output file count.
+    * open/footer-read overhead dominates scans. The plan comes from a
+    * Hadoop `FileSystem` listing of the root and its partition dirs, so
+    * the compactor runs on any Hadoop store. ONE Spark write rewrites every fragmented partition into
+    * a hidden staging dir, its rows hash-partitioned on `p_date` plus a
+    * salt below that partition's `want`, so the job count does not grow
+    * with the number of fragmented partitions. Each partition is then
+    * published by a swap (live → `.compact_old_<part>`, staged → live,
+    * backup deleted).
     *
-    * Returns the (partition → files before/after) plan it executed.
+    * Crash recovery runs first: a backup whose live partition is missing
+    * died between the two swap renames and is restored; a backup whose
+    * live partition exists died after the publish and is deleted; the
+    * staging dir of a failed run is deleted. A rerun after a crash at any
+    * point therefore leaves the same rows in healthy partitions, provided
+    * a directory rename is atomic (local disk, HDFS).
+    *
+    * Files whose size is mostly footer (KB-sized files) shrink when merged,
+    * so a partition split into `want ≥ 2` files can plan fewer on the next
+    * pass; its file count then falls again, so repeated passes converge.
+    *
+    * Returns the (partition → files before, `want`) plan it executed.
     */
-  def compact(
-      spark: SparkSession,
-      path: String,
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      sortCols: Seq[String] = Nil): Map[String, (Int, Int)] = {
-    val root = new java.io.File(path)
-    // crash recovery: a prior run that died mid-swap leaves the partition
-    // staged as .compact_old_<part> with the live dir absent — restore it
-    // before planning (the tmp dir, if any, is incomplete and removed)
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(".compact_old_"))
-      .foreach { bak =>
-        val live = new java.io.File(root, bak.getName.stripPrefix(".compact_old_"))
-        if (!live.exists()) {
-          if (!bak.renameTo(live)) sys.error(s"compact: cannot restore ${bak.getName}")
-        }
+  def compact(spark: SparkSession, path: String,
+      targetFileBytes: Long = 128L * 1024 * 1024): Map[String, (Int, Int)] = {
+    require(targetFileBytes >= 1, s"targetFileBytes must be >= 1: $targetFileBytes")
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(new Path(path))
+    val staging = new Path(root, ".compact_staging")
+    def backup(part: String) = new Path(root, s".compact_old_$part")
+    // Hadoop's rename moves the source INTO an existing target directory
+    // instead of failing, so the target must be checked absent first
+    def move(from: Path, to: Path): Unit =
+      if (fs.exists(to) || !fs.rename(from, to)) sys.error(s"compact: cannot move $from to $to")
+    fs.listStatus(root).map(_.getPath.getName).filter(_.startsWith(".compact_old_")).foreach { b =>
+      val live = new Path(root, b.stripPrefix(".compact_old_"))
+      if (fs.exists(live)) fs.delete(new Path(root, b), true) else move(new Path(root, b), live)
+    }
+    fs.delete(staging, true)
+    // listStatus, not listFiles: a LocatedFileStatus loads each file's
+    // permissions, one `stat` process per file on a local disk without
+    // Hadoop's native library
+    val parts = fs.listStatus(root)
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("p_date=")).map(_.getPath)
+    val plan = fs.listStatus(parts).filter(_.getPath.getName.endsWith(".parquet"))
+      .groupBy(_.getPath.getParent.getName)
+      .map { case (part, fl) =>
+        val want = math.ceil(fl.map(_.getLen).sum.toDouble / targetFileBytes).toInt
+        part -> (fl.length, math.max(1, want))
       }
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(".compact_tmp_"))
-      .foreach { tmp =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-        }
-        rm(tmp)
+      .filter { case (_, (n, want)) => n > want }
+    if (plan.nonEmpty) {
+      // a null p_date reads back from (and writes to) the default partition dir
+      val value = coalesce(col("p_date").cast("string"),
+        lit(ExternalCatalogUtils.DEFAULT_PARTITION_NAME))
+      val wants = plan.map { case (part, (_, want)) => part.stripPrefix("p_date=") -> want }
+      // the salt is a shuffled column of its own, so it is left out when
+      // every partition wants one file
+      val salt = if (wants.values.forall(_ == 1)) Nil
+        else Seq(pmod(monotonically_increasing_id(), element_at(typedLit(wants), value)))
+      Parquet.read(spark, root.toString).filter(value.isin(wants.keys.toSeq: _*))
+        .repartition(col("p_date") +: salt: _*)
+        .write.partitionBy("p_date").parquet(staging.toString)
+      plan.keys.foreach { part =>
+        val live = new Path(root, part)
+        move(live, backup(part))
+        move(new Path(staging, part), live)
+        fs.delete(backup(part), true)
       }
-    val parts = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("p_date="))
-    val plan = parts.flatMap { p =>
-      val files = p.listFiles().filter(f => f.getName.endsWith(".parquet"))
-      val bytes = files.map(_.length()).sum
-      val want = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-      if (files.length > want) Some(p.getName -> (files.length, want)) else None
-    }.toMap
-    plan.foreach { case (part, (_, want)) =>
-      val partPath = s"$path/$part"
-      val df = Parquet.read(spark, partPath)
-      val laid =
-        if (sortCols.nonEmpty) df.repartition(want).sortWithinPartitions(sortCols.map(col): _*)
-        else df.coalesce(want)
-      // write to a sibling temp dir, then atomically swap the partition in
-      val tmp = s"$path/.compact_tmp_$part"
-      laid.write.mode(SaveMode.Overwrite).parquet(tmp)
-      val dst = new java.io.File(partPath)
-      val bak = new java.io.File(s"$path/.compact_old_$part")
-      if (!dst.renameTo(bak)) sys.error(s"compact: cannot stage $partPath")
-      if (!new java.io.File(tmp).renameTo(dst)) {
-        bak.renameTo(dst) // roll back
-        sys.error(s"compact: cannot publish $tmp")
-      }
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-      }
-      rm(bak)
+      fs.delete(staging, true)
     }
     plan
   }
@@ -204,10 +214,10 @@ object FileLoads {
     // overwrite never touched them; delete their directories explicitly
     val survived = retained.select(col("p_date").cast("string")).distinct()
       .collect().map(_.getString(0)).toSet
-    val rootPath = new org.apache.hadoop.fs.Path(path)
+    val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     affected.filterNot(survived).foreach { d =>
-      fs.delete(new org.apache.hadoop.fs.Path(rootPath, s"p_date=$d"), true)
+      fs.delete(new Path(rootPath, s"p_date=$d"), true)
     }
     // the erase-everything case: no partition directory remains, so a
     // parquet read of the target would fail schema inference — every

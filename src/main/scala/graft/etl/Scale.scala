@@ -3,8 +3,6 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Parquet
-
 /** Scale utilities: skew salting and bucketed co-located joins — the
   * shuffle-management patterns a 100 TB deployment leans on (builder
   * mandate; none exist in the reference, whose "parallelism" is one cursor,
@@ -183,33 +181,6 @@ object Scale {
       shiftleft(shiftright(a, i).bitwiseAND(lit(1L)), 2 * i) +
         shiftleft(shiftright(b, i).bitwiseAND(lit(1L)), 2 * i + 1)
     }.reduce(_ + _)
-  }
-
-  /** Small-files compaction: rewrite a parquet dataset into
-    * `ceil(bytes / targetBytes)` files (Hadoop `FileSystem` content
-    * summary → explicit repartition → overwrite of `outPath`). The
-    * operational answer to streaming/append sinks accumulating thousands
-    * of KB-sized files — at 100 TB, scan parallelism and NameNode/
-    * object-store listing cost are both governed by file count, and a
-    * compaction pass is the standing maintenance job. Returns the file
-    * count written. Refuses `outPath == path`: parquet cannot overwrite
-    * its own input mid-scan; compact to a new location and swap
-    * atomically (rename or table-location flip).
-    */
-  def compact(
-      spark: SparkSession,
-      path: String,
-      outPath: String,
-      targetBytes: Long = 128L << 20): Long = {
-    require(targetBytes >= 1, s"targetBytes must be >= 1: $targetBytes")
-    require(outPath != path, "compact(outPath) must differ from the input path")
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(p).getLength
-    val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    Parquet.read(spark, path).repartition(n)
-      .write.mode(SaveMode.Overwrite).parquet(outPath)
-    n.toLong
   }
 
   /** Z-ordered parquet write: range-partition and sort by the interleaved

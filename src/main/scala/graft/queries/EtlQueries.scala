@@ -397,28 +397,33 @@ object EtlQueries {
         .orderBy("event_type")),
 
 
+    // small-files compaction round-trip: write 16 fragments into one
+    // `p_date` partition (the streaming-sink shape), compact them in place
+    // (FileLoads.compact; plan, job count and crash recovery spec'd in
+    // FileLoadsSpec), and face the oracle with the data read back —
+    // compaction must be layout-only, never data-changing. The one-row
+    // aggregate is checkpointed so the scratch dir is deleted NOW
+    "layout_compact" -> ((s, dir) => {
+      val tmp = java.nio.file.Files.createTempDirectory("graft_compact_q").toString
+      Tables.lineitem(s, dir).select("l_orderkey", "l_linenumber", "l_quantity")
+        .repartition(16).write.parquet(tmp + "/t/p_date=2000-01-01")
+      FileLoads.compact(s, tmp + "/t", targetFileBytes = 8L << 20)
+      val agg = Parquet.read(s, tmp + "/t")
+        .groupBy().agg(count(lit(1)).as("n_rows"),
+          countDistinct("l_orderkey").as("n_orders"),
+          round(sum("l_quantity"), 4).as("sum_qty"))
+        .localCheckpoint()
+      val p = new org.apache.hadoop.fs.Path(tmp)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      agg
+    }),
+
+
     // Z-order (Morton) layout exhibit: interleave two dimension columns
     // and aggregate per z-range bucket — every bucket's min–max box is
     // tight in BOTH dimensions, which is exactly why range-partitioning
     // by z (Scale.writeZOrdered) lets parquet row-group stats prune scans
     // filtered on either column
-    // small-files compaction round-trip: write a fragmented copy (the
-    // streaming-sink shape), compact it to content-sized files
-    // (Scale.compact; file-count math spec'd in ScaleSpec), and face the
-    // oracle with the data read back — compaction must be layout-only,
-    // never data-changing
-    "layout_compact" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_compact_q").toString
-      Tables.lineitem(s, dir).select("l_orderkey", "l_linenumber", "l_quantity")
-        .repartition(16).write.mode("overwrite").parquet(tmp + "/frag")
-      graft.etl.Scale.compact(s, tmp + "/frag", tmp + "/out", targetBytes = 8L << 20)
-      Parquet.read(s, tmp + "/out")
-        .groupBy().agg(count(lit(1)).as("n_rows"),
-          countDistinct("l_orderkey").as("n_orders"),
-          round(sum("l_quantity"), 4).as("sum_qty"))
-    }),
-
-
     "layout_zorder" -> ((s, dir) =>
       Tables.lineitem(s, dir)
         .select(pmod(col("l_orderkey"), lit(1024)).as("x"),

@@ -1,12 +1,51 @@
 package graft.etl
 
+import java.net.URI
 import java.nio.file.Files
 import java.time.LocalDate
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSpark
+import graft.{GraftSpark, JobCount}
+
+/** A local file system that crashes at its `crashAt`-th `rename` or
+  * `delete` call and at every later one, as a process that died there
+  * makes no further change. Registered as `fs.faulty.impl`, the seam
+  * `LeaseSpec`'s `MockObjectStoreFs` uses. Its statuses carry default
+  * permissions: the local ones load theirs through a `file:` URI.
+  */
+class FaultyFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("faulty:///")
+
+  override def getFileStatus(f: Path): FileStatus = plain(super.getFileStatus(f))
+
+  override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(plain)
+
+  private def plain(s: FileStatus): FileStatus =
+    new FileStatus(s.getLen, s.isDirectory, 1, s.getBlockSize, s.getModificationTime, s.getPath)
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    FaultyFs.step(); super.rename(src, dst)
+  }
+
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    FaultyFs.step(); super.delete(p, recursive)
+  }
+}
+
+object FaultyFs {
+  val calls = new AtomicInteger
+  @volatile var crashAt: Int = Int.MaxValue
+
+  private def step(): Unit = {
+    val n = calls.incrementAndGet()
+    if (n >= crashAt) throw new java.io.IOException(s"injected crash at call $n")
+  }
+}
 
 class FileLoadsSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
@@ -137,21 +176,42 @@ class FileLoadsSpec extends AnyFunSuite {
     (0 until 10).foreach { i =>
       FileLoads.append(li.filter(col("l_orderkey") % 10 === i), "l_shipdate", dir)
     }
-    val before = spark.read.parquet(dir)
-    val beforeRows = before.collect().toSet
+    val beforeRows = spark.read.parquet(dir).collect().toSet
     val beforeFiles = partFiles(dir)
     assert(beforeFiles.values.exists(_ > 1), "fixture must start fragmented")
 
-    val plan = FileLoads.compact(spark, dir, targetFileBytes = 1024L * 1024 * 1024,
-      sortCols = Seq("l_orderkey"))
-    assert(plan.nonEmpty)
+    // the fixture's files hold about one row each and are mostly footer
+    // (about 3.1 KB), so a 4,000-byte target plans want = 4 for the two
+    // partitions of 5 files and leaves every other partition healthy
+    val small = 4000L
+    var splitPlan = Map.empty[String, (Int, Int)]
+    val splitJobs = JobCount.of("compact_small") {
+      splitPlan = FileLoads.compact(spark, dir, targetFileBytes = small)
+    }
+    assert(splitPlan.values.exists(_._2 >= 2), s"no partition plans want >= 2: $splitPlan")
+    val splitFiles = partFiles(dir)
+    splitPlan.foreach { case (part, (nBefore, want)) =>
+      assert(splitFiles(part) <= want && want < nBefore, s"$part: ${splitFiles(part)} files")
+    }
+    assert(FileLoads.compact(spark, dir, targetFileBytes = small).isEmpty)
+
+    var plan = Map.empty[String, (Int, Int)]
+    val jobs = JobCount.of("compact") {
+      plan = FileLoads.compact(spark, dir, targetFileBytes = 1024L * 1024 * 1024)
+    }
+    assert(plan.size > splitPlan.size)
+    // the same 3 jobs (the listing of the root's 1,374 partition dirs, the
+    // shuffle and the write) however many partitions are fragmented; one
+    // write per partition ran 444 jobs here
+    assert(splitJobs == 3 && jobs == 3, s"jobs: ${splitPlan.size} partitions $splitJobs, " +
+      s"${plan.size} partitions $jobs")
     val afterFiles = partFiles(dir)
-    plan.foreach { case (part, (nBefore, nAfter)) =>
-      assert(afterFiles(part) == nAfter && nAfter < nBefore)
+    plan.foreach { case (part, (nBefore, want)) =>
+      assert(afterFiles(part) == want && want < nBefore)
     }
     // untouched partitions keep their file layout
-    (beforeFiles.keySet -- plan.keySet).foreach { p =>
-      assert(afterFiles(p) == beforeFiles(p))
+    (splitFiles.keySet -- plan.keySet).foreach { p =>
+      assert(afterFiles(p) == splitFiles(p))
     }
     assert(spark.read.parquet(dir).collect().toSet == beforeRows)
     // idempotent: a second pass finds nothing to do
@@ -161,6 +221,79 @@ class FileLoadsSpec extends AnyFunSuite {
   private def partFiles(dir: String): Map[String, Int] =
     new java.io.File(dir).listFiles().filter(f => f.isDirectory && f.getName.startsWith("p_date="))
       .map(p => p.getName -> p.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+
+  /** Rows of `day` (null: a null date) appended as one file. */
+  private def appendDay(dir: String, day: String, keys: Long*): Unit = {
+    import spark.implicits._
+    FileLoads.append(keys.map(k => (k, Option(day).map(_ + " 01:00:00").orNull)).toDF("k", "ts")
+      .withColumn("ts", col("ts").cast("timestamp")).coalesce(1), "ts", dir)
+  }
+
+  private def keysOf(dir: String): Seq[Long] =
+    spark.read.parquet(dir).collect().map(_.getLong(0)).sorted.toSeq
+
+  test("compact deletes a backup left beside its published partition") {
+    // a crash after the publish rename, before or during the backup's
+    // delete, leaves the backup beside a live partition
+    val dir = Files.createTempDirectory("graft_stale").toString
+    appendDay(dir, "2024-01-01", 1L, 2L)
+    appendDay(dir, "2024-01-01", 3L, 4L)
+    val live = new java.io.File(dir, "p_date=2024-01-01")
+    val bak = new java.io.File(dir, ".compact_old_p_date=2024-01-01")
+    val f = live.listFiles().filter(_.getName.endsWith(".parquet")).head
+    bak.mkdirs()
+    Files.copy(f.toPath, new java.io.File(bak, f.getName).toPath)
+    assert(FileLoads.compact(spark, dir) == Map("p_date=2024-01-01" -> (2, 1)))
+    assert(!bak.exists, "stale backup left behind")
+    assert(partFiles(dir) == Map("p_date=2024-01-01" -> 1))
+    assert(keysOf(dir) == Seq(1L, 2L, 3L, 4L))
+  }
+
+  private val NullDate = "__HIVE_DEFAULT_PARTITION__"
+
+  test("compact: a crash at any rename or delete of its run, then a clean rerun, " +
+      "leaves the same rows in healthy partitions") {
+    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultyFs].getName)
+    // 3 partitions: two fragmented (2 files each), one of them the
+    // default partition that null dates write to, and one healthy
+    val fixture = Files.createTempDirectory("graft_crash").toString + "/t"
+    appendDay(fixture, "2024-01-01", 1L, 2L)
+    appendDay(fixture, null, 3L, 4L)
+    appendDay(fixture, "2024-01-01", 5L, 6L)
+    appendDay(fixture, null, 7L, 8L)
+    appendDay(fixture, "2024-01-03", 9L, 10L)
+    val keys = keysOf(fixture)
+    def copy(): String = {
+      val to = Files.createTempDirectory("graft_crash").resolve("t")
+      val from = java.nio.file.Paths.get(fixture)
+      Files.walk(from).forEach(p => Files.copy(p, to.resolve(from.relativize(p))))
+      to.toString
+    }
+    def check(dir: String, what: String): Unit = {
+      assert(keysOf(dir) == keys, what)
+      assert(partFiles(dir) == Map("p_date=2024-01-01" -> 1, s"p_date=$NullDate" -> 1,
+        "p_date=2024-01-03" -> 1), what)
+      assert(!new java.io.File(dir).list().exists(_.startsWith(".compact")), what)
+    }
+    val t0 = System.nanoTime
+    val clean = copy()
+    FaultyFs.calls.set(0)
+    assert(FileLoads.compact(spark, s"faulty://$clean").keySet ==
+      Set("p_date=2024-01-01", s"p_date=$NullDate"))
+    val n = FaultyFs.calls.get
+    check(clean, "clean run")
+    assert(n >= 7, s"$n renames and deletes") // 4 renames and 3 deletes of the publish alone
+    (1 to n).foreach { k =>
+      val dir = copy()
+      FaultyFs.calls.set(0)
+      FaultyFs.crashAt = k
+      try intercept[Exception](FileLoads.compact(spark, s"faulty://$dir"))
+      finally FaultyFs.crashAt = Int.MaxValue
+      FileLoads.compact(spark, s"faulty://$dir")
+      check(dir, s"crash at call $k of $n")
+    }
+    info(f"$n crash points in ${(System.nanoTime - t0) / 1e9}%.1f s")
+  }
 
   test("format breadth: orc/csv/json sinks round-trip the documents table") {
     val docs = graft.etl.Tables.documents(spark, GraftSpark.Sf0001)

@@ -67,21 +67,6 @@ class ScaleSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).count() == li.count())
   }
 
-  test("compact rewrites a many-file dataset to the computed file count, rows intact") {
-    val li = Tables.lineitem(spark, GraftSpark.Sf0001)
-    val src = java.nio.file.Files.createTempDirectory("graft_compact_src").toString
-    val dst = java.nio.file.Files.createTempDirectory("graft_compact_dst").toString + "/out"
-    li.repartition(32).write.mode("overwrite").parquet(src) // the small-files shape
-    val n = Scale.compact(spark, src, dst, targetBytes = 1L << 20)
-    val files = new java.io.File(dst).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(files == n)
-    assert(files < 32)
-    assert(spark.read.parquet(dst).count() == li.count())
-    // self-overwrite is refused
-    val e = intercept[IllegalArgumentException](Scale.compact(spark, src, src))
-    assert(e.getMessage.contains("differ"))
-  }
-
   test("skewReport surfaces the hot key with the salt factor that levels it") {
     import spark.implicits._
     // one key holds half the rows; 40 cold keys share the rest

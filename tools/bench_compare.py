@@ -1,14 +1,23 @@
 #!/usr/bin/env python3
-"""Compare a BENCH_LOCAL.json against a prior round's committed record.
+"""Compare a BENCH_LOCAL.json against a prior round's committed record,
+or diff the counters of two per-query layer records.
 
 Usage:
     python3 tools/bench_compare.py [current.json] [baseline.json]
     python3 tools/bench_compare.py BENCH_LOCAL.json <(git show <sha>:BENCH_LOCAL.json)
+    python3 tools/bench_compare.py --layers current baseline
 
 Defaults: current = ./BENCH_LOCAL.json, baseline = the last committed
 BENCH_LOCAL.json (git show HEAD:BENCH_LOCAL.json). Prints shared-set
 totals, the >2x regression list (the judge's exact check), and new/removed
 queries. Exit code 1 if any regression is found so it can gate a commit.
+
+--layers takes two layer records: a BENCH_LAYERS.json, or the output of
+`graft.tools.Run time` (one JSON run a line, sbt's `[info] ` prefix
+allowed). For every (query, run) in both it prints the construct and
+execute phases' job counts and shuffle bytes (read + write), baseline ->
+current, then lists every run whose total job count rose; exit code 1 if
+any did.
 """
 import json, subprocess, sys
 
@@ -19,7 +28,44 @@ def load(path):
     return json.load(open(path))
 
 
+def load_runs(path):
+    text = open(path).read()
+    try:
+        return json.loads(text)["runs"]
+    except ValueError:
+        return [json.loads(line[line.index("{"):]) for line in text.splitlines()
+                if '{"query"' in line]
+
+
+def layers(cur_path, base_path):
+    def counters(r):
+        return {ph: (r[ph]["jobs"],
+                     r[ph]["shuffle_read_bytes"] + r[ph]["shuffle_write_bytes"])
+                for ph in ("construct", "execute")}
+    cur, base = ({(r["query"], r["run"]): counters(r)
+                  for r in load_runs(p) if "error" not in r}
+                 for p in (cur_path, base_path))
+    shared = sorted(set(cur) & set(base))
+    print(f"{len(shared)} runs in both; construct and execute: "
+          f"jobs and shuffle bytes, baseline -> current")
+    rose = []
+    for key in shared:
+        cells = []
+        for ph in ("construct", "execute"):
+            (bj, bs), (cj, cs) = base[key][ph], cur[key][ph]
+            cells.append(f"{ph} jobs {bj} -> {cj} ({cj - bj:+d}), "
+                         f"shuffle {bs:,} -> {cs:,} ({cs - bs:+,d})")
+        print(f"  {key[0]} {key[1]}: " + "; ".join(cells))
+        total = [sum(x[ph][0] for ph in x) for x in (base[key], cur[key])]
+        if total[1] > total[0]:
+            rose.append(f"{key[0]} {key[1]} ({total[0]} -> {total[1]})")
+    print("jobs rose: " + (", ".join(rose) if rose else "none"))
+    return 1 if rose else 0
+
+
 def main(argv):
+    if len(argv) > 1 and argv[1] == "--layers":
+        return layers(argv[2], argv[3])
     cur_path = argv[1] if len(argv) > 1 else "BENCH_LOCAL.json"
     if len(argv) > 2:
         base = load(argv[2])
