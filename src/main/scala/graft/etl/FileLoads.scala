@@ -78,10 +78,12 @@ object FileLoads {
     * one-file-per-task little files; at 100 TB the resulting
     * open/footer-read overhead dominates scans. The plan comes from a
     * Hadoop `FileSystem` listing of the root and its partition dirs, so
-    * the compactor runs on any Hadoop store. ONE Spark write rewrites every fragmented partition into
-    * a hidden staging dir, its rows hash-partitioned on `p_date` plus a
-    * salt below that partition's `want`, so the job count does not grow
-    * with the number of fragmented partitions. Each partition is then
+    * the compactor runs on any Hadoop store, and Spark lists only the
+    * fragmented partition dirs it reads. ONE Spark write rewrites every
+    * fragmented partition into a hidden staging dir, its rows
+    * hash-partitioned on `p_date` plus a salt below that partition's
+    * `want`, so the job count does not grow with the number of
+    * fragmented partitions. Each partition is then
     * published by a swap (live → `.compact_old_<part>`, staged → live,
     * backup deleted).
     *
@@ -135,7 +137,8 @@ object FileLoads {
       // every partition wants one file
       val salt = if (wants.values.forall(_ == 1)) Nil
         else Seq(pmod(monotonically_increasing_id(), element_at(typedLit(wants), value)))
-      Parquet.read(spark, root.toString).filter(value.isin(wants.keys.toSeq: _*))
+      Parquet.readPartitions(spark, root.toString,
+          plan.keys.toSeq.sorted.map(new Path(root, _).toString): _*)
         .repartition(col("p_date") +: salt: _*)
         .write.partitionBy("p_date").parquet(staging.toString)
       plan.keys.foreach { part =>

@@ -1,8 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnInterop
+import org.apache.spark.sql.types.{ArrayType, MapType}
 
 import graft.sources.Parquet
 
@@ -190,30 +194,39 @@ object Bm25Index {
     (newTerms, newStats)
   }
 
-  /** Query batches with up to this many distinct terms push them into the
-    * postings scan and the term dictionary as one literal `In` predicate
-    * (real parquet `PushedFilters` → footer-stat file skipping against the
-    * term-range layout [[write]] produced). The terms come from a collect
-    * of at most this many + 1 query rows, deduplicated on the driver; only
-    * a batch with more rows than this pays a distinct over its terms. A
-    * distributed batch with more rows than this thus runs two collects:
-    * the row-limited one (a `CollectLimit`, which may launch several
-    * incremental scan jobs) and then the distinct one; no benchmark
+  /** Query batches of up to this many rows serve from literals: the batch
+    * rows are collected (no Spark job over a local batch), their distinct
+    * terms go into the postings scan as one literal `In` predicate (real
+    * parquet `PushedFilters` → footer-stat file skipping against the
+    * term-range layout [[write]] produced), and ONE bounded job collects
+    * the `In`-filtered dictionary rows with the 1-row stats. Both fold
+    * into the plan as literals, so the serve has no broadcast exchange
+    * and no driver-built hash relation. A literal map lookup scans the
+    * map's keys linearly, once per postings row read, so this bound also
+    * caps that cost.
+    *
+    * A batch of more rows keeps the join path, the only one that bounds
+    * driver memory: a collect of at most this many + 1 of its distinct
+    * terms (a distinct over the batch, then a `CollectLimit`, which may
+    * launch several incremental scan jobs), the same literal `In` when
+    * they fit, and broadcast joins with the filtered dictionary and the
+    * batch; with more distinct terms, broadcast semi-joins, which still
+    * never scan corpus text but read all postings files. No benchmark
     * workload sends such a batch, so that path's cost is unmeasured.
-    * Batches with more distinct terms fall back to broadcast semi-joins,
-    * which still never scan corpus text but read all postings files.
     */
   val MaxPushdownTerms = 1000
 
   /** BM25 top-k per query from the index alone: (q_id, rank, id, score).
     * The query's distinct terms — bounded by the query batch, not the
-    * corpus — prune the postings read and the term dictionary (see
-    * [[MaxPushdownTerms]]); a null term matches nothing. df/stats
-    * broadcast into the candidate rows, one (q_id, id) aggregate, one
-    * per-query top-k window over candidates only. A local query batch
-    * (the serving shape) is collected with no Spark job and never
-    * aggregated or shuffled: constructing the serve runs only the stats
-    * collect.
+    * corpus — prune the postings read (see [[MaxPushdownTerms]]); a null
+    * term matches nothing, and a duplicated query row or a null `q_id`
+    * scores as in [[TextAnalysis.bm25TopK]]. A batch of at most
+    * [[MaxPushdownTerms]] rows is served with no broadcast: its rows and
+    * the queried dictionary rows become literal maps (`term → df`,
+    * `term → q_ids`), and the stats literals, so constructing the serve
+    * runs only the one bounded dictionary-and-stats collect (plus the
+    * row collect of a distributed batch). Then one (q_id, id) aggregate and
+    * one per-query top-k window over candidates only.
     */
   def topK(
       index: Bm25Index,
@@ -226,31 +239,15 @@ object Bm25Index {
     require(k >= 1, s"k must be >= 1: $k")
     require(k1 > 0 && b >= 0 && b <= 1, s"bad BM25 params: k1=$k1 b=$b")
     val q = queries.select(col(qIdCol).as("q_id"), col(qTermCol).as("term"))
-    val qTerms = q.select("term").distinct()
     // query-batch-sized collect (the one bounded-by-construction collect
     // family this repo allows): a literal In is what reaches the parquet
     // footer as a pushed filter; a semi-join would not. Limit and Project
     // fold into a local batch, so collecting its rows runs no job
-    val rows = q.select("term").limit(MaxPushdownTerms + 1).collect()
-    val distinctTerms = (if (rows.length <= MaxPushdownTerms) rows
-      else qTerms.limit(MaxPushdownTerms + 1).collect()).map(_.getString(0)).distinct
-    val (pruned, queriedTerms) =
-      if (distinctTerms.length <= MaxPushdownTerms) {
-        val inTerms = col("term").isin(distinctTerms.filter(_ != null).sorted.toIndexedSeq: _*)
-        (index.postings.filter(inTerms), index.terms.filter(inTerms))
-      } else
-        (index.postings.join(broadcast(qTerms), Seq("term"), "left_semi"),
-          index.terms.join(qTerms, Seq("term"), "left_semi"))
-    // the 1-row stats frame folds in as LITERALS via a provably-bounded
-    // collect (the index-format contract: stats IS one row — same
-    // bounded-collect family as the query-term pushdown above), so a
-    // serve plan carries ZERO nested-loop joins: every remaining join is
-    // an equi-join or a broadcast of query-batch-sized frames
-    val st = index.stats.select(col("n"), col("avgdl")).head()
-    val (n, avgdl) = (st.getDouble(0), st.getDouble(1))
-    val scored = pruned
-      .join(broadcast(queriedTerms), Seq("term"))
-      .join(broadcast(q), Seq("term"))
+    val rows = q.limit(MaxPushdownTerms + 1).collect()
+    val (candidates, n, avgdl) =
+      if (rows.length <= MaxPushdownTerms) literalCandidates(index, q, rows)
+      else joinedCandidates(index, q)
+    val scored = candidates
       .withColumn("__idf",
         log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5)))
       .withColumn("__sc",
@@ -264,6 +261,63 @@ object Bm25Index {
       .select(col("q_id"), col("rank").cast("bigint").as("rank"),
         col("id"), col("score"))
   }
+
+  /** The candidate rows (postings with `df` and `q_id`) of a batch whose
+    * `rows` were all collected, plus (n, avgdl). The `In`-filtered
+    * dictionary rows and the 1-row stats (the index-format contract:
+    * one dictionary row per term, stats IS one row) come back in one
+    * union collect, bounded by the batch's distinct terms. The `df` map
+    * lookup with its null filter is the inner join with the dictionary;
+    * exploding the `term → q_ids` map (duplicate rows and null q_ids
+    * kept, null terms dropped) is the inner join with the batch.
+    */
+  private def literalCandidates(
+      index: Bm25Index,
+      q: DataFrame,
+      rows: Array[Row]): (DataFrame, Double, Double) = {
+    val byTerm = rows.filter(!_.isNullAt(1)).groupBy(_.getString(1))
+      .map { case (t, rs) => t -> rs.map(_.get(0)).toSeq }
+    val inTerms = col("term").isin(byTerm.keys.toSeq.sorted: _*)
+    val side = index.terms.filter(inTerms).select("term", "df")
+      .unionByName(index.stats.select("n", "avgdl"), allowMissingColumns = true)
+      .collect()
+    val (dict, stats) = side.partition(!_.isNullAt(0))
+    val df = dict.map(r => r.get(0) -> r.get(1)).toMap
+    require(df.size == dict.length, "a BM25 term dictionary holds one row per term")
+    val st = stats.head
+    val termType = q.schema("term").dataType
+    val candidates = index.postings.filter(inTerms)
+      .withColumn("df", element_at(
+        literal(df, MapType(termType, index.terms.schema("df").dataType, false)), col("term")))
+      .filter(col("df").isNotNull)
+      .withColumn("q_id", explode(element_at(
+        literal(byTerm, MapType(termType, ArrayType(q.schema("q_id").dataType), false)),
+        col("term"))))
+    (candidates, st.getDouble(2), st.getDouble(3))
+  }
+
+  /** The candidate rows of a batch of more than [[MaxPushdownTerms]]
+    * rows, joined with broadcasts of the pruned dictionary and the batch,
+    * plus (n, avgdl) from a collect of the 1-row stats.
+    */
+  private def joinedCandidates(index: Bm25Index, q: DataFrame): (DataFrame, Double, Double) = {
+    val qTerms = q.select("term").distinct()
+    val distinctTerms = qTerms.limit(MaxPushdownTerms + 1).collect().map(_.getString(0))
+    val (pruned, queriedTerms) =
+      if (distinctTerms.length <= MaxPushdownTerms) {
+        val inTerms = col("term").isin(distinctTerms.filter(_ != null).sorted.toIndexedSeq: _*)
+        (index.postings.filter(inTerms), index.terms.filter(inTerms))
+      } else
+        (index.postings.join(broadcast(qTerms), Seq("term"), "left_semi"),
+          index.terms.join(qTerms, Seq("term"), "left_semi"))
+    val st = index.stats.select(col("n"), col("avgdl")).head()
+    (pruned.join(broadcast(queriedTerms), Seq("term")).join(broadcast(q), Seq("term")),
+      st.getDouble(0), st.getDouble(1))
+  }
+
+  /** A Scala map as one typed literal column. */
+  private def literal(m: Map[_, _], t: MapType): Column =
+    ColumnInterop.column(Literal(CatalystTypeConverters.createToCatalystConverter(t)(m), t))
 
   /** Persists postings range-partitioned by term (contiguous term ranges
     * per file → footer-stat pruning under term pushdown), the term

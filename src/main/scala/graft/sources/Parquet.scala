@@ -27,6 +27,13 @@ object Parquet {
   def read(spark: SparkSession, paths: String*): DataFrame =
     spark.read.format(Format).load(paths: _*)
 
+  /** [[read]] of some partition dirs of a partitioned `root` (Spark's
+    * `basePath`): only those dirs are listed, and the partition columns
+    * still come from the dir names below `root`.
+    */
+  def readPartitions(spark: SparkSession, root: String, dirs: String*): DataFrame =
+    spark.read.format(Format).option("basePath", root).load(dirs: _*)
+
   /** The schema of [[read]], for reads that want nothing else. */
   def schemaOf(spark: SparkSession, paths: String*): StructType =
     read(spark, paths: _*).schema

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -642,13 +643,24 @@ private[graft] object MaintainedRoot {
     withRootLease(r.conf, r.fs, r.dir, c.what, "eraser") {
       val done = requireCommitted(r.fs, r.dir, c.what)
       c.members.foreach(_.sweepSuperseded(r.fs, r.dir))
-      val k = ids.toDF(c.idCol).distinct().localCheckpoint()
+      val k = distinctKeys(ids.toDF(c.idCol))
       c.beforeErase(r, done)
       val affected = victimLegProbe(c.probeRows(r, done), k, c.idCol, c.distinctPerDoc)
       if (affected.nonEmpty) c.rewrite(r, done, affected, k)
       c.ledger(spark, affected)
     }
   }
+
+  /** The distinct victim keys, materialized once. A local batch (a
+    * driver-built request list: its optimized plan is a `LocalRelation`)
+    * collects with no Spark job and is deduplicated on the driver; a
+    * distributed one pays a distinct and a checkpoint.
+    */
+  private def distinctKeys(ids: DataFrame): DataFrame =
+    if (ids.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      ids.sparkSession.createDataFrame(
+        java.util.Arrays.asList(ids.collect().distinct: _*), ids.schema)
+    else ids.distinct().localCheckpoint()
 
   /** COMPACT, under the root's mutator lease, after the index's own
     * check: merge the previous compacted generation (if any) and every

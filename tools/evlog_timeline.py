@@ -9,8 +9,13 @@ The log must be uncompressed (spark.eventLog.compress=false). A rolling log
 For each SQL execution, in start order, it prints the execution's call site
 (the Spark method and the first frame outside Spark, as Spark's own short
 call site reads), its job description when one was set, its duration and
-its jobs, each job with its duration, the number of stages that ran and the
-number of tasks that ended. Jobs outside any SQL execution
+its jobs, each job with its duration, the number of stages that ran, the
+number of tasks that ended and the leaf RDD kinds of its last stage (the
+stage's RDDs none of whose parents are in that stage: FileScanRDD,
+ShuffledRowRDD, ParallelCollectionRDD …, with a count when one kind leads
+more than one leaf). AQE runs each query stage as a job of its own whose
+call site reads "… at CompletableFuture.java"; the leaf kinds tell them
+apart. Jobs outside any SQL execution
 (RDD actions such as localCheckpoint) follow, one line each. Last comes the
 sum of jobs per call site, most first: a job counts for the call site of its
 SQL execution, or for its own call site (its result stage's name) when it
@@ -48,6 +53,14 @@ def short_site(details):
             return f"{method or meth} at {loc}"
         method = meth
     return None
+
+
+def leaf_kinds(rdds):
+    """The leaf RDD kinds of a stage's RDD infos, e.g. "FileScanRDD x2"."""
+    ids = {r["RDD ID"] for r in rdds}
+    kinds = collections.Counter(r.get("Name", "?") for r in rdds
+                                if not ids.intersection(r.get("Parent IDs") or []))
+    return ", ".join(k if n == 1 else f"{k} x{n}" for k, n in sorted(kinds.items())) or "?"
 
 
 def one_line(text):
@@ -100,7 +113,8 @@ def read(paths):
             result = max(infos, key=lambda s: s["Stage ID"], default={})
             jobs[ev["Job ID"]] = {"exec": int(eid) if eid is not None else None,
                                   "start": ev["Submission Time"], "end": None,
-                                  "site": result.get("Stage Name", "?")}
+                                  "site": result.get("Stage Name", "?"),
+                                  "leaves": leaf_kinds(result.get("RDD Info") or [])}
             for sid in ev.get("Stage IDs") or []:
                 stage_job[sid] = ev["Job ID"]
         elif kind == "SparkListenerJobEnd":
@@ -135,7 +149,7 @@ def main():
     def job_line(jid, site=False):
         j = jobs[jid]
         line = (f"  job {jid:5d} {secs(j['start'], j['end'])} s "
-                f"{stages_ran[jid]:3d} stages {tasks[jid]:5d} tasks")
+                f"{stages_ran[jid]:3d} stages {tasks[jid]:5d} tasks  [{j['leaves']}]")
         return line + (f"  {j['site']}" if site else "")
 
     for eid in sorted(execs, key=lambda e: (execs[e]["start"], e)):
