@@ -18,7 +18,10 @@ import graft.sources.Parquet
   *   only the partitions present in the incoming batch rewrite; history
   *   partitions are untouched (no read-modify-write of the whole table);
   * - readers prune partitions on the same column (date-window queries never
-  *   scan history).
+  *   scan history);
+  * - the in-place rewrites of existing partitions (compaction, subject
+  *   erasure) never overwrite what they read: they write into a staging
+  *   dir and publish each partition by one swap ([[StagedSwap]]).
   */
 object FileLoads {
 
@@ -45,20 +48,11 @@ object FileLoads {
     * `Template-to-BigQuery/Dynamics365-to-BigQuery-Method-2.py:82-92`,
     * without its delete/append non-atomicity).
     */
-  def refreshWindow(spark: SparkSession, incoming: DataFrame, dateCol: String, path: String): Unit =
-    withDynamicOverwrite(spark) {
-      withDatePartition(incoming, dateCol).write
-        .partitionBy("p_date").mode(SaveMode.Overwrite).parquet(path)
-    }
-
-  /** Run `write` under dynamic partitionOverwriteMode, restoring the
-    * session's previous setting afterwards (shared by [[refreshWindow]]
-    * and [[erasePartitioned]] — the save/restore must stay in lockstep).
-    */
-  private def withDynamicOverwrite[A](spark: SparkSession)(write: => A): A = {
+  def refreshWindow(spark: SparkSession, incoming: DataFrame, dateCol: String, path: String): Unit = {
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try write
+    try withDatePartition(incoming, dateCol).write
+      .partitionBy("p_date").mode(SaveMode.Overwrite).parquet(path)
     finally prev match {
       case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
       case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
@@ -68,6 +62,22 @@ object FileLoads {
   /** Read back a partitioned target with partition pruning on `p_date`. */
   def readWindow(spark: SparkSession, path: String, fromDate: String): DataFrame =
     Parquet.read(spark, path).filter(col("p_date") >= fromDate)
+
+  /** A row's partition dir value: a null `p_date` reads back from (and
+    * writes to) the default partition dir.
+    */
+  private def partValue =
+    coalesce(col("p_date").cast("string"), lit(ExternalCatalogUtils.DEFAULT_PARTITION_NAME))
+
+  /** The fs and qualified root of a partitioned target, after the
+    * [[StagedSwap.recover]] of an interrupted rewrite.
+    */
+  private def recovered(spark: SparkSession, path: String) = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(new Path(path))
+    StagedSwap.recover(fs, root)
+    (fs, root)
+  }
 
   /** Compact a partitioned parquet target's small files in place: every
     * `p_date` partition holding more `.parquet` files than
@@ -80,19 +90,13 @@ object FileLoads {
     * Hadoop `FileSystem` listing of the root and its partition dirs, so
     * the compactor runs on any Hadoop store, and Spark lists only the
     * fragmented partition dirs it reads. ONE Spark write rewrites every
-    * fragmented partition into a hidden staging dir, its rows
+    * fragmented partition into the [[StagedSwap]] staging dir, its rows
     * hash-partitioned on `p_date` plus a salt below that partition's
     * `want`, so the job count does not grow with the number of
-    * fragmented partitions. Each partition is then
-    * published by a swap (live → `.compact_old_<part>`, staged → live,
-    * backup deleted).
-    *
-    * Crash recovery runs first: a backup whose live partition is missing
-    * died between the two swap renames and is restored; a backup whose
-    * live partition exists died after the publish and is deleted; the
-    * staging dir of a failed run is deleted. A rerun after a crash at any
-    * point therefore leaves the same rows in healthy partitions, provided
-    * a directory rename is atomic (local disk, HDFS).
+    * fragmented partitions, and [[StagedSwap.publish]] swaps each
+    * partition in. Recovery of a crashed rewrite runs first, so a rerun
+    * after a crash at any point leaves the same rows in healthy
+    * partitions.
     *
     * Files whose size is mostly footer (KB-sized files) shrink when merged,
     * so a partition split into `want ≥ 2` files can plan fewer on the next
@@ -103,19 +107,7 @@ object FileLoads {
   def compact(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Map[String, (Int, Int)] = {
     require(targetFileBytes >= 1, s"targetFileBytes must be >= 1: $targetFileBytes")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(path))
-    val staging = new Path(root, ".compact_staging")
-    def backup(part: String) = new Path(root, s".compact_old_$part")
-    // Hadoop's rename moves the source INTO an existing target directory
-    // instead of failing, so the target must be checked absent first
-    def move(from: Path, to: Path): Unit =
-      if (fs.exists(to) || !fs.rename(from, to)) sys.error(s"compact: cannot move $from to $to")
-    fs.listStatus(root).map(_.getPath.getName).filter(_.startsWith(".compact_old_")).foreach { b =>
-      val live = new Path(root, b.stripPrefix(".compact_old_"))
-      if (fs.exists(live)) fs.delete(new Path(root, b), true) else move(new Path(root, b), live)
-    }
-    fs.delete(staging, true)
+    val (fs, root) = recovered(spark, path)
     // listStatus, not listFiles: a LocatedFileStatus loads each file's
     // permissions, one `stat` process per file on a local disk without
     // Hadoop's native library
@@ -129,59 +121,40 @@ object FileLoads {
       }
       .filter { case (_, (n, want)) => n > want }
     if (plan.nonEmpty) {
-      // a null p_date reads back from (and writes to) the default partition dir
-      val value = coalesce(col("p_date").cast("string"),
-        lit(ExternalCatalogUtils.DEFAULT_PARTITION_NAME))
       val wants = plan.map { case (part, (_, want)) => part.stripPrefix("p_date=") -> want }
       // the salt is a shuffled column of its own, so it is left out when
       // every partition wants one file
       val salt = if (wants.values.forall(_ == 1)) Nil
-        else Seq(pmod(monotonically_increasing_id(), element_at(typedLit(wants), value)))
+        else Seq(pmod(monotonically_increasing_id(), element_at(typedLit(wants), partValue)))
       Parquet.readPartitions(spark, root.toString,
           plan.keys.toSeq.sorted.map(new Path(root, _).toString): _*)
         .repartition(col("p_date") +: salt: _*)
-        .write.partitionBy("p_date").parquet(staging.toString)
-      plan.keys.foreach { part =>
-        val live = new Path(root, part)
-        move(live, backup(part))
-        move(new Path(staging, part), live)
-        fs.delete(backup(part), true)
-      }
-      fs.delete(staging, true)
+        .write.partitionBy("p_date").parquet(StagedSwap.staging(root).toString)
+      StagedSwap.publish(fs, root, plan.keys.toSeq)
     }
     plan
   }
 
   /** Partition-pruned subject ERASURE on a partitioned parquet target —
     * the L6 delete leg a 100 TB lake actually runs: only the `p_date`
-    * partitions that CONTAIN victim rows are rewritten (dynamic partition
-    * overwrite), history partitions are never read or touched beyond one
-    * column-pruned scan of (`fkCol`, `p_date`) to find them. Returns the
+    * partitions that CONTAIN victim rows are rewritten; history
+    * partitions are never read or touched beyond one column-pruned,
+    * grouped scan of (`fkCol`, `p_date`) left-joined to the keys, which
+    * finds each affected partition and its row count. Returns the
     * per-affected-partition ledger (p_date, n_before, n_after, n_erased)
-    * AFTER the physical rewrite, with n_after re-read from the target.
+    * AFTER the physical rewrite, with n_after re-read from the target; the
+    * null-date partition reports a null `p_date`.
     *
-    * Two correctness traps this handles:
-    *  - dynamic overwrite only replaces partitions PRESENT in the written
-    *    data, so a partition whose EVERY row is a victim would silently
-    *    survive — those are deleted explicitly (Hadoop FS), and their
-    *    ledger rows read n_after = 0;
-    *  - the retained frame derives from the same files the overwrite
-    *    replaces — it is `localCheckpoint`ed (with the before-counts)
-    *    BEFORE the write, so the rewrite never reads its own output.
-    *
-    * The affected-date collect is bounded by the target's PARTITION count
-    * (days — ~10³ for years), the same bounded-collect family as the
-    * BM25 term pushdown; victims themselves never reach the driver.
-    *
-    * Partial-failure window: the dynamic-overwrite commit and the
-    * explicit FS delete of fully-victim partitions are TWO operations — a
-    * crash between them leaves those partitions' victim rows on disk with
-    * no ledger saying the erase is incomplete. The operation is
-    * IDEMPOTENT (remaining victims are re-detected by the affected-date
-    * scan), so a failed run must simply be re-run to completion before
-    * the erasure is attested; a compliance pipeline should gate its
-    * attestation on this method RETURNING, not on the write having
-    * started.
+    * The retained rows of the affected partitions are written into the
+    * [[StagedSwap]] staging dir and published by its swap, so the rewrite
+    * never reads its own output, and a partition whose EVERY row is a
+    * victim has no staged dir and is removed by the same publish. A crash
+    * at any point leaves each partition with its old or its erased rows,
+    * and the rerun (recovery first, then the same scan) finishes the
+    * erase; a compliance pipeline attests the erasure when this method
+    * RETURNS. The affected-partition collect is bounded by the target's
+    * PARTITION count (days — ~10³ for years); victims themselves never
+    * reach the driver.
     */
   def erasePartitioned(
       spark: SparkSession,
@@ -191,53 +164,26 @@ object FileLoads {
     require(keys.columns.length == 1,
       s"keys must be a single column, got ${keys.columns.toSeq}")
     val k = keys.toDF("__k").distinct().localCheckpoint()
+    val (fs, root) = recovered(spark, path)
     val tgt = Parquet.read(spark, path)
-    // one column-pruned pass finds the affected partitions
-    val affected = tgt.select(col(fkCol), col("p_date"))
-      .join(k, col(fkCol) === col("__k"), "left_semi")
-      .select(col("p_date").cast("string")).distinct()
-      .collect().map(_.getString(0)).sorted
-    // one ledger shape for every branch (zero-row on the no-victims path)
-    def emptyLedger = spark.range(0).select(
-      lit("").as("p_date"), lit(0L).as("n_before"),
-      lit(0L).as("n_after"), lit(0L).as("n_erased"))
-    if (affected.isEmpty) return emptyLedger
-    val inAffected = tgt
-      .filter(col("p_date").cast("string").isin(affected.toIndexedSeq: _*))
-    val before = inAffected.groupBy(col("p_date").cast("string").as("p_date"))
-      .agg(count(lit(1)).as("n_before"))
-      .localCheckpoint()
-    // materialize the retained rows BEFORE overwriting their source files
-    val retained = inAffected.join(k, col(fkCol) === col("__k"), "left_anti")
-      .drop("__k").localCheckpoint()
-    withDynamicOverwrite(spark) {
-      retained.write.partitionBy("p_date").mode(SaveMode.Overwrite).parquet(path)
+    val before = tgt.select(col(fkCol), partValue.as("__part"))
+      .join(broadcast(k.withColumn("__victim", lit(1))), col(fkCol) === col("__k"), "left")
+      .groupBy("__part").agg(count(lit(1)), count(col("__victim")).as("__nv"))
+      .filter(col("__nv") > 0)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    val after: Map[String, Long] = if (before.isEmpty) Map.empty else {
+      val vs = before.map(_._1)
+      tgt.filter(partValue.isin(vs: _*)).join(k, col(fkCol) === col("__k"), "left_anti")
+        .write.partitionBy("p_date").parquet(StagedSwap.staging(root).toString)
+      StagedSwap.publish(fs, root, vs.map("p_date=" + _))
+      // the erase-everything case leaves no partition dir to read
+      if (!fs.listStatus(root).exists(_.getPath.getName.startsWith("p_date="))) Map.empty
+      else Parquet.read(spark, path).filter(partValue.isin(vs: _*)).groupBy(partValue).count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
-    // fully-victim partitions produced no retained rows → dynamic
-    // overwrite never touched them; delete their directories explicitly
-    val survived = retained.select(col("p_date").cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val rootPath = new Path(path)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    affected.filterNot(survived).foreach { d =>
-      fs.delete(new Path(rootPath, s"p_date=$d"), true)
-    }
-    // the erase-everything case: no partition directory remains, so a
-    // parquet read of the target would fail schema inference — every
-    // affected partition's n_after is 0 by construction
-    val anyPartitionLeft = fs.exists(rootPath) &&
-      fs.listStatus(rootPath).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("p_date="))
-    val after =
-      if (anyPartitionLeft)
-        Parquet.read(spark, path)
-          .filter(col("p_date").cast("string").isin(affected.toIndexedSeq: _*))
-          .groupBy(col("p_date").cast("string").as("p_date"))
-          .agg(count(lit(1)).as("n_after"))
-      else emptyLedger.select(col("p_date"), col("n_after"))
-    before.join(after, Seq("p_date"), "left")
-      .na.fill(0L, Seq("n_after"))
-      .select(col("p_date"), col("n_before"), col("n_after"),
-        (col("n_before") - col("n_after")).as("n_erased"))
+    spark.createDataFrame(before.sortBy(_._1).map { case (v, n) =>
+      val a = after.getOrElse(v, 0L)
+      (Some(v).filter(_ != ExternalCatalogUtils.DEFAULT_PARTITION_NAME).orNull, n, a, n - a)
+    }).toDF("p_date", "n_before", "n_after", "n_erased")
   }
 }

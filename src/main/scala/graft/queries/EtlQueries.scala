@@ -524,24 +524,26 @@ object EtlQueries {
 
     // L11 (extension): partition-pruned subject erasure on a partitioned
     // parquet LAKE target (FileLoads.erasePartitioned) — the physical L6
-    // delete a 100 TB lake runs: one column-pruned scan finds the
-    // affected date partitions, ONLY those rewrite (dynamic partition
-    // overwrite; fully-victim partitions are deleted explicitly — the
-    // dynamic-overwrite blind spot), history partitions untouched. The
-    // target is built FRESH each run (the erase mutates it; a build-once
-    // fixture would make re-runs report zero deletions), and the declared
-    // output is the post-rewrite per-partition ledger re-read from disk.
+    // delete a 100 TB lake runs: one column-pruned grouped scan finds the
+    // affected date partitions and their row counts, ONLY those rewrite
+    // (staged, then swapped in; a fully-victim partition has no staged
+    // rows and is removed by the same swap), history partitions
+    // untouched. The target is built FRESH each run (the erase mutates
+    // it; a build-once fixture would make re-runs report zero
+    // deletions), and the declared output is the post-rewrite
+    // per-partition ledger re-read from disk.
     "l11_erase_partitioned" -> ((s, dir) => {
       val tgt = java.nio.file.Files
         .createTempDirectory("graft_l11").toString + "/events"
       FileLoads.overwriteAll(Tables.events(s, dir), "ts", tgt)
-      // checkpoint the ledger so the scratch target can be deleted NOW —
-      // no per-invocation temp-dir leak (the r1 PagedFixture lesson)
+      // the ledger is built on the driver, so the scratch target can be
+      // deleted NOW — no per-invocation temp-dir leak (the r1
+      // PagedFixture lesson)
       val ledger = FileLoads.erasePartitioned(s, tgt, "user_id",
           Tables.events(s, dir)
             .filter(pmod(col("user_id"), lit(97)) === 0)
             .select(col("user_id")).distinct())
-        .orderBy("p_date").localCheckpoint()
+        .orderBy("p_date")
       val p = new org.apache.hadoop.fs.Path(tgt).getParent
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       ledger

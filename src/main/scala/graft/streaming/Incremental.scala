@@ -385,8 +385,8 @@ object Incremental extends StreamAnalytics with IvfPqRebuild {
     * root's state lives in committed batch dirs, so forgetting a subject
     * means REWRITING exactly the dirs that contain it). Per committed
     * batch: one keys-only membership probe; affected dirs rewrite
-    * buckets+sets through an anti-join (retained rows localCheckpoint'ed
-    * BEFORE the overwrite — the rewrite never reads its own output),
+    * buckets+sets through an anti-join into a staging dir swapped in
+    * afterwards (the rewrite never reads its own output),
     * untouched dirs are never opened. Work is O(affected dirs ×
     * anti-join), no corpus scan, no rebuild, and committed-replay safety
     * is preserved: the dirs stay committed, so no replay of a COMMITTED
@@ -401,10 +401,11 @@ object Incremental extends StreamAnalytics with IvfPqRebuild {
     * index.
     *
     * Partial-failure window (the [[graft.etl.FileLoads.erasePartitioned]]
-    * contract): a crash between two dir rewrites leaves the erase
-    * incomplete with no ledger — the operation is IDEMPOTENT (remaining
-    * victims are re-detected), so a failed run must be re-run to
-    * completion before the erasure is attested. Returns the per-batch
+    * contract): a crash between two dir swaps leaves the erase
+    * incomplete with no ledger — the operation is IDEMPOTENT (an
+    * interrupted swap is recovered, remaining victims are re-detected),
+    * so a failed run must be re-run to completion before the erasure is
+    * attested. Returns the per-batch
     * ledger (batch_id, n_before, n_after, n_erased) over the SETS member
     * (one row per doc).
     */

@@ -149,7 +149,7 @@ private[streaming] object IndexCodecs {
         bearing: Seq[String],
         keys: DataFrame,
         gen: => Int): Unit = {
-      rewriteLegs(r.dir, bearing, members, keys, idCol)(readLeg(r))(write)
+      rewriteLegs(r, bearing, keys)(_ => write)
       val lastId = done.last
       val targetGen = gen
       if (!r.fs.exists(new Path(snapDir(r, "terms", lastId, targetGen), "_SUCCESS"))) {
@@ -370,8 +370,8 @@ private[streaming] object IndexCodecs {
     override def rewrite(r: Root, done: Seq[Long], affected: Seq[(String, Long, Long)], k: DataFrame): Unit = {
       val emptied = affected.collect { case (leg, before, erased) if before == erased =>
         new Path(r.dir, IvfLists.rel(leg)) }.toSet
-      rewriteLegs(r.dir, affected.map(_._1), members, k, idCol)(readLeg(r)) { (retained, p) =>
-        if (emptied(p)) super.write(retained, p) else write(retained, p)
+      rewriteLegs(r, affected.map(_._1), k) { live =>
+        if (emptied(live)) super.write else write
       }
     }
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.etl.StagedSwap
 import graft.ops.Concurrent
 import graft.sources.Parquet
 
@@ -21,7 +22,7 @@ import graft.sources.Parquet
   *  - the MEMBER LAYOUT: per-member batch dirs plus at most one committed
   *    compacted generation (`_compacted_<gen>`, written last);
   *  - the ERASE: one prologue, one single-pass victim probe and one
-  *    per-leg anti-join rewrite.
+  *    per-leg anti-join rewrite, published by [[StagedSwap]].
   * Four generic operations run these steps over an [[IndexCodec]], one
   * value per index type ([[IndexCodecs]]): [[maintain]], [[read]],
   * [[erase]] and [[compact]]. The public entry points stay in
@@ -320,6 +321,9 @@ private[graft] object MaintainedRoot {
       compactPrefix: String = "compact_") {
     def rel(n: String): String =
       if (parentRel.isEmpty) n else s"$parentRel/$n"
+    /** The dir holding the member's legs. */
+    def parent(root: Path): Path =
+      if (parentRel.isEmpty) root else new Path(root, parentRel)
     def batchPath(root: Path, id: Long) =
       new Path(root, rel(s"$batchPrefix$id"))
     def compactPath(root: Path, gen: Long) =
@@ -350,10 +354,9 @@ private[graft] object MaintainedRoot {
       */
     def sweepSuperseded(fs: FileSystem, root: Path): Unit =
       compactedGenId(fs, root).foreach { gen =>
-        val parent = if (parentRel.isEmpty) root else new Path(root, parentRel)
         val Batch = s"$batchPrefix(\\d+)".r
         val Compact = s"$compactPrefix(\\d+)".r
-        if (fs.exists(parent)) fs.listStatus(parent).toSeq.foreach { st =>
+        if (fs.exists(parent(root))) fs.listStatus(parent(root)).toSeq.foreach { st =>
           val superseded = st.getPath.getName match {
             case Batch(id) => id.toLong <= gen
             case Compact(g) => g.toLong < gen
@@ -386,7 +389,8 @@ private[graft] object MaintainedRoot {
     * only) silently ignore — cohabiting would hide every statically
     * written document. Checked on EVERY member dir, even without a
     * sidecar: a static write interrupted between members leaves exactly
-    * one member in the static shape.
+    * one member in the static shape. Hidden names (an erase's
+    * [[StagedSwap]] dirs, checksums) and `_` markers are not entries.
     */
   private[streaming] def assertMaintainerOwnsLayout(
       fs: FileSystem,
@@ -399,7 +403,7 @@ private[graft] object MaintainedRoot {
       val static = fs.exists(p) && fs.listStatus(p).exists { st =>
         val n = st.getPath.getName
         !n.startsWith(m.batchPrefix) && !n.startsWith(m.compactPrefix) &&
-          !n.startsWith("_")
+          !n.startsWith("_") && !n.startsWith(".")
       }
       require(!static,
         s"$root holds a statically-written $what (non-batch entries under " +
@@ -453,33 +457,12 @@ private[graft] object MaintainedRoot {
   private def withLegColumn(df: DataFrame): DataFrame =
     df.withColumn("__leg", regexp_extract(input_file_name(), LegDir, 1))
 
-  /** The shared per-leg erase rewrite: for every victim-bearing `legs`
-    * dir, each member's copy of it (in `members` order — the probe member
-    * LAST) is read with `read`, anti-joined against the victim `keys` on
-    * `idCol`, materialized (localCheckpoint) BEFORE the overwrite of its
-    * source, and written back with `write`. Legs are disjoint dirs and
-    * crash-idempotence is per leg, so they rewrite CONCURRENTLY (guide
-    * §2.6): however many legs a crash leaves half-done, every unfinished
-    * leg still bears victims for the re-run's probe.
+  /** [[StagedSwap.recover]] of every member's leg dir: run under the
+    * lease before an erase or a compaction lists a leg, so neither reads
+    * a root whose leg sits in an interrupted erase's backup.
     */
-  private[streaming] def rewriteLegs(
-      root: Path,
-      legs: Seq[String],
-      members: Seq[MemberLayout],
-      keys: DataFrame,
-      idCol: String)(
-      read: Path => Option[DataFrame])(
-      write: (DataFrame, Path) => Unit): Unit =
-    Concurrent.awaitAll(legs.map { leg => () =>
-      members.foreach { m =>
-        val p = new Path(root, m.rel(leg))
-        read(p).foreach { df =>
-          val retained = df.join(keys, Seq(idCol), "left_anti")
-            .select(df.columns.map(col).toIndexedSeq: _*).localCheckpoint()
-          write(retained, p)
-        }
-      }
-    })
+  private def recoverLegs(c: IndexCodec[_], r: Root): Unit =
+    c.members.map(_.parent(r.dir)).distinct.foreach(StagedSwap.recover(r.fs, _))
 
   /** A maintained root as the generic operations see it: the session, the
     * root path as the caller gave it, and its Hadoop filesystem.
@@ -575,7 +558,33 @@ private[graft] object MaintainedRoot {
       * as the probe's (leg, n_before, n_erased).
       */
     def rewrite(r: Root, done: Seq[Long], affected: Seq[(String, Long, Long)], k: DataFrame): Unit =
-      rewriteLegs(r.dir, affected.map(_._1), members, k, idCol)(readLeg(r))(write)
+      rewriteLegs(r, affected.map(_._1), k)(_ => write)
+
+    /** The shared per-leg erase rewrite: each member's copy of every
+      * `legs` dir is read with [[readLeg]], anti-joined against the
+      * victim `keys` on `idCol`, and written with `write(live)` into the
+      * member's [[StagedSwap]] staging dir; once all of a member's legs
+      * are staged (concurrently — legs are disjoint dirs, guide §2.6),
+      * [[StagedSwap.publish]] swaps them in. Members go in `members`
+      * order, the probe member LAST, so a crash anywhere leaves every
+      * unfinished leg's probe-member copy live and victim-bearing (a leg
+      * whose live dir sits in backup is restored by [[recoverLegs]]
+      * first), and the rerun's probe finishes it.
+      */
+    final def rewriteLegs(r: Root, legs: Seq[String], keys: DataFrame)(
+        write: Path => (DataFrame, Path) => Unit): Unit =
+      members.foreach { m =>
+        val staging = StagedSwap.staging(m.parent(r.dir))
+        val staged = Concurrent.awaitAll(legs.map { leg => () =>
+          val live = new Path(r.dir, m.rel(leg))
+          readLeg(r)(live).map { df =>
+            write(live)(df.join(keys, Seq(idCol), "left_anti")
+              .select(df.columns.map(col).toIndexedSeq: _*), new Path(staging, leg))
+            leg
+          }
+        }).flatten
+        StagedSwap.publish(r.fs, m.parent(r.dir), staged)
+      }
 
     /** The per-leg erase ledger (batch_id, n_before, n_after, n_erased): a
       * batch leg reports its batch id, the compacted generation its gen
@@ -622,7 +631,8 @@ private[graft] object MaintainedRoot {
     c.serve(r, c.committed(r))
   }
 
-  /** ERASE, under the root's mutator lease: a single key column, at least
+  /** ERASE, under the root's mutator lease: a single key column, an
+    * interrupted erase's leg swaps recovered ([[recoverLegs]]), at least
     * one committed batch, and a crashed compaction's sweep finished first
     * — superseded dirs are invisible to readers but still hold victim
     * BYTES, and an erase that left them would attest an erasure that
@@ -641,6 +651,7 @@ private[graft] object MaintainedRoot {
       s"ids must be a single key column, got ${ids.columns.toSeq}")
     val r = new Root(spark, indexPath)
     withRootLease(r.conf, r.fs, r.dir, c.what, "eraser") {
+      recoverLegs(c, r)
       val done = requireCommitted(r.fs, r.dir, c.what)
       c.members.foreach(_.sweepSuperseded(r.fs, r.dir))
       val k = distinctKeys(ids.toDF(c.idCol))
@@ -663,8 +674,10 @@ private[graft] object MaintainedRoot {
     else ids.distinct().localCheckpoint()
 
   /** COMPACT, under the root's mutator lease, after the index's own
-    * check: merge the previous compacted generation (if any) and every
-    * committed batch dir into ONE `compact_<newGen>` dir per member
+    * check and the recovery of an interrupted erase's leg swaps
+    * ([[recoverLegs]]: a leg whose live dir sits in backup would be left
+    * out of the merge): merge the previous compacted generation (if any)
+    * and every committed batch dir into ONE `compact_<newGen>` dir per member
     * (newGen = the highest committed batch id, `merge(inputDirs, outDir)`
     * in that member's serving layout; it may decline to write when every
     * input is empty, which readers tolerate), committed by a single
@@ -693,6 +706,7 @@ private[graft] object MaintainedRoot {
     c.beforeCompact(r)
     val (fs, root) = (r.fs, r.dir)
     withRootLease(r.conf, fs, root, c.what, "compactor") {
+      recoverLegs(c, r)
       val done = requireCommitted(fs, root, c.what)
       // superseded or half-written older generations, then older markers
       def sweep(gen: Long): Unit = {

@@ -1,51 +1,12 @@
 package graft.etl
 
-import java.net.URI
 import java.nio.file.Files
 import java.time.LocalDate
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftSpark, JobCount}
-
-/** A local file system that crashes at its `crashAt`-th `rename` or
-  * `delete` call and at every later one, as a process that died there
-  * makes no further change. Registered as `fs.faulty.impl`, the seam
-  * `LeaseSpec`'s `MockObjectStoreFs` uses. Its statuses carry default
-  * permissions: the local ones load theirs through a `file:` URI.
-  */
-class FaultyFs extends RawLocalFileSystem {
-  override def getUri: URI = URI.create("faulty:///")
-
-  override def getFileStatus(f: Path): FileStatus = plain(super.getFileStatus(f))
-
-  override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(plain)
-
-  private def plain(s: FileStatus): FileStatus =
-    new FileStatus(s.getLen, s.isDirectory, 1, s.getBlockSize, s.getModificationTime, s.getPath)
-
-  override def rename(src: Path, dst: Path): Boolean = {
-    FaultyFs.step(); super.rename(src, dst)
-  }
-
-  override def delete(p: Path, recursive: Boolean): Boolean = {
-    FaultyFs.step(); super.delete(p, recursive)
-  }
-}
-
-object FaultyFs {
-  val calls = new AtomicInteger
-  @volatile var crashAt: Int = Int.MaxValue
-
-  private def step(): Unit = {
-    val n = calls.incrementAndGet()
-    if (n >= crashAt) throw new java.io.IOException(s"injected crash at call $n")
-  }
-}
+import graft.{FaultyFs, GraftSpark, JobCount}
 
 class FileLoadsSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
@@ -122,17 +83,23 @@ class FileLoadsSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).count() == count)
   }
 
-  test("erasePartitioned rewrites only affected partitions; fully-victim partitions vanish") {
+  /** 3 days: d1 has victim 7 among others, d2 has NO victims, d3 is
+    * ENTIRELY victim 9's rows.
+    */
+  private def eraseFixture(): String = {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_erase").toString + "/t"
-    // 3 days: d1 has victim 7 among others, d2 has NO victims, d3 is
-    // ENTIRELY victim 9's rows (the dynamic-overwrite blind spot)
-    val rows = Seq(
+    FileLoads.overwriteAll(Seq(
       (7L, "2024-01-01 01:00:00"), (1L, "2024-01-01 02:00:00"), (2L, "2024-01-01 03:00:00"),
       (3L, "2024-01-02 01:00:00"), (4L, "2024-01-02 02:00:00"),
       (9L, "2024-01-03 01:00:00"), (9L, "2024-01-03 02:00:00")
-    ).toDF("user_id", "ts").withColumn("ts", col("ts").cast("timestamp"))
-    FileLoads.overwriteAll(rows, "ts", dir)
+    ).toDF("user_id", "ts").withColumn("ts", col("ts").cast("timestamp")), "ts", dir)
+    dir
+  }
+
+  test("erasePartitioned rewrites only affected partitions; fully-victim partitions vanish") {
+    import spark.implicits._
+    val dir = eraseFixture()
     val untouchedFiles = partFiles(dir).filter(_._1.contains("2024-01-02"))
     val ledger = FileLoads.erasePartitioned(spark, dir, "user_id",
         Seq(7L, 9L).toDF("k"))
@@ -153,7 +120,7 @@ class FileLoadsSpec extends AnyFunSuite {
       Seq(999L).toDF("k")).isEmpty)
     assert(spark.read.parquet(dir).count() == 4)
     intercept[IllegalArgumentException] {
-      FileLoads.erasePartitioned(spark, dir, "user_id", rows)
+      FileLoads.erasePartitioned(spark, dir, "user_id", Seq((7L, 9L)).toDF("a", "b"))
     }
     // erase-EVERYTHING: every remaining row is a victim — all partition
     // dirs vanish and the ledger still reports n_after = 0 (a parquet
@@ -167,6 +134,33 @@ class FileLoadsSpec extends AnyFunSuite {
       ("2024-01-02", 2L, 0L, 2L)))
     assert(!new java.io.File(dir, "p_date=2024-01-01").exists)
     assert(!new java.io.File(dir, "p_date=2024-01-02").exists)
+    // a victim in the null-date partition: that partition is erased and
+    // reports its own ledger row
+    val nulls = Files.createTempDirectory("graft_erase_null").toString + "/t"
+    appendDay(nulls, "2024-01-01", 7L, 1L)
+    appendDay(nulls, null, 7L, 2L)
+    val nullLedger = FileLoads.erasePartitioned(spark, nulls, "k", Seq(7L).toDF("k"))
+      .orderBy("p_date").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(nullLedger.toSeq == Seq((null, 2L, 1L, 1L), ("2024-01-01", 2L, 1L, 1L)))
+    assert(keysOf(nulls) == Seq(1L, 2L))
+    assert(partFiles(nulls).keySet == Set("p_date=2024-01-01", s"p_date=$NullDate"))
+  }
+
+  test("erasePartitioned: a crash at any rename or delete of its run, then a clean " +
+      "rerun, leaves exactly the retained rows") {
+    import spark.implicits._
+    val t0 = System.nanoTime
+    val n = FaultyFs.crashMatrix(spark, eraseFixture()) { dir =>
+      FileLoads.erasePartitioned(spark, dir, "user_id", Seq(7L, 9L).toDF("k"))
+    } { dir =>
+      FileLoads.erasePartitioned(spark, dir, "user_id", Seq(7L, 9L).toDF("k"))
+    } { (dir, what) =>
+      assert(keysOf(dir) == Seq(1L, 2L, 3L, 4L), what)
+      assert(partFiles(dir).keySet == Set("p_date=2024-01-01", "p_date=2024-01-02"), what)
+      assert(FaultyFs.hiddenDirs(new java.io.File(dir)).isEmpty, what)
+    }
+    info(f"$n crash points in ${(System.nanoTime - t0) / 1e9}%.1f s")
   }
 
   test("compact merges small files per partition, preserves data, skips healthy partitions") {
@@ -242,7 +236,7 @@ class FileLoadsSpec extends AnyFunSuite {
     appendDay(dir, "2024-01-01", 1L, 2L)
     appendDay(dir, "2024-01-01", 3L, 4L)
     val live = new java.io.File(dir, "p_date=2024-01-01")
-    val bak = new java.io.File(dir, ".compact_old_p_date=2024-01-01")
+    val bak = new java.io.File(dir, ".swap_old_p_date=2024-01-01")
     val f = live.listFiles().filter(_.getName.endsWith(".parquet")).head
     bak.mkdirs()
     Files.copy(f.toPath, new java.io.File(bak, f.getName).toPath)
@@ -256,7 +250,6 @@ class FileLoadsSpec extends AnyFunSuite {
 
   test("compact: a crash at any rename or delete of its run, then a clean rerun, " +
       "leaves the same rows in healthy partitions") {
-    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultyFs].getName)
     // 3 partitions: two fragmented (2 files each), one of them the
     // default partition that null dates write to, and one healthy
     val fixture = Files.createTempDirectory("graft_crash").toString + "/t"
@@ -266,35 +259,18 @@ class FileLoadsSpec extends AnyFunSuite {
     appendDay(fixture, null, 7L, 8L)
     appendDay(fixture, "2024-01-03", 9L, 10L)
     val keys = keysOf(fixture)
-    def copy(): String = {
-      val to = Files.createTempDirectory("graft_crash").resolve("t")
-      val from = java.nio.file.Paths.get(fixture)
-      Files.walk(from).forEach(p => Files.copy(p, to.resolve(from.relativize(p))))
-      to.toString
-    }
-    def check(dir: String, what: String): Unit = {
+    val t0 = System.nanoTime
+    val n = FaultyFs.crashMatrix(spark, fixture) { dir =>
+      assert(FileLoads.compact(spark, dir).keySet == Set("p_date=2024-01-01", s"p_date=$NullDate"))
+    } { dir =>
+      FileLoads.compact(spark, dir)
+    } { (dir, what) =>
       assert(keysOf(dir) == keys, what)
       assert(partFiles(dir) == Map("p_date=2024-01-01" -> 1, s"p_date=$NullDate" -> 1,
         "p_date=2024-01-03" -> 1), what)
-      assert(!new java.io.File(dir).list().exists(_.startsWith(".compact")), what)
+      assert(FaultyFs.hiddenDirs(new java.io.File(dir)).isEmpty, what)
     }
-    val t0 = System.nanoTime
-    val clean = copy()
-    FaultyFs.calls.set(0)
-    assert(FileLoads.compact(spark, s"faulty://$clean").keySet ==
-      Set("p_date=2024-01-01", s"p_date=$NullDate"))
-    val n = FaultyFs.calls.get
-    check(clean, "clean run")
     assert(n >= 7, s"$n renames and deletes") // 4 renames and 3 deletes of the publish alone
-    (1 to n).foreach { k =>
-      val dir = copy()
-      FaultyFs.calls.set(0)
-      FaultyFs.crashAt = k
-      try intercept[Exception](FileLoads.compact(spark, s"faulty://$dir"))
-      finally FaultyFs.crashAt = Int.MaxValue
-      FileLoads.compact(spark, s"faulty://$dir")
-      check(dir, s"crash at call $k of $n")
-    }
     info(f"$n crash points in ${(System.nanoTime - t0) / 1e9}%.1f s")
   }
 

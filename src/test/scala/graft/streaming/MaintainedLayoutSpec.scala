@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSpark
+import graft.{FaultyFs, GraftSpark}
 import graft.etl.Tables
 
 /** Pins the full on-disk layout of the four stream-maintained index roots
@@ -16,7 +16,9 @@ import graft.etl.Tables
   * (a third file) → erase. After every step the root's sorted listing —
   * every directory and every `_`-marker name, part files collapsed to one
   * "has data files" flag (` *`) per directory, `cluster=<n>` partition
-  * dirs collapsed to `cluster=*` — must equal the golden list below.
+  * dirs collapsed to `cluster=*` — must equal the golden list below, and
+  * no hidden directory (a staged swap's leftover) may exist anywhere
+  * under the root.
   * The streaming checkpoint lives outside the root, so only the root's
   * own artifacts are pinned.
   */
@@ -54,6 +56,7 @@ class MaintainedLayoutSpec extends AnyFunSuite {
       steps: (String, () => Unit)*): Unit = {
     val actual = steps.map { case (name, run) =>
       run()
+      assert(FaultyFs.hiddenDirs(new File(idx)) == Nil, name)
       name -> listing(new File(idx)).mkString("\n")
     }
     def show(xs: Seq[(String, String)]) =
