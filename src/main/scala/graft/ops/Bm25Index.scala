@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnInterop
 import org.apache.spark.sql.types.{ArrayType, MapType}
 
-import graft.sources.Parquet
+import graft.streaming.{IndexCodecs, MaintainedRoot}
 
 /** A persisted BM25 inverted index: the build-once/serve-many form of
   * [[TextAnalysis.bm25TopK]], the same deployment shape as
@@ -198,7 +198,8 @@ object Bm25Index {
     * rows are collected (no Spark job over a local batch), their distinct
     * terms go into the postings scan as one literal `In` predicate (real
     * parquet `PushedFilters` → footer-stat file skipping against the
-    * term-range layout [[write]] produced), and ONE bounded job collects
+    * term-range layout of a written or compacted generation, and of each
+    * stream batch), and ONE bounded job collects
     * the `In`-filtered dictionary rows with the 1-row stats. Both fold
     * into the plan as literals, so the serve has no broadcast exchange
     * and no driver-built hash relation. A literal map lookup scans the
@@ -319,32 +320,19 @@ object Bm25Index {
   private def literal(m: Map[_, _], t: MapType): Column =
     ColumnInterop.column(Literal(CatalystTypeConverters.createToCatalystConverter(t)(m), t))
 
-  /** Persists postings range-partitioned by term (contiguous term ranges
-    * per file → footer-stat pruning under term pushdown), the term
-    * dictionary, the 1-row stats, and a format sidecar. All paths resolve
-    * through the Hadoop `FileSystem` API — object-store URIs included.
+  /** Persists the index as a maintained root whose only batch is its
+    * written generation: postings range-partitioned by term into
+    * `numFiles` files (contiguous term ranges per file → footer-stat
+    * pruning under term pushdown), the term dictionary and the 1-row
+    * stats as its df/stats snapshot — the root
+    * [[graft.streaming.Incremental.streamBm25Maintain]] maintains. All
+    * paths resolve through the Hadoop `FileSystem` API — object-store
+    * URIs included. A root that holds a committed stream batch is refused.
     */
-  def write(index: Bm25Index, path: String, numFiles: Int = 8): Unit = {
-    def sub(name: String) = new org.apache.hadoop.fs.Path(path, name).toString
-    index.postings
-      .repartitionByRange(numFiles, col("term"))
-      .sortWithinPartitions("term", "id")
-      .write.mode("overwrite").parquet(sub("postings"))
-    index.terms.write.mode("overwrite").parquet(sub("terms"))
-    index.stats.write.mode("overwrite").parquet(sub("stats"))
-    IndexSidecar.write(
-      index.postings.sparkSession.sparkContext.hadoopConfiguration, path,
-      """{"format":1}""")
-  }
+  def write(index: Bm25Index, path: String, numFiles: Int = 8): Unit =
+    MaintainedRoot.write(IndexCodecs.Bm25, index.postings.sparkSession, path, index, numFiles)
 
-  def read(spark: SparkSession, path: String): Bm25Index = {
-    def sub(name: String) = new org.apache.hadoop.fs.Path(path, name).toString
-    val json = IndexSidecar.readJson(spark.sparkContext.hadoopConfiguration, path)
-    require(IndexSidecar.intField(json, "format", path) == 1,
-      s"unsupported bm25 index format at $path")
-    Bm25Index(
-      Parquet.read(spark, sub("postings")).select("term", "id", "tf", "dl"),
-      Parquet.read(spark, sub("terms")).select("term", "df"),
-      Parquet.read(spark, sub("stats")).select("n", "avgdl"))
-  }
+  /** Loads a written index with every batch streamed into it since. */
+  def read(spark: SparkSession, path: String): Bm25Index =
+    MaintainedRoot.read(IndexCodecs.Bm25, spark, path)
 }

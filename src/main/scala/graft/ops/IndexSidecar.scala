@@ -5,9 +5,10 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-/** Shared `_graft_index.json` sidecar persistence for the persistable
-  * indexes ([[IvfPqIndex]], [[MinHashIndex]], [[SimJoinIndex]], and the
-  * stream maintainers of the last two): one writer and one
+/** Shared `_graft_index.json` sidecar persistence for the indexes whose
+  * maintained roots carry parameters or a model ([[IvfPqIndex]]'s model,
+  * [[MinHashIndex]]'s and [[SimJoinIndex]]'s shape parameters), written
+  * by the index's `write` or a maintainer's first run: one writer and one
   * field-extraction parser instead of two hand-rolled copies drifting
   * apart. The parser accepts exactly what [[write]]rs emit (flat
   * builder-controlled JSON) — not general JSON.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.{nearest_centroid, pq_adc, pq_encode, pq_lut, vec_dot, vec_norm}
-import graft.sources.Parquet
+import graft.streaming.{IndexCodecs, MaintainedRoot}
 
 /** A built IVF-PQ index: the state a 100 TB serving deployment persists
   * once and queries many times.
@@ -18,10 +18,11 @@ import graft.sources.Parquet
   *   (nlist × dim + numSubspaces × numCodes × dsub doubles) that rides
   *   into codegen as literals on the query side.
   *
-  * [[IvfPqIndex.write]] persists the lists as cluster-partitioned parquet
-  * (queries probe clusters → partition pruning skips unprobed lists on
-  * read) and the model state as a JSON sidecar; [[IvfPqIndex.read]] loads
-  * them back. Build → write → read → query equals build → query exactly
+  * [[IvfPqIndex.write]] persists the lists as the cluster-partitioned
+  * written generation of a maintained root (queries probe clusters →
+  * partition pruning skips unprobed lists on read) and the model state as
+  * a JSON sidecar; [[IvfPqIndex.read]] loads them back, with any batches
+  * streamed in since. Build → write → read → query equals build → query exactly
   * (deterministic training, exact JSON double round-trip via
   * `Double.toString`/`parseDouble`) — asserted in IvfPqIndexSpec.
   */
@@ -107,8 +108,8 @@ object IvfPqIndex {
     * the daily-crawl maintenance shape: no retraining, one map-side encode
     * pass over the batch only, then a lists union. The model drifts only
     * as fast as the corpus distribution, so production rebuilds on a slow
-    * cadence while appending fast; with a persisted index, write the
-    * returned lists (or just the batch's) back with [[write]]'s layout.
+    * cadence while appending fast; a written index appends through
+    * [[graft.streaming.Incremental.streamIvfPqMaintain]].
     * Batch ids are the caller's responsibility to keep disjoint (same
     * contract as every load-append in `graft.etl.Loads`).
     */
@@ -152,10 +153,10 @@ object IvfPqIndex {
     * keys-only anti-join), model FROZEN — the centroids/codebooks keep
     * serving, exactly as [[append]] encodes through them without
     * retraining. Erased ids can never resurface: candidates come only
-    * from the lists, and the exact rerank scores candidates only. On the
-    * persisted cluster-partitioned layout, writing back rewrites only the
-    * clusters that lost members (partition-pruned, the [[write]] layout's
-    * point). Asserted in IvfPqIndexSpec by erasing a planted clone: it
+    * from the lists, and the exact rerank scores candidates only. A
+    * written index erases in place through
+    * [[graft.streaming.Incremental.eraseIvfPqMaintained]]. Asserted in
+    * IvfPqIndexSpec by erasing a planted clone: it
     * vanishes from top-k and every other row is unchanged.
     */
   def erase(index: IvfPqIndex, ids: DataFrame): IvfPqIndex = {
@@ -378,62 +379,39 @@ object IvfPqIndex {
     Similarity.topKPerQuery(exact, k)
   }
 
-  /** Persists the index: inverted lists as cluster-partitioned parquet
-    * (probe-time partition pruning), model state as `_graft_index.json`.
-    * Paths resolve through the Hadoop `FileSystem` API, so the index
-    * round-trips on local paths and object-store URIs (s3a://…) alike.
+  /** Persists the index as a maintained root whose only batch is its
+    * written, cluster-partitioned lists generation (probe-time partition
+    * pruning), model state as `_graft_index.json` — the root
+    * [[graft.streaming.Incremental.streamIvfPqMaintain]] maintains. Paths
+    * resolve through the Hadoop `FileSystem` API, so the index round-trips
+    * on local paths and object-store URIs (s3a://…) alike. A root that
+    * holds a committed stream batch is refused.
     */
-  def write(index: IvfPqIndex, path: String): Unit = {
-    // same maintained-root guard as [[read]]: writing the static layout
-    // over a stream-maintained root leaves the stale lists_batch_* dirs
-    // in place, so the maintained reader would double-serve every
-    // streamed vector (and resurrect erased ones) — and the sidecar
-    // round-trips byte-identically, so the model-generation stamp can't
-    // catch this entry point
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(
-      index.lists.sparkSession.sparkContext.hadoopConfiguration)
-    require(!graft.streaming.MaintainedRoot.isMaintained(fs, root),
-      s"$path is a stream-maintained ivfpq root (batch-commit markers " +
-        "present): writing the static layout over it would leave stale " +
-        "batch dirs double-serving — write to a fresh root")
-    index.lists.write.mode("overwrite").partitionBy("cluster")
-      .parquet(new org.apache.hadoop.fs.Path(path, "lists").toString)
+  def write(index: IvfPqIndex, path: String): Unit =
+    MaintainedRoot.write(IndexCodecs.IvfPq, index.lists.sparkSession, path, index, numFiles = 1)
+
+  /** Loads a written index with every batch streamed into it since. */
+  def read(spark: SparkSession, path: String): IvfPqIndex =
+    MaintainedRoot.read(IndexCodecs.IvfPq, spark, path)
+
+  /** Writes the model sidecar of `index` at `path`. */
+  private[graft] def writeModel(
+      conf: org.apache.hadoop.conf.Configuration, path: String, index: IvfPqIndex): Unit = {
     def arr(xs: Iterable[String]) = xs.mkString("[", ",", "]")
     def dbls(xs: Array[Double]) = arr(xs.map(_.toString))
-    IndexSidecar.write(
-      index.lists.sparkSession.sparkContext.hadoopConfiguration, path,
+    IndexSidecar.write(conf, path,
       s"""{"numCodes":${index.numCodes},"residual":${index.residual},""" +
         s""""centroids":${arr(index.centroids.sortBy(_._1).map(c => dbls(c._2)))},""" +
         s""""codebooks":${arr(index.codebooks.map(cb => arr(cb.map(dbls))))}}""")
   }
 
-  /** Loads a persisted index. The hand-rolled parser accepts exactly what
-    * [[write]] emits (flat nested double arrays) — not general JSON.
-    *
-    * Refuses a STREAM-MAINTAINED root
-    * ([[graft.streaming.Incremental.streamIvfPqMaintain]] batch markers
-    * present): a plain read would serve only the base `lists/` and every
-    * streamed vector would be silently unretrievable — use
-    * `Incremental.readIvfPqMaintained` there (which passes
-    * `allowMaintained` internally).
+  /** The index of the model sidecar at `path` over `lists`. The
+    * hand-rolled parser accepts exactly what [[writeModel]] emits (flat
+    * nested double arrays) — not general JSON.
     */
-  def read(spark: SparkSession, path: String): IvfPqIndex =
-    read(spark, path, allowMaintained = false)
-
-  private[graft] def read(
-      spark: SparkSession, path: String, allowMaintained: Boolean): IvfPqIndex = {
-    if (!allowMaintained) {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(!graft.streaming.MaintainedRoot.isMaintained(fs, root),
-        s"$path is a stream-maintained ivfpq root (batch-commit markers " +
-          "present): a plain read would silently drop every streamed " +
-          "vector — read it with Incremental.readIvfPqMaintained")
-    }
-    val lists = Parquet.read(spark, new org.apache.hadoop.fs.Path(path, "lists").toString)
-      .select("cluster", "n_id", "codes", "n_norm")
-    val json = IndexSidecar.readJson(spark.sparkContext.hadoopConfiguration, path)
+  private[graft] def withModel(
+      conf: org.apache.hadoop.conf.Configuration, path: String, lists: DataFrame): IvfPqIndex = {
+    val json = IndexSidecar.readJson(conf, path)
     def field(name: String): String = IndexSidecar.field(json, name, path)
     val numCodes = IndexSidecar.intField(json, "numCodes", path)
     val residual = field("residual").startsWith("true")

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Parquet
+import graft.streaming.{IndexCodecs, MaintainedRoot}
 
 /** A built MinHash-LSH dedup index: the corpus-side state the
   * "dedup each incoming crawl batch against everything already ingested"
@@ -13,10 +13,11 @@ import graft.sources.Parquet
   * [[Dedup.minhashLshIncremental]] call would.
   *
   * - `buckets` — (band, bucket, id): one row per corpus doc per band, the
-  *   LSH candidate-join side. Persisted band-partitioned; a production
-  *   deployment stores it bucketed by (band, bucket) so the daily batch
-  *   join needs no corpus-side shuffle at all (the docstring contract of
-  *   [[Dedup.minhashLshIncremental]]).
+  *   LSH candidate-join side. Persisted as plain parquet (the serve groups
+  *   and joins every band, so a band partitioning would prune nothing); a
+  *   production deployment stores it bucketed by (band, bucket) so the
+  *   daily batch join needs no corpus-side shuffle at all (the docstring
+  *   contract of [[Dedup.minhashLshIncremental]]).
   * - `sets` — (id, shingle_set): the sorted-distinct shingle hashes that
   *   the exact-Jaccard verify joins by candidate id. This is the only
   *   corpus-sized state besides the buckets, and both are id+hash-width,
@@ -308,20 +309,21 @@ object MinHashIndex {
       .filter(col("jaccard") >= threshold)
       .select(col("batch_id"), col("corpus_id"), round(col("jaccard"), 4).as("jaccard"))
 
-  /** Persists buckets (band-partitioned parquet), sets, and the parameter
-    * sidecar. Paths resolve through the Hadoop `FileSystem` API, so the
-    * index round-trips on local paths and object-store URIs (s3a://…)
-    * alike — where a 100 TB index lives by definition.
+  /** Persists the index as a maintained root whose only batch is its
+    * written generation (buckets and sets, 8 files each) with the
+    * parameter sidecar — the root
+    * [[graft.streaming.Incremental.streamMinHashMaintain]] maintains.
+    * Paths resolve through the Hadoop `FileSystem` API, so the index
+    * round-trips on local paths and object-store URIs (s3a://…) alike —
+    * where a 100 TB index lives by definition. A root that holds a
+    * committed stream batch is refused.
     */
-  def write(index: MinHashIndex, path: String): Unit = {
-    def sub(name: String) = new org.apache.hadoop.fs.Path(path, name).toString
-    index.buckets.write.mode("overwrite").partitionBy("band")
-      .parquet(sub("buckets"))
-    index.sets.write.mode("overwrite").parquet(sub("sets"))
-    writeSidecarParams(
-      index.buckets.sparkSession.sparkContext.hadoopConfiguration, path,
-      index.shingleK, index.bands, index.rowsPerBand)
-  }
+  def write(index: MinHashIndex, path: String): Unit =
+    MaintainedRoot.write(IndexCodecs.MinHash, index.buckets.sparkSession, path, index, numFiles = 8)
+
+  /** Loads a written index with every batch streamed into it since. */
+  def read(spark: SparkSession, path: String): MinHashIndex =
+    MaintainedRoot.read(IndexCodecs.MinHash, spark, path)
 
   /** (shingleK, bands, rowsPerBand) from the sidecar — shared with the
     * streaming maintainer
@@ -341,14 +343,4 @@ object MinHashIndex {
       path: String, shingleK: Int, bands: Int, rowsPerBand: Int): Unit =
     IndexSidecar.write(conf, path,
       s"""{"shingleK":$shingleK,"bands":$bands,"rowsPerBand":$rowsPerBand}""")
-
-  def read(spark: SparkSession, path: String): MinHashIndex = {
-    def sub(name: String) = new org.apache.hadoop.fs.Path(path, name).toString
-    val json = IndexSidecar.readJson(spark.sparkContext.hadoopConfiguration, path)
-    def intField(name: String): Int = IndexSidecar.intField(json, name, path)
-    MinHashIndex(
-      Parquet.read(spark, sub("buckets")).select("id", "band", "bucket"),
-      Parquet.read(spark, sub("sets")).select("id", "shingle_set"),
-      intField("shingleK"), intField("bands"), intField("rowsPerBand"))
-  }
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Parquet
+import graft.streaming.{IndexCodecs, MaintainedRoot}
 
 /** A persisted PREFIX-FILTER similarity index: the build-once/serve-many
   * form of [[SimJoin.incrementalPairs]]' corpus-side state — the
@@ -453,23 +453,22 @@ object SimJoinIndex {
       index.shingleK, index.threshold)
   }
 
-  /** Persists the three members and the format sidecar (threshold stored
-    * as an exact millipoint int — the sidecar parser is int-only).
-    * Prefix postings land hash-clustered by shingle so serve probes read
-    * co-located lists. All paths resolve through the Hadoop `FileSystem`
-    * API — object-store URIs included.
+  /** Persists the index as a maintained root whose only batch is its
+    * written generation — prefix postings hash-clustered by shingle into
+    * `numFiles` files so serve probes read co-located lists, and the
+    * sorted sets — with the frozen `freq` order and the format sidecar
+    * (threshold stored as an exact millipoint int — the sidecar parser is
+    * int-only): the root
+    * [[graft.streaming.Incremental.streamSimJoinMaintain]] maintains. All
+    * paths resolve through the Hadoop `FileSystem` API — object-store URIs
+    * included. A root that holds a committed stream batch is refused.
     */
-  def write(index: SimJoinIndex, path: String, numFiles: Int = 8): Unit = {
-    def sub(name: String) = new org.apache.hadoop.fs.Path(path, name).toString
-    index.freq.write.mode("overwrite").parquet(sub("freq"))
-    index.prefixes
-      .repartition(numFiles, col("h"))
-      .sortWithinPartitions("h", "id")
-      .write.mode("overwrite").parquet(sub("prefixes"))
-    index.sets.write.mode("overwrite").parquet(sub("sets"))
-    writeSidecar(index.freq.sparkSession.sparkContext.hadoopConfiguration,
-      path, index.shingleK, index.threshold)
-  }
+  def write(index: SimJoinIndex, path: String, numFiles: Int = 8): Unit =
+    MaintainedRoot.write(IndexCodecs.SimJoin, index.freq.sparkSession, path, index, numFiles)
+
+  /** Loads a written index with every batch streamed into it since. */
+  def read(spark: SparkSession, path: String): SimJoinIndex =
+    MaintainedRoot.read(IndexCodecs.SimJoin, spark, path)
 
   /** (shingleK, threshold) from the sidecar — shared with the streaming
     * maintainer ([[graft.streaming.Incremental.streamSimJoinMaintain]]).
@@ -497,16 +496,5 @@ object SimJoinIndex {
         "the sidecar persists thresholds in units of 0.001 (use e.g. 0.333)")
     IndexSidecar.write(conf, path,
       s"""{"format":1,"shingleK":$shingleK,"thresholdMilli":$thresholdMilli}""")
-  }
-
-  def read(spark: SparkSession, path: String): SimJoinIndex = {
-    def sub(name: String) = new org.apache.hadoop.fs.Path(path, name).toString
-    val (shingleK, threshold) =
-      sidecarParams(spark.sparkContext.hadoopConfiguration, path)
-    SimJoinIndex(
-      Parquet.read(spark, sub("freq")).select("h", "freq"),
-      Parquet.read(spark, sub("prefixes")).select("h", "id", "n"),
-      Parquet.read(spark, sub("sets")).select("id", "set", "n"),
-      shingleK, threshold)
   }
 }

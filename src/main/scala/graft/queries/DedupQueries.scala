@@ -110,7 +110,7 @@ object DedupQueries {
     // exact-Jaccard bipartite set.
     "simjoin_persisted" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val idxDir = IndexFixture.dir("simjoin1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("simjoin2", dir) { tmp =>
         graft.ops.SimJoinIndex.write(
           graft.ops.SimJoinIndex.build(docs.filter(col("doc_id") % 5 =!= 0),
             "doc_id", "text", shingleK = 3, threshold = 0.5), tmp)
@@ -132,7 +132,7 @@ object DedupQueries {
     // simjoin_capped_loss_audit record.
     "simjoin_capped_serve" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val idxDir = IndexFixture.dir("simjoin1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("simjoin2", dir) { tmp =>
         graft.ops.SimJoinIndex.write(
           graft.ops.SimJoinIndex.build(docs.filter(col("doc_id") % 5 =!= 0),
             "doc_id", "text", shingleK = 3, threshold = 0.5), tmp)
@@ -153,7 +153,7 @@ object DedupQueries {
     // is xxhash-order JVM-side → pinned VALUES oracle.
     "simjoin_capped_loss_audit" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val idxDir = IndexFixture.dir("simjoin1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("simjoin2", dir) { tmp =>
         graft.ops.SimJoinIndex.write(
           graft.ops.SimJoinIndex.build(docs.filter(col("doc_id") % 5 =!= 0),
             "doc_id", "text", shingleK = 3, threshold = 0.5), tmp)
@@ -179,7 +179,7 @@ object DedupQueries {
     // price is the pinned simjoin_probe_budget_loss_audit record.
     "simjoin_probe_budget_serve" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val idxDir = IndexFixture.dir("simjoin1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("simjoin2", dir) { tmp =>
         graft.ops.SimJoinIndex.write(
           graft.ops.SimJoinIndex.build(docs.filter(col("doc_id") % 5 =!= 0),
             "doc_id", "text", shingleK = 3, threshold = 0.5), tmp)
@@ -199,7 +199,7 @@ object DedupQueries {
     // loss). Truncation order is JVM-side → pinned VALUES oracle.
     "simjoin_probe_budget_loss_audit" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val idxDir = IndexFixture.dir("simjoin1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("simjoin2", dir) { tmp =>
         graft.ops.SimJoinIndex.write(
           graft.ops.SimJoinIndex.build(docs.filter(col("doc_id") % 5 =!= 0),
             "doc_id", "text", shingleK = 3, threshold = 0.5), tmp)
@@ -240,7 +240,7 @@ object DedupQueries {
     // oracle recomputes exactly that). No corpus rescan, no rebuild.
     "simjoin_erase" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val idxDir = IndexFixture.dir("simjoin1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("simjoin2", dir) { tmp =>
         graft.ops.SimJoinIndex.write(
           graft.ops.SimJoinIndex.build(docs.filter(col("doc_id") % 5 =!= 0),
             "doc_id", "text", shingleK = 3, threshold = 0.5), tmp)
@@ -547,13 +547,13 @@ object DedupQueries {
 
 
     // The PERSISTED serving path of the same operator: corpus shingled,
-    // signed, and written ONCE (MinHashIndex.write — band-partitioned
-    // parquet + parameter sidecar, IndexFixture); the declared body is
+    // signed, and written ONCE (MinHashIndex.write — a written generation
+    // + parameter sidecar, IndexFixture); the declared body is
     // read → query, the daily-batch deployment shape. Deterministic
     // hashes → same oracle as dedup_incremental.
     "dedup_minhash_persisted" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val idxDir = IndexFixture.dir("minhash1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("minhash2", dir) { tmp =>
         graft.ops.MinHashIndex.write(
           graft.ops.MinHashIndex.build(docs, "doc_id", "text",
             shingleK = 3, bands = 8, rowsPerBand = 2), tmp)
@@ -577,7 +577,7 @@ object DedupQueries {
     // recall price is the pinned dedup_minhash_capped_loss_audit record.
     "dedup_minhash_capped" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val idxDir = IndexFixture.dir("minhash1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("minhash2", dir) { tmp =>
         graft.ops.MinHashIndex.write(
           graft.ops.MinHashIndex.build(docs, "doc_id", "text",
             shingleK = 3, bands = 8, rowsPerBand = 2), tmp)
@@ -596,7 +596,7 @@ object DedupQueries {
     // JVM-side xxhash → pinned VALUES oracle.
     "dedup_minhash_capped_loss_audit" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val idxDir = IndexFixture.dir("minhash1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("minhash2", dir) { tmp =>
         graft.ops.MinHashIndex.write(
           graft.ops.MinHashIndex.build(docs, "doc_id", "text",
             shingleK = 3, bands = 8, rowsPerBand = 2), tmp)
@@ -622,7 +622,7 @@ object DedupQueries {
     // dedup_minhash_probe_budget_loss_audit record.
     "dedup_minhash_probe_budget" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val idxDir = IndexFixture.dir("minhash1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("minhash2", dir) { tmp =>
         graft.ops.MinHashIndex.write(
           graft.ops.MinHashIndex.build(docs, "doc_id", "text",
             shingleK = 3, bands = 8, rowsPerBand = 2), tmp)
@@ -643,7 +643,7 @@ object DedupQueries {
     // VALUES oracle.
     "dedup_minhash_probe_budget_loss_audit" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val idxDir = IndexFixture.dir("minhash1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("minhash2", dir) { tmp =>
         graft.ops.MinHashIndex.write(
           graft.ops.MinHashIndex.build(docs, "doc_id", "text",
             shingleK = 3, bands = 8, rowsPerBand = 2), tmp)
@@ -666,7 +666,7 @@ object DedupQueries {
     // Jaccard.
     "dedup_minhash_erase" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val idxDir = IndexFixture.dir("minhash1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("minhash2", dir) { tmp =>
         graft.ops.MinHashIndex.write(
           graft.ops.MinHashIndex.build(docs, "doc_id", "text",
             shingleK = 3, bands = 8, rowsPerBand = 2), tmp)

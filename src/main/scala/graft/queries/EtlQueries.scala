@@ -564,12 +564,12 @@ object EtlQueries {
       val victims = docs.filter(pmod(col("doc_id"), lit(10)) === 3)
         .select(col("doc_id"))
       val bm25 = graft.ops.Bm25Index.read(s,
-        IndexFixture.dir("bm25_1", dir) { tmp =>
+        IndexFixture.dir("bm25_2", dir) { tmp =>
           graft.ops.Bm25Index.write(
             graft.ops.Bm25Index.build(docs, "doc_id", "text"), tmp)
         })
       val ivf = graft.ops.IvfPqIndex.read(s,
-        IndexFixture.dir("ivfpq1", dir) { tmp =>
+        IndexFixture.dir("ivfpq2", dir) { tmp =>
           graft.ops.IvfPqIndex.write(
             graft.ops.IvfPqIndex.build(Tables.embeddings(s, dir),
               "vec_id", "embedding",

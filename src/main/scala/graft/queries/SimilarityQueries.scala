@@ -285,7 +285,7 @@ object SimilarityQueries {
     // results from the indexes alone.
     "doc_retrieval_hybrid_indexed" -> ((s, dir) => {
       import s.implicits._
-      val bm25Dir = IndexFixture.dir("bm25_1", dir) { tmp =>
+      val bm25Dir = IndexFixture.dir("bm25_2", dir) { tmp =>
         graft.ops.Bm25Index.write(
           graft.ops.Bm25Index.build(Tables.documents(s, dir), "doc_id", "text"), tmp)
       }
@@ -295,7 +295,7 @@ object SimilarityQueries {
           graft.ops.Bm25Index.read(s, bm25Dir), qs, "q_id", "term", k = 10)
         .select(col("q_id"), col("id").as("doc_id"), col("rank"))
       val emb = Tables.embeddings(s, dir)
-      val ivfDir = IndexFixture.dir("ivfpq1", dir) { tmp =>
+      val ivfDir = IndexFixture.dir("ivfpq2", dir) { tmp =>
         graft.ops.IvfPqIndex.write(
           graft.ops.IvfPqIndex.build(emb, "vec_id", "embedding",
             nlist = 16, numSubspaces = 8, numCodes = 16), tmp)
@@ -468,7 +468,7 @@ object SimilarityQueries {
     // (recall + write/read equality asserted in IvfPqIndexSpec).
     "knn_ivfpq_persisted" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val idxDir = IndexFixture.dir("ivfpq1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("ivfpq2", dir) { tmp =>
         graft.ops.IvfPqIndex.write(
           graft.ops.IvfPqIndex.build(emb, "vec_id", "embedding",
             nlist = 16, numSubspaces = 8, numCodes = 16), tmp)
@@ -491,7 +491,7 @@ object SimilarityQueries {
     // oracle; the planted-clone erasure proof lives in IvfPqIndexSpec.
     "knn_ivfpq_erase" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val idxDir = IndexFixture.dir("ivfpq1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("ivfpq2", dir) { tmp =>
         graft.ops.IvfPqIndex.write(
           graft.ops.IvfPqIndex.build(emb, "vec_id", "embedding",
             nlist = 16, numSubspaces = 8, numCodes = 16), tmp)

@@ -205,7 +205,7 @@ object StreamingQueries {
     // shape); the corpus is never re-shingled (reads the persisted sets)
     "stream_dedup_incremental" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val idxDir = IndexFixture.dir("minhash1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("minhash2", dir) { tmp =>
         graft.ops.MinHashIndex.write(
           graft.ops.MinHashIndex.build(docs, "doc_id", "text",
             shingleK = 3, bands = 8, rowsPerBand = 2), tmp)
@@ -480,8 +480,8 @@ object StreamingQueries {
 
     // COMPACTION on the stream-maintained BM25 root (streaming/
     // Incremental.compactBm25Maintained): every committed postings batch
-    // dir merges into ONE term-range-partitioned generation — the static
-    // Bm25Index.write layout, so serve-time term pushdown prunes files
+    // dir merges into ONE term-range-partitioned generation — the layout
+    // of the generation Bm25Index.write writes, so term pushdown prunes files
     // across the whole compacted corpus; the df/stats snapshots already
     // roll forward wholesale and are untouched. Rows unchanged → the
     // compacted root serves IDENTICALLY and SHARES text_bm25_persisted's
@@ -515,7 +515,7 @@ object StreamingQueries {
     // oracle like the maintained serve.
     "stream_knn_compact" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val idxDir = IndexFixture.dir("ivfpq_stream_c1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("ivfpq_stream_c2", dir) { tmp =>
         graft.ops.IvfPqIndex.write(
           graft.ops.IvfPqIndex.build(emb.filter(col("vec_id") % 10 =!= 0),
             "vec_id", "embedding", nlist = 16, numSubspaces = 8, numCodes = 16),
@@ -579,7 +579,7 @@ object StreamingQueries {
     // Deterministic frozen-model serve → pinned VALUES oracle.
     "stream_knn_erase" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val baseDir = IndexFixture.dir("ivfpq_base1", dir) { tmp =>
+      val baseDir = IndexFixture.dir("ivfpq_base2", dir) { tmp =>
         graft.ops.IvfPqIndex.write(
           graft.ops.IvfPqIndex.build(emb.filter(col("vec_id") % 10 =!= 0),
             "vec_id", "embedding", nlist = 16, numSubspaces = 8, numCodes = 16),
@@ -638,7 +638,7 @@ object StreamingQueries {
     // MODEL REBUILD serve — the next serving generation the audit's
     // cadence produces (streaming/Incremental.rebuildIvfPqMaintained:
     // retrain coarse + PQ codebooks from the raw vectors of exactly the
-    // served ids, re-encode, write a FRESH static root — blue/green, the
+    // served ids, re-encode, write a FRESH written root — blue/green, the
     // maintained root untouched, its model-generation stamp intact).
     // Serves through IvfPqIndex.read → cluster-pruned scan like
     // knn_ivfpq_persisted. Deterministic → pinned VALUES oracle.
@@ -773,7 +773,7 @@ object StreamingQueries {
     * recall audit's rebuilt leg.
     */
   private def ivfpqRebuildFixture(s: SparkSession, dir: String): String =
-    IndexFixture.dir("ivfpq_rebuild", dir) { tmp =>
+    IndexFixture.dir("ivfpq_rebuild2", dir) { tmp =>
       graft.streaming.Incremental.rebuildIvfPqMaintained(
         s, s"${ivfpqStreamFixture(s, dir)}/index", s"$tmp/index",
         Tables.embeddings(s, dir), "vec_id", "embedding",
@@ -782,7 +782,7 @@ object StreamingQueries {
     }
 
   private def ivfpqStreamFixture(s: SparkSession, dir: String): String =
-    IndexFixture.dir("ivfpq_stream", dir) { tmp =>
+    IndexFixture.dir("ivfpq_stream2", dir) { tmp =>
       val emb = Tables.embeddings(s, dir)
       graft.ops.IvfPqIndex.write(
         graft.ops.IvfPqIndex.build(emb.filter(col("vec_id") % 10 =!= 0),

@@ -478,7 +478,7 @@ object TextQueries {
     // corpus text never re-read (shares text_bm25_search's oracle)
     "text_bm25_persisted" -> ((s, dir) => {
       import s.implicits._
-      val idxDir = IndexFixture.dir("bm25_1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("bm25_2", dir) { tmp =>
         graft.ops.Bm25Index.write(
           graft.ops.Bm25Index.build(Tables.documents(s, dir), "doc_id", "text"),
           tmp)
@@ -525,7 +525,7 @@ object TextQueries {
     // artifact, provably equal to a rebuild.
     "text_bm25_erase" -> ((s, dir) => {
       import s.implicits._
-      val idxDir = IndexFixture.dir("bm25_1", dir) { tmp =>
+      val idxDir = IndexFixture.dir("bm25_2", dir) { tmp =>
         graft.ops.Bm25Index.write(
           graft.ops.Bm25Index.build(Tables.documents(s, dir), "doc_id", "text"),
           tmp)

@@ -156,7 +156,7 @@ object Incremental extends StreamAnalytics with IvfPqRebuild {
     }
   }
 
-  private val LeaseName = "_graft_lease"
+  private[streaming] val LeaseName = "_graft_lease"
 
   /** Schemes [[withRootLease]] treats as S3-class object stores (no
     * atomic create-no-overwrite). Extensible without a rebuild via the
@@ -201,9 +201,9 @@ object Incremental extends StreamAnalytics with IvfPqRebuild {
 
   /** Compact a [[streamBm25Maintain]]ed root: merge every committed
     * postings batch dir into one term-range-partitioned generation (the
-    * static [[graft.ops.Bm25Index.write]] layout, so serve-time term
-    * pushdown skips files by footer stats across the WHOLE compacted
-    * corpus, not per tiny batch dir). The df/stats snapshots already roll
+    * layout of the generation [[graft.ops.Bm25Index.write]] writes, so
+    * serve-time term pushdown skips files by footer stats across the
+    * WHOLE compacted corpus, not per tiny batch dir). The df/stats snapshots already roll
     * forward wholesale and are untouched. Serves byte-identically before
     * and after (the declared `stream_bm25_compact` query shares the
     * maintained serve's oracle).
@@ -218,21 +218,22 @@ object Incremental extends StreamAnalytics with IvfPqRebuild {
     compact(IndexCodecs.MinHash, spark, indexPath, numFiles)
 
   /** Compact a [[streamSimJoinMaintain]]ed root: prefixes re-cluster by
-    * shingle hash (the static [[graft.ops.SimJoinIndex.write]] layout —
-    * serve probes read co-located posting lists), sets concat; the frozen
-    * `freq` model stays as built.
+    * shingle hash (the layout of the generation
+    * [[graft.ops.SimJoinIndex.write]] writes — serve probes read
+    * co-located posting lists), sets concat; the frozen `freq` model
+    * stays as built.
     */
   def compactSimJoinMaintained(spark: SparkSession, indexPath: String, numFiles: Int = 8): Long =
     compact(IndexCodecs.SimJoin, spark, indexPath, numFiles)
 
-  /** Compact a [[streamIvfPqMaintain]]ed root: merge every committed
-    * `lists_batch_<id>` dir into one cluster-partitioned
-    * `lists_compact_<gen>` dir (one read PER input dir — the
-    * CONFLICTING_DIRECTORY_STRUCTURES constraint from
+  /** Compact a [[streamIvfPqMaintain]]ed root: merge the written
+    * generation and every committed `lists_batch_<id>` dir into one
+    * cluster-partitioned `lists_compact_<gen>` dir (one read PER input
+    * dir — the CONFLICTING_DIRECTORY_STRUCTURES constraint from
     * [[readIvfPqMaintained]] — then one partitioned write), shrinking the
-    * serve union from one leg per batch to base + ONE compacted leg +
-    * tail. The frozen model and base `lists/` are untouched; the
-    * model-generation stamp is asserted first.
+    * serve union from one leg per batch to ONE compacted leg + tail. The
+    * frozen model is untouched; the model-generation stamp is asserted
+    * first.
     */
   def compactIvfPqMaintained(spark: SparkSession, indexPath: String): Long =
     compact(IndexCodecs.IvfPq, spark, indexPath, numFiles = 1)
@@ -273,8 +274,8 @@ object Incremental extends StreamAnalytics with IvfPqRebuild {
     * NEW documents pays one build pass over ITSELF only:
     *  - its postings land in an append-only `postings/batch_<id>` dir
     *    (term-range partitioned within, so the serve-time term pushdown
-    *    still skips files by footer stats — the [[graft.ops.Bm25Index.write]]
-    *    layout, per batch);
+    *    still skips files by footer stats — the layout of the generation
+    *    [[graft.ops.Bm25Index.write]] writes, per batch);
     *  - the vocabulary-sized df dictionary and the 1-row (n, avgdl)
     *    stats roll forward as batch-stamped snapshots, recombined in the
     *    EXACT closed form append uses — so the maintained index serves
@@ -308,11 +309,12 @@ object Incremental extends StreamAnalytics with IvfPqRebuild {
     maintain(IndexCodecs.Bm25, spark, indexPath, srcPath, checkpointPath, maxFilesPerTrigger)(
       IndexCodecs.Bm25.encoder(_, idCol, textCol, postingsFilesPerBatch))
 
-  /** Read the [[streamBm25Maintain]]ed index: every committed postings
-    * batch dir plus the LATEST committed df/stats snapshots. The same
-    * serve surface as [[graft.ops.Bm25Index.read]] — term pushdown
-    * prunes across all batch dirs' files alike (footer stats are
-    * per-file, not per-layout).
+  /** Read the [[streamBm25Maintain]]ed index: its compacted (or
+    * written) generation and every later committed postings batch dir,
+    * plus the LATEST committed df/stats snapshots — what
+    * [[graft.ops.Bm25Index.read]] also serves. Term pushdown prunes
+    * across all legs' files alike (footer stats are per-file, not
+    * per-layout).
     */
   def readBm25Maintained(spark: SparkSession, indexPath: String): graft.ops.Bm25Index =
     read(IndexCodecs.Bm25, spark, indexPath)
@@ -373,8 +375,9 @@ object Incremental extends StreamAnalytics with IvfPqRebuild {
     maintain(IndexCodecs.MinHash, spark, indexPath, srcPath, checkpointPath, maxFilesPerTrigger)(
       IndexCodecs.MinHash.encoder(_, idCol, textCol, shingleK, bands, rowsPerBand))
 
-  /** Read the [[streamMinHashMaintain]]ed index: every committed batch
-    * dir pair, shape parameters from the sidecar.
+  /** Read the [[streamMinHashMaintain]]ed index: the compacted (or
+    * written) generation and every later committed batch dir pair, shape
+    * parameters from the sidecar.
     */
   def readMinHashMaintained(spark: SparkSession, indexPath: String): graft.ops.MinHashIndex =
     read(IndexCodecs.MinHash, spark, indexPath)
@@ -457,10 +460,11 @@ object Incremental extends StreamAnalytics with IvfPqRebuild {
     * FROZEN model is the contract
     * ([[graft.ops.IvfPqIndex.append]]: no retraining; production rebuilds
     * on a slow cadence while appending fast): `indexPath` must already
-    * hold a [[graft.ops.IvfPqIndex.write]]-persisted index (model sidecar
-    * + base `lists/`), and each micro-batch encodes through that model —
+    * hold a [[graft.ops.IvfPqIndex.write]]-written index (model sidecar
+    * + the written lists generation), and each micro-batch encodes
+    * through that model —
     * ONE map-side pass over the batch — into an append-only
-    * `lists_batch_<id>` dir (cluster-partitioned like the base layout, so
+    * `lists_batch_<id>` dir (cluster-partitioned like the written one, so
     * serve-time cluster probes prune files in every batch dir alike).
     * Exactly-once and run-identity exactly as [[streamBm25Maintain]].
     * Encoding is deterministic, so the maintained index serves
@@ -474,8 +478,9 @@ object Incremental extends StreamAnalytics with IvfPqRebuild {
     maintain(IndexCodecs.IvfPq, spark, indexPath, srcPath, checkpointPath, maxFilesPerTrigger)(
       IndexCodecs.IvfPq.encoder(_, idCol, vecCol))
 
-  /** Read the [[streamIvfPqMaintain]]ed index: the persisted model + base
-    * lists plus every committed batch-list dir.
+  /** Read the [[streamIvfPqMaintain]]ed index: the persisted model, the
+    * compacted (or written) lists generation and every later committed
+    * batch-list dir.
     */
   def readIvfPqMaintained(spark: SparkSession, indexPath: String): graft.ops.IvfPqIndex =
     read(IndexCodecs.IvfPq, spark, indexPath)
@@ -483,8 +488,8 @@ object Incremental extends StreamAnalytics with IvfPqRebuild {
   /** Subject ERASURE on a [[streamIvfPqMaintain]]ed root: the frozen-model
     * [[graft.ops.IvfPqIndex.erase]] applied dir-wise — one keys-only
     * anti-join per victim-BEARING lists dir, found by ONE single-pass
-    * probe across the base `lists/` (victims may predate the stream), the
-    * compacted generation and the tail batch dirs. The model is frozen
+    * probe across the compacted or written generation (victims may
+    * predate the stream) and the tail batch dirs. The model is frozen
     * state and stays (erase never retrains — erased ids can never
     * resurface because candidates come only from the lists); there is no
     * corpus-level statistic to roll back, so the per-dir rewrite is
@@ -492,8 +497,9 @@ object Incremental extends StreamAnalytics with IvfPqRebuild {
     * journal needed). Rewritten dirs keep the cluster-partitioned serving
     * layout; a dir that lost ALL rows rewrites to a plain schema-bearing
     * empty file (readable, served as absent). Returns the per-leg ledger
-    * (leg, n_before, n_after, n_erased) — `leg` names the dir ("lists",
-    * "lists_batch_<id>", "lists_compact_<gen>").
+    * (leg, n_before, n_after, n_erased) — `leg` names the dir
+    * ("lists_batch_<id>", "lists_compact_<gen>"; the written generation
+    * is "lists_compact_-1").
     */
   def eraseIvfPqMaintained(spark: SparkSession, indexPath: String, ids: DataFrame): DataFrame =
     erase(IndexCodecs.IvfPq, spark, indexPath, ids)

@@ -9,23 +9,23 @@ import graft.sources.Parquet
 
 import MaintainedRoot._
 
-/** The four stream-maintained index types, one [[MaintainedRoot.IndexCodec]]
-  * value each. [[Incremental]]'s entry points delegate to the generic
-  * operations over these values; what only one index does (BM25's
-  * snapshots and erase journal, IVF-PQ's model generation and rebuild)
-  * stays here, in that index's codec.
+/** The four maintained index types, one [[MaintainedRoot.IndexCodec]]
+  * value each. [[Incremental]]'s entry points and each index's
+  * `write`/`read` delegate to the generic operations over these values;
+  * what only one index does (BM25's snapshots and erase journal, IVF-PQ's
+  * model generation and rebuild) stays here, in that index's codec.
   */
-private[streaming] object IndexCodecs {
+private[graft] object IndexCodecs {
 
   /** BM25: postings batch dirs (term-range partitioned within, so the
     * serve-time term pushdown skips files by footer stats) plus the
     * vocabulary-sized df dictionary and the 1-row (n, avgdl) stats, which
     * roll forward per batch as batch-stamped snapshots in the exact closed
-    * form [[graft.ops.Bm25Index.append]] uses. The erase rolls the
+    * form [[graft.ops.Bm25Index.append]] uses; a written index's are
+    * snapshot `-1`, the prior of stream batch 0. The erase rolls the
     * snapshots back once, through a journal (see [[rewrite]]).
     */
   object Bm25 extends IndexCodec[Bm25Index]("bm25 index", Seq(Bm25Postings),
-      staticHint = Some("serve static indexes via Bm25Index.read + append instead"),
       distinctPerDoc = true) {
 
     /** The encode: the delta pays one build pass over ITSELF only, and
@@ -50,15 +50,30 @@ private[streaming] object IndexCodecs {
           case None => (d.terms, d.stats)
         }
         Encoded(
-          Seq(Bm25Postings -> d.postings
-            .repartitionByRange(postingsFilesPerBatch, col("term"))
-            .sortWithinPartitions("term", "id")),
-          Seq(() => terms.coalesce(1).write.mode("overwrite")
-              .parquet(snapDir(r, "terms", batchId, 0).toString),
-            () => stats.coalesce(1).write.mode("overwrite")
-              .parquet(snapDir(r, "stats", batchId, 0).toString)))
+          Seq(Bm25Postings -> termRanges(d.postings, postingsFilesPerBatch)),
+          snapshots(r, batchId, 0, terms, stats))
       }
     }
+
+    def written(r: Root, index: Bm25Index): Encoded =
+      Encoded(Seq(Bm25Postings -> index.postings),
+        snapshots(r, WrittenBatch, 0, index.terms, index.stats))
+
+    /** Postings range-partitioned by term into `numFiles` files, sorted
+      * by (term, id) within: each file holds a contiguous term range.
+      */
+    private def termRanges(postings: DataFrame, numFiles: Int): DataFrame =
+      postings.repartitionByRange(numFiles, col("term")).sortWithinPartitions("term", "id")
+
+    /** The writes of one df/stats snapshot pair, one file each: stats
+      * first and terms last, so run in order the terms dir's `_SUCCESS`
+      * commits the pair ([[applyJournal]]).
+      */
+    private def snapshots(r: Root, id: Long, gen: Int, terms: DataFrame,
+        stats: DataFrame): Seq[() => Unit] =
+      Seq("stats" -> stats, "terms" -> terms).map { case (kind, df) => () =>
+        df.coalesce(1).write.mode("overwrite").parquet(snapDir(r, kind, id, gen).toString)
+      }
 
     /** Retire superseded snapshots (every erase generation with them);
       * keep two ids so the reader of the previous snapshot (a concurrent
@@ -78,19 +93,16 @@ private[streaming] object IndexCodecs {
     def serve(r: Root, done: Seq[Long]): Bm25Index = {
       assertNoPendingErase(r)
       val g = latestSnapGen(r, done.last)
-      Bm25Index(Bm25Postings.read(r, done),
+      Bm25Index(live(r, Bm25Postings, done),
         snap(r, "terms", done.last, g).select("term", "df"),
         snap(r, "stats", done.last, g).select("n", "avgdl"))
     }
 
-    /** One term-range-partitioned generation (the static
-      * [[graft.ops.Bm25Index.write]] layout); the snapshots are untouched.
+    /** One term-range-partitioned generation, the layout a written index
+      * serves from; the snapshots are untouched.
       */
-    override def merge(r: Root, m: MemberLayout, numFiles: Int): (Seq[String], String) => Unit =
-      (ins, out) => Parquet.read(r.spark, ins: _*).select(m.cols.map(col): _*)
-        .repartitionByRange(numFiles, col("term"))
-        .sortWithinPartitions("term", "id")
-        .write.mode("overwrite").parquet(out)
+    override def writeGeneration(m: MemberLayout, df: DataFrame, out: Path, numFiles: Int): Unit =
+      termRanges(df, numFiles).write.mode("overwrite").parquet(out.toString)
 
     override def beforeCompact(r: Root): Unit = assertNoPendingErase(r)
 
@@ -125,9 +137,7 @@ private[streaming] object IndexCodecs {
       */
     override def rewrite(r: Root, done: Seq[Long], affected: Seq[(String, Long, Long)], k: DataFrame): Unit = {
       val targetGen = latestSnapGen(r, done.last) + 1
-      Parquet.read(r.spark,
-          Bm25Postings.legs(r.fs, r.dir, done).filter(r.fs.exists).map(_.toString): _*)
-        .select("id", "term", "dl")
+      live(r, Bm25Postings, done).select("id", "term", "dl")
         .join(k, Seq("id"), "left_semi")
         .select(lit(targetGen).as("gen"), col("id"), col("term"), col("dl"))
         .write.mode("overwrite").parquet(journalPath(r).toString)
@@ -155,17 +165,14 @@ private[streaming] object IndexCodecs {
       if (!r.fs.exists(new Path(snapDir(r, "terms", lastId, targetGen), "_SUCCESS"))) {
         val (terms, stats) = Bm25Index.rollBack(snap(r, "terms", lastId, targetGen - 1),
           snap(r, "stats", lastId, targetGen - 1), j.select("id", "term", "dl"))
-        stats.coalesce(1).write.mode("overwrite")
-          .parquet(snapDir(r, "stats", lastId, targetGen).toString)
-        terms.coalesce(1).write.mode("overwrite")
-          .parquet(snapDir(r, "terms", lastId, targetGen).toString)
+        snapshots(r, lastId, targetGen, terms, stats).foreach(_())
       }
       r.fs.delete(journalPath(r), true)
       for (g <- 0 until targetGen - 1; kind <- Seq("terms", "stats"))
         r.fs.delete(snapDir(r, kind, lastId, g), true)
     }
 
-    /** gen 0 = the maintainer-written `terms_snap_<id>`/`stats_snap_<id>`;
+    /** gen 0 = the `terms_snap_<id>`/`stats_snap_<id>` a batch or a write commits;
       * each erase rolls the pair back into a NEW generation
       * `…_snap_<id>_e<g>`. The latest committed generation is the serving
       * truth for that snapshot id.
@@ -201,13 +208,12 @@ private[streaming] object IndexCodecs {
   /** MinHash-LSH: buckets and sets, both per-document rows with no
     * corpus-level statistics, so a batch is a pure map-side encode and
     * every other step is the default. Shape parameters live in the
-    * standard sidecar, written on the first run and REQUIRED equal on
-    * every later run — appending under different (k, bands, rows) would
-    * silently mix incomparable signatures.
+    * standard sidecar, written by the index's write or the first run and
+    * REQUIRED equal on every later run — appending under different (k,
+    * bands, rows) would silently mix incomparable signatures.
     */
   object MinHash extends IndexCodec[MinHashIndex]("minhash index",
-      Seq(MinHashBuckets, MinHashSets),
-      staticHint = Some("serve static indexes via MinHashIndex.read + append instead")) {
+      Seq(MinHashBuckets, MinHashSets)) {
 
     def encoder(r: Root, idCol: String, textCol: String, shingleK: Int, bands: Int,
         rowsPerBand: Int): Encode = {
@@ -224,10 +230,14 @@ private[streaming] object IndexCodecs {
       }
     }
 
+    def written(r: Root, index: MinHashIndex): Encoded =
+      Encoded(Seq(MinHashBuckets -> index.buckets, MinHashSets -> index.sets),
+        Seq(() => MinHashIndex.writeSidecarParams(r.conf, r.path,
+          index.shingleK, index.bands, index.rowsPerBand)))
+
     def serve(r: Root, done: Seq[Long]): MinHashIndex = {
       val (k, b, rows) = MinHashIndex.sidecarParams(r.conf, r.path)
-      MinHashIndex(MinHashBuckets.read(r, done),
-        MinHashSets.read(r, done), k, b, rows)
+      MinHashIndex(live(r, MinHashBuckets, done), live(r, MinHashSets, done), k, b, rows)
     }
   }
 
@@ -235,14 +245,15 @@ private[streaming] object IndexCodecs {
     * its shingle document frequencies become the rarity total order
     * (`freq/`), exactly as [[graft.ops.SimJoinIndex.append]] freezes the
     * build-time order; later batches fold in under it (unseen shingles
-    * take df 0 and sort first). The frozen order affects only PRUNING
-    * quality, never the pair set. The sidecar is written with the frozen
-    * order and REQUIRED equal on later runs. Compaction re-clusters the
-    * prefixes by shingle hash (the static layout); the sets concat.
+    * take df 0 and sort first); on a written root the index's own
+    * build-time order is the frozen one. The frozen order affects only
+    * PRUNING quality, never the pair set. The sidecar is written with the
+    * frozen order and REQUIRED equal on later runs. A generation clusters
+    * the prefixes by shingle hash (serve probes read co-located posting
+    * lists); the sets concat.
     */
   object SimJoin extends IndexCodec[SimJoinIndex]("simjoin index",
-      Seq(SimJoinPrefixes, SimJoinSets),
-      staticHint = Some("serve static indexes via SimJoinIndex.read + append instead")) {
+      Seq(SimJoinPrefixes, SimJoinSets)) {
 
     def encoder(r: Root, idCol: String, textCol: String, shingleK: Int,
         threshold: Double): Encode = {
@@ -258,12 +269,7 @@ private[streaming] object IndexCodecs {
           // the first batch freezes the order (deterministic, so a
           // pre-marker crash replays cleanly); the sidecar lands only
           // after the freq dir it describes is fully written
-          val built = SimJoinIndex.build(batch, idCol, textCol, shingleK, threshold)
-          Encoded(Seq(SimJoinPrefixes -> built.prefixes, SimJoinSets -> built.sets),
-            Seq { () =>
-              built.freq.write.mode("overwrite").parquet(freqPath(r))
-              SimJoinIndex.writeSidecar(r.conf, r.path, shingleK, threshold)
-            })
+          written(r, SimJoinIndex.build(batch, idCol, textCol, shingleK, threshold))
         } else {
           val (p, s) = SimJoinIndex.encodeDelta(freq(r), batch, idCol, textCol,
             shingleK, threshold)
@@ -271,31 +277,38 @@ private[streaming] object IndexCodecs {
         }
     }
 
+    /** The prefixes and sets, then the frozen order and the sidecar that
+      * describes it, in that order.
+      */
+    def written(r: Root, index: SimJoinIndex): Encoded =
+      Encoded(Seq(SimJoinPrefixes -> index.prefixes, SimJoinSets -> index.sets),
+        Seq { () =>
+          index.freq.write.mode("overwrite").parquet(freqPath(r))
+          SimJoinIndex.writeSidecar(r.conf, r.path, index.shingleK, index.threshold)
+        })
+
     def serve(r: Root, done: Seq[Long]): SimJoinIndex = {
       val (shingleK, threshold) = SimJoinIndex.sidecarParams(r.conf, r.path)
-      SimJoinIndex(freq(r), SimJoinPrefixes.read(r, done),
-        SimJoinSets.read(r, done), shingleK, threshold)
+      SimJoinIndex(freq(r), live(r, SimJoinPrefixes, done),
+        live(r, SimJoinSets, done), shingleK, threshold)
     }
 
-    override def merge(r: Root, m: MemberLayout, numFiles: Int): (Seq[String], String) => Unit =
-      if (m != SimJoinPrefixes) super.merge(r, m, numFiles)
-      else (ins, out) => Parquet.read(r.spark, ins: _*).select(m.cols.map(col): _*)
-        .repartition(numFiles, col("h"))
-        .sortWithinPartitions("h", "id")
-        .write.mode("overwrite").parquet(out)
+    override def writeGeneration(m: MemberLayout, df: DataFrame, out: Path, numFiles: Int): Unit =
+      if (m != SimJoinPrefixes) super.writeGeneration(m, df, out, numFiles)
+      else df.repartition(numFiles, col("h")).sortWithinPartitions("h", "id")
+        .write.mode("overwrite").parquet(out.toString)
 
     private def freqPath(r: Root) = new Path(r.dir, "freq").toString
 
     private def freq(r: Root) = Parquet.read(r.spark, freqPath(r)).select("h", "freq")
   }
 
-  /** IVF-PQ: the root is a [[IvfPqIndex.write]]-persisted index
-    * (model sidecar + base `lists/`) whose FROZEN model encodes each batch
-    * into a cluster-partitioned lists dir. The base lists are served and
-    * erased with the batch legs. Every leg is read on its own (a
-    * multi-path read of several cluster-partitioned dirs trips partition
-    * discovery: CONFLICTING_DIRECTORY_STRUCTURES) and the legs are
-    * unioned. The model generation is stamped on the first run and
+  /** IVF-PQ: the root is a [[IvfPqIndex.write]]-written index (model
+    * sidecar + the written lists generation) whose FROZEN model encodes
+    * each batch into a cluster-partitioned lists dir. Every leg is read on
+    * its own (a multi-path read of several cluster-partitioned dirs trips
+    * partition discovery: CONFLICTING_DIRECTORY_STRUCTURES) and the legs
+    * are unioned. The model generation is stamped on the first run and
     * checked before every serve, compaction and erase: an in-place
     * rebuild would decode the batch legs through foreign codebooks.
     */
@@ -306,13 +319,13 @@ private[streaming] object IndexCodecs {
       * checks its generation.
       */
     def encoder(r: Root, idCol: String, vecCol: String): Encode = {
-      val base = IvfPqIndex.read(r.spark, r.path, allowMaintained = true)
+      val model = IvfPqIndex.withModel(r.conf, r.path, r.spark.emptyDataFrame)
       assertModelGeneration(r, stampIfAbsent = true)
-      (batch, _, _) => Encoded(Seq(IvfLists -> IvfPqIndex.encodeLists(base, batch, idCol, vecCol)))
+      (batch, _, _) => Encoded(Seq(IvfLists -> IvfPqIndex.encodeLists(model, batch, idCol, vecCol)))
     }
 
-    /** The base serves without any batch. */
-    override def committed(r: Root): Seq[Long] = committedBatchIds(r.fs, r.dir)
+    def written(r: Root, index: IvfPqIndex): Encoded =
+      Encoded(Seq(IvfLists -> index.lists), Seq(() => IvfPqIndex.writeModel(r.conf, r.path, index)))
 
     /** The cluster-partitioned serving layout, one file per cluster: one
       * exchange of slim code rows instead of up to one file per task per
@@ -334,33 +347,23 @@ private[streaming] object IndexCodecs {
         if (st.isDirectory) n.startsWith("cluster=") else !n.startsWith("_") && !n.startsWith(".")
       }).map(p => Parquet.read(r.spark, p.toString).select(IvfLists.cols.map(col): _*))
 
+    /** Each leg read on its own, then unioned. */
+    override def readLegs(r: Root, m: MemberLayout, legs: Seq[Path]): Option[DataFrame] =
+      legs.flatMap(readLeg(r)).reduceOption(_ unionByName _)
+
     def serve(r: Root, done: Seq[Long]): IvfPqIndex = {
-      val base = IvfPqIndex.read(r.spark, r.path, allowMaintained = true)
-      if (done.nonEmpty) assertModelGeneration(r, stampIfAbsent = false)
-      val batchLists = IvfLists.legs(r.fs, r.dir, done).flatMap(readLeg(r))
-      if (batchLists.isEmpty) base
-      else base.copy(lists = (base.lists +: batchLists).reduce(_ unionByName _))
+      assertModelGeneration(r, stampIfAbsent = false)
+      IvfPqIndex.withModel(r.conf, r.path, live(r, IvfLists, done))
     }
 
     /** One cluster-partitioned generation; `numFiles` does not apply. */
-    override def merge(r: Root, m: MemberLayout, numFiles: Int): (Seq[String], String) => Unit =
-      (ins, out) => {
-        val frames = ins.flatMap(p => readLeg(r)(new Path(p)))
-        if (frames.nonEmpty) write(frames.reduce(_ unionByName _), new Path(out))
-      }
+    override def writeGeneration(m: MemberLayout, df: DataFrame, out: Path, numFiles: Int): Unit =
+      write(df, out)
 
     override def beforeCompact(r: Root): Unit = assertModelGeneration(r, stampIfAbsent = false)
 
     override def beforeErase(r: Root, done: Seq[Long]): Unit =
       assertModelGeneration(r, stampIfAbsent = false)
-
-    /** The base lists (victims may predate the stream) and every live leg. */
-    override def probeRows(r: Root, done: Seq[Long]): DataFrame = {
-      val frames = (new Path(r.dir, IvfBaseLists) +: IvfLists.legs(r.fs, r.dir, done))
-        .flatMap(readLeg(r))
-      require(frames.nonEmpty, s"no readable lists dirs under ${r.path}")
-      frames.reduce(_ unionByName _)
-    }
 
     /** A leg that lost ALL rows rewrites to a plain schema-bearing empty
       * file: a partitioned write of zero rows leaves an unreadable dir.
@@ -375,7 +378,7 @@ private[streaming] object IndexCodecs {
       }
     }
 
-    /** `leg` names the dir ("lists", "lists_batch_<id>", "lists_compact_<gen>"). */
+    /** `leg` names the dir ("lists_batch_<id>", "lists_compact_<gen>"). */
     override def ledger(spark: SparkSession, affected: Seq[(String, Long, Long)]): DataFrame = {
       import spark.implicits._
       affected.map { case (leg, before, erased) => (leg, before, before - erased, erased) }
@@ -410,9 +413,9 @@ trait IvfPqRebuild {
     * operator the frozen-model contract defers to ("production rebuilds
     * on a slow cadence while appending fast"): retrain coarse centroids +
     * PQ codebooks from the raw vectors of exactly the ids the maintained
-    * root serves (base + every committed batch, minus erased victims),
-    * re-encode, and write the result as a FRESH static root at
-    * `destPath` — the next serving generation, ready to be
+    * root serves (its written generation + every committed batch, minus
+    * erased victims), re-encode, and write the result as a FRESH written
+    * root at `destPath` — the next serving generation, ready to be
     * stream-maintained in turn. Blue/green by construction: the old root
     * is never touched, so a crash mid-rebuild leaves the old generation
     * serving and the half-written destination is simply overwritten by
@@ -458,7 +461,7 @@ trait IvfPqRebuild {
     // persisted layout — free them (rebuildModel pinned one snapshot for
     // its multi-pass training)
     graft.ops.Checkpoints.free(rebuilt.lists)
-    // serve from the persisted layout (cluster-pruned), not the build plan
+    // serve from the written layout (cluster-pruned), not the build plan
     IvfPqIndex.read(spark, destPath)
   }
 

@@ -22,14 +22,17 @@ import graft.sources.Parquet
   *  - the MEMBER LAYOUT: per-member batch dirs plus at most one committed
   *    compacted generation (`_compacted_<gen>`, written last);
   *  - the ERASE: one prologue, one single-pass victim probe and one
-  *    per-leg anti-join rewrite, published by [[StagedSwap]].
-  * Four generic operations run these steps over an [[IndexCodec]], one
-  * value per index type ([[IndexCodecs]]): [[maintain]], [[read]],
-  * [[erase]] and [[compact]]. The public entry points stay in
-  * [[Incremental]] as delegations, and so does the mutator lease
-  * ([[Incremental.withRootLease]]). The marker names and the batch /
-  * compact dir names are spelled only here, which a source-scan spec
-  * enforces.
+  *    per-leg anti-join rewrite, published by [[StagedSwap]];
+  *  - the WRITE: a built index commits as a root whose only batch, the
+  *    sentinel id `-1`, is already compacted, so a written index is a
+  *    maintained root from its first byte.
+  * Five generic operations run these steps over an [[IndexCodec]], one
+  * value per index type ([[IndexCodecs]]): [[write]], [[maintain]],
+  * [[read]], [[erase]] and [[compact]]. The public entry points stay in
+  * [[Incremental]] and in each index's `write`/`read` as delegations, and
+  * so does the mutator lease ([[Incremental.withRootLease]]). The marker
+  * names and the member, batch and compact dir names are spelled only
+  * here, which a source-scan spec enforces.
   */
 private[graft] object MaintainedRoot {
   import Incremental.{streamSource, withRootLease}
@@ -201,6 +204,12 @@ private[graft] object MaintainedRoot {
     }
   }
 
+  /** The batch id of a written index ([[write]]): stream batch ids start
+    * at 0, so it sorts first and every maintainer, erase and compaction
+    * treats it as an already-compacted batch.
+    */
+  private[streaming] val WrittenBatch = -1L
+
   /** The sorted ids of the root-level `<prefix><id>` markers. */
   private def markerIds(fs: FileSystem, root: Path, prefix: String): Seq[Long] =
     fs.listStatus(root).toSeq.map(_.getPath.getName)
@@ -223,12 +232,6 @@ private[graft] object MaintainedRoot {
     require(done.nonEmpty, s"no committed $what batch under $root")
     done
   }
-
-  /** Whether `root` is a stream-maintained root (batch-commit markers
-    * present) — the static index writers and readers refuse such roots.
-    */
-  private[graft] def isMaintained(fs: FileSystem, root: Path): Boolean =
-    fs.exists(root) && committedBatchIds(fs, root).nonEmpty
 
   /** Deterministic fingerprint of a micro-batch's SOURCE-FILE set.
     * Recorded inside each `_committed_<id>` marker and re-checked on
@@ -308,13 +311,14 @@ private[graft] object MaintainedRoot {
     * scheme: batch dirs (`<parent>/batch_<id>` — or root-level
     * `lists_batch_<id>` for the IVF-PQ layout) plus at most one committed
     * compacted generation (`compact_<gen>`, gen = the highest batch id
-    * folded in). The generation is committed by a single root-level
-    * `_compacted_<gen>` marker written LAST (shared across members), so
+    * folded in; `compact_-1` for a written index). The generation is
+    * committed by a single root-level `_compacted_<gen>` marker written
+    * LAST (shared across members), so
     * the serve/erase surface is compact dir + tail batch dirs — bounded
     * by compaction cadence instead of growing one leg per batch forever.
     * `cols` are the member's columns as served and compacted.
     */
-  private[streaming] final case class MemberLayout(
+  private[graft] final case class MemberLayout(
       parentRel: String,
       cols: Seq[String],
       batchPrefix: String = "batch_",
@@ -339,10 +343,6 @@ private[graft] object MaintainedRoot {
       gen.map(g => compactPath(root, g)).filter(fs.exists).toSeq ++
         done.filter(id => gen.forall(id > _)).map(id => batchPath(root, id))
     }
-    /** The member as served: every live leg, projected to `cols`. */
-    def read(r: Root, done: Seq[Long]): DataFrame =
-      Parquet.read(r.spark, legs(r.fs, r.dir, done).map(_.toString): _*)
-        .select(cols.map(col): _*)
     /** Remove dirs superseded by the COMMITTED compaction generation:
       * batch dirs at or below it and older compact dirs. Idempotent.
       * Called by [[compact]]'s sweep AND at erase entry — a compaction
@@ -354,8 +354,8 @@ private[graft] object MaintainedRoot {
       */
     def sweepSuperseded(fs: FileSystem, root: Path): Unit =
       compactedGenId(fs, root).foreach { gen =>
-        val Batch = s"$batchPrefix(\\d+)".r
-        val Compact = s"$compactPrefix(\\d+)".r
+        val Batch = s"$batchPrefix(-?\\d+)".r
+        val Compact = s"$compactPrefix(-?\\d+)".r
         if (fs.exists(parent(root))) fs.listStatus(parent(root)).toSeq.foreach { st =>
           val superseded = st.getPath.getName match {
             case Batch(id) => id.toLong <= gen
@@ -374,8 +374,6 @@ private[graft] object MaintainedRoot {
   private[streaming] val SimJoinSets = MemberLayout("sets", Seq("id", "set", "n"))
   private[streaming] val IvfLists = MemberLayout("", Seq("cluster", "n_id", "codes", "n_norm"),
     "lists_batch_", "lists_compact_")
-  /** The static base lists an IVF-PQ root is maintained on top of. */
-  private[streaming] val IvfBaseLists = "lists"
 
   /** The committed compaction generation under a maintained root (highest
     * `_compacted_<gen>` marker), shared by every member of the root.
@@ -383,31 +381,29 @@ private[graft] object MaintainedRoot {
   private[streaming] def compactedGenId(fs: FileSystem, root: Path): Option[Long] =
     markerIds(fs, root, CompactedPrefix).lastOption
 
-  /** Reject a maintained root that holds (any part of) a STATICALLY
-    * written index: a static layout keeps part files directly under the
-    * member dirs, which the maintained readers (batch / compact dirs
-    * only) silently ignore — cohabiting would hide every statically
-    * written document. Checked on EVERY member dir, even without a
-    * sidecar: a static write interrupted between members leaves exactly
-    * one member in the static shape. Hidden names (an erase's
-    * [[StagedSwap]] dirs, checksums) and `_` markers are not entries.
+  /** Reject a root whose member dirs hold anything but batch and compact
+    * dirs — a layout no maintained reader resolves (a foreign or older
+    * index format, or stray part files), whose rows a maintainer would
+    * silently hide. Checked on EVERY member dir of the on-disk input,
+    * whatever the index type. Hidden names (an erase's [[StagedSwap]]
+    * dirs, checksums) and `_` markers are not entries.
     */
   private[streaming] def assertMaintainerOwnsLayout(
       fs: FileSystem,
       root: Path,
       members: Seq[MemberLayout],
-      what: String,
-      serveHint: String): Unit =
+      what: String): Unit =
     members.foreach { m =>
-      val p = new Path(root, m.parentRel)
-      val static = fs.exists(p) && fs.listStatus(p).exists { st =>
+      val p = m.parent(root)
+      val foreign = fs.exists(p) && fs.listStatus(p).exists { st =>
         val n = st.getPath.getName
         !n.startsWith(m.batchPrefix) && !n.startsWith(m.compactPrefix) &&
           !n.startsWith("_") && !n.startsWith(".")
       }
-      require(!static,
-        s"$root holds a statically-written $what (non-batch entries under " +
-          s"${m.parentRel}/); stream maintainers own their roots ($serveHint)")
+      require(!foreign,
+        s"$root holds entries that are neither batch nor compact dirs under " +
+          s"'${m.parentRel}/', a layout no $what reader resolves: write the " +
+          "index again with its write, or maintain a fresh root")
     }
 
   /** ONE-JOB victim probe over a union of leg reads: tag each row with
@@ -438,14 +434,14 @@ private[graft] object MaintainedRoot {
   }
 
   /** The leg-dir names a maintained member can have, for the probe's
-    * leg tag: every layout's batch and compact prefixes, plus the IVF-PQ
-    * base lists.
+    * leg tag: every layout's batch and compact prefixes with an id, the
+    * written generation's `-1` included.
     */
   private val LegDir = {
     val prefixes = Seq(Bm25Postings, MinHashBuckets, MinHashSets,
       SimJoinPrefixes, SimJoinSets, IvfLists)
       .flatMap(m => Seq(m.batchPrefix, m.compactPrefix)).distinct
-    s"/((?:${prefixes.mkString("|")})[0-9]+|$IvfBaseLists)(?:/cluster=[^/]+)?/[^/]+$$"
+    s"/((?:${prefixes.mkString("|")})-?[0-9]+)(?:/cluster=[^/]+)?/[^/]+$$"
   }
 
   /** Tag file-sourced rows with the maintained-root leg dir they came
@@ -467,18 +463,19 @@ private[graft] object MaintainedRoot {
   /** A maintained root as the generic operations see it: the session, the
     * root path as the caller gave it, and its Hadoop filesystem.
     */
-  private[streaming] final class Root(val spark: SparkSession, val path: String) {
+  private[graft] final class Root(val spark: SparkSession, val path: String) {
     val conf: Configuration = spark.sparkContext.hadoopConfiguration
     val dir = new Path(path)
     val fs: FileSystem = dir.getFileSystem(conf)
   }
 
-  /** One encoded micro-batch: a frame per data member, each written to
-    * that member's batch dir, and the index's `side` artifacts (BM25's
-    * df/stats snapshots, SimJoin's frozen rarity order). All of them are
-    * written concurrently before the batch's one marker.
+  /** One encoded micro-batch or written index: a frame per data member,
+    * each written to that member's batch dir (or written generation), and
+    * the index's `side` artifacts (BM25's df/stats snapshots, SimJoin's
+    * frozen rarity order, a sidecar). All of them are written concurrently
+    * before the batch's one marker.
     */
-  private[streaming] final case class Encoded(
+  private[graft] final case class Encoded(
       frames: Seq[(MemberLayout, DataFrame)],
       side: Seq[() => Unit] = Nil)
 
@@ -487,40 +484,37 @@ private[graft] object MaintainedRoot {
     */
   private[streaming] type Encode = (DataFrame, Long, Seq[Long]) => Encoded
 
-  /** One stream-maintained index type, as the generic [[maintain]],
+  /** One maintained index type, as the generic [[write]], [[maintain]],
     * [[read]], [[erase]] and [[compact]] run it:
     *  - `members`: its data members, the erase PROBE member LAST. The
     *    erase rewrites a leg's members in this order, so a crash mid-leg
     *    leaves the probe member victim-bearing and the idempotent re-run
     *    finishes the leg instead of attesting it;
     *  - `idCol`: the document key every member carries;
-    *  - `staticHint`: where a maintainer must refuse a root holding a
-    *    statically written index of this type, how to serve that one
-    *    ([[assertMaintainerOwnsLayout]]); IVF-PQ has none, because its
-    *    root is maintained on top of a static base by design;
     *  - `distinctPerDoc`: the probe member repeats a document across rows
     *    (BM25 postings), so ledger counts are distinct documents.
-    * Its methods are the index's own steps: the serve, the per-member
-    * compaction merge, the member write and read, and the erase's probe
-    * rows, rewrite and ledger. The defaults fit plain per-document
-    * parquet members (MinHash, SimJoin); BM25 (snapshot roll-forward and
-    * the erase journal) and IVF-PQ (the static base, the model
-    * generation, cluster-partitioned legs) override what differs. The
-    * per-batch encode depends on the maintainer run's own parameters, so
-    * each codec builds it in an `encoder(...)` that [[maintain]] takes.
+    * Its methods are the index's own steps: the written index's frames,
+    * the serve, the member write, read and generation layout, and the
+    * erase's probe rows, rewrite and ledger. The defaults fit plain
+    * per-document parquet members (MinHash, SimJoin); BM25 (snapshot
+    * roll-forward and the erase journal) and IVF-PQ (the model generation,
+    * cluster-partitioned legs) override what differs. The per-batch encode
+    * depends on the maintainer run's own parameters, so each codec builds
+    * it in an `encoder(...)` that [[maintain]] takes.
     */
-  private[streaming] abstract class IndexCodec[I](
+  private[graft] abstract class IndexCodec[I](
       val what: String,
       val members: Seq[MemberLayout],
       val idCol: String = "id",
-      val staticHint: Option[String] = None,
       val distinctPerDoc: Boolean = false) {
 
     /** The index value served from the committed legs `done`. */
     def serve(r: Root, done: Seq[Long]): I
 
-    /** The committed batch ids a serve needs: at least one. */
-    def committed(r: Root): Seq[Long] = requireCommitted(r.fs, r.dir, what)
+    /** A built index as the [[WrittenBatch]]'s member frames and side
+      * artifacts ([[write]]).
+      */
+    def written(r: Root, index: I): Encoded
 
     /** Runs once a batch has committed, with every committed id. */
     def afterCommit(r: Root, committed: Seq[Long]): Unit = ()
@@ -530,17 +524,31 @@ private[graft] object MaintainedRoot {
       */
     def write(df: DataFrame, p: Path): Unit = df.write.mode("overwrite").parquet(p.toString)
 
+    /** Writes member `m`'s rows as one generation dir `out` in the
+      * member's serving layout, `numFiles` files: by default a plain
+      * concat of per-document rows with no global state. A compaction and
+      * a written index ([[write]]) both write through it.
+      */
+    def writeGeneration(m: MemberLayout, df: DataFrame, out: Path, numFiles: Int): Unit =
+      df.repartition(numFiles).write.mode("overwrite").parquet(out.toString)
+
     /** Reads one member leg dir, when it exists. */
     def readLeg(r: Root)(p: Path): Option[DataFrame] =
       if (r.fs.exists(p)) Some(Parquet.read(r.spark, p.toString)) else None
 
-    /** Member `m`'s compaction merge into `numFiles` files: by default a
-      * plain concat of per-document rows with no global state.
+    /** The rows of member `m`'s leg dirs `legs`, projected to its columns:
+      * one multi-path read, or none for no leg.
       */
-    def merge(r: Root, m: MemberLayout, numFiles: Int): (Seq[String], String) => Unit =
-      (ins, out) => Parquet.read(r.spark, ins: _*).select(m.cols.map(col): _*)
-        .repartition(numFiles)
-        .write.mode("overwrite").parquet(out)
+    def readLegs(r: Root, m: MemberLayout, legs: Seq[Path]): Option[DataFrame] =
+      if (legs.isEmpty) None
+      else Some(Parquet.read(r.spark, legs.map(_.toString): _*).select(m.cols.map(col): _*))
+
+    /** Member `m` as served, probed and compacted: every live leg of the
+      * committed ids `done`.
+      */
+    final def live(r: Root, m: MemberLayout, done: Seq[Long]): DataFrame =
+      readLegs(r, m, m.legs(r.fs, r.dir, done).filter(r.fs.exists)).getOrElse(
+        throw new IllegalStateException(s"$what at ${r.path} has no readable leg of '${m.parentRel}'"))
 
     /** The index's own check before a compaction. */
     def beforeCompact(r: Root): Unit = ()
@@ -549,10 +557,7 @@ private[graft] object MaintainedRoot {
     def beforeErase(r: Root, done: Seq[Long]): Unit = ()
 
     /** The rows the erase probes: the probe member's live legs, key only. */
-    def probeRows(r: Root, done: Seq[Long]): DataFrame =
-      Parquet.read(r.spark,
-          members.last.legs(r.fs, r.dir, done).filter(r.fs.exists).map(_.toString): _*)
-        .select(idCol)
+    def probeRows(r: Root, done: Seq[Long]): DataFrame = live(r, members.last, done).select(idCol)
 
     /** Removes the victim keys `k` from every victim-bearing leg, given
       * as the probe's (leg, n_before, n_erased).
@@ -588,22 +593,61 @@ private[graft] object MaintainedRoot {
 
     /** The per-leg erase ledger (batch_id, n_before, n_after, n_erased): a
       * batch leg reports its batch id, the compacted generation its gen
-      * id (the highest batch id folded into it).
+      * id (the highest batch id folded into it; `-1` for a written
+      * index's generation).
       */
     def ledger(spark: SparkSession, affected: Seq[(String, Long, Long)]): DataFrame = {
       import spark.implicits._
       affected.map { case (leg, before, erased) =>
-        (leg.filter(_.isDigit).toLong, before, before - erased, erased)
+        (leg.substring(leg.lastIndexOf('_') + 1).toLong, before, before - erased, erased)
       }.toDF("batch_id", "n_before", "n_after", "n_erased")
     }
   }
 
-  /** MAINTAIN: refuse a root holding a static index of this type, build
-    * the run's encode (`encoder` runs the index's own preconditions), then
-    * one [[runBatchCommitted]] run in which every micro-batch is encoded
-    * and its member frames (each into its member's batch dir) and side
-    * artifacts are written concurrently before the marker. Returns the
-    * maintained index ([[read]]).
+  /** WRITE: commit a built `index` as a root whose only batch, the
+    * [[WrittenBatch]] id `-1`, is already compacted. Under the root's
+    * mutator lease it refuses a root that holds a committed stream batch
+    * (whose rows a written index would hide or double-serve), clears what
+    * an earlier write left, then writes every member frame into its
+    * `compact_-1` generation in the member's serving layout (`numFiles`
+    * files) concurrently with the side artifacts, then `_compacted_-1`
+    * and `_committed_-1` last. A crash before the markers leaves a root
+    * no reader resolves, which a re-run overwrites. Stream batch ids start
+    * at 0, so a maintainer, an erase and a compaction run on a written
+    * root with no special case.
+    */
+  private[graft] def write[I](
+      c: IndexCodec[I],
+      spark: SparkSession,
+      indexPath: String,
+      index: I,
+      numFiles: Int): Unit = {
+    val r = new Root(spark, indexPath)
+    r.fs.mkdirs(r.dir)
+    withRootLease(r.conf, r.fs, r.dir, c.what, "writer") {
+      val streamed = committedBatchIds(r.fs, r.dir).filter(_ > WrittenBatch)
+      require(streamed.isEmpty,
+        s"$indexPath is a stream-maintained ${c.what} root (committed stream batches " +
+          s"${streamed.mkString(", ")}): writing over it would leave them " +
+          "double-serving — write to a fresh root")
+      r.fs.listStatus(r.dir).map(_.getPath).filter(_.getName != Incremental.LeaseName)
+        .foreach(r.fs.delete(_, true))
+      val e = c.written(r, index)
+      Concurrent.awaitAll(e.frames.map { case (m, df) => () =>
+        c.writeGeneration(m, df.select(m.cols.map(col): _*),
+          m.compactPath(r.dir, WrittenBatch), numFiles)
+      } ++ e.side)
+      writeUtf8(r.fs, new Path(r.dir, s"$CompactedPrefix$WrittenBatch"), s"merged=$WrittenBatch")
+      writeUtf8(r.fs, new Path(r.dir, s"$CommittedPrefix$WrittenBatch"), "")
+    }
+  }
+
+  /** MAINTAIN: refuse a root whose member dirs hold a layout no reader
+    * resolves, build the run's encode (`encoder` runs the index's own
+    * preconditions), then one [[runBatchCommitted]] run in which every
+    * micro-batch is encoded and its member frames (each into its member's
+    * batch dir) and side artifacts are written concurrently before the
+    * marker. Returns the maintained index ([[read]]).
     */
   private[streaming] def maintain[I](
       c: IndexCodec[I],
@@ -614,7 +658,7 @@ private[graft] object MaintainedRoot {
       maxFilesPerTrigger: Int)(
       encoder: Root => Encode): I = {
     val r = new Root(spark, indexPath)
-    c.staticHint.foreach(assertMaintainerOwnsLayout(r.fs, r.dir, c.members, c.what, _))
+    assertMaintainerOwnsLayout(r.fs, r.dir, c.members, c.what)
     val encode = encoder(r)
     runBatchCommitted(spark, srcPath, indexPath, checkpointPath, c.what,
       maxFilesPerTrigger) { (batch, batchId, done) =>
@@ -625,10 +669,12 @@ private[graft] object MaintainedRoot {
     read(c, spark, indexPath)
   }
 
-  /** READ: the index served from its committed legs. */
-  private[streaming] def read[I](c: IndexCodec[I], spark: SparkSession, indexPath: String): I = {
+  /** READ: the index served from its committed legs — a written index's
+    * generation, and every later stream batch and compaction.
+    */
+  private[graft] def read[I](c: IndexCodec[I], spark: SparkSession, indexPath: String): I = {
     val r = new Root(spark, indexPath)
-    c.serve(r, c.committed(r))
+    c.serve(r, requireCommitted(r.fs, r.dir, c.what))
   }
 
   /** ERASE, under the root's mutator lease: a single key column, an
@@ -677,14 +723,15 @@ private[graft] object MaintainedRoot {
     * check and the recovery of an interrupted erase's leg swaps
     * ([[recoverLegs]]: a leg whose live dir sits in backup would be left
     * out of the merge): merge the previous compacted generation (if any)
-    * and every committed batch dir into ONE `compact_<newGen>` dir per member
-    * (newGen = the highest committed batch id, `merge(inputDirs, outDir)`
-    * in that member's serving layout; it may decline to write when every
-    * input is empty, which readers tolerate), committed by a single
-    * `_compacted_<newGen>` marker written LAST, then sweep the superseded
-    * dirs. Without compaction, serve-plan union width and erase-probe
-    * cost grow one leg per committed batch forever (10⁴–10⁵ dirs at
-    * production micro-batch cadence).
+    * (a written index's `compact_-1` included) and every committed batch
+    * dir into ONE `compact_<newGen>` dir per member (newGen = the highest
+    * committed batch id, [[IndexCodec.writeGeneration]] in that member's
+    * serving layout; a member with no readable input writes none, which
+    * readers tolerate), committed by a single `_compacted_<newGen>`
+    * marker written LAST, then sweep the superseded dirs. Without
+    * compaction, serve-plan union width and erase-probe cost grow one leg
+    * per committed batch forever (10⁴–10⁵ dirs at production micro-batch
+    * cadence).
     *
     * Crash-safe at every point: a crash before the marker leaves
     * half-written compact dirs no reader resolves (and a re-run
@@ -723,9 +770,8 @@ private[graft] object MaintainedRoot {
         // members merge into disjoint compact dirs under ONE marker —
         // concurrent (guide §2.6)
         Concurrent.awaitAll(c.members.map { m => () =>
-          val inputs = m.legs(fs, root, done).filter(fs.exists)
-          if (inputs.nonEmpty)
-            c.merge(r, m, numFiles)(inputs.map(_.toString), m.compactPath(root, newGen).toString)
+          c.readLegs(r, m, m.legs(fs, root, done).filter(fs.exists))
+            .foreach(c.writeGeneration(m, _, m.compactPath(root, newGen), numFiles))
         })
         // ONE commit point covers every member's merged generation
         writeUtf8(fs, new Path(root, s"$CompactedPrefix$newGen"),

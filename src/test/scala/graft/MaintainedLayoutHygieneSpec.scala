@@ -14,6 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * paths through `MaintainedRoot` (its `MemberLayout`s and predicates), so
   * a new hand-written copy of a root-layout name fails here. BM25's
   * `*_snap_*` snapshot names belong to the BM25 codec and are not scanned.
+  * The index sources under `graft/ops` build no member dir path by name
+  * either (`sub("postings")`, `new Path(path, "lists")`, `s"$path/sets"`):
+  * an index's `write` and `read` go through its codec, so a second
+  * on-disk layout cannot grow back there.
   *
   * A second scan keeps `Incremental`'s maintained-index entry points
   * delegations: `graft/streaming/Incremental.scala` (comments stripped)
@@ -49,12 +53,31 @@ class MaintainedLayoutHygieneSpec extends AnyFunSuite {
       s"build root-layout paths through MaintainedRoot instead:\n${offenders.mkString("\n")}")
   }
 
+  // a member dir built by name: a `sub("postings")`-style helper, a Hadoop
+  // `Path(parent, "lists")`, or an interpolated `s"$path/lists"`
+  private val MemberDir = ("(?:\\b(?:sub|Path)\\([^)\\n]*\"|\\$\\{?\\w+\\}?/)" +
+    "(?:postings|terms|stats|buckets|sets|prefixes|freq|lists)\"").r
+
+  test("no index source under graft/ops builds a member dir path by name") {
+    val ops = Root.resolve("graft/ops")
+    val files = Files.walk(ops).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.endsWith("Bm25Index.scala")), s"no index sources under $ops")
+    val offenders = files.flatMap { p =>
+      val src = new String(Files.readAllBytes(p), "UTF-8")
+      MemberDir.findAllMatchIn(src).map { m =>
+        s"${Root.relativize(p)}:${src.substring(0, m.start).count(_ == '\n') + 1}: ${m.matched}"
+      }.toSeq
+    }
+    assert(offenders.isEmpty,
+      s"write and read an index through its codec instead:\n${offenders.mkString("\n")}")
+  }
+
   private val Delegator = "graft/streaming/Incremental.scala"
   // the protocol steps and the member layouts (and their members) that
   // only MaintainedRoot's generic operations and the codecs may call
   private val ProtocolStep = ("\\b(?:runBatchCommitted|batchWrites|erasing|probeMember|" +
     "rewriteLegs|compactCore|victimLegProbe|sweepSuperseded|MemberLayout|Bm25Postings|" +
-    "MinHashBuckets|MinHashSets|SimJoinPrefixes|SimJoinSets|IvfLists|IvfBaseLists)\\b|" +
+    "MinHashBuckets|MinHashSets|SimJoinPrefixes|SimJoinSets|IvfLists)\\b|" +
     "\\.(?:members|legs|batchPath|compactPath)\\b").r
 
   test("Incremental's maintained-index entry points call no protocol step directly") {

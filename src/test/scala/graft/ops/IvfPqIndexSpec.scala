@@ -41,6 +41,10 @@ class IvfPqIndexSpec extends AnyFunSuite {
       .collect().map(r => (r.getAs[Long]("n_id"), r.getAs[Int]("cluster"),
         r.getAs[Seq[Int]]("codes"), r.getAs[Double]("n_norm")))
     assert(l0.toSeq == l1.toSeq)
+    // the written lists stay cluster-partitioned: a cluster filter prunes
+    // partition dirs instead of reading every file
+    val pruned = loaded.lists.filter(col("cluster") === 0).queryExecution.executedPlan.toString
+    assert("PartitionFilters: \\[[^\\]]*cluster".r.findFirstIn(pruned).nonEmpty, pruned)
 
     val a = IvfPqIndex.topK(built, q, emb, "vec_id", "embedding", k = 5).collect().map(key).toSet
     val b = IvfPqIndex.topK(loaded, q, emb, "vec_id", "embedding", k = 5).collect().map(key).toSet

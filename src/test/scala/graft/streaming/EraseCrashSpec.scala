@@ -14,8 +14,10 @@ import graft.etl.Tables
   * `rename` and `delete` call k of the erase (Spark's own output commit
   * included), then `breakRootLease` (the crashed eraser cannot release
   * its lease) and a clean rerun, must leave the rows of a fault-free
-  * erase and no hidden dir. The root holds the sf0.001 documents in two
-  * batches (even and odd ids); the victims {4, 6} sit in batch 0 only.
+  * erase and no hidden dir. The maintained roots hold the sf0.001
+  * documents in two batches (even and odd ids), the victims {4, 6} in
+  * batch 0 only; the written root holds them all in its written
+  * generation, with no stream batch.
   */
 class EraseCrashSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
@@ -68,6 +70,17 @@ class EraseCrashSpec extends AnyFunSuite {
     }
     matrix(root)(dir => Incremental.eraseMinHashMaintained(spark, dir, keys).count()) { dir =>
       val ix = Incremental.readMinHashMaintained(spark, dir)
+      Seq(rows(ix.buckets), rows(ix.sets))
+    }
+  }
+
+  test("written minhash erase: a crash at any rename or delete, then a clean " +
+      "rerun, equals the fault-free erase") {
+    val root = Files.createTempDirectory("graft_ecrash_w").toString
+    graft.ops.MinHashIndex.write(graft.ops.MinHashIndex.build(
+      Tables.documents(spark, GraftSpark.Sf0001), "doc_id", "text", 3, 8, 2), root)
+    matrix(root)(dir => Incremental.eraseMinHashMaintained(spark, dir, keys).count()) { dir =>
+      val ix = graft.ops.MinHashIndex.read(spark, dir)
       Seq(rows(ix.buckets), rows(ix.sets))
     }
   }

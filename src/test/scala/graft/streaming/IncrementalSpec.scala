@@ -525,6 +525,55 @@ class IncrementalSpec extends AnyFunSuite {
     assert(e.getMessage.contains("silently"), e.getMessage)
     assert(serve(Incremental.readBm25Maintained(spark, idx)) == full,
       "guard must not touch the index")
+    // a written index is a maintained root: write the first half, stream
+    // the second half onto it, and the read serves like a full rebuild
+    val written = Files.createTempDirectory("graft_bm25m_written").toString
+    val writtenSrc = Files.createTempDirectory("graft_bm25m_wsrc").toString
+    graft.ops.Bm25Index.write(
+      graft.ops.Bm25Index.build(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text"), written)
+    stageArrival(writtenSrc, docs.filter(col("doc_id") % 2 =!= 0), "p2")
+    Incremental.streamBm25Maintain(spark, writtenSrc, written, "doc_id", "text")
+    assert(serve(graft.ops.Bm25Index.read(spark, written)) == full,
+      "a written half streamed to the full corpus must serve like a full rebuild")
+  }
+
+  test("write overwrites a written root and refuses one that holds a stream " +
+      "batch, for every index") {
+    val docs = Tables.documents(spark, GraftSpark.Sf0001)
+    val emb = Tables.embeddings(spark, GraftSpark.Sf0001)
+    def half(df: org.apache.spark.sql.DataFrame, c: String, i: Int) = df.filter(col(c) % 2 === i)
+    // per index: its write of the half i, and the documents its read serves
+    val indexes: Seq[(String, Int => String => Unit, String => Long, Long)] = Seq(
+      ("bm25", i => graft.ops.Bm25Index.write(
+          graft.ops.Bm25Index.build(half(docs, "doc_id", i), "doc_id", "text"), _),
+        p => graft.ops.Bm25Index.read(spark, p).stats.head().getDouble(0).toLong,
+        half(docs, "doc_id", 1).count()),
+      ("minhash", i => graft.ops.MinHashIndex.write(
+          graft.ops.MinHashIndex.build(half(docs, "doc_id", i), "doc_id", "text", 3, 8, 2), _),
+        p => graft.ops.MinHashIndex.read(spark, p).sets.count(),
+        half(docs, "doc_id", 1).count()),
+      ("simjoin", i => graft.ops.SimJoinIndex.write(
+          graft.ops.SimJoinIndex.build(half(docs, "doc_id", i), "doc_id", "text"), _),
+        p => graft.ops.SimJoinIndex.read(spark, p).sets.count(),
+        half(docs, "doc_id", 1).count()),
+      ("ivfpq", i => graft.ops.IvfPqIndex.write(
+          graft.ops.IvfPqIndex.build(half(emb, "vec_id", i), "vec_id", "embedding",
+            nlist = 4, numSubspaces = 8, numCodes = 16), _),
+        p => graft.ops.IvfPqIndex.read(spark, p).lists.count(),
+        half(emb, "vec_id", 1).count()))
+    indexes.foreach { case (what, write, served, odd) =>
+      val root = Files.createTempDirectory(s"graft_rewrite_$what").toString
+      write(0)(root)
+      write(1)(root)
+      assert(served(root) == odd, s"$what: a second write must replace the first")
+      // a committed stream batch (its marker is what the layout reads)
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(root, "_committed_0"))
+      def listing = new java.io.File(root).list().sorted.toSeq
+      val before = listing
+      val e = intercept[IllegalArgumentException](write(0)(root))
+      assert(e.getMessage.contains("stream-maintained"), s"$what: ${e.getMessage}")
+      assert(listing == before, s"$what: a refused write must leave the root as it was")
+    }
   }
 
   test("streamMinHashMaintain: maintained index queries exactly like the " +
@@ -583,17 +632,18 @@ class IncrementalSpec extends AnyFunSuite {
       Incremental.streamMinHashMaintain(spark, src, idx, "doc_id", "text",
         shingleK = 4, bands = 8, rowsPerBand = 2, checkpointPath = ckpt))
     assert(e.getMessage.contains("incomparable"), e.getMessage)
-    // statically-written roots are not maintainable (the maintained
-    // reader would silently hide every static document)
-    val staticIdx = Files.createTempDirectory("graft_mhm_static").toString
+    // a written index is a maintained root: write the first half, stream
+    // the second half onto it, and the read queries like a rebuild on the
+    // union
+    val writtenIdx = Files.createTempDirectory("graft_mhm_written").toString
+    val writtenSrc = Files.createTempDirectory("graft_mhm_wsrc").toString
     graft.ops.MinHashIndex.write(
-      graft.ops.MinHashIndex.build(firstHalf, "doc_id", "text", 3, 8, 2),
-      staticIdx)
-    val e2 = intercept[IllegalArgumentException](
-      Incremental.streamMinHashMaintain(spark, src, staticIdx, "doc_id",
-        "text", shingleK = 3, bands = 8, rowsPerBand = 2,
-        checkpointPath = ckpt))
-    assert(e2.getMessage.contains("statically-written"), e2.getMessage)
+      graft.ops.MinHashIndex.build(firstHalf, "doc_id", "text", 3, 8, 2), writtenIdx)
+    stageArrival(writtenSrc, docs.filter(col("doc_id") % 2 =!= 0), "p2")
+    Incremental.streamMinHashMaintain(spark, writtenSrc, writtenIdx, "doc_id",
+      "text", shingleK = 3, bands = 8, rowsPerBand = 2)
+    assert(pairsOf(graft.ops.MinHashIndex.read(spark, writtenIdx)) == full,
+      "a written half streamed to the full corpus must query like a full rebuild")
   }
 
   test("streamIvfPqMaintain: frozen-model streamed appends serve exactly " +
@@ -628,17 +678,14 @@ class IncrementalSpec extends AnyFunSuite {
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$tmp/index/lists_batch_99"))
     fs.create(new org.apache.hadoop.fs.Path(s"$tmp/index/_committed_99"), true).close()
     assert(serve(Incremental.readIvfPqMaintained(spark, s"$tmp/index")) == expected)
-    // a plain static read on a maintained root is LOUD, never silently
-    // missing every streamed vector
-    val e0 = intercept[IllegalArgumentException](
-      graft.ops.IvfPqIndex.read(spark, s"$tmp/index"))
-    assert(e0.getMessage.contains("stream-maintained"), e0.getMessage)
-    // ...and so is a static WRITE-BACK (it would leave stale batch dirs
-    // double-serving; the unchanged sidecar defeats the generation stamp)
+    // the index's own read is the maintained read: every streamed vector
+    assert(serve(graft.ops.IvfPqIndex.read(spark, s"$tmp/index")) == expected)
+    // a WRITE-BACK is loud (it would hide or double-serve the streamed
+    // batches; the unchanged sidecar defeats the generation stamp)
     val eW = intercept[IllegalArgumentException](
       graft.ops.IvfPqIndex.write(baseIdx, s"$tmp/index"))
     assert(eW.getMessage.contains("stream-maintained"), eW.getMessage)
-    // an OUT-OF-BAND model rebuild (write() itself now rejects maintained
+    // an OUT-OF-BAND model rebuild (write() itself rejects maintained
     // roots, so the remaining path is a sidecar replaced behind our back)
     // invalidates the batch dirs' codes — the generation stamp rejects it
     graft.ops.IvfPqIndex.write(
@@ -810,25 +857,27 @@ class IncrementalSpec extends AnyFunSuite {
       Incremental.streamSimJoinMaintain(spark, s"$tmp/src", s"$tmp/index",
         "doc_id", "text", shingleK = 3, threshold = 0.6))
     assert(e1.getMessage.contains("incomparable"), e1.getMessage)
-    // statically-written roots are not maintainable (the reader would
-    // silently ignore their flat prefix files)
+    // a written index is a maintained root: write the first half of the
+    // corpus, stream the second half onto it (the written freq/ is the
+    // frozen order), and the read serves the pair set of the union
     graft.ops.SimJoinIndex.write(
-      graft.ops.SimJoinIndex.build(corpus, "doc_id", "text",
-        shingleK = 3, threshold = 0.5), s"$tmp/static")
+      graft.ops.SimJoinIndex.build(corpus.filter(col("doc_id") % 2 === 0),
+        "doc_id", "text", shingleK = 3, threshold = 0.5), s"$tmp/written")
+    new java.io.File(s"$tmp/wsrc").mkdirs()
+    stageArrival(s"$tmp/wsrc", corpus.filter(col("doc_id") % 2 =!= 0), "p2")
+    Incremental.streamSimJoinMaintain(spark, s"$tmp/wsrc", s"$tmp/written",
+      "doc_id", "text", shingleK = 3, threshold = 0.5)
+    assert(pairsOf(graft.ops.SimJoinIndex.pairs(
+      graft.ops.SimJoinIndex.read(spark, s"$tmp/written"),
+      batch, "doc_id", "text")) == expected,
+      "a written half streamed to the full corpus must serve its pair set")
+    // a member dir holding anything but batch and compact dirs is a layout
+    // no reader resolves: the maintainer refuses it instead of hiding it
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$tmp/written/prefixes/part-0.parquet"))
     val e2 = intercept[IllegalArgumentException](
-      Incremental.streamSimJoinMaintain(spark, s"$tmp/src", s"$tmp/static",
+      Incremental.streamSimJoinMaintain(spark, s"$tmp/wsrc", s"$tmp/written",
         "doc_id", "text", shingleK = 3, threshold = 0.5))
-    assert(e2.getMessage.contains("statically-written"), e2.getMessage)
-    // ...even when the static write died BEFORE its final sidecar step
-    // (flat prefix files, no sidecar — the shape a crash leaves)
-    val fs = new org.apache.hadoop.fs.Path(s"$tmp/static").getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$tmp/static/_graft_index.json"), false)
-    val e3 = intercept[IllegalArgumentException](
-      Incremental.streamSimJoinMaintain(spark, s"$tmp/src", s"$tmp/static",
-        "doc_id", "text", shingleK = 3, threshold = 0.5))
-    assert(e3.getMessage.contains("statically-written"), e3.getMessage)
+    assert(e2.getMessage.contains("neither batch nor compact"), e2.getMessage)
   }
 
   test("caller-supplied delaySec skips the declaration-time span probe " +
