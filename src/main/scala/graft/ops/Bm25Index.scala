@@ -327,7 +327,10 @@ object Bm25Index {
     * stats as its df/stats snapshot — the root
     * [[graft.streaming.Incremental.streamBm25Maintain]] maintains. All
     * paths resolve through the Hadoop `FileSystem` API — object-store
-    * URIs included. A root that holds a committed stream batch is refused.
+    * URIs included. A root that holds a
+    * committed stream batch is refused, and so is an index read from the
+    * root itself; nothing under the root but the index's layout is
+    * replaced.
     */
   def write(index: Bm25Index, path: String, numFiles: Int = 8): Unit =
     MaintainedRoot.write(IndexCodecs.Bm25, index.postings.sparkSession, path, index, numFiles)

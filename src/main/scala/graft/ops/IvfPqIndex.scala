@@ -118,21 +118,23 @@ object IvfPqIndex {
       batch: DataFrame,
       idCol: String,
       vecCol: String): IvfPqIndex =
-    index.copy(lists =
-      index.lists.unionByName(encodeLists(index, batch, idCol, vecCol)))
+    index.copy(lists = index.lists.unionByName(
+      encodeLists(index.centroids, index.codebooks, index.residual, batch, idCol, vecCol)))
 
-  /** Encode a batch through the index's FROZEN model into inverted-list
-    * rows (cluster, n_id, codes, n_norm) — the shared map-side pass of
-    * [[append]] and the streaming maintainer
+  /** Encode a batch through a FROZEN model (centroids, codebooks,
+    * residual) into inverted-list rows (cluster, n_id, codes, n_norm) —
+    * the shared map-side pass of [[append]] and the streaming maintainer
     * ([[graft.streaming.Incremental.streamIvfPqMaintain]]).
     */
   private[graft] def encodeLists(
-      index: IvfPqIndex,
+      centroids: Array[(Int, Array[Double])],
+      codebooks: Array[Array[Array[Double]]],
+      residual: Boolean,
       batch: DataFrame,
       idCol: String,
       vecCol: String): DataFrame = {
     val c = batch.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-    toLists(residualEncode(c, index.centroids, index.residual), index.codebooks)
+    toLists(residualEncode(c, centroids, residual), codebooks)
   }
 
   /** A stable fingerprint of the persisted MODEL (the sidecar bytes) —
@@ -384,8 +386,10 @@ object IvfPqIndex {
     * pruning), model state as `_graft_index.json` — the root
     * [[graft.streaming.Incremental.streamIvfPqMaintain]] maintains. Paths
     * resolve through the Hadoop `FileSystem` API, so the index round-trips
-    * on local paths and object-store URIs (s3a://…) alike. A root that
-    * holds a committed stream batch is refused.
+    * on local paths and object-store URIs (s3a://…) alike. A root that holds a
+    * committed stream batch is refused, and so is an index read from the
+    * root itself; nothing under the root but the index's layout is
+    * replaced.
     */
   def write(index: IvfPqIndex, path: String): Unit =
     MaintainedRoot.write(IndexCodecs.IvfPq, index.lists.sparkSession, path, index, numFiles = 1)
@@ -405,12 +409,12 @@ object IvfPqIndex {
         s""""codebooks":${arr(index.codebooks.map(cb => arr(cb.map(dbls))))}}""")
   }
 
-  /** The index of the model sidecar at `path` over `lists`. The
-    * hand-rolled parser accepts exactly what [[writeModel]] emits (flat
-    * nested double arrays) — not general JSON.
+  /** The model of the sidecar at `path`: (centroids, codebooks,
+    * numCodes, residual). The hand-rolled parser accepts exactly what
+    * [[writeModel]] emits (flat nested double arrays) — not general JSON.
     */
-  private[graft] def withModel(
-      conf: org.apache.hadoop.conf.Configuration, path: String, lists: DataFrame): IvfPqIndex = {
+  private[graft] def model(conf: org.apache.hadoop.conf.Configuration, path: String)
+      : (Array[(Int, Array[Double])], Array[Array[Array[Double]]], Int, Boolean) = {
     val json = IndexSidecar.readJson(conf, path)
     def field(name: String): String = IndexSidecar.field(json, name, path)
     val numCodes = IndexSidecar.intField(json, "numCodes", path)
@@ -468,6 +472,6 @@ object IvfPqIndex {
       }
       i += 1
     }
-    IvfPqIndex(lists, centroids, cbOuter.result(), numCodes, residual)
+    (centroids, cbOuter.result(), numCodes, residual)
   }
 }

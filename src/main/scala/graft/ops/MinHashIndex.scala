@@ -13,11 +13,13 @@ import graft.streaming.{IndexCodecs, MaintainedRoot}
   * [[Dedup.minhashLshIncremental]] call would.
   *
   * - `buckets` — (band, bucket, id): one row per corpus doc per band, the
-  *   LSH candidate-join side. Persisted as plain parquet (the serve groups
-  *   and joins every band, so a band partitioning would prune nothing); a
-  *   production deployment stores it bucketed by (band, bucket) so the
-  *   daily batch join needs no corpus-side shuffle at all (the docstring
-  *   contract of [[Dedup.minhashLshIncremental]]).
+  *   LSH candidate-join side. Persisted as plain parquet hash-clustered
+  *   by (band, bucket) and sorted within each file, so the serve's partial
+  *   bucket-size aggregate collapses equal keys before its exchange (the
+  *   serve groups and joins every band, so a band partitioning would
+  *   prune nothing); a production deployment stores it bucketed by
+  *   (band, bucket) so the daily batch join needs no corpus-side shuffle
+  *   at all (the docstring contract of [[Dedup.minhashLshIncremental]]).
   * - `sets` — (id, shingle_set): the sorted-distinct shingle hashes that
   *   the exact-Jaccard verify joins by candidate id. This is the only
   *   corpus-sized state besides the buckets, and both are id+hash-width,
@@ -316,7 +318,9 @@ object MinHashIndex {
     * Paths resolve through the Hadoop `FileSystem` API, so the index
     * round-trips on local paths and object-store URIs (s3a://…) alike —
     * where a 100 TB index lives by definition. A root that holds a
-    * committed stream batch is refused.
+    * committed stream batch is refused, and so is an index read from the
+    * root itself; nothing under the root but the index's layout is
+    * replaced.
     */
   def write(index: MinHashIndex, path: String): Unit =
     MaintainedRoot.write(IndexCodecs.MinHash, index.buckets.sparkSession, path, index, numFiles = 8)

@@ -461,7 +461,10 @@ object SimJoinIndex {
     * int-only): the root
     * [[graft.streaming.Incremental.streamSimJoinMaintain]] maintains. All
     * paths resolve through the Hadoop `FileSystem` API — object-store URIs
-    * included. A root that holds a committed stream batch is refused.
+    * included. A root that holds a
+    * committed stream batch is refused, and so is an index read from the
+    * root itself; nothing under the root but the index's layout is
+    * replaced.
     */
   def write(index: SimJoinIndex, path: String, numFiles: Int = 8): Unit =
     MaintainedRoot.write(IndexCodecs.SimJoin, index.freq.sparkSession, path, index, numFiles)

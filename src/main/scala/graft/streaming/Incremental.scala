@@ -156,7 +156,7 @@ object Incremental extends StreamAnalytics with IvfPqRebuild {
     }
   }
 
-  private[streaming] val LeaseName = "_graft_lease"
+  private val LeaseName = "_graft_lease"
 
   /** Schemes [[withRootLease]] treats as S3-class object stores (no
     * atomic create-no-overwrite). Extensible without a rebuild via the

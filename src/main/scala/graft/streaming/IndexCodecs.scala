@@ -59,6 +59,8 @@ private[graft] object IndexCodecs {
       Encoded(Seq(Bm25Postings -> index.postings),
         snapshots(r, WrittenBatch, 0, index.terms, index.stats))
 
+    override def sideNames: String = "(?:terms|stats)_snap_.*|_erase_pending"
+
     /** Postings range-partitioned by term into `numFiles` files, sorted
       * by (term, id) within: each file holds a contiguous term range.
       */
@@ -235,6 +237,15 @@ private[graft] object IndexCodecs {
         Seq(() => MinHashIndex.writeSidecarParams(r.conf, r.path,
           index.shingleK, index.bands, index.rowsPerBand)))
 
+    /** Buckets hash-clustered by (band, bucket) and sorted within, so
+      * equal keys share a file: the serve's partial bucket-size aggregate
+      * collapses them before its exchange. Sets concat.
+      */
+    override def writeGeneration(m: MemberLayout, df: DataFrame, out: Path, numFiles: Int): Unit =
+      if (m != MinHashBuckets) super.writeGeneration(m, df, out, numFiles)
+      else df.repartition(numFiles, col("band"), col("bucket")).sortWithinPartitions("band", "bucket")
+        .write.mode("overwrite").parquet(out.toString)
+
     def serve(r: Root, done: Seq[Long]): MinHashIndex = {
       val (k, b, rows) = MinHashIndex.sidecarParams(r.conf, r.path)
       MinHashIndex(live(r, MinHashBuckets, done), live(r, MinHashSets, done), k, b, rows)
@@ -298,6 +309,8 @@ private[graft] object IndexCodecs {
       else df.repartition(numFiles, col("h")).sortWithinPartitions("h", "id")
         .write.mode("overwrite").parquet(out.toString)
 
+    override def sideNames: String = "freq"
+
     private def freqPath(r: Root) = new Path(r.dir, "freq").toString
 
     private def freq(r: Root) = Parquet.read(r.spark, freqPath(r)).select("h", "freq")
@@ -319,9 +332,10 @@ private[graft] object IndexCodecs {
       * checks its generation.
       */
     def encoder(r: Root, idCol: String, vecCol: String): Encode = {
-      val model = IvfPqIndex.withModel(r.conf, r.path, r.spark.emptyDataFrame)
+      val (centroids, codebooks, _, residual) = IvfPqIndex.model(r.conf, r.path)
       assertModelGeneration(r, stampIfAbsent = true)
-      (batch, _, _) => Encoded(Seq(IvfLists -> IvfPqIndex.encodeLists(model, batch, idCol, vecCol)))
+      (batch, _, _) => Encoded(Seq(IvfLists ->
+        IvfPqIndex.encodeLists(centroids, codebooks, residual, batch, idCol, vecCol)))
     }
 
     def written(r: Root, index: IvfPqIndex): Encoded =
@@ -353,7 +367,8 @@ private[graft] object IndexCodecs {
 
     def serve(r: Root, done: Seq[Long]): IvfPqIndex = {
       assertModelGeneration(r, stampIfAbsent = false)
-      IvfPqIndex.withModel(r.conf, r.path, live(r, IvfLists, done))
+      val (centroids, codebooks, numCodes, residual) = IvfPqIndex.model(r.conf, r.path)
+      IvfPqIndex(live(r, IvfLists, done), centroids, codebooks, numCodes, residual)
     }
 
     /** One cluster-partitioned generation; `numFiles` does not apply. */
@@ -385,9 +400,17 @@ private[graft] object IndexCodecs {
         .toDF("leg", "n_before", "n_after", "n_erased")
     }
 
+    override def sideNames: String = ModelGenName
+
+    private val ModelGenName = "_graft_model_gen"
+
+    /** Checks the model-generation stamp against the sidecar, or with
+      * `stampIfAbsent` writes it; an unstamped root (a written index no
+      * maintainer has run on) reads no sidecar here.
+      */
     private def assertModelGeneration(r: Root, stampIfAbsent: Boolean): Unit = {
-      val stampPath = new Path(r.dir, "_graft_model_gen")
-      val current = IvfPqIndex.sidecarHash(r.conf, r.path)
+      val stampPath = new Path(r.dir, ModelGenName)
+      lazy val current = IvfPqIndex.sidecarHash(r.conf, r.path)
       if (r.fs.exists(stampPath)) {
         val stamped = readUtf8(r.conf, stampPath).trim
         require(stamped == current,

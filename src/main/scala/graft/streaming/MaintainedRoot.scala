@@ -1,14 +1,16 @@
 package graft.streaming
 
+import java.util.regex.Pattern
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.etl.StagedSwap
-import graft.ops.Concurrent
+import graft.ops.{Concurrent, IndexSidecar}
 import graft.sources.Parquet
 
 /** The exactly-once protocol every stream-maintained index root (bm25,
@@ -39,6 +41,7 @@ private[graft] object MaintainedRoot {
 
   private val CommittedPrefix = "_committed_"
   private val CompactedPrefix = "_compacted_"
+  private val QueryIdName = "_graft_query_id"
 
   /** Read a small filesystem artifact fully — Hadoop FS resolved from the
     * path itself (the checkpoint may live on a different scheme than the
@@ -99,7 +102,7 @@ private[graft] object MaintainedRoot {
       root: Path,
       ckptStr: String,
       what: String): Unit = {
-    val stampPath = new Path(root, "_graft_query_id")
+    val stampPath = new Path(root, QueryIdName)
     if (fs.exists(stampPath)) {
       val stamped = readUtf8(conf, stampPath).trim
       val current = checkpointQueryId(conf, ckptStr)
@@ -121,7 +124,7 @@ private[graft] object MaintainedRoot {
       fs: FileSystem,
       root: Path,
       ckptStr: String): Unit = {
-    val stampPath = new Path(root, "_graft_query_id")
+    val stampPath = new Path(root, QueryIdName)
     if (!fs.exists(stampPath))
       checkpointQueryId(conf, ckptStr).foreach(writeUtf8(fs, stampPath, _))
   }
@@ -516,6 +519,22 @@ private[graft] object MaintainedRoot {
       */
     def written(r: Root, index: I): Encoded
 
+    /** The root-level names of the index's own side artifacts, a regex. */
+    def sideNames: String = "(?!)"
+
+    /** Whether the root-level entry `name` is part of this index's
+      * layout: a member dir (a root-level member's leg dirs), a batch or
+      * compaction marker, the sidecar, the run identity, or a side
+      * artifact ([[sideNames]]). A [[write]] clears exactly these.
+      */
+    final def owns(name: String): Boolean =
+      (members.map { m =>
+        if (m.parentRel.isEmpty) s"(?:${m.batchPrefix}|${m.compactPrefix}).*"
+        else Pattern.quote(m.parentRel)
+      } ++ Seq(s"$CommittedPrefix.*", s"$CompactedPrefix.*",
+        Pattern.quote(IndexSidecar.FileName), QueryIdName, sideNames))
+        .mkString("|").r.matches(name)
+
     /** Runs once a batch has committed, with every committed id. */
     def afterCommit(r: Root, committed: Seq[Long]): Unit = ()
 
@@ -605,10 +624,13 @@ private[graft] object MaintainedRoot {
   }
 
   /** WRITE: commit a built `index` as a root whose only batch, the
-    * [[WrittenBatch]] id `-1`, is already compacted. Under the root's
-    * mutator lease it refuses a root that holds a committed stream batch
-    * (whose rows a written index would hide or double-serve), clears what
-    * an earlier write left, then writes every member frame into its
+    * [[WrittenBatch]] id `-1`, is already compacted. It refuses an index
+    * that reads files under the root (one derived from a read of it: the
+    * write would delete its own input). Under the root's mutator lease it
+    * refuses a root that holds a committed stream batch (whose rows a
+    * written index would hide or double-serve), clears what an earlier
+    * write left (the names the layout owns, [[IndexCodec.owns]]; nothing
+    * else under the root), then writes every member frame into its
     * `compact_-1` generation in the member's serving layout (`numFiles`
     * files) concurrently with the side artifacts, then `_compacted_-1`
     * and `_committed_-1` last. A crash before the markers leaves a root
@@ -616,13 +638,19 @@ private[graft] object MaintainedRoot {
     * at 0, so a maintainer, an erase and a compaction run on a written
     * root with no special case.
     */
-  private[graft] def write[I](
+  private[graft] def write[I <: Product](
       c: IndexCodec[I],
       spark: SparkSession,
       indexPath: String,
       index: I,
       numFiles: Int): Unit = {
     val r = new Root(spark, indexPath)
+    val under = r.fs.makeQualified(r.dir).toUri.toString.stripSuffix("/") + "/"
+    val own = index.productIterator.collect { case df: Dataset[_] => df.inputFiles }
+      .flatten.filter(_.startsWith(under)).toSeq
+    require(own.isEmpty,
+      s"the ${c.what} written to $indexPath reads its own files (${own.headOption.mkString}): " +
+        "the write would delete its input — write it to a fresh root")
     r.fs.mkdirs(r.dir)
     withRootLease(r.conf, r.fs, r.dir, c.what, "writer") {
       val streamed = committedBatchIds(r.fs, r.dir).filter(_ > WrittenBatch)
@@ -630,7 +658,8 @@ private[graft] object MaintainedRoot {
         s"$indexPath is a stream-maintained ${c.what} root (committed stream batches " +
           s"${streamed.mkString(", ")}): writing over it would leave them " +
           "double-serving — write to a fresh root")
-      r.fs.listStatus(r.dir).map(_.getPath).filter(_.getName != Incremental.LeaseName)
+      recoverLegs(c, r)
+      r.fs.listStatus(r.dir).map(_.getPath).filter(p => c.owns(p.getName))
         .foreach(r.fs.delete(_, true))
       val e = c.written(r, index)
       Concurrent.awaitAll(e.frames.map { case (m, df) => () =>

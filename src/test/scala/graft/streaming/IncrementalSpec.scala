@@ -539,36 +539,54 @@ class IncrementalSpec extends AnyFunSuite {
 
   test("write overwrites a written root and refuses one that holds a stream " +
       "batch, for every index") {
+    import graft.ops.{Bm25Index, IvfPqIndex, MinHashIndex, SimJoinIndex}
     val docs = Tables.documents(spark, GraftSpark.Sf0001)
     val emb = Tables.embeddings(spark, GraftSpark.Sf0001)
     def half(df: org.apache.spark.sql.DataFrame, c: String, i: Int) = df.filter(col(c) % 2 === i)
-    // per index: its write of the half i, and the documents its read serves
-    val indexes: Seq[(String, Int => String => Unit, String => Long, Long)] = Seq(
-      ("bm25", i => graft.ops.Bm25Index.write(
-          graft.ops.Bm25Index.build(half(docs, "doc_id", i), "doc_id", "text"), _),
-        p => graft.ops.Bm25Index.read(spark, p).stats.head().getDouble(0).toLong,
-        half(docs, "doc_id", 1).count()),
-      ("minhash", i => graft.ops.MinHashIndex.write(
-          graft.ops.MinHashIndex.build(half(docs, "doc_id", i), "doc_id", "text", 3, 8, 2), _),
-        p => graft.ops.MinHashIndex.read(spark, p).sets.count(),
-        half(docs, "doc_id", 1).count()),
-      ("simjoin", i => graft.ops.SimJoinIndex.write(
-          graft.ops.SimJoinIndex.build(half(docs, "doc_id", i), "doc_id", "text"), _),
-        p => graft.ops.SimJoinIndex.read(spark, p).sets.count(),
-        half(docs, "doc_id", 1).count()),
-      ("ivfpq", i => graft.ops.IvfPqIndex.write(
-          graft.ops.IvfPqIndex.build(half(emb, "vec_id", i), "vec_id", "embedding",
+    val twoIds = spark.range(1, 3).toDF("id")
+    // per index: its write of the half i, the documents its read serves,
+    // and a write onto the root of an index derived from its own read
+    val indexes: Seq[(String, Int => String => Unit, String => Long, Long, String => Unit)] = Seq(
+      ("bm25", i => Bm25Index.write(Bm25Index.build(half(docs, "doc_id", i), "doc_id", "text"), _),
+        p => Bm25Index.read(spark, p).stats.head().getDouble(0).toLong,
+        half(docs, "doc_id", 1).count(),
+        p => Bm25Index.write(Bm25Index.append(Bm25Index.read(spark, p),
+          half(docs, "doc_id", 0), "doc_id", "text"), p)),
+      ("minhash", i => MinHashIndex.write(
+          MinHashIndex.build(half(docs, "doc_id", i), "doc_id", "text", 3, 8, 2), _),
+        p => MinHashIndex.read(spark, p).sets.count(),
+        half(docs, "doc_id", 1).count(),
+        p => MinHashIndex.write(MinHashIndex.read(spark, p), p)),
+      ("simjoin", i => SimJoinIndex.write(
+          SimJoinIndex.build(half(docs, "doc_id", i), "doc_id", "text"), _),
+        p => SimJoinIndex.read(spark, p).sets.count(),
+        half(docs, "doc_id", 1).count(),
+        p => SimJoinIndex.write(SimJoinIndex.read(spark, p), p)),
+      ("ivfpq", i => IvfPqIndex.write(
+          IvfPqIndex.build(half(emb, "vec_id", i), "vec_id", "embedding",
             nlist = 4, numSubspaces = 8, numCodes = 16), _),
-        p => graft.ops.IvfPqIndex.read(spark, p).lists.count(),
-        half(emb, "vec_id", 1).count()))
-    indexes.foreach { case (what, write, served, odd) =>
+        p => IvfPqIndex.read(spark, p).lists.count(),
+        half(emb, "vec_id", 1).count(),
+        p => IvfPqIndex.write(IvfPqIndex.erase(IvfPqIndex.read(spark, p), twoIds), p)))
+    indexes.foreach { case (what, write, served, odd, writeBack) =>
       val root = Files.createTempDirectory(s"graft_rewrite_$what").toString
+      // what the index's layout does not own survives every write
+      val foreign = java.nio.file.Paths.get(root, "notes.txt")
+      java.nio.file.Files.write(foreign, "kept".getBytes)
       write(0)(root)
       write(1)(root)
       assert(served(root) == odd, s"$what: a second write must replace the first")
+      assert(java.nio.file.Files.exists(foreign), s"$what: a write must keep a foreign file")
+      def listing = new java.io.File(root).list().sorted.toSeq
+      // an index read from the root cannot be written back over it: the
+      // write would delete its own input
+      val written = listing
+      val w = intercept[IllegalArgumentException](writeBack(root))
+      assert(w.getMessage.contains("reads its own files"), s"$what: ${w.getMessage}")
+      assert(listing == written && served(root) == odd,
+        s"$what: a refused write-back must leave the root serving as before")
       // a committed stream batch (its marker is what the layout reads)
       java.nio.file.Files.createFile(java.nio.file.Paths.get(root, "_committed_0"))
-      def listing = new java.io.File(root).list().sorted.toSeq
       val before = listing
       val e = intercept[IllegalArgumentException](write(0)(root))
       assert(e.getMessage.contains("stream-maintained"), s"$what: ${e.getMessage}")
